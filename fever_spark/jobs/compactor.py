@@ -92,11 +92,13 @@ def _write_roll(root: str, lo: int, hi: int, kind: str,
         # history, and the previous read_table-then-concat loaded every
         # input whole — an all-history RAM spike per fanin merge on a
         # months-long run. Memory is now bounded by one record batch.
-        # Schemas are unified up front from file FOOTERS (metadata only)
-        # and each batch cast to the union, preserving the old
-        # promote_options="default" semantics; Spark writes INT96
-        # timestamps which pyarrow surfaces as nanos — coerce to the
-        # micros Spark understands, exactly as before.
+        # Schemas are unified up front from file FOOTERS (metadata only),
+        # preserving the old promote_options="default" semantics. A
+        # schema-evolving sink gives files with a column missing or in
+        # another order, which Table.cast rejects — so each batch is
+        # rebuilt in unified-schema order (all-null for absent fields)
+        # and only then cast. Spark writes INT96 timestamps which pyarrow
+        # surfaces as nanos — coerce to the micros Spark understands.
         readers = [pq.ParquetFile(f) for f in part_files]
         schema = pa.unify_schemas([r.schema_arrow for r in readers],
                                   promote_options="default")
@@ -104,8 +106,12 @@ def _write_roll(root: str, lo: int, hi: int, kind: str,
                               allow_truncated_timestamps=True) as w:
             for r in readers:
                 for batch in r.iter_batches():
-                    w.write_table(
-                        pa.Table.from_batches([batch]).cast(schema))
+                    cols = [batch.column(f.name)
+                            if f.name in batch.schema.names
+                            else pa.nulls(batch.num_rows, f.type)
+                            for f in schema]
+                    w.write_table(pa.Table.from_arrays(
+                        cols, names=schema.names).cast(schema))
         for r in readers:
             r.close()
     else:

@@ -23,10 +23,12 @@ replayed publishes overwrite too; the sketch accumulator drops replayed
 batch ids outright.
 
 Scale shape: parse + match are the batch plans unchanged (one Arrow
-round-trip for all seven Bloom probes); stats shuffle O(groups × state)
-per batch; nothing new collects to the driver (alert counts come from
-the written parquet's metadata, sketch states spill to parquet in
-``state_dir`` mode).
+round-trip for all seven Bloom probes); stats are ONE Spark job per batch
+with no shuffle — the partition-local build's O(partitions × groups)
+serialized partials are collected and merged on the driver over the
+bounded event-type domain (in ``state_dir`` mode they instead take the
+distributed salted merge and spill to parquet); nothing else collects to
+the driver (alert counts come from the written parquet's metadata).
 """
 
 from __future__ import annotations
@@ -123,13 +125,12 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
     - ``sink_files`` coalesces every alert/forward batch write to that
       many files (default 1 — a fever-rate daemon writing 32 task files
       per trigger per sink drowns the output dir in tiny files);
-    - ``stats_every`` defers the sketch build+merge shuffles: each
-      trigger spills a narrow (event_type, sketched values) projection,
-      and the build → two-level merge runs once every K batches over
-      all spilled batches together (crash-safe: spills are durable and
-      flush() recovers leftovers). The drain path flushes the tail
-      before returning; in continuous mode up to K-1 batches ride in
-      the spill between flushes;
+    - ``stats_every`` defers the sketch build+merge: each trigger
+      records only its input-file list, and the build → merge runs once
+      every K batches over all recorded files together (crash-safe:
+      the records are durable and flush() recovers leftovers). The
+      drain path flushes the tail before returning; in continuous mode
+      up to K-1 batches ride in the spill between flushes;
     - ``compact_every`` (continuous-daemon knob, 0 = off) runs the
       jobs/compactor pass over the alerts root and every forward dir
       once per that many triggers: per-trigger ``batch=<id>`` dirs

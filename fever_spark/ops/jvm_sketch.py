@@ -24,8 +24,11 @@ while JVM aggregates pay per-row per-aggregate) but the JVM engine wins
 path's host ceiling (~3.6M pages/s at 8 and at 32 threads alike) while
 Tungsten keeps scaling with cores. The Python path additionally yields
 fever-format state: use it whenever you need the ops plane or kinds
-Spark lacks (KLL, t-digest, KMV, Bloom-as-state, CMSTopK); use this
-path for HLL/CMS-dominated batch reporting.
+this module has no JVM aggregate for (t-digest, KMV, Bloom-as-state,
+CMSTopK; KLL too — Spark 4.1 ships ``kll_sketch_agg_*`` /
+``kll_merge_agg_*`` / ``kll_sketch_get_quantile_*``, but their
+DataSketches state is not the fever envelope and is not wired in here);
+use this path for HLL/CMS-dominated batch reporting.
 
 Tungsten runs the same two-level combine ``two_level_merge`` hand-builds
 for Python states — partial aggregation map-side, merge after a
@@ -186,10 +189,12 @@ def jvm_quantiles(df: DataFrame, keys: list[str], column: str,
     Engine trade vs the KLL/t-digest path (``build_sketches`` with kind
     'kll'/'tdigest'): approx_percentile exposes NO serializable state —
     Tungsten merges its summaries inside the job but you cannot persist
-    or cross-job-union them. Use this for in-job quantile REPORTING
-    (windowed rollups, dashboards) and the Python sketches whenever the
-    state itself is the product (checkpointed daemon stats, sketchctl,
-    month-over-month merges)."""
+    or cross-job-union them. (Spark 4.1's native KLL,
+    ``kll_sketch_agg_*`` + ``kll_merge_agg_*``, does expose a mergeable
+    binary state; this module does not wrap it.) Use this for in-job
+    quantile REPORTING (windowed rollups, dashboards) and the Python
+    sketches whenever the state itself is the product (checkpointed
+    daemon stats, sketchctl, month-over-month merges)."""
     if not probabilities:
         raise ValueError("jvm_quantiles needs at least one probability")
     if any(not 0.0 <= p <= 1.0 for p in probabilities):
@@ -299,11 +304,13 @@ def recommend_engine(specs: list[SketchSpec],
 
     python whenever the STATE is the product (checkpointed daemon stats,
     sketchctl, cross-job merge_many — pass need_state_product=True) or
-    any kind lacks a JVM aggregate (kll/tdigest/kmv/bloom/cmstopk,
-    weighted cms). Otherwise: hll-only → jvm at any core count (5.3-7.1x
-    measured); hll+cms bundles → jvm at >=16 cores (3.2x at 32; a tie at
-    8, where one Python boundary crossing amortizes across all sketches
-    while JVM aggregates pay per-row per-aggregate)."""
+    any kind has no JVM aggregate in this module (tdigest/kmv/bloom/
+    cmstopk, weighted cms; kll too — Spark 4.1's ``kll_sketch_agg_*``
+    is not wired into ``JVM_KINDS``). Otherwise: hll-only → jvm at any
+    core count (5.3-7.1x measured); hll+cms bundles → jvm at >=16 cores
+    (3.2x at 32; a tie at 8, where one Python boundary crossing
+    amortizes across all sketches while JVM aggregates pay per-row
+    per-aggregate)."""
     if need_state_product:
         return "python"
     for s in specs:

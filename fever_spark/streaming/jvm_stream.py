@@ -20,10 +20,11 @@ windowed rollups over a live feed — state stays JVM-side end to end and
 the sink holds final DataSketches/CountMinSketch bytes queryable with
 ``jvm_hll_estimate_col`` / ``jvm_cms_estimate``. Use
 ``StreamingSketchAccumulator`` when you need fever-envelope state (the
-sketchctl ops plane, cross-job ``merge_many``) or kinds Spark lacks
-(KLL, t-digest, KMV, Bloom, CMSTopK). The two state formats stay
-mutually exclusive and fail loudly across the line (tested in
-tests/test_jvm_sketch.py).
+sketchctl ops plane, cross-job ``merge_many``) or kinds this path has
+no native aggregate for (t-digest, KMV, Bloom, CMSTopK; KLL too — Spark
+4.1 ships ``kll_sketch_agg_*``, but it is not wired in here). The two
+state formats stay mutually exclusive and fail loudly across the line
+(tested in tests/test_jvm_sketch.py).
 
 Reference parity: fever's flow aggregator accumulates per-window flow
 aggregates in a hand-rolled map flushed by a ticker

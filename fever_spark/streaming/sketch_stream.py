@@ -4,9 +4,11 @@ Fever is a streaming system (SURVEY.md §2.7); the batch library covers its
 query capabilities, and this module covers the streaming-only ones:
 
 - ``StreamingSketchAccumulator``: foreachBatch sketch building. Each
-  micro-batch runs the SAME build → two-level-merge plan as the batch path,
-  then merges into the accumulated state — valid because sketch merges are
-  associative, exactly why fever can flush partial aggregates on a timer
+  micro-batch runs the SAME partition-local build as the batch path, then
+  merges the partials into the accumulated state — on the driver for
+  bounded key domains, through the distributed two-level merge when states
+  spill — valid because sketch merges are associative, exactly why fever
+  can flush partial aggregates on a timer into a driver-side map
   (processing/flow_aggregator.go:80-109). At-least-once micro-batch
   semantics + idempotent state write per batch_id ≈ fever's at-most-once
   plus our checkpointing — strictly stronger.
@@ -30,7 +32,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from fever_spark.ops.build import SketchSpec, build_sketches
 from fever_spark.ops.merge import two_level_merge
-from fever_spark.sketch.base import sketch_from_bytes
+from fever_spark.sketch.base import merge_many
 
 
 class StreamingSketchAccumulator:
@@ -44,17 +46,25 @@ class StreamingSketchAccumulator:
 
     Driver-memory contract: the in-memory dict holds one sketch PER GROUP
     KEY, which is only safe for bounded key domains (lang × window, event
-    types, ...). ``max_keys`` (default 100k) enforces that contract loudly —
-    a million-key groupBy fails with guidance instead of silently OOMing
-    the driver. For unbounded key domains pass ``state_dir``: each batch's
-    merged states are then written to ``state_dir/batch=<id>`` parquet
-    (idempotent overwrite per batch id — the same replay safety as the
-    dict path) and NOTHING is collected to the driver; read the totals back
-    with ``merged_states(spark)``, a distributed two_level_merge over the
-    batch tables (the sketch_job checkpoint layout, jobs/sketch_job.py).
+    types, ...). In this mode each batch's ``build_sketches`` partials are
+    collected as they are (one Spark job per batch, no merge shuffle) and
+    each (keys, sketch) group is merged once on the driver with
+    ``merge_many``, so a batch briefly holds at most partitions × keys ×
+    specs SERIALIZED partials. ``max_keys`` (default 100k) enforces the
+    contract loudly: the distinct group count among the collected partials
+    is checked before any of them is turned into a dense sketch, so a
+    million-key groupBy fails with guidance instead of silently OOMing the
+    driver. For unbounded key domains pass ``state_dir``: each batch's
+    partials are then merged distributed (``two_level_merge``, salted by
+    ``salt`` — the only mode that uses it) and written to
+    ``state_dir/batch=<id>`` parquet (idempotent overwrite per batch id —
+    the same replay safety as the dict path), and NOTHING is collected to
+    the driver; read the totals back with ``merged_states(spark)``, a
+    distributed two_level_merge over the batch tables (the sketch_job
+    checkpoint layout, jobs/sketch_job.py).
 
     Per-trigger cost contract: ``flush_every=K`` (with ``pending_dir``)
-    defers the build+merge shuffles — each trigger spills its input
+    defers the build+merge — each trigger spills its input
     durably (a narrow parquet projection; or, with ``defer_reader`` +
     ``defer_files``, just the batch's input-file list as a tiny json)
     and the build → merge runs once per K batches over everything
@@ -103,8 +113,8 @@ class StreamingSketchAccumulator:
 
         if self.flush_every > 1:
             # deferred mode: a continuous daemon's per-trigger cost must
-            # not include the build+merge shuffles — defer them, and run
-            # the build → two-level merge once per flush_every batches
+            # not include the build+merge — defer them, and run the
+            # build → merge once per flush_every batches
             # over all deferred batches together. Two spill flavors:
             #
             # - defer_reader/defer_files set (file-source batches): per
@@ -144,37 +154,42 @@ class StreamingSketchAccumulator:
                 self.flush(batch_df.sparkSession)
             return
 
-        merged = two_level_merge(
-            build_sketches(batch_df, self.keys, self.specs), self.keys,
-            salt=self.salt)
-        self._record(merged, batch_id)
+        self._record(build_sketches(batch_df, self.keys, self.specs),
+                     batch_id)
         self.last_batch_id = batch_id
         self.batches_seen += 1
 
-    def _record(self, merged: DataFrame, state_id: int) -> None:
-        """Land one merged-states DataFrame: parquet in spill mode (keyed
-        by ``state_id``, idempotent overwrite), else driver-dict merge."""
+    def _record(self, partials: DataFrame, state_id: int) -> None:
+        """Land one ``build_sketches`` partials frame. Spill mode: merge
+        distributed and write parquet keyed by ``state_id`` (idempotent
+        overwrite). In-memory mode: collect the partials, merge each
+        (keys, sketch) group once on the driver, fold into the dict."""
         if self.state_dir is not None:
             import os
 
-            merged.write.mode("overwrite").parquet(
-                os.path.join(self.state_dir, f"batch={state_id}"))
+            two_level_merge(partials, self.keys, salt=self.salt) \
+                .write.mode("overwrite").parquet(
+                    os.path.join(self.state_dir, f"batch={state_id}"))
             return
-        for row in merged.collect():
+        groups: dict[tuple, list[bytes]] = {}
+        for row in partials.collect():
             key = tuple(row[k] for k in self.keys) + (row["sketch"],)
-            sk = sketch_from_bytes(bytes(row["state"]))
-            if key in self.sketches:
-                self.sketches[key].merge(sk)
-            else:
-                self.sketches[key] = sk
-        if len(self.sketches) > self.max_keys:
+            groups.setdefault(key, []).append(bytes(row["state"]))
+        n_keys = len(self.sketches.keys() | groups.keys())
+        if n_keys > self.max_keys:
             raise ValueError(
-                f"StreamingSketchAccumulator holds {len(self.sketches)} "
+                f"StreamingSketchAccumulator would hold {n_keys} "
                 f"group keys (> max_keys={self.max_keys}); the in-memory "
                 "accumulator is for bounded key domains. Pass state_dir= "
                 "to spill per-batch states to a keyed parquet state "
                 "table, or raise max_keys if the domain really is "
                 "bounded.")
+        for key, states in groups.items():
+            sk = merge_many(states)
+            if key in self.sketches:
+                self.sketches[key].merge(sk)
+            else:
+                self.sketches[key] = sk
 
     def flush(self, spark) -> int:
         """Deferred mode: build + merge every spilled pending batch in ONE
@@ -236,10 +251,7 @@ class StreamingSketchAccumulator:
             df = self.defer_reader(spark, files)
         else:
             df = spark.read.parquet(*[on_disk[i] for i in todo])
-        merged = two_level_merge(
-            build_sketches(df, self.keys, self.specs), self.keys,
-            salt=self.salt)
-        self._record(merged, max(todo))
+        self._record(build_sketches(df, self.keys, self.specs), max(todo))
         for i in todo:
             p = on_disk[i]
             shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) \

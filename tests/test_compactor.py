@@ -131,6 +131,41 @@ class TestCompactParquet:
         assert peak <= 8 + 6 + 10 + 2  # never far above the bound mid-cycle
         assert all_parquet_rows(root) == sorted(range(200))
 
+    def _mk_table_batch(self, root, i, table):
+        d = os.path.join(root, f"batch={i}")
+        os.makedirs(d)
+        pq.write_table(table, os.path.join(d, "part-0.parquet"))
+        open(os.path.join(d, "_SUCCESS"), "w").close()
+
+    def _roll_rows(self, root, rng):
+        t = pq.read_table(os.path.join(root, f"batch={rng}",
+                                       "part-roll0.parquet"))
+        return t.column_names, sorted(t.to_pylist(), key=lambda r: r["v"])
+
+    def test_schema_drift_missing_column(self, tmp_path):
+        # a schema-evolving sink: later batches carry a column the older
+        # ones lack — the roll holds the union, nulls where it was absent
+        root = str(tmp_path)
+        self._mk_table_batch(root, 0, pa.table({"v": [0, 1]}))
+        self._mk_table_batch(root, 1, pa.table({"v": [2], "tag": ["x"]}))
+        self._mk_table_batch(root, 2, pa.table({"v": [3]}))
+        out = compact_sink_dir(root, "parquet", keep_last=0)
+        assert out["rolled_batches"] == 3
+        names, rows = self._roll_rows(root, "0-2")
+        assert names == ["v", "tag"]
+        assert rows == [{"v": 0, "tag": None}, {"v": 1, "tag": None},
+                        {"v": 2, "tag": "x"}, {"v": 3, "tag": None}]
+
+    def test_schema_drift_reordered_column(self, tmp_path):
+        root = str(tmp_path)
+        self._mk_table_batch(root, 0, pa.table({"v": [0], "tag": ["a"]}))
+        self._mk_table_batch(root, 1, pa.table({"tag": ["b"], "v": [1]}))
+        out = compact_sink_dir(root, "parquet", keep_last=0)
+        assert out["rolled_batches"] == 2
+        names, rows = self._roll_rows(root, "0-1")
+        assert names == ["v", "tag"]
+        assert rows == [{"v": 0, "tag": "a"}, {"v": 1, "tag": "b"}]
+
 
 class TestCompactText:
     def test_rolls_sparse_text_dirs(self, tmp_path):

@@ -105,6 +105,93 @@ class TestStreamingSketches:
         with pytest.raises(ValueError, match="state_dir"):
             acc.process_batch(batch, 0)
 
+    EQUIV_SPECS = [
+        SketchSpec("u", "hll", "s", {"p": 12}),
+        SketchSpec("c", "cms", "s", {"epsilon": 1e-2, "delta": 1e-2}),
+        SketchSpec("b", "bloom", "s", {"capacity": 5000, "fpp": 1e-3}),
+        SketchSpec("q", "kll", "v", {"k": 128}),
+        SketchSpec("t", "tdigest", "v", {"delta": 100.0}),
+    ]
+
+    @staticmethod
+    def _equiv_frame(spark):
+        # 6 partitions x 3 keys: every key has partials in every partition
+        return spark.range(0, 30_000, numPartitions=6).select(
+            "id", (F.col("id") % 3).cast("string").alias("k"),
+            (F.col("id") % 997).cast("string").alias("s"),
+            ((F.col("id") * 7919) % 10007).cast("double").alias("v"))
+
+    def _assert_matches_two_level_merge(self, acc, df):
+        """The driver-merged accumulator states equal the distributed
+        two_level_merge of the same frame: lattice sketches (HLL, CMS,
+        Bloom) byte-for-byte, order-dependent ones (KLL, t-digest)
+        within their rank bounds against the exact data."""
+        from fever_spark.ops.build import build_sketches
+        from fever_spark.ops.merge import two_level_merge
+
+        ref = {(r["k"], r["sketch"]): bytes(r["state"]) for r in
+               two_level_merge(build_sketches(df, ["k"], self.EQUIV_SPECS),
+                               ["k"]).collect()}
+        assert set(acc.sketches) == set(ref)
+        assert {k for k, _ in ref} == {"0", "1", "2"}
+        vals = df.select("k", "v").toPandas()
+        for (k, name), state in ref.items():
+            got = acc.sketches[(k, name)]
+            if name in ("u", "c", "b"):
+                assert got.to_bytes() == state, (k, name)
+                continue
+            sv = np.sort(vals.loc[vals["k"] == k, "v"].to_numpy())
+            n = len(sv)
+            assert got.n == sketch_from_bytes(state).n == n
+            for q in (0.01, 0.25, 0.5, 0.75, 0.99):
+                est = got.quantile(q)
+                lo = np.searchsorted(sv, est, side="left") / n
+                hi = np.searchsorted(sv, est, side="right") / n
+                slack = (2 * got.rank_error() if name == "q"
+                         else max(0.005, 8 * q * (1 - q) / 100))
+                assert lo - slack <= q <= hi + slack, (k, name, q)
+
+    def test_driver_merge_matches_two_level_merge(self, spark):
+        df = self._equiv_frame(spark)
+        acc = StreamingSketchAccumulator(keys=["k"], specs=self.EQUIV_SPECS)
+        acc.process_batch(df, 0)
+        self._assert_matches_two_level_merge(acc, df)
+
+    def test_deferred_driver_merge_matches_two_level_merge(self, spark,
+                                                          tmp_path):
+        df = self._equiv_frame(spark)
+        acc = StreamingSketchAccumulator(
+            keys=["k"], specs=self.EQUIV_SPECS, flush_every=2,
+            pending_dir=str(tmp_path / "pending"))
+        acc.process_batch(df.filter(F.col("id") < 15_000), 0)
+        assert acc.sketches == {}             # deferred: spilled, not built
+        acc.process_batch(df.filter(F.col("id") >= 15_000), 1)
+        assert os.listdir(tmp_path / "pending") == []  # flushed
+        self._assert_matches_two_level_merge(acc, df)
+
+    def test_state_dir_mode_keeps_salted_merge(self, spark, tmp_path,
+                                               monkeypatch):
+        """Spill mode must never bring states to the driver: its batches
+        still take the distributed merge, two salted exchanges."""
+        from fever_spark.streaming import sketch_stream
+
+        plans = []
+
+        def spy(*args, **kwargs):
+            out = two_level_merge(*args, **kwargs)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        two_level_merge = sketch_stream.two_level_merge
+        monkeypatch.setattr(sketch_stream, "two_level_merge", spy)
+        acc = StreamingSketchAccumulator(
+            keys=["k"], specs=self.EQUIV_SPECS[:2],
+            state_dir=str(tmp_path / "state"))
+        acc.process_batch(self._equiv_frame(spark), 0)
+        assert acc.sketches == {}
+        assert len(plans) == 1
+        assert plans[0].count("Exchange hashpartitioning") == 2
+
     def test_state_dir_spill_bounds_driver_memory(self, spark, tmp_path):
         """Spill mode: per-batch merged states land in a keyed parquet
         state table; the driver dict stays EMPTY even for key counts far
