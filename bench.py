@@ -868,6 +868,18 @@ _STREAM_SETUP = {}
 _STREAM_DETAIL = {}
 
 
+STREAM_DRAIN_TIMEOUT_S = 600
+
+
+def _await_drain(q, what: str) -> None:
+    """Bounded wait for an availableNow drain: a hung drain stops its
+    query and raises instead of wedging the whole bench run."""
+    if not q.awaitTermination(STREAM_DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"stream drain {what!r} did not finish within "
+                           f"{STREAM_DRAIN_TIMEOUT_S}s")
+
+
 def _stream_setup(spark, n_events: int = 500_000, n_files: int = 16):
     """Parquet drop dir of timestamped docs with 30% planted duplicates
     (every 10th..3rd id maps back onto an earlier doc's text), rendered
@@ -926,7 +938,7 @@ def bench_streaming(spark):
             q = (make_query(stream).writeStream.foreachBatch(_count)
                  .option("checkpointLocation", ck)
                  .trigger(availableNow=True).start())
-            q.awaitTermination()
+            _await_drain(q, name)
             wall = time.time() - t0
             stages[name] = {"wall_s": round(wall, 3),
                             "events_per_sec": round(s["n"] / wall, 1),
@@ -982,7 +994,7 @@ def bench_streaming(spark):
                 q = (st2.writeStream.foreachBatch(acc.process_batch)
                      .option("checkpointLocation", ck)
                      .trigger(availableNow=True).start())
-                q.awaitTermination()
+                _await_drain(q, tag)
                 wall = time.time() - t0
                 out_rows = (acc.merged_states(spark).count()  # untimed
                             if engine == "python_durable"
@@ -993,7 +1005,7 @@ def bench_streaming(spark):
                     watermark="2 minutes")
                 t0 = time.time()
                 q = start_jvm_sketch_sink(agg, out_dir, ck)
-                q.awaitTermination()
+                _await_drain(q, tag)
                 wall = time.time() - t0
                 out_rows = spark.read.parquet(out_dir).count()  # untimed
             stages[tag] = {"wall_s": round(wall, 3),

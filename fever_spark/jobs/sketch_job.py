@@ -42,7 +42,6 @@ class SketchJob:
     keys: list[str]
     specs: list[SketchSpec]
     files_per_chunk: int = 8
-    salt: int | None = None
     job_id: str = "sketch_job"
     # optional per-chunk derivation (add window/host columns, explode
     # tokens, ...) applied between read and build; must be deterministic —
@@ -135,7 +134,7 @@ class SketchJob:
             obs = Observation(f"chunk_{idx}")
             observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
             built = build_sketches(observed, self.keys, self.specs)
-            merged = two_level_merge(built, self.keys, salt=self.salt)
+            merged = two_level_merge(built, self.keys)
             chunk_dir = os.path.join(self.checkpoint_dir, f"chunk={idx}")
             merged.write.mode("overwrite").parquet(chunk_dir)
             elapsed = time.time() - t0
@@ -153,8 +152,7 @@ class SketchJob:
         all_states = spark.read.parquet(
             *[os.path.join(self.checkpoint_dir, f"chunk={i}")
               for i in range(len(chunks))])
-        final = two_level_merge(all_states.drop("chunk"), self.keys,
-                                salt=self.salt)
+        final = two_level_merge(all_states.drop("chunk"), self.keys)
         final_dir = os.path.join(self.checkpoint_dir, "final")
         final.coalesce(1).write.mode("overwrite").parquet(final_dir)
         manifest["completed"] = True

@@ -36,8 +36,7 @@ WINDOW_COL = "window_start"
 
 def rollup_sketches(df: DataFrame, ts_col: str, keys: list[str],
                     specs: list[SketchSpec],
-                    resolutions: list[str],
-                    salt: int | None = None) -> dict[str, DataFrame]:
+                    resolutions: list[str]) -> dict[str, DataFrame]:
     """Build the rollup ladder: one sketch-state frame per resolution,
     keyed by (keys..., window_start, sketch).
 
@@ -59,7 +58,7 @@ def rollup_sketches(df: DataFrame, ts_col: str, keys: list[str],
     ladder: dict[str, DataFrame] = {}
     states = two_level_merge(
         build_sketches(fine, keys + [WINDOW_COL], specs),
-        keys + [WINDOW_COL], salt=salt)
+        keys + [WINDOW_COL])
     ladder[finest] = states
 
     prev = states

@@ -114,42 +114,49 @@ class Sketch(ABC):
 def payload_of(data: bytes) -> bytes:
     """Raw (decompressed) payload of a serialized state — used by the
     vectorized _merge_many fast paths."""
-    magic, version, kind, flags = struct.unpack_from("<4sBBH", data, 0)
-    if magic != MAGIC:
-        raise ValueError(f"bad sketch magic {magic!r}")
+    _, flags = _check_header(data)
     payload = bytes(memoryview(data)[8:])
     if flags & FLAG_ZLIB:
         payload = zlib.decompress(payload)
     return payload
 
 
+def _check_header(data: bytes) -> tuple[int, int]:
+    """Check a serialized state's magic, version and kind; return
+    ``(kind, flags)``."""
+    magic, version, kind, flags = struct.unpack_from("<4sBBH", data, 0)
+    if magic != MAGIC:
+        raise ValueError(f"bad sketch magic {magic!r}")
+    if version != VERSION:
+        raise ValueError(f"unsupported sketch version {version}")
+    if kind not in SKETCH_REGISTRY:
+        raise ValueError(f"unknown sketch kind {kind}")
+    return kind, flags
+
+
 def merge_many(states: list[bytes]) -> Sketch:
-    """Merge serialized states efficiently. Dispatches to the sketch class's
-    ``_merge_many`` fast path when it has one (Bloom/HLL/CMS reduce over
-    zero-copy buffer views — the hot path of the shuffle-merge stage),
-    else falls back to pairwise deserialize+merge."""
-    first = sketch_from_bytes(states[0])
-    if len(states) == 1:
-        return first
-    fast = getattr(type(first), "_merge_many", None)
-    if fast is not None:
+    """Merge serialized states efficiently. Every state's header is checked
+    and all must share one kind, whatever their order; then dispatches to
+    the sketch class's ``_merge_many`` fast path when it has one
+    (Bloom/HLL/CMS reduce over zero-copy buffer views — the hot path of
+    the shuffle-merge stage), else falls back to pairwise
+    deserialize+merge."""
+    kinds = {_check_header(s)[0] for s in states}
+    if len(kinds) > 1:
+        names = sorted(SKETCH_REGISTRY[k].NAME for k in kinds)
+        raise ValueError(f"cannot merge different sketch kinds: {names}")
+    fast = getattr(SKETCH_REGISTRY[kinds.pop()], "_merge_many", None)
+    if fast is not None and len(states) > 1:
         return fast(states)
+    first = sketch_from_bytes(states[0])
     for b in states[1:]:
         first.merge(sketch_from_bytes(b))
     return first
 
 
 def sketch_from_bytes(data: bytes) -> Sketch:
-    magic, version, kind, flags = struct.unpack_from("<4sBBH", data, 0)
-    if magic != MAGIC:
-        raise ValueError(f"bad sketch magic {magic!r}")
-    if version != VERSION:
-        raise ValueError(f"unsupported sketch version {version}")
-    try:
-        klass = SKETCH_REGISTRY[kind]
-    except KeyError:
-        raise ValueError(f"unknown sketch kind {kind}") from None
+    kind, flags = _check_header(data)
     payload = memoryview(data)[8:]
     if flags & FLAG_ZLIB:
         payload = memoryview(zlib.decompress(payload))
-    return klass._from_payload(payload)
+    return SKETCH_REGISTRY[kind]._from_payload(payload)

@@ -55,8 +55,8 @@ class StreamingSketchAccumulator:
     is checked before any of them is turned into a dense sketch, so a
     million-key groupBy fails with guidance instead of silently OOMing the
     driver. For unbounded key domains pass ``state_dir``: each batch's
-    partials are then merged distributed (``two_level_merge``, salted by
-    ``salt`` — the only mode that uses it) and written to
+    partials are then merged distributed (``two_level_merge`` with its
+    parallelism-derived salt) and written to
     ``state_dir/batch=<id>`` parquet (idempotent overwrite per batch id —
     the same replay safety as the dict path), and NOTHING is collected to
     the driver; read the totals back with ``merged_states(spark)``, a
@@ -74,7 +74,7 @@ class StreamingSketchAccumulator:
     (flow_aggregator.go:152-170) applied to the whole build, not just
     the merge."""
 
-    def __init__(self, keys: list[str], specs: list[SketchSpec], salt: int = 4,
+    def __init__(self, keys: list[str], specs: list[SketchSpec],
                  max_keys: int = 100_000, state_dir: str | None = None,
                  flush_every: int = 1, pending_dir: str | None = None,
                  defer_reader=None, defer_files=None):
@@ -87,7 +87,6 @@ class StreamingSketchAccumulator:
                              "per-batch raw-projection spill location)")
         self.keys = list(keys)
         self.specs = list(specs)
-        self.salt = salt
         self.max_keys = max_keys
         self.state_dir = state_dir
         self.flush_every = flush_every
@@ -167,7 +166,7 @@ class StreamingSketchAccumulator:
         if self.state_dir is not None:
             import os
 
-            two_level_merge(partials, self.keys, salt=self.salt) \
+            two_level_merge(partials, self.keys) \
                 .write.mode("overwrite").parquet(
                     os.path.join(self.state_dir, f"batch={state_id}"))
             return
@@ -273,8 +272,7 @@ class StreamingSketchAccumulator:
             if os.path.exists(os.path.join(p, "_SUCCESS")))
         if not dirs:
             raise FileNotFoundError(f"no batch states under {self.state_dir}")
-        return two_level_merge(spark.read.parquet(*dirs), self.keys,
-                               salt=self.salt)
+        return two_level_merge(spark.read.parquet(*dirs), self.keys)
 
 
 def windowed_counts_stream(stream: DataFrame, keys: list[str], ts_col: str,

@@ -10,6 +10,7 @@ permutation and association.
 """
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from fever_spark.sketch import (
@@ -281,3 +282,30 @@ def test_driver_components_match_scalar_union_find(edges):
     expect = {x: min(members) for root, members in want.items()
               for x in members}
     assert got == expect
+
+
+def _states_pair(kind_b):
+    a = HyperLogLog(p=12, seed=0)
+    a.update(np.array(["x", "y"], dtype=object))
+    if kind_b == "bad_version":
+        b = bytearray(a.to_bytes())
+        b[4] = 9  # format-version byte
+        return a.to_bytes(), bytes(b)
+    b = CountMinSketch(epsilon=1e-2, delta=0.1, seed=0)
+    b.update(np.array(["x"], dtype=object))
+    return a.to_bytes(), b.to_bytes()
+
+
+@pytest.mark.parametrize("kind_b,match", [
+    ("bad_version", "unsupported sketch version 9"),
+    ("cms", r"cannot merge different sketch kinds: \['cms', 'hll'\]"),
+])
+def test_merge_many_checks_every_state_in_any_order(kind_b, match):
+    """merge_many validated only states[0]; the fast paths read the rest
+    unchecked, so a bad state passed or failed depending on its position."""
+    from fever_spark.sketch.base import merge_many
+
+    good, bad = _states_pair(kind_b)
+    for states in ([good, bad], [bad, good]):
+        with pytest.raises(ValueError, match=match):
+            merge_many(states)

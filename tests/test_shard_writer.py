@@ -3,6 +3,7 @@ shard per bin with a manifest; totals conserve, oversized docs flagged."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from fever_spark.jobs.shard_writer import write_training_shards
@@ -158,3 +159,16 @@ def test_shuffled_packing(spark, tmp_path):
     assert set(sizes.values()) == {5}
     # the internal order key never leaks into the written schema
     assert "_ord" not in spark.read.parquet(out_a).columns
+
+
+def test_duplicate_id_rejected_before_manifest(spark, tmp_path):
+    """A duplicated doc_id fans out in the id join (22 rows written for
+    20 packed docs); the writer must refuse instead of reporting 20."""
+    rows = [(i, " ".join(f"w{i}x{j}" for j in range(10))) for i in range(19)]
+    rows.append((7, "a duplicate of doc seven"))
+    src = str(tmp_path / "dup_src")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src)
+    out = str(tmp_path / "dup_shards")
+    with pytest.raises(ValueError, match="unique"):
+        write_training_shards(spark, src, out, budget=50, n_buckets=4)
+    assert not os.path.exists(os.path.join(out, "_shards_manifest.json"))

@@ -366,25 +366,27 @@ class TestSaltedMergeSkewBalance:
         assert abs(hot["e"] - 90_000) / 90_000 < 3 * 1.04 / (2 ** 12) ** 0.5
 
 
-class TestNonCanonicalMergeFallback:
-    """Round-6 fix: frames with EXTRA columns take the applyInPandas merge
-    path, which must forward them from the group head — the old code
-    dropped them and disagreed with its own declared schema at the Arrow
-    boundary (broken for any caller, latent because every in-repo caller
-    passes canonical frames)."""
+class TestMergeShape:
+    """two_level_merge has one path: the vectorized collect_list merge over
+    a ``keys + [sketch, state]`` frame."""
 
-    def test_extra_column_forwards_and_states_match_canonical(self, spark):
+    @pytest.fixture(scope="class")
+    def built(self, spark):
         df = spark.range(2000).select(
             (F.col("id") % 3).cast("string").alias("g"),
             F.col("id").cast("string").alias("v"))
-        built = build_sketches(df.repartition(4), ["g"],
-                               [SketchSpec("s", "hll", "v", {"p": 12})])
-        extra = built.withColumn("tag", F.lit("chunk7"))
-        for salt in (1, 4):  # both fallback branches
-            out = two_level_merge(extra, ["g"], salt=salt)
-            rows = out.collect()
-            assert set(out.columns) == {"g", "sketch", "state", "tag"}
-            assert len(rows) == 3 and {r["tag"] for r in rows} == {"chunk7"}
-            canon = {r["g"]: bytes(r["state"]) for r in
-                     two_level_merge(built, ["g"], salt=salt).collect()}
-            assert all(bytes(r["state"]) == canon[r["g"]] for r in rows)
+        return build_sketches(df.repartition(4), ["g"],
+                              [SketchSpec("s", "hll", "v", {"p": 12})])
+
+    @pytest.mark.parametrize("salt", [1, 4])
+    def test_extra_column_raises(self, built, salt):
+        with pytest.raises(ValueError, match="tag"):
+            two_level_merge(built.withColumn("tag", F.lit("chunk7")), ["g"],
+                            salt=salt)
+
+    @pytest.mark.parametrize("salt,exchanges", [(1, 1), (4, 2)])
+    def test_plan_exchanges(self, built, salt, exchanges):
+        plan = (two_level_merge(built, ["g"], salt=salt)
+                ._jdf.queryExecution().executedPlan().toString())
+        assert plan.count("Exchange hashpartitioning") == exchanges, plan
+        assert "FlatMapGroupsInPandas" not in plan
