@@ -337,10 +337,8 @@ def q_eve_pipeline(spark, sf_dir):
         kw = dict(iocs=["host3", "name7", "sni5"],
                   checkpoint=os.path.join(base, "ckpt"), spool=spool,
                   forwards={"all": []},
-                  # round-7 daemon knobs ride the SAME gated run:
-                  # deferred stats (file-list spill + tail flush into the
-                  # parquet state table) and single-file sinks
-                  stats_every=2,
+                  # daemon knobs ride the SAME gated run: the parquet
+                  # stats state table and single-file sinks
                   stats_state_dir=os.path.join(base, "stats"),
                   max_files_per_trigger=1,
                   compact_every=2, compact_keep_last=1, compact_fanin=2)
@@ -349,16 +347,13 @@ def q_eve_pipeline(spark, sf_dir):
         s2 = run_pipeline(spark, drop, out, **kw)  # replay: nothing new
         msgs = consume_spool(spool, ack=False)
         spool_rows = sum(len(_json.loads(m["payload"])) for m in msgs)
-        # deferred-stats gate: the drain-end flush must land the per-type
-        # HLL/CMS state table and drain the pending spill
+        # stats gate: the per-trigger stats must land the per-type
+        # HLL/CMS state table
         stat_kinds = {(r["event_type"], r["sketch"]) for r in
                       spark.read.parquet(
                           os.path.join(base, "stats", "batch=*")).collect()}
-        pend = os.path.join(out, "_stats_pending")
         stats_ok = (("http", "src_ips") in stat_kinds
-                    and ("http", "http_hosts") in stat_kinds
-                    and (not os.path.exists(pend)
-                         or os.listdir(pend) == []))
+                    and ("http", "http_hosts") in stat_kinds)
         # compaction gate: rolls exist, live dirs bounded, and the alert
         # row count read over the COMPACTED root equals what the run wrote
         import glob as _glob

@@ -616,17 +616,14 @@ def bench_eve_pipeline(spark):
     s = _eve_setup(spark)
     runs = {}
     alerts = 0
-    # the 8-batch run carries the daemon knobs (stats_every=4 → two
-    # deferred flushes instead of eight per-trigger build+merges): the
-    # many-small-batches regime is exactly what those knobs exist for
     # the two 1M drains are GRADED numbers (amortization + the
     # 8-batch/1-batch ratio) and single runs swing ~1.6x on this
     # multi-tenant host — take best-of-2, same discipline as the rep tier
-    for label, n_events, files_per_trigger, n_reps, kw in (
-            ("warmup", 200_000, 64, 1, {}),  # untimed: JIT+codegen+sinks
-            ("200k_1batch", 200_000, 64, 1, {}),
-            ("1m_1batch", 1_000_000, 64, 2, {}),
-            ("1m_8batch", 1_000_000, 4, 2, {"stats_every": 4})):
+    for label, n_events, files_per_trigger, n_reps in (
+            ("warmup", 200_000, 64, 1),  # untimed: JIT+codegen+sinks
+            ("200k_1batch", 200_000, 64, 1),
+            ("1m_1batch", 1_000_000, 64, 2),
+            ("1m_8batch", 1_000_000, 4, 2)):
         drop, _n_files = s["drops"][n_events]
         for _rep in range(n_reps):
             out = tempfile.mkdtemp(prefix="fever_bench_eve_out_")
@@ -637,7 +634,7 @@ def bench_eve_pipeline(spark):
                     iocs=["host3", "name7", "sni5"],
                     checkpoint=os.path.join(out, "ckpt"),
                     forwards={"dns_only": ["dns"]},
-                    max_files_per_trigger=files_per_trigger, **kw)
+                    max_files_per_trigger=files_per_trigger)
                 wall = time.time() - t0
                 if label == "warmup":
                     continue
@@ -673,7 +670,7 @@ def bench_eve_pipeline(spark):
             iocs=["host3", "name7", "sni5"],
             checkpoint=os.path.join(out, "ckpt"),
             forwards={"dns_only": ["dns"]},
-            max_files_per_trigger=4, available_now=False, stats_every=4,
+            max_files_per_trigger=4, available_now=False,
             trigger_seconds=1.0)
         try:
             for i in range(0, len(src_files), 4):
@@ -684,7 +681,6 @@ def bench_eve_pipeline(spark):
             prog = [json.loads(p.json) for p in q.recentProgress]
         finally:
             q.stop()
-        q.fever_stats_acc.flush(spark)
         batches = [p for p in prog if p.get("numInputRows", 0) > 0]
         rows = sum(p["numInputRows"] for p in batches)
         secs = sum(p["durationMs"]["triggerExecution"]
@@ -725,14 +721,13 @@ def bench_eve_pipeline(spark):
             iocs=["host3", "name7", "sni5"],
             checkpoint=os.path.join(out, "ckpt"),
             forwards={"dns_only": ["dns"]},
-            max_files_per_trigger=8, available_now=False, stats_every=4,
+            max_files_per_trigger=8, available_now=False,
             trigger_seconds=1.0)
         try:
             q.processAllAvailable()
             prog = [json.loads(p.json) for p in q.recentProgress]
         finally:
             q.stop()
-        q.fever_stats_acc.flush(spark)
         per_file = 1_000_000 // len(src_files)
         sat = [p for p in prog
                if p.get("numInputRows", 0) >= 8 * per_file]
@@ -1311,30 +1306,6 @@ ONE_SHOT = {"text_models", "ingest", "crawl_gated", "eve_pipeline",
 NON_DEFAULT = {"sketch_pipeline_jvm"}
 
 
-# the probe's idle-host floor (median of idle-session runs on this host
-# class; observed range 0.2-0.5s) — the denominator of weather normalization
-PROBE_IDLE_SEC = 0.35
-
-
-def _host_speed_probe() -> float:
-    """One deterministic unit of single-core numpy work (~0.2-0.5s on an
-    idle core) — the bench's ROUND-7 weather gauge, kept recorded for
-    cross-round continuity only. Round-8 finding: this does NOT track the
-    32-thread Spark workloads (the r7 judge's three samples: raw subset
-    walls within 10% while single-core-normalized columns diverged 69% —
-    co-tenant load crushes one pinned core long before it moves a
-    32-thread job), so `weather_multiplier` now comes from the
-    footprint-matched PARALLEL control below."""
-    import numpy as np
-
-    a = np.arange(20_000_000, dtype=np.uint64)
-    t0 = time.time()
-    for _ in range(5):
-        a = (a ^ (a >> np.uint64(13))) * np.uint64(0x9E3779B97F4A7C15)
-    _ = float(a[::4096].sum())  # keep the loop live
-    return round(time.time() - t0, 4)
-
-
 # footprint-matched parallel control (round-8, the round-7 verdict's #1
 # ask): CPUS worker processes each running a fixed in-place xor-mul
 # kernel — the same ALU+memory-bandwidth footprint class as the 32-thread
@@ -1342,9 +1313,7 @@ def _host_speed_probe() -> float:
 # job. Timed region excludes pool fork + numpy import (a warm pass runs
 # first); the subprocess reports the MEDIAN of 3 barrier walls.
 # Measured on this host: idle 1.25-1.52s (median-of-3 ±5%); under a
-# deliberate 32-proc antagonist 3.3s (2.5x — tracks the job's ~2-2.5x),
-# where the single-core probe both under-responds to this mechanism and
-# over-responds to pinned-core co-tenancy.
+# deliberate 32-proc antagonist 3.3s (2.5x — tracks the job's ~2-2.5x).
 PARCTRL_IDLE_SEC = 1.30  # idle-host floor of the median-of-3 barrier wall
 
 _PARCTRL_CODE = r"""
@@ -1458,16 +1427,13 @@ def main(argv=None):
     requested = args.queries.split(",")
     names = [n for n in requested if n not in ONE_SHOT]
     one_shot = [n for n in requested if n in ONE_SHOT]
-    # host-weather gauges, timed before the rep loop and again after the
-    # one-shot tier: the footprint-matched PARALLEL control (the round-8
-    # normalizer — CPUS lanes of fixed work, moves with co-tenant load
-    # the way the 32-thread job does) plus the legacy single-core probe
-    # (recorded for cross-round continuity; known NOT to track the
-    # 32-thread workloads). Rounds land in different multi-tenant
-    # weather (r4→r5: +13% uniform drift on untouched code) —
-    # cross-round comparisons divide by the parallel control.
+    # host-weather gauge, timed before the rep loop and again after the
+    # one-shot tier: the footprint-matched PARALLEL control (CPUS lanes
+    # of fixed work, moves with co-tenant load the way the 32-thread job
+    # does). Rounds land in different multi-tenant weather (r4→r5: +13%
+    # uniform drift on untouched code) — cross-round comparisons divide
+    # by the parallel control.
     ctrl_before = _parallel_control()
-    probe_before = _host_speed_probe()
     timings = {name: float("inf") for name in names}
     windows = {}  # best rep's [start_ms, end_ms] epoch window per query
     for _ in range(reps):
@@ -1541,26 +1507,17 @@ def main(argv=None):
     if one_shot:
         result["one_shot"] = one_shot
     ctrl_after = _parallel_control()
-    probe_after = _host_speed_probe()
-    result["host_probe_sec"] = {"before_reps": probe_before,
-                                "after_one_shot": probe_after}
     result["parallel_ctrl_sec"] = {"before_reps": ctrl_before,
                                    "after_one_shot": ctrl_after}
     result["parallel_ctrl_idle_sec"] = PARCTRL_IDLE_SEC
-    result["probe_idle_sec"] = PROBE_IDLE_SEC
     # weather normalization (round-8): the PARALLEL control is a fixed
     # unit of CPUS-wide work, so wall × idle_ctrl/measured_ctrl estimates
     # what the same code would take on an idle host — the column
     # cross-round tables should compare. Clamped at 1.0: a below-floor
     # reading is timing luck, not a faster-than-idle host, and dividing
-    # by <1 would inflate the normalized walls. The round-7 single-core
-    # multiplier stays recorded as weather_multiplier_1core (it
-    # over-responds to pinned-core co-tenancy: r7's three samples had raw
-    # walls within 10% but 1core-normalized columns 69% apart).
+    # by <1 would inflate the normalized walls.
     weather = max(1.0, ((ctrl_before + ctrl_after) / 2) / PARCTRL_IDLE_SEC)
     result["weather_multiplier"] = round(weather, 3)
-    result["weather_multiplier_1core"] = round(
-        ((probe_before + probe_after) / 2) / PROBE_IDLE_SEC, 3)
     result["value_normalized"] = round(total / weather, 3)
     result["queries_normalized"] = {
         n: round(v / weather, 3) for n, v in timings.items()}
@@ -1570,8 +1527,7 @@ def main(argv=None):
     # still carries the graded numbers
     head = ["metric", "value", "value_normalized", "unit", "sf", "reps",
             "parallel_ctrl_sec", "parallel_ctrl_idle_sec",
-            "weather_multiplier", "host_probe_sec", "probe_idle_sec",
-            "weather_multiplier_1core",
+            "weather_multiplier",
             "pages_per_sec", "n_pages", "warc_pages_per_sec",
             "queries", "queries_normalized", "one_shot"]
     result = {**{k: result[k] for k in head if k in result},

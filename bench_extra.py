@@ -170,7 +170,7 @@ def cmd_eve8(reps: int = 2):
                 iocs=["host3", "name7", "sni5"],
                 checkpoint=os.path.join(out, "ckpt"),
                 forwards={"dns_only": ["dns"]},
-                max_files_per_trigger=4, stats_every=4)
+                max_files_per_trigger=4)
             wall = time.time() - t0
             if best is None:
                 best = {"warmup_wall_s": round(wall, 3)}

@@ -5,8 +5,8 @@ The continuous EVE pipeline (jobs/run_pipeline.py) writes one
 idempotence. At a 1s cadence that is ~86k dirs/day/sink even with
 ``sink_files=1`` — the reference daemon has no such problem because its
 sinks are sockets (consumers drain); a file-sink daemon needs a
-compaction story. This module is that story, reusing the high-water
-discipline of streaming/sketch_stream.flush:
+compaction story. This module is that story, built on a high-water
+mark:
 
 - completed ``batch=N`` dirs older than the ``keep_last`` most recent are
   merged into a single range-named roll DIR ``batch=<lo>-<hi>/`` holding

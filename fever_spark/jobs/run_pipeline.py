@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from fever_spark.ops.bloom_match import build_ioc_filter, make_event_matcher
 from fever_spark.ops.build import SketchSpec
-from fever_spark.sources.eve import eve_projection, parse_eve
+from fever_spark.sources.eve import eve_projection
 from fever_spark.streaming.sketch_stream import StreamingSketchAccumulator
 
 __all__ = ["run_pipeline"]
@@ -79,7 +79,6 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
                  max_files_per_trigger: int = 16,
                  available_now: bool = True,
                  bloom_file: str | None = None,
-                 stats_every: int = 1,
                  sink_files: int = 1,
                  trigger_seconds: float | None = None,
                  compact_every: int = 0,
@@ -107,11 +106,9 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
     ``available_now=True`` (default) drains everything currently in the
     drop dir and returns a summary dict; ``False`` returns the running
     ``StreamingQuery`` (caller manages its lifecycle) with the sketch
-    accumulator attached as ``query.fever_stats_acc`` — in deferred-stats
-    mode (``stats_every`` > 1) call ``query.fever_stats_acc.flush(spark)``
-    after stopping the query to absorb the up-to-K-1 spilled tail batches
-    (the spills are durable, so a caller that skips this merely leaves
-    them for the next run's flush to recover).
+    accumulator attached as ``query.fever_stats_acc``: its ``sketches``
+    dict holds the per-type stats of every batch processed so far (or,
+    with ``stats_state_dir``, ``merged_states(spark)`` reads them back).
 
     Per-trigger cost controls (the continuous-daemon regime is many
     SMALL batches, so fixed per-trigger work is the throughput ceiling):
@@ -125,12 +122,6 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
     - ``sink_files`` coalesces every alert/forward batch write to that
       many files (default 1 — a fever-rate daemon writing 32 task files
       per trigger per sink drowns the output dir in tiny files);
-    - ``stats_every`` defers the sketch build+merge: each trigger
-      records only its input-file list, and the build → merge runs once
-      every K batches over all recorded files together (crash-safe:
-      the records are durable and flush() recovers leftovers). The
-      drain path flushes the tail before returning; in continuous mode
-      up to K-1 batches ride in the spill between flushes;
     - ``compact_every`` (continuous-daemon knob, 0 = off) runs the
       jobs/compactor pass over the alerts root and every forward dir
       once per that many triggers: per-trigger ``batch=<id>`` dirs
@@ -181,91 +172,16 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
         return matcher_state["fn"]
 
     specs = stats_specs if stats_specs is not None else default_stats_specs()
-    stats_cols = list(dict.fromkeys(
-        ["event_type"] + [c for s in specs for c in
-                          ([s.column] + ([s.weight_column]
-                                         if s.weight_column else []))]))
-
-    def _stats_reader(sp: SparkSession, files: list[str]) -> DataFrame:
-        # deferred-stats flush path: re-read the triggers' own input
-        # files (they outlive the flush window — it's a drop dir) and
-        # parse ONLY the stats columns. This makes the per-trigger stats
-        # cost literally one driver-side json write.
-        return (parse_eve(sp.read.text(files), columns=stats_cols)
-                .filter(F.col("event_type").isNotNull()))
-
-    def _batch_files(batch_id: int) -> list[str]:
-        # the file-source checkpoint's per-batch metadata log — written
-        # before foreachBatch(batch_id) runs — IS the batch's file list
-        # (inside foreachBatch the micro-batch df reports no inputFiles).
-        # Every compactInterval-th batch (default 10) the log lands as
-        # `<id>.compact` holding ALL entries so far, and once a compact
-        # exists older per-batch files become cleanup-eligible — so when
-        # `<id>` is absent, read the nearest compact at-or-after it and
-        # keep only the entries whose batchId matches. A continuous
-        # daemon crosses this boundary every 10 triggers.
-        import glob as _glob
-        import json as _json
-        import re as _re
-
-        # this parses Spark's PRIVATE file-source metadata log, so fail
-        # LOUDLY on anything unexpected rather than returning a silently
-        # wrong/empty file list: the query must have exactly one source
-        # (we hardcode sources/0) and the log format must be the v1 this
-        # parser understands
-        srcs = os.path.join(checkpoint, "sources")
-        others = [d for d in os.listdir(srcs) if d != "0"] \
-            if os.path.isdir(srcs) else []
-        if others:
-            raise RuntimeError(
-                f"deferred-stats flush expects exactly ONE file source "
-                f"(sources/0) but the checkpoint has sources/{{{','.join(sorted(others))}}} "
-                f"too — the file list for batch {batch_id} would be wrong")
-        base = os.path.join(srcs, "0")
-        path = os.path.join(base, str(batch_id))
-        if not os.path.exists(path):
-            compacts = sorted(
-                (int(m.group(1)), p)
-                for p in _glob.glob(os.path.join(base, "*.compact"))
-                if (m := _re.search(r"(\d+)\.compact$", p)))
-            path = next((p for i, p in compacts if i >= batch_id), None)
-            if path is None:
-                raise FileNotFoundError(
-                    f"no file-source log for batch {batch_id} under {base}")
-        out = []
-        with open(path) as f:
-            header = f.readline().strip()
-            if header != "v1":
-                raise RuntimeError(
-                    f"file-source metadata log {path} has version header "
-                    f"{header!r}; this parser understands only 'v1' — a "
-                    "newer Spark changed the format, update _batch_files "
-                    "before trusting its file lists")
-            for ln in f:
-                ln = ln.strip()
-                if ln and ln.startswith("{"):
-                    e = _json.loads(ln)
-                    if e.get("batchId", batch_id) == batch_id:
-                        out.append(e["path"])
-        return out
-
     acc = StreamingSketchAccumulator(
-        keys=["event_type"], specs=specs, state_dir=stats_state_dir,
-        flush_every=stats_every,
-        pending_dir=(os.path.join(output_dir, "_stats_pending")
-                     if stats_every > 1 else None),
-        defer_reader=_stats_reader if stats_every > 1 else None,
-        defer_files=_batch_files if stats_every > 1 else None)
+        keys=["event_type"], specs=specs, state_dir=stats_state_dir)
 
     # parse exactly what the chain reads: 8 match columns + stats inputs
-    # (+ the raw line when a forward sink needs it). In deferred-stats
-    # mode the stats inputs come back through _stats_reader at flush
-    # time instead, so the per-trigger parse drops them too (unless the
-    # match already needs the column).
-    parse_cols = ["event_type", "ts", "dns_type", "http_host", "http_url",
-                  "dns_rrname", "tls_sni", "tls_fingerprint"]
-    if stats_every <= 1:
-        parse_cols += [c for c in stats_cols if c not in parse_cols]
+    # (+ the raw line when a forward sink needs it)
+    parse_cols = list(dict.fromkeys(
+        ["event_type", "ts", "dns_type", "http_host", "http_url",
+         "dns_rrname", "tls_sni", "tls_fingerprint"]
+        + [c for s in specs for c in
+           [s.column] + ([s.weight_column] if s.weight_column else [])]))
     if forwards:
         parse_cols = ["json_line"] + parse_cols
 
@@ -285,11 +201,6 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
         fw_filters.append(F.col("event_type").isin(types_) if types_
                           else None)
     json_line_col = [F.col("json_line")]
-    # persist pays a memory-write pass; with deferred stats, no forwards
-    # and no spool the alerts job is the parse's ONLY action per trigger,
-    # so caching it buys nothing — skip. (spool submits the alerts frame
-    # a second time, which without the persist would re-run parse+match)
-    reuse_parse = bool(forwards) or bool(spool) or stats_every <= 1
 
     alerts_root = os.path.join(output_dir, "alerts")
     # per-RUN tallies (not all-time): a second incremental run against the
@@ -304,6 +215,7 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
     # per-phase wall seconds across the run's batches — the daemon's
     # perf observability (fever exposes the same through its perf stats
     # submitter); driver-side time.time() pairs, negligible cost
+    # ("stats_flush" is always 0.0; perfbench/workloads.py still reads it)
     phases = {"alerts_write": 0.0, "spool": 0.0,
               "forwards": 0.0, "stats": 0.0, "stats_flush": 0.0,
               "compact": 0.0}
@@ -321,11 +233,10 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
         # persist the parse UNFILTERED, then filter on the cached
         # columns: a filter inside the persisted plan gets pushed below
         # the projection and re-split into extra pruned from_json calls
-        # (measured 3 parses/line instead of 1). With ONE consumer
-        # (deferred stats, no forwards) skip the cache pass entirely.
-        cached = batch_df.select(*parse_staged).select(*parse_out)
-        if reuse_parse:
-            cached = cached.persist()
+        # (measured 3 parses/line instead of 1). Alerts and stats are
+        # always two consumers, so the cache always pays.
+        cached = batch_df.select(*parse_staged).select(*parse_out) \
+            .persist()
         parsed = cached.filter(et_notnull)
         try:
             # the per-batch counts (run's event total + the per-forward
@@ -393,8 +304,7 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
             phases["stats"] += t5 - t4
             phases["compact"] += t6 - t5
         finally:
-            if reuse_parse:
-                cached.unpersist()
+            cached.unpersist()
 
     stream = (spark.readStream
               .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -411,20 +321,11 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
         q = writer.start()
         # DOCUMENTED contract (see docstring): the accumulator rides on
         # the query handle as `fever_stats_acc` so a continuous-mode
-        # caller can flush()/read the deferred stats tail — with
-        # stats_every=K, up to K-1 batches ride in the durable spill
-        # between flushes, and q.fever_stats_acc.flush(spark) absorbs
-        # them (main() does this around awaitTermination)
+        # caller can read the live stats
         q.fever_stats_acc = acc
         return q
     q = writer.trigger(availableNow=True).start()
     q.awaitTermination()
-    if stats_every > 1:
-        import time as _t
-
-        t0 = _t.time()
-        acc.flush(spark)  # absorb the spilled tail (+ crashed-run leftovers)
-        phases["stats_flush"] += _t.time() - t0
     # summary of THIS run: batch ids this foreachBatch saw, alert counts
     # from the batch dirs' parquet footers at write time. A run with ZERO
     # batches (empty drop dir, or everything already checkpointed) never
@@ -462,10 +363,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--forward", action="append", default=[],
                     help="name=type1,type2 (repeatable; empty types = all)")
     ap.add_argument("--stats-state-dir", default=None)
-    ap.add_argument("--stats-every", type=int, default=1,
-                    help="run the sketch build+merge once per K batches "
-                         "(spilling a narrow projection per trigger) "
-                         "instead of every trigger")
     ap.add_argument("--sink-files", type=int, default=1,
                     help="files per batch per sink (alerts/forwards)")
     ap.add_argument("--compact-every", type=int, default=0,
@@ -499,7 +396,6 @@ def main(argv: list[str] | None = None) -> None:
                        stats_state_dir=args.stats_state_dir,
                        available_now=not args.continuous,
                        bloom_file=args.bloom_file,
-                       stats_every=args.stats_every,
                        sink_files=args.sink_files,
                        trigger_seconds=args.trigger_seconds,
                        compact_every=args.compact_every,
@@ -507,14 +403,7 @@ def main(argv: list[str] | None = None) -> None:
                        compact_fanin=args.compact_fanin,
                        max_files_per_trigger=args.max_files_per_trigger)
     if args.continuous:
-        try:
-            out.awaitTermination()
-        finally:
-            # absorb the deferred-stats tail (≤ stats_every-1 spilled
-            # batches) so a ctrl-C'd / terminated daemon leaves no
-            # pending spills for the next run to recover
-            if args.stats_every > 1:
-                out.fever_stats_acc.flush(spark)
+        out.awaitTermination()
     else:
         print(json.dumps(out))
         spark.stop()

@@ -75,7 +75,7 @@ JVM_KINDS = ("hll", "cms")
 _CMS_DEFAULT_SEED = 42
 
 
-def _agg_for(spec: SketchSpec, kind_of: dict) -> Column:
+def _agg_for(spec: SketchSpec) -> Column:
     if spec.weight_column is not None:
         raise ValueError(
             f"spec {spec.name!r}: weight_column is not supported by the "
@@ -86,19 +86,48 @@ def _agg_for(spec: SketchSpec, kind_of: dict) -> Column:
         if not 4 <= p <= 21:
             raise ValueError(f"spec {spec.name!r}: hll p={p} outside "
                              "hll_sketch_agg's lgConfigK range [4, 21]")
-        kind_of[spec.name] = "hll"
         return F.hll_sketch_agg(spec.column, p).alias(spec.name)
     if spec.kind == "cms":
         eps = float(spec.params.get("epsilon", 1e-4))
         delta = float(spec.params.get("delta", 1e-3))
         seed = int(spec.params.get("seed", _CMS_DEFAULT_SEED))
-        kind_of[spec.name] = "cms"
         return F.count_min_sketch(
             spec.column, F.lit(eps), F.lit(1.0 - delta), F.lit(seed)
         ).alias(spec.name)
     raise ValueError(
         f"spec {spec.name!r}: kind {spec.kind!r} has no JVM aggregate "
         f"(supported: {', '.join(JVM_KINDS)}) — use build_sketches")
+
+
+def _long_sketch_states(df: DataFrame, keys: list[str],
+                        specs: list[SketchSpec], caller: str,
+                        window: tuple[Column, str, str] | None = None
+                        ) -> DataFrame:
+    """Shared body of ``jvm_sketches`` and the streaming variants: check
+    the specs, aggregate each with its Catalyst sketch aggregate per
+    group, and unpivot to the long (keys..., sketch, state) shape.
+    ``window`` = (aliased window struct, start name, end name): the
+    groups lead with the window, whose start/end come out as the two
+    named columns."""
+    if not specs:
+        raise ValueError(f"{caller} needs at least one spec")
+    names = [s.name for s in specs]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate spec names: {names}")
+    aggs = [_agg_for(s) for s in specs]
+    key_cols = [F.col(k) for k in keys]
+    if window is None:
+        wide = df.groupBy(*key_cols).agg(*aggs)
+        flat_keys = list(keys)
+    else:
+        win, start, end = window
+        wide = df.groupBy(win, *key_cols).agg(*aggs)
+        w = F.col(wide.columns[0])
+        wide = wide.select(w.start.alias(start), w.end.alias(end),
+                           *key_cols, *names)
+        flat_keys = [start, end, *keys]
+    # all agg outputs are binary so unpivot is typed
+    return wide.unpivot(flat_keys, names, "sketch", "state")
 
 
 def jvm_sketches(df: DataFrame, keys: list[str],
@@ -109,16 +138,7 @@ def jvm_sketches(df: DataFrame, keys: list[str],
     aggregation and the groups-only shuffle internally, so the shuffle
     volume is O(groups × state_size) — identical scale shape to
     build_sketches + two_level_merge, without the Python boundary."""
-    if not specs:
-        raise ValueError("jvm_sketches needs at least one spec")
-    kind_of: dict = {}
-    aggs = [_agg_for(s, kind_of) for s in specs]
-    names = [s.name for s in specs]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate spec names: {names}")
-    wide = df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-    # long canonical shape; all agg outputs are binary so unpivot is typed
-    return wide.unpivot(keys, names, "sketch", "state")
+    return _long_sketch_states(df, keys, specs, "jvm_sketches")
 
 
 def jvm_hll_estimate_col(state: Column) -> Column:

@@ -171,6 +171,12 @@ class BloomFilter(Sketch):
         cap, m, k, seed, n_ins = _HEADER.unpack_from(buf, 0)
         (fpp,) = struct.unpack_from("<d", buf, _HEADER.size)
         bits = np.frombuffer(buf[_HEADER.size + 8:], dtype=np.uint8).copy()
+        # a truncated file would otherwise load and fail every later probe
+        # with IndexError; k=0 would report every value present
+        if m < 1 or k < 1 or len(bits) != (m + 7) // 8:
+            raise ValueError(
+                f"corrupt Bloom filter: m={m}, k={k}, {len(bits)} bit bytes "
+                f"(expected {(m + 7) // 8})")
         return cls(capacity=cap, fpp=fpp, seed=seed, _bits=bits, _m=m, _k=k,
                    _n_inserted=n_ins)
 

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from fever_spark.ops.build import SketchSpec
-from fever_spark.ops.jvm_sketch import _agg_for
+from fever_spark.ops.jvm_sketch import _long_sketch_states
 
 
 def jvm_windowed_sketches_stream(stream: DataFrame, ts_col: str,
@@ -68,22 +68,11 @@ def jvm_windowed_sketches_stream(stream: DataFrame, ts_col: str,
         raise ValueError(
             "jvm_windowed_sketches_stream needs a streaming DataFrame — "
             "for batch inputs use jvm_sketches")
-    if not specs:
-        raise ValueError("jvm_windowed_sketches_stream needs at least one spec")
-    names = [s.name for s in specs]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate spec names: {names}")
-    kind_of: dict = {}
-    aggs = [_agg_for(s, kind_of) for s in specs]
-    wide = (stream.withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), window).alias("window"),
-                     *[F.col(k) for k in keys])
-            .agg(*aggs))
-    flat_keys = ["window_start", "window_end", *keys]
-    return (wide.select(F.col("window.start").alias("window_start"),
-                        F.col("window.end").alias("window_end"),
-                        *[F.col(k) for k in keys], *names)
-            .unpivot(flat_keys, names, "sketch", "state"))
+    return _long_sketch_states(
+        stream.withWatermark(ts_col, watermark), keys, specs,
+        "jvm_windowed_sketches_stream",
+        window=(F.window(F.col(ts_col), window).alias("window"),
+                "window_start", "window_end"))
 
 
 def start_jvm_sketch_sink(agg: DataFrame, out_dir: str, checkpoint_dir: str,
@@ -122,19 +111,8 @@ def jvm_session_sketches_stream(stream: DataFrame, ts_col: str,
     if not stream.isStreaming:
         raise ValueError(
             "jvm_session_sketches_stream needs a streaming DataFrame")
-    if not specs:
-        raise ValueError("jvm_session_sketches_stream needs at least one spec")
-    names = [s.name for s in specs]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate spec names: {names}")
-    kind_of: dict = {}
-    aggs = [_agg_for(s, kind_of) for s in specs]
-    wide = (stream.withWatermark(ts_col, watermark)
-            .groupBy(F.session_window(F.col(ts_col), gap).alias("sw"),
-                     *[F.col(k) for k in keys])
-            .agg(*aggs))
-    flat_keys = ["session_start", "session_end", *keys]
-    return (wide.select(F.col("sw.start").alias("session_start"),
-                        F.col("sw.end").alias("session_end"),
-                        *[F.col(k) for k in keys], *names)
-            .unpivot(flat_keys, names, "sketch", "state"))
+    return _long_sketch_states(
+        stream.withWatermark(ts_col, watermark), keys, specs,
+        "jvm_session_sketches_stream",
+        window=(F.session_window(F.col(ts_col), gap).alias("sw"),
+                "session_start", "session_end"))

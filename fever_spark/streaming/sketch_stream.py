@@ -5,7 +5,8 @@ query capabilities, and this module covers the streaming-only ones:
 
 - ``StreamingSketchAccumulator``: foreachBatch sketch building. Each
   micro-batch runs the SAME partition-local build as the batch path, then
-  merges the partials into the accumulated state — on the driver for
+  merges the partials into the accumulated state in the same trigger — on
+  the driver for
   bounded key domains, through the distributed two-level merge when states
   spill — valid because sketch merges are associative, exactly why fever
   can flush partial aggregates on a timer into a driver-side map
@@ -61,98 +62,21 @@ class StreamingSketchAccumulator:
     the same replay safety as the dict path), and NOTHING is collected to
     the driver; read the totals back with ``merged_states(spark)``, a
     distributed two_level_merge over the batch tables (the sketch_job
-    checkpoint layout, jobs/sketch_job.py).
-
-    Per-trigger cost contract: ``flush_every=K`` (with ``pending_dir``)
-    defers the build+merge — each trigger spills its input
-    durably (a narrow parquet projection; or, with ``defer_reader`` +
-    ``defer_files``, just the batch's input-file list as a tiny json)
-    and the build → merge runs once per K batches over everything
-    spilled. ``flush()`` absorbs the tail and recovers a crashed run's
-    leftovers, dropping ids at-or-below the landed state high-water mark
-    so nothing double-counts. This is fever's flush-timer amortization
-    (flow_aggregator.go:152-170) applied to the whole build, not just
-    the merge."""
+    checkpoint layout, jobs/sketch_job.py)."""
 
     def __init__(self, keys: list[str], specs: list[SketchSpec],
-                 max_keys: int = 100_000, state_dir: str | None = None,
-                 flush_every: int = 1, pending_dir: str | None = None,
-                 defer_reader=None, defer_files=None):
-        if (defer_reader is None) != (defer_files is None):
-            raise ValueError("defer_reader and defer_files come together: "
-                             "the reader turns the recorded file lists "
-                             "back into rows at flush time")
-        if flush_every > 1 and pending_dir is None:
-            raise ValueError("flush_every > 1 requires pending_dir= (the "
-                             "per-batch raw-projection spill location)")
+                 max_keys: int = 100_000, state_dir: str | None = None):
         self.keys = list(keys)
         self.specs = list(specs)
         self.max_keys = max_keys
         self.state_dir = state_dir
-        self.flush_every = flush_every
-        self.pending_dir = pending_dir
-        self.defer_reader = defer_reader
-        self.defer_files = defer_files
         self.sketches: dict[tuple, object] = {}
         self.last_batch_id = -1
         self.batches_seen = 0
-        self._pending: list[int] = []
-
-    def _input_columns(self) -> list[str]:
-        cols = list(self.keys)
-        for s in self.specs:
-            cols.append(s.column)
-            if s.weight_column:
-                cols.append(s.weight_column)
-        return list(dict.fromkeys(cols))
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self.last_batch_id:
             return  # replayed batch — idempotence
-
-        if self.flush_every > 1:
-            # deferred mode: a continuous daemon's per-trigger cost must
-            # not include the build+merge — defer them, and run the
-            # build → merge once per flush_every batches
-            # over all deferred batches together. Two spill flavors:
-            #
-            # - defer_reader/defer_files set (file-source batches): per
-            #   trigger, record only the batch's INPUT FILE LIST (from
-            #   defer_files(batch_id) — inside foreachBatch the batch
-            #   df's inputFiles() is empty) as a tiny json — a
-            #   driver-side write, ZERO Spark jobs — and let flush()
-            #   re-read those files through the reader. Right whenever
-            #   the source files outlive the flush window (a drop dir).
-            # - otherwise: spill the (keys + sketched values) projection
-            #   as ONE narrow parquet write per batch (no shuffle).
-            #
-            # Both are idempotent per batch id; both spill durably, so a
-            # crash between trigger commit and flush loses nothing
-            # (flush() recovers leftovers).
-            import json
-            import os
-
-            if self.defer_reader is not None:
-                os.makedirs(self.pending_dir, exist_ok=True)
-                meta = os.path.join(self.pending_dir,
-                                    f"batch={batch_id}.json")
-                tmp = meta + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump({"batch_id": batch_id,
-                               "files": list(self.defer_files(batch_id))},
-                              f)
-                os.replace(tmp, meta)
-            else:
-                batch_df.select(*self._input_columns()).write.mode(
-                    "overwrite").parquet(
-                    os.path.join(self.pending_dir, f"batch={batch_id}"))
-            self.last_batch_id = batch_id
-            self.batches_seen += 1
-            self._pending.append(batch_id)
-            if len(self._pending) >= self.flush_every:
-                self.flush(batch_df.sparkSession)
-            return
-
         self._record(build_sketches(batch_df, self.keys, self.specs),
                      batch_id)
         self.last_batch_id = batch_id
@@ -189,74 +113,6 @@ class StreamingSketchAccumulator:
                 self.sketches[key].merge(sk)
             else:
                 self.sketches[key] = sk
-
-    def flush(self, spark) -> int:
-        """Deferred mode: build + merge every spilled pending batch in ONE
-        pass and land the result, then drop the spills. Call once more
-        after the stream drains (run_pipeline does) to absorb the tail.
-        Picks up pending dirs left by a crashed prior run, EXCEPT those
-        already covered by a landed state (state ids are flush high-water
-        marks — a pending id <= the max landed id was merged by that
-        flush, so re-merging would double-count). Returns the number of
-        batches absorbed."""
-        import glob
-        import os
-        import re
-        import shutil
-
-        if self.flush_every <= 1:
-            return 0
-        pat = (r".*batch=(\d+)\.json$" if self.defer_reader is not None
-               else r".*batch=(\d+)$")
-        on_disk = {
-            int(m.group(1)): p
-            for p in glob.glob(os.path.join(self.pending_dir, "batch=*"))
-            if (m := re.match(pat, p))}
-        landed = -1
-        if self.state_dir is not None:
-            # Only a batch=N dir carrying Spark's _SUCCESS marker counts as
-            # landed: a crash mid-write leaves a partial dir, and treating it
-            # as the high-water mark would delete that window's pending
-            # spills as "stale" — permanently losing their stats. Partial
-            # dirs are removed here so the re-flush's overwrite starts clean.
-            for p in glob.glob(os.path.join(self.state_dir, "batch=*")):
-                m = re.match(r".*batch=(\d+)$", p)
-                if m is None:
-                    continue
-                if os.path.exists(os.path.join(p, "_SUCCESS")):
-                    landed = max(landed, int(m.group(1)))
-                else:
-                    shutil.rmtree(p, ignore_errors=True)
-        stale = [p for i, p in on_disk.items() if i <= landed]
-        for p in stale:
-            shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) \
-                else os.unlink(p)
-        todo = sorted(i for i in on_disk if i > landed)
-        if not todo:
-            self._pending = []
-            return 0
-        if self.defer_reader is not None:
-            import json
-
-            files = []
-            for i in todo:
-                with open(on_disk[i]) as f:
-                    files.extend(json.load(f)["files"])
-            if not files:  # only empty triggers pending — nothing to build
-                for i in todo:
-                    os.unlink(on_disk[i])
-                self._pending = []
-                return 0
-            df = self.defer_reader(spark, files)
-        else:
-            df = spark.read.parquet(*[on_disk[i] for i in todo])
-        self._record(build_sketches(df, self.keys, self.specs), max(todo))
-        for i in todo:
-            p = on_disk[i]
-            shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) \
-                else os.unlink(p)
-        self._pending = []
-        return len(todo)
 
     def merged_states(self, spark) -> DataFrame:
         """Spill mode: the accumulated totals as a DataFrame — one row per

@@ -1,6 +1,6 @@
 """jobs/compactor — bounds the continuous daemon's sink file growth by
 rolling per-trigger batch dirs into range-named files (log-structured),
-with the same high-water crash discipline as the deferred-stats flush.
+with a high-water crash discipline.
 Pure file IO (pyarrow), no Spark needed at this level; the run_pipeline
 integration lives in test_run_pipeline."""
 

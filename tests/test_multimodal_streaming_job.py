@@ -157,18 +157,6 @@ class TestStreamingSketches:
         acc.process_batch(df, 0)
         self._assert_matches_two_level_merge(acc, df)
 
-    def test_deferred_driver_merge_matches_two_level_merge(self, spark,
-                                                          tmp_path):
-        df = self._equiv_frame(spark)
-        acc = StreamingSketchAccumulator(
-            keys=["k"], specs=self.EQUIV_SPECS, flush_every=2,
-            pending_dir=str(tmp_path / "pending"))
-        acc.process_batch(df.filter(F.col("id") < 15_000), 0)
-        assert acc.sketches == {}             # deferred: spilled, not built
-        acc.process_batch(df.filter(F.col("id") >= 15_000), 1)
-        assert os.listdir(tmp_path / "pending") == []  # flushed
-        self._assert_matches_two_level_merge(acc, df)
-
     def test_state_dir_mode_keeps_salted_merge(self, spark, tmp_path,
                                                monkeypatch):
         """Spill mode must never bring states to the driver: its batches
@@ -220,6 +208,16 @@ class TestStreamingSketches:
         assert len(rows) == 200               # 200 keys, one merged row each
         # each key saw exactly 5 distinct ids across the two batches
         assert all(abs(v - 5) < 1 for v in rows.values())
+
+        # a crash mid-write leaves a batch dir without _SUCCESS: the
+        # totals read past it instead of failing on its torn file
+        partial = os.path.join(sd, "batch=2")
+        os.makedirs(partial)
+        with open(os.path.join(partial, "part-00000.parquet"), "wb") as f:
+            f.write(b"\x00garbage")
+        again = acc.merged_states(spark) \
+            .withColumn("e", hll_estimate_col(F.col("state")))
+        assert {r["k"]: r["e"] for r in again.collect()} == rows
 
     def test_windowed_counts_stream_plan(self, spark):
         stream = (spark.readStream.format("rate")

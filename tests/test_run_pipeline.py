@@ -118,6 +118,29 @@ class TestRunPipeline:
         alerts = spark.read.parquet(os.path.join(dirs["out"], "alerts"))
         assert alerts.count() == 1
 
+    def test_continuous_mode_stats_live_on_query(self, spark, dirs):
+        # a continuous caller reads the per-type stats straight off the
+        # query handle: every processed batch is already merged in
+        from fever_spark.jobs.run_pipeline import default_stats_specs
+
+        _drop(dirs["in"], "a.jsonl", [L_HTTP_EVIL, L_HTTP_OK, L_FLOW])
+        _drop(dirs["in"], "b.jsonl", [L_DNS_BAD, L_FLOW, L_HTTP_EVIL])
+        q = run_pipeline(spark, dirs["in"], dirs["out"], IOCS,
+                         checkpoint=dirs["ckpt"], available_now=False,
+                         max_files_per_trigger=1)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        acc = q.fever_stats_acc
+        assert acc.batches_seen == 2
+        assert set(acc.sketches) == {
+            (t, spec.name) for t in ("http", "dns", "flow")
+            for spec in default_stats_specs()}
+        est = {k[0]: round(sk.estimate())
+               for k, sk in acc.sketches.items() if k[1] == "src_ips"}
+        assert est == {"http": 2, "dns": 1, "flow": 1}
+
     def test_continuous_fixed_cadence_trigger(self, spark, dirs):
         # trigger_seconds pins a processingTime trigger: the daemon polls
         # the drop dir at a fixed cadence (the deployed shape) and picks
@@ -214,101 +237,19 @@ class TestRunPipeline:
 
 
 class TestPerTriggerCostControls:
-    """Round-7: the continuous-daemon regime is many small batches, so
-    the per-trigger fixed work is bounded — deferred sketch flushes
-    (stats_every) and single-file sinks (sink_files)."""
+    """The continuous-daemon regime is many small batches, so the
+    per-trigger fixed work is bounded — one parse shared by every
+    consumer and single-file sinks (sink_files)."""
 
-    def test_deferred_stats_match_per_batch_stats(self, spark, dirs):
-        files = [("a.jsonl", [L_HTTP_EVIL, L_FLOW]),
-                 ("b.jsonl", [L_DNS_BAD, L_FLOW]),
-                 ("c.jsonl", [L_HTTP_OK]),
-                 ("d.jsonl", [L_FLOW, L_FLOW])]
-        for name, lines in files:
-            _drop(dirs["in"], name, lines)
-
-        def state_of(tag, **kw):
-            out = os.path.join(dirs["out"], tag)
-            st = os.path.join(dirs["state"], tag)
-            s = run_pipeline(spark, dirs["in"], out, IOCS,
-                             checkpoint=os.path.join(dirs["ckpt"], tag),
-                             stats_state_dir=st, max_files_per_trigger=1,
-                             **kw)
-            assert s["batches"] == 4
-            from fever_spark.ops.merge import two_level_merge
-            merged = spark.read.parquet(os.path.join(st, "batch=*"))
-            tot = two_level_merge(merged, ["event_type"])
-            return s, {(r["event_type"], r["sketch"]): bytes(r["state"])
-                       for r in tot.collect()}
-
-        s1, st1 = state_of("per_batch")
-        s2, st2 = state_of("deferred", stats_every=3)
-        # same groups, and the MERGED totals estimate identically
-        assert st1.keys() == st2.keys()
-        from fever_spark.sketch.base import sketch_from_bytes
-        for k in st1:
-            if k[1] != "src_ips":
-                continue
-            assert (sketch_from_bytes(st1[k]).estimate()
-                    == sketch_from_bytes(st2[k]).estimate()), k
-        # deferred mode landed FEWER state tables (2 flushes: batch 2 +
-        # the drain tail) and left no pending spill behind
-        assert len(os.listdir(os.path.join(dirs["state"], "deferred"))) == 2
-        assert not os.path.exists(
-            os.path.join(dirs["out"], "deferred", "_stats_pending")) or \
-            os.listdir(os.path.join(dirs["out"], "deferred",
-                                    "_stats_pending")) == []
-        assert s2["phase_seconds"]["stats_flush"] >= 0
-
-    def test_deferred_stats_dict_mode(self, spark, dirs):
-        _drop(dirs["in"], "a.jsonl", [L_HTTP_EVIL, L_FLOW])
-        _drop(dirs["in"], "b.jsonl", [L_DNS_BAD])
-        s = run_pipeline(spark, dirs["in"], dirs["out"], IOCS,
-                         checkpoint=dirs["ckpt"], stats_every=8,
-                         max_files_per_trigger=1)
-        # nothing flushed during the run (8 > 2 batches) — the drain-end
-        # flush absorbed the tail into the driver dict
-        assert s["batches"] == 2 and s["stats_groups"] > 0
-
-    def test_deferred_flush_across_log_compaction(self, spark, dirs):
-        # Spark's file-source checkpoint log compacts every 10th batch
-        # into `9.compact` (CompactibleFileStreamLog) instead of a plain
-        # `9` — the deferred-stats flush reads per-batch file lists from
-        # that log, and a continuous daemon crosses the boundary every
-        # 10 triggers, so the window [5..9] must flush through it.
-        lines = [L_HTTP_EVIL, L_HTTP_OK, L_DNS_BAD, L_FLOW]
-        for i in range(12):
-            _drop(dirs["in"], f"f{i:02d}.jsonl", [lines[i % 4]])
-        s = run_pipeline(spark, dirs["in"], dirs["out"], IOCS,
-                         checkpoint=dirs["ckpt"],
-                         stats_state_dir=dirs["state"],
-                         max_files_per_trigger=1, stats_every=5)
-        assert s["batches"] == 12
-        # flushes at batches 4 and 9 (windows of 5) + the drain tail
-        assert sorted(os.listdir(dirs["state"])) == [
-            "batch=11", "batch=4", "batch=9"]
-        from fever_spark.ops.merge import two_level_merge
-        from fever_spark.sketch.base import sketch_from_bytes
-        tot = two_level_merge(
-            spark.read.parquet(os.path.join(dirs["state"], "batch=*")),
-            ["event_type"])
-        est = {(r["event_type"], r["sketch"]):
-               round(sketch_from_bytes(bytes(r["state"])).estimate())
-               for r in tot.collect() if r["sketch"] == "src_ips"}
-        # 12 files cycle the 4 event lines: distinct src_ips per type
-        assert est[("http", "src_ips")] == 2
-        assert est[("dns", "src_ips")] == 1
-        assert est[("flow", "src_ips")] == 1
-
-    def test_spool_only_deferred_stats_keeps_parse_persisted(self, spark,
-                                                             dirs):
-        # spool with NO forwards and deferred stats: the spool submit is
-        # a SECOND action over the parse — the persist must stay on, or
-        # parse+match run twice per trigger; and the spooled payloads
-        # must match the written alerts exactly
+    def test_spool_only_stats_keeps_parse_persisted(self, spark, dirs):
+        # spool with NO forwards: the spool submit is a further action
+        # over the parse — the persist must stay on, or parse+match run
+        # twice per trigger; and the spooled payloads must match the
+        # written alerts exactly
         _drop(dirs["in"], "a.jsonl", [L_HTTP_EVIL, L_DNS_BAD])
         s = run_pipeline(spark, dirs["in"], dirs["out"], IOCS,
                          checkpoint=dirs["ckpt"], spool=dirs["spool"],
-                         stats_state_dir=dirs["state"], stats_every=4)
+                         stats_state_dir=dirs["state"])
         assert s["alerts"] == 2
         msgs = consume_spool(dirs["spool"], ack=False)
         rows = [r for m in msgs for r in json.loads(m["payload"])]
@@ -326,7 +267,7 @@ class TestPerTriggerCostControls:
         _drop(dirs["in"], "b.jsonl", [L_DNS_BAD, L_FLOW])
         run_pipeline(spark, dirs["in"], dirs["out"], IOCS,
                      checkpoint=dirs["ckpt"], stats_state_dir=dirs["state"],
-                     max_files_per_trigger=1, stats_every=2)
+                     max_files_per_trigger=1)
         rc = sketchctl(["estimate", dirs["state"], "--sketch", "src_ips"])
         out = capsys.readouterr().out
         assert rc == 0

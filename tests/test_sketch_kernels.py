@@ -6,6 +6,8 @@ zero-false-negative Bloom property (bloom_handler_test.go:409-427 analog),
 and serde round-trips (flow_extractor_test.go:94-220 analog).
 """
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -108,6 +110,36 @@ class TestBloom:
         bf = BloomFilter.load_or_empty(str(p))
         assert bf.n_inserted == 0
         assert not bf.contains(np.array(["anything"], dtype=object)).any()
+
+    @staticmethod
+    def _truncated(tmp_path):
+        # reference default params: small enough to stay uncompressed, so
+        # cutting the file keeps a valid header over a short bit array
+        bf = BloomFilter(capacity=100, fpp=1e-8)
+        bf.update(np.array(["evil.example.com"], dtype=object))
+        data = bf.to_bytes()
+        p = tmp_path / "cut.bloom"
+        p.write_bytes(data[: len(data) // 2])
+        return p
+
+    def test_load_truncated_raises(self, tmp_path):
+        with pytest.raises(ValueError, match="corrupt Bloom filter"):
+            BloomFilter.load(str(self._truncated(tmp_path)))
+
+    def test_load_zero_hashes_raises(self, tmp_path):
+        # k=0 would make contains() report every value present
+        bf = BloomFilter(capacity=100, fpp=1e-8)
+        data = bytearray(bf.to_bytes())
+        struct.pack_into("<I", data, 8 + 16, 0)  # header: n, m, then k
+        with pytest.raises(ValueError, match="corrupt Bloom filter"):
+            BloomFilter.from_bytes(bytes(data))
+
+    def test_load_or_empty_on_truncated(self, tmp_path):
+        bf = BloomFilter.load_or_empty(str(self._truncated(tmp_path)))
+        default = BloomFilter()
+        assert (bf.m, bf.k, bf.n_inserted) == (default.m, default.k, 0)
+        assert not bf.contains(
+            np.array(["evil.example.com", "x"], dtype=object)).any()
 
     def test_info(self):
         bf = BloomFilter(capacity=100, fpp=1e-8)

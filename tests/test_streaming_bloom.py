@@ -4,8 +4,6 @@ continuous event stream probed against a broadcast indicator filter
 bloom_match_events plan runs on a readStream DataFrame; results must match
 the batch run exactly (stateless operator ⇒ stream/batch parity)."""
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -117,123 +115,3 @@ class TestStreamingHeavyHitters:
         # CMS overcounts only; exact totals are 90 and 30
         assert top[0][1] >= 90 and top[1][1] >= 30
         assert acc.batches_seen == 2
-
-
-class TestDeferredFlush:
-    """Round-7 flush_every mode: per-trigger work is a narrow projection
-    spill; the build+merge shuffles run once per K batches."""
-
-    def _batches(self, spark):
-        import pandas as pd
-        mk = lambda hosts: spark.createDataFrame(  # noqa: E731
-            pd.DataFrame({"host": hosts}))
-        return [mk(["a.x"] * 3 + ["b.x"]), mk(["a.x", "c.x"]),
-                mk(["d.x"] * 5)]
-
-    def test_flush_recovers_crashed_run_leftovers(self, spark, tmp_path):
-        from fever_spark.ops.build import SketchSpec
-        from fever_spark.sketch.base import sketch_from_bytes
-        from fever_spark.streaming import StreamingSketchAccumulator
-
-        spec = [SketchSpec("hosts", "hll", "host", {"p": 12})]
-        pend = str(tmp_path / "pending")
-        state = str(tmp_path / "state")
-
-        # "crashed" run: spilled two batches, never flushed
-        acc1 = StreamingSketchAccumulator([], spec, flush_every=10,
-                                          pending_dir=pend,
-                                          state_dir=state)
-        for i, b in enumerate(self._batches(spark)[:2]):
-            acc1.process_batch(b, i)
-        assert len(os.listdir(pend)) == 2  # pending spills are durable
-
-        # restarted run: sees batch 2 (checkpoint replays nothing), and
-        # its flush absorbs the crashed run's leftovers too
-        acc2 = StreamingSketchAccumulator([], spec, flush_every=10,
-                                          pending_dir=pend,
-                                          state_dir=state)
-        acc2.last_batch_id = 1  # what a restarted stream would replay past
-        acc2.process_batch(self._batches(spark)[2], 2)
-        absorbed = acc2.flush(spark)
-        assert absorbed == 3 and os.listdir(pend) == []
-        [row] = spark.read.parquet(os.path.join(state, "batch=2")).collect()
-        # distinct hosts a/b/c from batches 0-1 + d from batch 2
-        assert round(sketch_from_bytes(bytes(row["state"])).estimate()) == 4
-
-        # a SECOND flush with nothing pending is a no-op, and pending ids
-        # at-or-below the landed high-water mark are treated as already
-        # merged (no double count)
-        assert acc2.flush(spark) == 0
-
-    def test_stale_pending_below_highwater_dropped(self, spark, tmp_path):
-        from fever_spark.ops.build import SketchSpec
-        from fever_spark.sketch.base import sketch_from_bytes
-        from fever_spark.streaming import StreamingSketchAccumulator
-
-        spec = [SketchSpec("hosts", "hll", "host", {"p": 12})]
-        pend = str(tmp_path / "pending")
-        state = str(tmp_path / "state")
-        acc = StreamingSketchAccumulator([], spec, flush_every=2,
-                                         pending_dir=pend, state_dir=state)
-        b = self._batches(spark)
-        acc.process_batch(b[0], 0)
-        acc.process_batch(b[1], 1)  # triggers flush -> state/batch=1
-        assert os.listdir(pend) == []
-        # simulate the crash window between _record and spill cleanup:
-        # re-create a pending dir for an already-landed batch id
-        b[0].select("host").write.mode("overwrite").parquet(
-            os.path.join(pend, "batch=1"))
-        acc2 = StreamingSketchAccumulator([], spec, flush_every=2,
-                                          pending_dir=pend, state_dir=state)
-        assert acc2.flush(spark) == 0  # stale spill dropped, not re-merged
-        assert os.listdir(pend) == []
-        [row] = spark.read.parquet(os.path.join(state, "batch=1")).collect()
-        assert round(sketch_from_bytes(bytes(row["state"])).estimate()) == 3
-
-    def test_partial_state_dir_not_counted_as_landed(self, spark, tmp_path):
-        """Crash DURING the flush's state write leaves a batch=N dir without
-        _SUCCESS. That dir must NOT raise the landed high-water mark — else
-        the next flush would drop the window's pending spills as stale and
-        permanently lose their stats (round-7 ADVICE, medium)."""
-        from fever_spark.ops.build import SketchSpec
-        from fever_spark.sketch.base import sketch_from_bytes
-        from fever_spark.streaming import StreamingSketchAccumulator
-
-        spec = [SketchSpec("hosts", "hll", "host", {"p": 12})]
-        pend = str(tmp_path / "pending")
-        state = str(tmp_path / "state")
-        acc = StreamingSketchAccumulator([], spec, flush_every=10,
-                                         pending_dir=pend, state_dir=state)
-        b = self._batches(spark)
-        acc.process_batch(b[0], 0)
-        acc.process_batch(b[1], 1)
-        assert len(os.listdir(pend)) == 2
-        # simulate a crash mid-write of state/batch=1: partial dir, no
-        # _SUCCESS marker (a stray part file only)
-        partial = os.path.join(state, "batch=1")
-        os.makedirs(partial)
-        with open(os.path.join(partial, "part-00000.parquet"), "wb") as f:
-            f.write(b"\x00garbage")
-
-        acc2 = StreamingSketchAccumulator([], spec, flush_every=10,
-                                          pending_dir=pend, state_dir=state)
-        absorbed = acc2.flush(spark)
-        # both pending spills survive the partial dir and get merged;
-        # the partial dir itself is cleaned so the overwrite lands fresh
-        assert absorbed == 2 and os.listdir(pend) == []
-        [row] = spark.read.parquet(os.path.join(state, "batch=1")).collect()
-        # distinct hosts a/b from batch 0 + c from batch 1
-        assert round(sketch_from_bytes(bytes(row["state"])).estimate()) == 3
-        # merged_states likewise only reads complete dirs
-        est_df = acc2.merged_states(spark)
-        [mrow] = est_df.collect()
-        assert round(
-            sketch_from_bytes(bytes(mrow["state"])).estimate()) == 3
-
-    def test_flush_every_requires_pending_dir(self):
-        from fever_spark.ops.build import SketchSpec
-        from fever_spark.streaming import StreamingSketchAccumulator
-
-        with pytest.raises(ValueError):
-            StreamingSketchAccumulator(
-                [], [SketchSpec("x", "hll", "host")], flush_every=4)
