@@ -13,7 +13,6 @@ Layout
 - ``fever_spark.operators``  fever aggregator & filter parity, dedup, ANN
 - ``fever_spark.functions``  text analysis, URL canonicalization
 - ``fever_spark.sources``    synthetic pages generator, Iceberg-or-parquet IO
-- ``fever_spark.multimodal`` binary-column (image/audio) plumbing, decode stubbed
 - ``fever_spark.streaming``  Structured Streaming sketch builds
 - ``fever_spark.jobs``       checkpoint / lineage / resume pipeline
 """

@@ -99,8 +99,8 @@ def extract_text(html: Column) -> Column:
     deterministic envelope b"<html>" + utf8(text) + b"</html>"
     (sources/synth.py); extraction = decode + strip the envelope, entirely
     JVM codegen. A real-world HTML corpus would swap in a parser behind the
-    same column signature (mapInPandas, like multimodal/binary.py's decode
-    seam); byte-identity per url is the gate either way (q_text_extraction).
+    same column signature (a mapInPandas decode); byte-identity per url is
+    the gate either way (q_text_extraction).
     """
     s = F.decode(html, "UTF-8")
     return F.regexp_extract(s, r"(?s)^<html>(.*)</html>$", 1)

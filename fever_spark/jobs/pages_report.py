@@ -4,7 +4,10 @@
   * CMS top-k heavy-hitter hostnames (global)
   * KLL page-size quantiles + t-digest text-length quantiles (global)
   * optional CMS top-k heavy-hitter text tokens (--tokens)
-  * optional Bloom IOC matching against a filter/ioc file (--iocs)
+  * cross-lang URL overlap (shared-URL and Jaccard estimates per lang
+    pair), merged up from the per-(lang, day) HLL states
+  * optional Bloom IOC matching (--iocs): a saved BloomFilter or an IOC
+    list, one per line, either of them optionally gzipped
 
 Every sketch group runs through the checkpointed SketchJob (chunk lineage,
 atomic manifest, byte-identical resume — rerunning after a kill skips
@@ -19,14 +22,21 @@ Usage:
 
 from __future__ import annotations
 
+import gzip
 import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from fever_spark.ops import (SketchSpec, heavy_hitters_col, hll_estimate_col,
-                             kmv_estimate_col, kmv_sample_col, quantile_col)
+                             kmv_estimate_col, kmv_sample_col, quantile_col,
+                             two_level_merge)
+from fever_spark.ops.bloom_match import bloom_match_pages, build_ioc_filter
+from fever_spark.ops.build import sketches_to_dict
 from fever_spark.jobs.sketch_job import SketchJob
+from fever_spark.sketch import BloomFilter
+from fever_spark.sketch.base import MAGIC
+from fever_spark.sketch.hll import intersection_estimate, jaccard_estimate
 
 QUANTILES = [0.5, 0.95, 0.99]
 
@@ -48,43 +58,39 @@ def _prepare_tokens(df):
             .filter(F.col("tok") != ""))
 
 
+def _load_ioc_filter(path: str) -> BloomFilter:
+    """The --iocs file, its format read from the content: gzip is unwrapped
+    first; a fever envelope is a saved filter and loads as one (a corrupt
+    filter raises); anything else is a UTF-8 IOC list, one per line."""
+    with open(path, "rb") as f:
+        data = f.read()
+    if data.startswith(b"\x1f\x8b"):
+        data = gzip.decompress(data)
+    if data.startswith(MAGIC):
+        return BloomFilter.from_bytes(data)
+    iocs = [ln.strip() for ln in data.decode("utf-8").splitlines()
+            if ln.strip()]
+    return build_ioc_filter(iocs, fpp=1e-6)
+
+
 def build_report(spark: SparkSession, input_path: str, checkpoint_dir: str,
                  with_tokens: bool = False, ioc_file: str | None = None,
-                 topk: int = 20, resume: bool = True,
-                 engine: str = "python") -> dict:
-    """``engine="jvm"`` routes the HLL groups (per-cell distinct counts +
-    the cross-lang overlap algebra) through ops/jvm_sketch — no Python
-    boundary, measured 5-7x on HLL-only workloads. Trade, documented in
-    jvm_sketch.py: the jvm group has NO SketchJob checkpoint (a rerun
-    recomputes it — cheaper than resuming the python build); the global
-    topk/quantile/KMV group and the token group stay on the checkpointed
-    python path in either mode (kinds Spark lacks). Report shape is
-    identical in both modes."""
-    if engine not in ("python", "jvm"):
-        raise ValueError(f"engine must be 'python' or 'jvm', got {engine!r}")
-    report = {"input": input_path, "engine": engine}
+                 topk: int = 20, resume: bool = True) -> dict:
+    # before any sketch job, so a bad IOC file fails in seconds
+    bf = _load_ioc_filter(ioc_file) if ioc_file else None
+    report = {"input": input_path}
 
-    hll_specs = [SketchSpec("distinct_url", "hll", "url", {"p": 14}),
-                 SketchSpec("distinct_host", "hll", "host", {"p": 14})]
-    if engine == "jvm":
-        from fever_spark.ops import (jvm_hll_estimate_col, jvm_hll_union,
-                                     jvm_sketches)
-
-        per_cell = jvm_sketches(
-            _prepare_pages(spark.read.parquet(input_path)),
-            ["lang", "day"], hll_specs).cache()
-        est_col = jvm_hll_estimate_col
-    else:
-        per_cell = SketchJob(
-            input_path, f"{checkpoint_dir}/per_lang_day",
-            keys=["lang", "day"], specs=hll_specs,
-            prepare=_prepare_pages, job_id="per_lang_day").run(
-                spark, resume=resume)
-        est_col = hll_estimate_col
+    per_cell = SketchJob(
+        input_path, f"{checkpoint_dir}/per_lang_day",
+        keys=["lang", "day"],
+        specs=[SketchSpec("distinct_url", "hll", "url", {"p": 14}),
+               SketchSpec("distinct_host", "hll", "host", {"p": 14})],
+        prepare=_prepare_pages, job_id="per_lang_day").run(
+            spark, resume=resume)
     report["per_lang_day"] = [
         {"lang": r["lang"], "day": str(r["day"]), "sketch": r["sketch"],
          "estimate": round(r["est"], 1)}
-        for r in per_cell.withColumn("est", est_col(F.col("state")))
+        for r in per_cell.withColumn("est", hll_estimate_col(F.col("state")))
         .select("lang", "day", "sketch", "est").collect()]
 
     glob = SketchJob(
@@ -123,69 +129,18 @@ def build_report(spark: SparkSession, input_path: str, checkpoint_dir: str,
     # lang pair gets inclusion-exclusion shared-URL and Jaccard estimates
     # — "how much do these segments share", fever's cross-sensor
     # population comparison as sketch algebra
-    if engine == "jvm":
-        # same algebra, JVM states: lang-level unions from the day cells
-        # (the rollup property), pair intersections by inclusion-exclusion
-        # — est(a) + est(b) − est(a∪b), the pair unions computed in ONE
-        # small hll_union_agg job over O(pairs) state rows
-        lang_rows = jvm_hll_union(
-            per_cell.filter(F.col("sketch") == "distinct_url")
-            .select("lang", "sketch", "state"), ["lang"]) \
-            .withColumn("est", jvm_hll_estimate_col(F.col("state"))) \
-            .collect()
-        lstate = {r["lang"]: bytes(r["state"]) for r in lang_rows}
-        lest = {r["lang"]: r["est"] for r in lang_rows}
-        langs = sorted(lstate)
-        # pair group key = TWO columns, never a concatenated string: a
-        # lang value containing the separator would collide two distinct
-        # pairs into one union group and silently corrupt both pairs'
-        # shared_est/jaccard (the python path keys on tuples and was
-        # always immune)
-        pair_rows = [(a, b, "u", bytearray(lstate[x]))
-                     for i, a in enumerate(langs) for b in langs[i + 1:]
-                     for x in (a, b)]
-        union_est = {}
-        if pair_rows:
-            union_est = {(r["lang_a"], r["lang_b"]): r["e"]
-                         for r in jvm_hll_union(
-                spark.createDataFrame(
-                    pair_rows, "lang_a string, lang_b string, "
-                               "sketch string, state binary"),
-                ["lang_a", "lang_b"])
-                .withColumn("e", jvm_hll_estimate_col(F.col("state")))
-                .collect()}
-        report["lang_url_overlap"] = []
-        for i, a in enumerate(langs):
-            for b in langs[i + 1:]:
-                eu = union_est[(a, b)]
-                shared = lest[a] + lest[b] - eu
-                report["lang_url_overlap"].append(
-                    {"lang_a": a, "lang_b": b,
-                     "shared_est": round(shared, 1),
-                     "jaccard": round(max(0.0, shared) / eu if eu else 0.0,
-                                      4)})
-        # per_cell is cached only on this engine path; release it after
-        # its last use (the overlap algebra) instead of pinning the
-        # per-(lang, day) state rows for the rest of the Spark session
-        per_cell.unpersist()
-    else:
-        from fever_spark.ops import two_level_merge
-        from fever_spark.ops.build import sketches_to_dict
-        from fever_spark.sketch.hll import (intersection_estimate,
-                                            jaccard_estimate)
-
-        lang_states = two_level_merge(
-            per_cell.filter(F.col("sketch") == "distinct_url")
-            .select("lang", "sketch", "state"), ["lang"], salt=1)
-        sk = sketches_to_dict(lang_states, ["lang"])
-        langs = sorted(k[0] for k in sk)
-        report["lang_url_overlap"] = [
-            {"lang_a": a, "lang_b": b,
-             "shared_est": round(intersection_estimate(
-                 sk[(a, "distinct_url")], sk[(b, "distinct_url")]), 1),
-             "jaccard": round(jaccard_estimate(
-                 sk[(a, "distinct_url")], sk[(b, "distinct_url")]), 4)}
-            for i, a in enumerate(langs) for b in langs[i + 1:]]
+    lang_states = two_level_merge(
+        per_cell.filter(F.col("sketch") == "distinct_url")
+        .select("lang", "sketch", "state"), ["lang"], salt=1)
+    sk = sketches_to_dict(lang_states, ["lang"])
+    langs = sorted(k[0] for k in sk)
+    report["lang_url_overlap"] = [
+        {"lang_a": a, "lang_b": b,
+         "shared_est": round(intersection_estimate(
+             sk[(a, "distinct_url")], sk[(b, "distinct_url")]), 1),
+         "jaccard": round(jaccard_estimate(
+             sk[(a, "distinct_url")], sk[(b, "distinct_url")]), 4)}
+        for i, a in enumerate(langs) for b in langs[i + 1:]]
 
     if with_tokens:
         toks = SketchJob(
@@ -200,17 +155,7 @@ def build_report(spark: SparkSession, input_path: str, checkpoint_dir: str,
                 F.explode(heavy_hitters_col(F.col("state"), topk))
                 .alias("h")).collect()]
 
-    if ioc_file:
-        from fever_spark.ops.bloom_match import bloom_match_pages
-        from fever_spark.sketch import BloomFilter
-
-        try:
-            bf = BloomFilter.load(ioc_file)
-        except Exception:
-            with open(ioc_file) as f:
-                iocs = [ln.strip() for ln in f if ln.strip()]
-            from fever_spark.ops.bloom_match import build_ioc_filter
-            bf = build_ioc_filter(iocs, fpp=1e-6)
+    if bf is not None:
         bc = spark.sparkContext.broadcast(bf.to_bytes())
         alerts = bloom_match_pages(spark.read.parquet(input_path), bc)
         report["ioc_matches"] = {
@@ -233,19 +178,13 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--iocs", default=None)
     ap.add_argument("--topk", type=int, default=20)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--engine", choices=("python", "jvm"), default="python",
-                    help="jvm: HLL groups through Catalyst's native "
-                         "sketch aggregates (5-7x, no checkpoint for "
-                         "that group); python: fever-envelope states, "
-                         "fully checkpointed")
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
     spark = get_spark(master=args.master, app_name="fever_spark_pages_report")
     report = build_report(spark, args.input, args.checkpoint,
                           with_tokens=args.tokens, ioc_file=args.iocs,
-                          topk=args.topk, resume=not args.no_resume,
-                          engine=args.engine)
+                          topk=args.topk, resume=not args.no_resume)
     print(json.dumps(report))
     spark.stop()
 

@@ -17,6 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fever_spark.operators.filters import (flow_quality_predicate,
+                                           nonempty_predicate,
+                                           proxy_port_predicate)
+
 
 def _grouped(df: DataFrame, keys: list, ts_col: str | None,
              window_duration: str | None):
@@ -65,7 +69,7 @@ def pdns_aggregate(df: DataFrame, window_duration: str | None = None,
     per distinct answer tuple, a count plus observation window stamps —
     two-level groupBy."""
     per_answer = _grouped(
-        df.filter(F.col("dns_rrname").isNotNull() & (F.col("dns_rrname") != "")),
+        df.filter(nonempty_predicate(F.col("dns_rrname"))),
         ["dns_rrname", "dns_rrtype", "dns_rdata", "dns_rcode"], ts_col,
         window_duration).agg(
         F.count(F.lit(1)).alias("count"),
@@ -88,8 +92,7 @@ def pdns_aggregate_v2(df: DataFrame, window_duration: str | None = None,
     the single groupBy on the detail tuple is the only exchange, with
     map-side partial aggregation."""
     ans = (df.filter((F.col("dns_type") == "answer")
-                     & F.col("dns_rrname").isNotNull()
-                     & (F.col("dns_rrname") != "")
+                     & nonempty_predicate(F.col("dns_rrname"))
                      & (F.size("dns_answers") > 0))
            .select("dns_rrname", F.col("src_ip").alias("answering_host"),
                    "dns_rcode", ts_col, F.explode("dns_answers").alias("a"))
@@ -114,8 +117,8 @@ def unicorn_flow_report(df: DataFrame, all_flows: bool = False,
     — idiomatic and shuffle-equivalent."""
     flows = df.filter(F.col("event_type") == "flow")
     if not all_flows:
-        flows = flows.filter((F.col("proto") == "TCP")
-                             & (F.col("bytes_toclient") > 0))
+        flows = flows.filter(flow_quality_predicate(
+            F.col("proto"), F.col("bytes_toclient")))
     return _grouped(flows, ["src_ip", "dest_ip", "dest_port"], ts_col,
                     window_duration).agg(
         F.count(F.lit(1)).alias("count"),
@@ -128,8 +131,6 @@ def unicorn_proxy_map(df: DataFrame, window_duration: str | None = None,
                       ts_col: str = "ts") -> DataFrame:
     """A5 Unicorn proxy map (unicorn_aggregator.go:158-165, port predicate
     :215): http events to proxy ports, counted per (dest_ip, http_host)."""
-    from fever_spark.operators.filters import proxy_port_predicate
-
     http = df.filter((F.col("event_type") == "http")
                      & proxy_port_predicate(F.col("dest_port"))
                      & F.col("http_host").isNotNull())

@@ -114,78 +114,3 @@ def ivf_topk(df_with_cells: DataFrame, centroids: np.ndarray,
     cells = [int(c) for c in order]
     candidates = df_with_cells.filter(F.col("cell").isin(cells))
     return brute_force_topk(candidates, q, k, vec_col, id_col)
-
-
-def incremental_embedding_neardup(new_df: DataFrame,
-                                  old_with_cells: DataFrame,
-                                  centroids: np.ndarray,
-                                  vec_col: str = "embedding",
-                                  id_col: str = "vec_id",
-                                  threshold: float = 0.92,
-                                  n_probe: int = 2) -> DataFrame:
-    """Cross-corpus embedding near-dup for ingestion: (new_id, old_id,
-    cosine >= threshold) between a new batch and the ingested corpus's
-    persisted cell index (``ivf_assign`` output, written partitioned by
-    cell at ingestion time — the embedding analog of the MinHash
-    signature index). The history is never re-embedded or re-assigned:
-
-    - each new vector probes its ``n_probe`` nearest cells (multi-probe
-      catches boundary pairs, same as semantic_dedup_pairs);
-    - the corpus side is FILTERED to the probed cell set before the
-      cogroup — with a cell-partitioned layout that filter is partition
-      pruning, so only the touched shards are read;
-    - per cell, one numpy cross-matmul new x old inside cogroup —
-      bucketed, never an all-pairs join; cell size is the memory knob.
-    """
-    cb = new_df.sparkSession.sparkContext.broadcast(
-        np.asarray(centroids, dtype=np.float64))
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        M = np.stack(vecs.to_numpy()).astype(np.float64)
-        M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        sims = M @ cb.value.T
-        order = np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(order))
-
-    assigned = (new_df.select(F.col(id_col).alias("new_id"),
-                              F.col(vec_col).alias("v"))
-                .withColumn("cell",
-                            F.explode(probe_cells(F.col("v"))))
-                # consumed by the probed-cells collect AND the cogroup —
-                # without materialization the probe UDF would run twice
-                .localCheckpoint(eager=False))
-    probed = [int(r["cell"]) for r in
-              assigned.select("cell").distinct().collect()]
-    old = (old_with_cells.filter(F.col("cell").isin(probed))
-           .select("cell", F.col(id_col).alias("old_id"),
-                   F.col(vec_col).alias("v")))
-
-    out_schema = T.StructType([
-        T.StructField("new_id", T.LongType()),
-        T.StructField("old_id", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    def cross(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left) or not len(right):
-            return pd.DataFrame({"new_id": pd.Series(dtype="int64"),
-                                 "old_id": pd.Series(dtype="int64"),
-                                 "cosine": pd.Series(dtype="float64")})
-        A = np.stack(left["v"].to_numpy()).astype(np.float64)
-        A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-        B = np.stack(right["v"].to_numpy()).astype(np.float64)
-        B /= np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-12)
-        S = A @ B.T
-        ia, ib = np.where(S >= threshold)
-        return pd.DataFrame({
-            "new_id": left["new_id"].to_numpy()[ia],
-            "old_id": right["old_id"].to_numpy()[ib],
-            "cosine": np.round(S[ia, ib], 6)})
-
-    pairs = (assigned.groupBy("cell")
-             .cogroup(old.groupBy("cell"))
-             .applyInPandas(lambda l, r: cross(l, r), out_schema))
-    # a boundary pair can surface from several probed cells — keep one
-    return pairs.groupBy("new_id", "old_id").agg(
-        F.max("cosine").alias("cosine"))

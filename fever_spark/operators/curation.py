@@ -636,57 +636,6 @@ def pack_documents(df: DataFrame, budget: int, id_col: str = "doc_id",
             .select(id_col, "n_tokens", "bin_id"))
 
 
-def pack_sequences(df: DataFrame, seq_len: int, budget: int,
-                   id_col: str = "doc_id", text_col: str = "text",
-                   eos: str = "</s>", n_buckets: int = 64) -> DataFrame:
-    """LM pretraining sequence packing: documents in id order are
-    concatenated with an ``eos`` token between them and cut into
-    fixed-length sequences of ``seq_len`` tokens. Returns
-    (bin_id, seq_id, text, n_tokens); every sequence is exactly seq_len
-    tokens except possibly the LAST one of each bin (the trainer pads or
-    drops it — its short length is visible in n_tokens).
-
-    Two-level shape bounds memory: pack_documents first assigns docs to
-    ``budget``-token bins (distributed prefix sum, no global sort), then
-    ONE applyInPandas per bin concatenates and chunks locally — a group
-    never holds more than ~budget tokens, so ``budget`` is the task-memory
-    knob (set it to hundreds of seq_len). Sequences never cross bin
-    boundaries; within a bin the token stream is exactly the id-ordered
-    concatenation, so output is deterministic on any partition layout.
-    """
-    if seq_len <= 0 or budget < seq_len:
-        raise ValueError("need seq_len > 0 and budget >= seq_len")
-    assign = pack_documents(df, budget, id_col=id_col, text_col=text_col,
-                            n_buckets=n_buckets)
-    joined = df.select(id_col, text_col).join(
-        assign.select(id_col, "bin_id"), id_col)
-
-    # ASCII whitespace class = Java regex \s — keeps this tokenization
-    # identical to every JVM split in the library
-    import re
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-    def chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        toks: list[str] = []
-        for t in pdf[text_col]:
-            t = (t or "").strip()
-            if t:
-                toks.extend(ws.split(t))
-            toks.append(eos)
-        bin_id = int(pdf["bin_id"].iloc[0])
-        rows = []
-        for s, i in enumerate(range(0, len(toks), seq_len)):
-            part = toks[i:i + seq_len]
-            rows.append((bin_id, s, " ".join(part), len(part)))
-        return pd.DataFrame(rows, columns=["bin_id", "seq_id", "text",
-                                           "n_tokens"])
-
-    return (joined.groupBy("bin_id")
-            .applyInPandas(chunk, schema="bin_id long, seq_id long, "
-                                         "text string, n_tokens long"))
-
-
 # ------------------------------------------------- corpus-frequency quality
 
 

@@ -1,7 +1,7 @@
 from fever_spark.ops.build import SketchSpec, build_sketches, prehash_col
 from fever_spark.ops.jvm_sketch import (
     jvm_cms_estimate, jvm_cms_merge, jvm_hll_estimate_col, jvm_hll_union,
-    jvm_quantiles, jvm_rollup_sketches, jvm_sketches, recommend_engine,
+    jvm_quantiles, jvm_rollup_sketches, jvm_sketches,
 )
 from fever_spark.ops.merge import two_level_merge
 from fever_spark.ops.estimate import (
@@ -17,5 +17,5 @@ __all__ = [
     "kmv_jaccard_col", "kmv_sample_col",
     "jvm_sketches", "jvm_hll_estimate_col", "jvm_hll_union",
     "jvm_cms_estimate", "jvm_cms_merge", "jvm_quantiles",
-    "jvm_rollup_sketches", "recommend_engine",
+    "jvm_rollup_sketches",
 ]

@@ -314,35 +314,3 @@ def jvm_rollup_sketches(df: DataFrame, ts_col: str, keys: list[str],
             keys + [win])
         ladder[res] = prev
     return ladder
-
-
-def recommend_engine(specs: list[SketchSpec],
-                     parallelism: int | None = None,
-                     need_state_product: bool = False) -> str:
-    """'jvm' or 'python' — the measured crossover rule as code (numbers
-    from bench.py engine_ab at 10M pages, BENCH/BASELINE.md round 8).
-
-    python whenever the STATE is the product (checkpointed daemon stats,
-    sketchctl, cross-job merge_many — pass need_state_product=True) or
-    any kind has no JVM aggregate in this module (tdigest/kmv/bloom/
-    cmstopk, weighted cms; kll too — Spark 4.1's ``kll_sketch_agg_*``
-    is not wired into ``JVM_KINDS``). Otherwise: hll-only → jvm at any
-    core count (5.3-7.1x measured); hll+cms bundles → jvm at >=16 cores
-    (3.2x at 32; a tie at 8, where one Python boundary crossing
-    amortizes across all sketches while JVM aggregates pay per-row
-    per-aggregate)."""
-    if need_state_product:
-        return "python"
-    for s in specs:
-        # pure inspection (no Column construction — callable without an
-        # active SparkContext): anything _agg_for would reject → python
-        if s.kind not in JVM_KINDS or s.weight_column is not None:
-            return "python"
-        if s.kind == "hll" and not 4 <= int(s.params.get("p", 14)) <= 21:
-            return "python"
-    kinds = {s.kind for s in specs}
-    if kinds == {"hll"}:
-        return "jvm"
-    if parallelism is None or parallelism >= 16:
-        return "jvm"
-    return "python"

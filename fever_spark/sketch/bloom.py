@@ -168,6 +168,9 @@ class BloomFilter(Sketch):
 
     @classmethod
     def _from_payload(cls, buf: memoryview) -> "BloomFilter":
+        if len(buf) < _HEADER.size + 8:
+            raise ValueError(f"corrupt Bloom filter: {len(buf)} payload bytes "
+                             f"(header needs {_HEADER.size + 8})")
         cap, m, k, seed, n_ins = _HEADER.unpack_from(buf, 0)
         (fpp,) = struct.unpack_from("<d", buf, _HEADER.size)
         bits = np.frombuffer(buf[_HEADER.size + 8:], dtype=np.uint8).copy()

@@ -253,13 +253,3 @@ def synth_events_df(spark, n: int, seed: int = 44,
 
     return spark.range(0, n, numPartitions=partitions).mapInPandas(
         gen, schema=schema)
-
-
-def write_pages(spark, path: str, n: int, seed: int = 42, partitions: int | None = None):
-    """Materialize a pages table, partitioned by day like the reference's
-    time-rotated event tables (db/slurper_postgres.go:38-40)."""
-    from fever_spark.sources.io import write_table
-
-    df = synth_pages_df(spark, n, seed=seed, partitions=partitions)
-    write_table(df, path, partition_by_day_of="warc_ts")
-    return path

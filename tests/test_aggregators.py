@@ -54,6 +54,25 @@ class TestDnsAggregate:
             assert answers == exact
 
 
+class TestPdnsAggregate:
+    def test_v1_counts_match_exact(self, spark, events_pdf):
+        # a few empty rrnames beside the non-dns nulls: both are dropped
+        pdf = events_pdf.copy()
+        pdf.loc[pdf.index[pdf.event_type == "dns"][:5], "dns_rrname"] = ""
+        got = A.pdns_aggregate(spark.createDataFrame(pdf)).toPandas()
+        keys = ["dns_rrname", "dns_rrtype", "dns_rdata", "dns_rcode"]
+        dns = pdf[pdf.dns_rrname.notna() & (pdf.dns_rrname != "")]
+        exact = dns.groupby(keys).agg(count=("ts", "size"),
+                                      first_seen=("ts", "min"),
+                                      last_seen=("ts", "max"))
+        got = got.set_index(keys).sort_index()
+        assert len(got) == len(exact)
+        assert (got["count"] == exact["count"]).all()
+        assert got["count"].sum() == len(dns)
+        assert (got["first_seen"] == exact["first_seen"]).all()
+        assert (got["last_seen"] == exact["last_seen"]).all()
+
+
 class TestUnicorn:
     def test_flow_report_filter_and_sums(self, events, events_pdf):
         rep = A.unicorn_flow_report(events).toPandas()

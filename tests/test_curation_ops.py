@@ -692,53 +692,6 @@ class TestSubstringDedup:
         assert out[2]["text"] == "" and out[2]["removed_tokens"] == 6
 
 
-class TestPackSequences:
-    """LM sequence packing: id-ordered concat + eos + fixed-length chunks
-    within token-budget bins."""
-
-    def test_exact_chunking_and_conservation(self, spark):
-        rows = [(i, " ".join(f"d{i}w{j}" for j in range(7)))
-                for i in range(10)]   # 10 docs x 7 tokens (+1 eos each)
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = CUR.pack_sequences(df, seq_len=8, budget=1000).collect()
-        # one bin; stream = 10*(7+1) = 80 tokens -> 10 full sequences
-        assert len(out) == 10
-        assert all(r["n_tokens"] == 8 for r in out)
-        total = sum(r["n_tokens"] for r in out)
-        assert total == 10 * 8
-        # id order: first sequence starts with doc 0's first token and
-        # carries the eos between docs
-        first = sorted(out, key=lambda r: (r["bin_id"], r["seq_id"]))[0]
-        assert first["text"].startswith("d0w0 ")
-        assert "</s>" in first["text"]
-
-    def test_short_tail_only_at_bin_end(self, spark):
-        rows = [(i, " ".join(f"t{i}x{j}" for j in range(5)))
-                for i in range(7)]    # 7 docs x (5+1) = 42 tokens
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = sorted(CUR.pack_sequences(df, seq_len=8, budget=1000).collect(),
-                     key=lambda r: (r["bin_id"], r["seq_id"]))
-        assert [r["n_tokens"] for r in out] == [8, 8, 8, 8, 8, 2]
-
-    def test_deterministic_across_partitioning(self, spark):
-        rows = [(i, " ".join(f"p{i}q{j}" for j in range(11)))
-                for i in range(30)]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        a = sorted((r["bin_id"], r["seq_id"], r["text"]) for r in
-                   CUR.pack_sequences(df, seq_len=16, budget=64).collect())
-        b = sorted((r["bin_id"], r["seq_id"], r["text"]) for r in
-                   CUR.pack_sequences(df.repartition(11), seq_len=16,
-                                      budget=64).collect())
-        assert a == b and len(a) > 4   # several bins in play
-
-    def test_rejects_bad_params(self, spark):
-        df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-        with pytest.raises(ValueError):
-            CUR.pack_sequences(df, seq_len=0, budget=10)
-        with pytest.raises(ValueError):
-            CUR.pack_sequences(df, seq_len=100, budget=10)
-
-
 class TestSubstringDedupProperties:
     """Randomized semantics check: for any corpus and any k, the
     distributed operator must equal the single-machine reference."""

@@ -860,58 +860,3 @@ class TestCappedTakePerGroup:
         for seed in (0, 1, 2):
             got = capped_take_per_group(df, "host", 1, "doc_id", seed=seed)
             assert got.count() == 40, f"under-filled at seed={seed}"
-
-
-class TestIncrementalEmbeddingNearDup:
-    """New batch vs the persisted IVF cell index — planted copies found,
-    orthogonal vectors clean, corpus side pruned to the probed cells."""
-
-    def _setup(self, spark):
-        import numpy as np
-        from fever_spark.operators.ann import (ivf_assign,
-                                               train_ivf_centroids)
-
-        rng = np.random.default_rng(17)
-        old_vecs = rng.normal(size=(120, 16))
-        old = spark.createDataFrame(
-            [(i, v.tolist()) for i, v in enumerate(old_vecs)],
-            "vec_id long, embedding array<double>")
-        cents = train_ivf_centroids(old, n_cells=6, vec_col="embedding")
-        index = ivf_assign(old, cents)
-        return old_vecs, index, cents
-
-    def test_planted_copies_found_orthogonal_clean(self, spark):
-        import numpy as np
-        from fever_spark.operators.ann import incremental_embedding_neardup
-
-        old_vecs, index, cents = self._setup(spark)
-        rng = np.random.default_rng(23)
-        new_rows = [(1000 + i, (old_vecs[i * 7] * 2.5).tolist())
-                    for i in range(5)]                     # scaled copies
-        new_rows += [(2000 + i, rng.normal(size=16).tolist())
-                     for i in range(10)]                   # fresh randoms
-        new = spark.createDataFrame(new_rows,
-                                    "vec_id long, embedding array<double>")
-        pairs = incremental_embedding_neardup(new, index, cents,
-                                              threshold=0.95)
-        got = {(r["new_id"], r["old_id"]) for r in pairs.collect()}
-        for i in range(5):
-            assert (1000 + i, i * 7) in got, f"missed planted copy {i}"
-        # 16-dim randoms essentially never reach cosine 0.95
-        assert not [p for p in got if p[0] >= 2000]
-
-    def test_deterministic_across_partitioning(self, spark):
-        import numpy as np
-        from fever_spark.operators.ann import incremental_embedding_neardup
-
-        old_vecs, index, cents = self._setup(spark)
-        new = spark.createDataFrame(
-            [(1000 + i, (old_vecs[i] * 1.5).tolist()) for i in range(8)],
-            "vec_id long, embedding array<double>")
-        a = {(r["new_id"], r["old_id"]) for r in
-             incremental_embedding_neardup(new, index, cents,
-                                           threshold=0.95).collect()}
-        b = {(r["new_id"], r["old_id"]) for r in
-             incremental_embedding_neardup(new.repartition(5), index, cents,
-                                           threshold=0.95).collect()}
-        assert a == b and len(a) >= 8

@@ -323,23 +323,6 @@ class TestJvmMergeAlgebra:
         assert a == b == c  # counter sums: byte-identical every way
 
 
-def test_recommend_engine_rule():
-    from fever_spark.ops.jvm_sketch import recommend_engine
-
-    hll = [SketchSpec("u", "hll", "x")]
-    bundle = hll + [SketchSpec("c", "cms", "x")]
-    assert recommend_engine(hll) == "jvm"
-    assert recommend_engine(hll, parallelism=2) == "jvm"
-    assert recommend_engine(bundle, parallelism=32) == "jvm"
-    assert recommend_engine(bundle, parallelism=8) == "python"
-    assert recommend_engine(bundle) == "jvm"  # unknown cores -> big-job rule
-    # state-as-product and non-JVM kinds always route python
-    assert recommend_engine(hll, need_state_product=True) == "python"
-    assert recommend_engine([SketchSpec("q", "kll", "x")]) == "python"
-    assert recommend_engine(
-        [SketchSpec("w", "cms", "x", weight_column="n")]) == "python"
-
-
 class TestJvmRollupValidation:
     def test_unaligned_ladder_raises(self, spark, events):
         from fever_spark.ops.jvm_sketch import jvm_rollup_sketches

@@ -1,9 +1,7 @@
-"""Multimodal plumbing, streaming sketch accumulation, and the
-checkpoint/lineage/resume job."""
+"""Streaming sketch accumulation and the checkpoint/lineage/resume job."""
 
 import json
 import os
-import shutil
 import time
 
 import numpy as np
@@ -11,57 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from fever_spark.jobs import SketchJob
-from fever_spark.multimodal import (
-    decode_media, extract_features, resize_images, sample_frames,
-)
-from fever_spark.multimodal.binary import MEDIA_SCHEMA, synth_media
 from fever_spark.ops.build import SketchSpec
 from fever_spark.sketch.base import sketch_from_bytes
 from fever_spark.sources.synth import synth_pages_df
 from fever_spark.streaming import StreamingSketchAccumulator, windowed_counts_stream
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    return spark.createDataFrame(synth_media(300), schema=MEDIA_SCHEMA).cache()
-
-
-class TestMultimodal:
-    def test_decode_schema_and_determinism(self, media):
-        d1 = decode_media(media).toPandas().set_index("media_id")
-        d2 = decode_media(media).toPandas().set_index("media_id")
-        assert (d1["width"].dropna() == d2["width"].dropna()).all()
-        assert {"width", "height", "sample_rate", "n_frames"} <= set(d1.columns)
-        imgs = d1[d1["kind"] == "image"]
-        assert imgs["width"].notna().all() and imgs["sample_rate"].isna().all()
-
-    def test_real_codecs_stub_raises(self, media):
-        with pytest.raises(NotImplementedError):
-            decode_media(media, real_codecs=True)
-
-    def test_features_unit_norm_fixed_dim(self, media):
-        f = extract_features(media).toPandas()
-        assert len(f) == 300
-        for v in f["feature"].head(20):
-            arr = np.asarray(v, dtype=np.float64)
-            assert len(arr) == 64
-            assert abs(np.linalg.norm(arr) - 1.0) < 1e-5
-
-    def test_resize_clamps_aspect(self, media):
-        r = resize_images(decode_media(media), max_side=256).toPandas()
-        assert (r[["out_width", "out_height"]].max(axis=1) <= 256).all()
-        # aspect preserved within rounding
-        ratio_in = r["width"] / r["height"]
-        ratio_out = r["out_width"] / r["out_height"]
-        assert ((ratio_in - ratio_out).abs() / ratio_in < 0.05).all()
-
-    def test_frame_sampling(self, media):
-        s = sample_frames(decode_media(media), every_n=30).toPandas()
-        assert (s["frame_idx"] % 30 == 0).all()
-        per_vid = s.groupby("media_id").agg(n=("frame_idx", "size"),
-                                            nf=("n_frames", "first"))
-        expect = (per_vid["nf"] - 1) // 30 + 1
-        assert (per_vid["n"] == expect).all()
 
 
 class TestStreamingSketches:
@@ -299,77 +250,3 @@ class TestSketchJobResume:
                  pages.groupBy("lang").agg(F.countDistinct("url").alias("n")).collect()}
         for lang, n in exact.items():
             assert abs(est[lang] - n) / n <= 4 * 1.04 / (2 ** 6), lang
-
-
-class TestPerceptualHashDedup:
-    """aHash + Hamming-banded near-dup over the pixel-grid contract."""
-
-    def _pixels(self, spark):
-        import numpy as np
-
-        rng = np.random.default_rng(5)
-        base = rng.random(64)
-        near = base.copy()
-        near[13] = 1.0 - near[13]            # one cell flipped
-        rows = [(1, base.tolist()), (2, near.tolist())]
-        rows += [(10 + i, rng.random(64).tolist()) for i in range(20)]
-        return spark.createDataFrame(rows,
-                                     "media_id long, pixels array<double>")
-
-    def test_planted_near_pair_found_no_fp(self, spark):
-        from fever_spark.multimodal.binary import (perceptual_hash,
-                                                   phash_near_duplicates)
-
-        df = self._pixels(spark)
-        hashes = perceptual_hash(df, pixel_col="pixels")
-        pairs = phash_near_duplicates(hashes, max_hamming=4).collect()
-        got = {(r["id_a"], r["id_b"]) for r in pairs}
-        assert (1, 2) in got
-        # random 64-cell grids differ in ~32 bits — none within 4
-        assert got == {(1, 2)}
-
-    def test_payload_fallback_is_deterministic(self, spark):
-        from fever_spark.multimodal.binary import perceptual_hash, synth_media
-
-        pdf = synth_media(20)
-        df = spark.createDataFrame(pdf[["media_id", "payload"]])
-        a = {r["media_id"]: r["phash"] for r in perceptual_hash(df).collect()}
-        b = {r["media_id"]: r["phash"] for r in
-             perceptual_hash(df.repartition(7)).collect()}
-        assert a == b and len(a) == 20
-
-    def test_pigeonhole_recall_at_exact_budget(self, spark):
-        """A pair at EXACTLY max_hamming distance, spread adversarially
-        one bit per band, must still be found (bands = max_hamming + 1
-        leaves one untouched band)."""
-        from fever_spark.multimodal.binary import phash_near_duplicates
-
-        h_a = 0
-        max_h = 6
-        width = 64 // (max_h + 1)
-        h_b = 0
-        for i in range(max_h):          # flip one bit in bands 0..5
-            h_b |= 1 << (i * width)
-        df = spark.createDataFrame([(1, h_a), (2, h_b)],
-                                   "media_id long, phash long")
-        pairs = phash_near_duplicates(df, max_hamming=max_h).collect()
-        assert [(r["id_a"], r["id_b"], r["hamming"]) for r in pairs] == \
-            [(1, 2, max_h)]
-        # one bit beyond the budget: correctly rejected by the verify
-        df2 = spark.createDataFrame(
-            [(1, h_a), (2, h_b | (1 << 62))],
-            "media_id long, phash long")
-        assert phash_near_duplicates(df2, max_hamming=max_h).count() == 0
-
-    def test_identical_payloads_collide_exactly(self, spark):
-        from fever_spark.multimodal.binary import (perceptual_hash,
-                                                   phash_near_duplicates)
-
-        df = spark.createDataFrame(
-            [(1, bytearray(b"same-bytes")), (2, bytearray(b"same-bytes")),
-             (3, bytearray(b"other-bytes"))],
-            "media_id long, payload binary")
-        pairs = phash_near_duplicates(perceptual_hash(df),
-                                      max_hamming=0).collect()
-        assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
-        assert all(r["hamming"] == 0 for r in pairs)

@@ -2,13 +2,14 @@
 checkpoint/resume (SURVEY §7.1.6)."""
 
 import collections
+import gzip
 import json
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from fever_spark.jobs.pages_report import build_report
+from fever_spark.ops.bloom_match import build_ioc_filter
 from fever_spark.sources.synth import synth_pages_df
 
 
@@ -78,49 +79,32 @@ def test_report_with_ioc_file(spark, pages_dir, tmp_path):
     assert rep["ioc_matches"].get("http-host", 0) > 0
 
 
-def test_report_jvm_engine(spark, pages_dir, tmp_path):
-    """--engine jvm: the HLL groups run through ops/jvm_sketch (same
-    report shape, same bounds); the global topk/quantile/KMV group stays
-    on the checkpointed python path."""
-    rep = build_report(spark, pages_dir, str(tmp_path / "ck"), engine="jvm")
-    assert rep["engine"] == "jvm"
-
-    pages = spark.read.parquet(pages_dir).withColumn(
-        "day", F.to_date("warc_ts"))
-    exact = {(r["lang"], str(r["day"])): r["x"] for r in
-             pages.groupBy("lang", "day")
-             .agg(F.countDistinct("url").alias("x")).collect()}
-    url_cells = [c for c in rep["per_lang_day"]
-                 if c["sketch"] == "distinct_url"]
-    assert len(url_cells) == len(exact)
-    for c in url_cells:
-        x = exact[(c["lang"], c["day"])]
-        assert abs(c["estimate"] - x) / x <= 4 * 1.04 / 2 ** 7
-
-    # synth langs are URL-disjoint: overlap ~ 0 within the compounded
-    # inclusion-exclusion bound, jaccard in [0, 1]
-    langs = sorted({c["lang"] for c in url_cells})
-    assert len(rep["lang_url_overlap"]) == len(langs) * (len(langs) - 1) // 2
-    n_urls = pages.select("url").distinct().count()
-    for o in rep["lang_url_overlap"]:
-        assert 0.0 <= o["jaccard"] <= 1.0
-        assert abs(o["shared_est"]) <= 4 * 3 * (1.04 / 2 ** 7) * n_urls
-
-    # python-path groups unchanged in jvm mode
-    assert len(rep["top_hosts"]) == 20
-    assert rep["page_bytes_q"]["0.5"] <= rep["page_bytes_q"]["0.99"]
-    assert rep["distinct_url_kmv"] > 0
-
-    with pytest.raises(ValueError, match="engine"):
-        build_report(spark, pages_dir, str(tmp_path / "ck2"), engine="rdd")
+def test_report_with_gzip_ioc_list(spark, pages_dir, tmp_path):
+    host = spark.read.parquet(pages_dir).select(
+        F.try_parse_url("url", F.lit("HOST")).alias("h")).first()["h"]
+    iocs = tmp_path / "iocs.txt.gz"
+    iocs.write_bytes(gzip.compress(f"{host}\nnot-present.example\n".encode()))
+    rep = build_report(spark, pages_dir, str(tmp_path / "ck"),
+                       ioc_file=str(iocs))
+    assert rep["ioc_matches"].get("http-host", 0) > 0
 
 
-def test_jvm_overlap_langs_with_pipe_do_not_collide(spark, tmp_path):
-    """Round-9 ADVICE fix: the jvm overlap path used to key pair union
-    groups on f"{a}|{b}" — langs ('a', 'b|c') and ('a|b', 'c') collided
+def test_report_truncated_filter_file_raises(spark, pages_dir, tmp_path):
+    # a cut filter must fail, not be read back as a one-line IOC list
+    data = build_ioc_filter(["evil.example.com", "bad.example"]).to_bytes()
+    cut = tmp_path / "iocs.bloom"
+    cut.write_bytes(data[: len(data) // 2])
+    with pytest.raises(ValueError, match="corrupt Bloom filter"):
+        build_report(spark, pages_dir, str(tmp_path / "ck"),
+                     ioc_file=str(cut))
+
+
+def test_overlap_langs_with_pipe_do_not_collide(spark, tmp_path):
+    """Lang values containing a separator must not merge two pairs:
+    keyed on f"{a}|{b}", langs ('a', 'b|c') and ('a|b', 'c') would collide
     into one group, merging FOUR states and corrupting both pairs'
-    shared_est/jaccard. Keys are two columns now; with URL-disjoint
-    langs every pair's shared estimate must sit near zero."""
+    shared_est/jaccard. With URL-disjoint langs every pair's shared
+    estimate must sit near zero."""
     pages = synth_pages_df(spark, 8_000, partitions=4)
     remapped = pages.withColumn(
         "lang",
@@ -130,7 +114,7 @@ def test_jvm_overlap_langs_with_pipe_do_not_collide(spark, tmp_path):
         .otherwise(F.lit("c")))
     d = str(tmp_path / "pages")
     remapped.write.parquet(d)
-    rep = build_report(spark, d, str(tmp_path / "ck"), engine="jvm")
+    rep = build_report(spark, d, str(tmp_path / "ck"))
     langs = sorted({c["lang"] for c in rep["per_lang_day"]})
     assert {"a", "a|b", "b|c", "c"} <= set(langs)
     n_urls = remapped.select("url").distinct().count()

@@ -1,6 +1,7 @@
 """applyInPandasWithState session collector (J4 streaming form) driven on a
 real micro-batch stream: flow events arrive over several batches; sessions
-emit when the terminal 'flow' event lands, marked iff an 'alert' was seen."""
+emit when the terminal 'flow' event lands, marked iff an 'alert' was seen.
+The batch form, flow_context_batch, keeps the flows that have both."""
 
 import json
 import time
@@ -10,6 +11,21 @@ import pytest
 from pyspark.sql import functions as F
 
 from fever_spark.streaming import session_collector_stream
+from fever_spark.streaming.sketch_stream import flow_context_batch
+
+
+def test_flow_context_batch_keeps_marked_complete_flows(spark):
+    rows = [("a", "http", 1), ("a", "alert", 2), ("a", "flow", 3),
+            ("b", "http", 1), ("b", "flow", 2),                  # no alert
+            ("c", "alert", 1), ("c", "dns", 2),                  # no flow
+            ("d", "flow", 4), ("d", "alert", 1), ("d", "alert", 3),
+            ("d", "flow", 2)]
+    df = spark.createDataFrame(rows, "flow_id string, event_type string, "
+                                     "ts long")
+    got = {r["flow_id"]: r for r in flow_context_batch(df).collect()}
+    assert {k: r["n_events"] for k, r in got.items()} == {"a": 3, "d": 4}
+    assert [e["event_type"] for e in got["d"]["events"]] == [
+        "alert", "flow", "alert", "flow"]
 
 
 def test_session_collector_on_file_stream(spark, tmp_path):

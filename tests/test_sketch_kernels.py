@@ -126,6 +126,14 @@ class TestBloom:
         with pytest.raises(ValueError, match="corrupt Bloom filter"):
             BloomFilter.load(str(self._truncated(tmp_path)))
 
+    def test_load_cut_inside_header_raises(self, tmp_path):
+        # a cut inside the 44-byte Bloom header, not just the bit array
+        data = BloomFilter(capacity=100, fpp=1e-8).to_bytes()
+        p = tmp_path / "short.bloom"
+        p.write_bytes(data[:8 + 20])
+        with pytest.raises(ValueError, match="corrupt Bloom filter"):
+            BloomFilter.load(str(p))
+
     def test_load_zero_hashes_raises(self, tmp_path):
         # k=0 would make contains() report every value present
         bf = BloomFilter(capacity=100, fpp=1e-8)
