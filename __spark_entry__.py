@@ -517,13 +517,7 @@ def q_hll_bound(spark, sf_dir):
     per-type estimates must EQUAL the in-Spark hll_estimate_col values
     exactly (same registers, same kernel). Any byte-format or
     merge-algebra drift between the Spark path and the file contract
-    flips ctl_ok to 0 on every row.
-
-    Round-8 fold — jvm_ok: the JVM-native engine (ops/jvm_sketch.py,
-    hll_sketch_agg via Tungsten, no Python boundary) runs the same
-    grouping over the same table; its group set must equal the Python
-    engine's and every estimate must sit within the same 4-sigma bound
-    of exact. Gates the second execution engine against the first."""
+    flips ctl_ok to 0 on every row."""
     ev = _read(spark, sf_dir, "events")
     merged = two_level_merge(
         build_sketches(ev, ["event_type"],
@@ -564,25 +558,11 @@ def q_hll_bound(spark, sf_dir):
             and all(cli_est[k] == round(spark_est[k], 2)
                     for k in spark_est))
 
-    from fever_spark.ops import jvm_hll_estimate_col, jvm_sketches
-
-    # DataSketches HLL at the same lgK obeys the same 1.04/sqrt(2^p)
-    # rse; reuse the 4-sigma bound. Group-set equality is checked by the
-    # inner join below: a missing/extra JVM group nulls jvm_est on that
-    # row (or drops the python row count), flipping the hash gate.
-    jvm_est = (jvm_sketches(ev, ["event_type"],
-                            [SketchSpec("u", "hll", "user_id", {"p": 14})])
-               .withColumn("jvm_est", jvm_hll_estimate_col(F.col("state")))
-               .select("event_type", "jvm_est"))
-
     return (est.join(exact, "event_type")
-            .join(jvm_est, "event_type")
             .select("event_type",
                     (F.abs(F.col("est") - F.col("x")) / F.col("x") <= bound)
                     .cast("int").alias("within_bound"),
-                    F.lit(ctl_ok).alias("ctl_ok"),
-                    (F.abs(F.col("jvm_est") - F.col("x")) / F.col("x")
-                     <= bound).cast("int").alias("jvm_ok")))
+                    F.lit(ctl_ok).alias("ctl_ok")))
 
 
 def q_kmv_distinct(spark, sf_dir):
@@ -671,25 +651,7 @@ def q_hll_windowed(spark, sf_dir):
     BYTE-identical to a direct coarse build (HLL is a lattice sketch, so
     rollup == direct is exact, not approximate). ``win`` is the window
     start as a UTC epoch-seconds string; DuckDB reproduces it with
-    floor(epoch(ts)/86400|604800) arithmetic — alignment verified.
-
-    Round-8 fold — stream_ok: the STREAMING JVM engine
-    (streaming/jvm_stream.py: hll_sketch_agg held as Structured
-    Streaming aggregation state, append-mode exactly-once emission)
-    replays the same table as a file stream with a 1h watermark; every
-    window it closes must carry an estimate EXACTLY equal to the batch
-    JVM engine's for that (event_type, day) cell (HLL registers are
-    order-independent), and at least one window must close. Gates
-    engine #3 against engine #2 the way jvm_ok gates #2 against #1 in
-    q_hll_bound.
-
-    Round-8 fold #2 — jvm_ladder_ok: the JVM rollup ladder
-    (ops/jvm_sketch.jvm_rollup_sketches: hll_union_agg upward, no Python
-    boundary on any rung) must produce 7-day estimates EXACTLY equal to
-    a direct 7-day jvm build — the same lattice property the python
-    ladder proves byte-identically, at the JVM engine's estimate-identity
-    strength (union output bytes legitimately differ from a from-raw
-    build's)."""
+    floor(epoch(ts)/86400|604800) arithmetic — alignment verified."""
     from fever_spark.ops.rollup import rollup_sketches
 
     ev = _read(spark, sf_dir, "events")
@@ -729,67 +691,8 @@ def q_hll_windowed(spark, sf_dir):
             ["event_type", "window_start"], spec),
         ["event_type", "window_start"])
 
-    import tempfile as _tf
-
-    from fever_spark.ops import jvm_hll_estimate_col, jvm_sketches
-    from fever_spark.streaming import (jvm_windowed_sketches_stream,
-                                       start_jvm_sketch_sink)
-
-    with _tf.TemporaryDirectory(prefix="fever_gate_jvmstream_") as td:
-        src = os.path.join(td, "src")
-        os.makedirs(src)
-        os.symlink(os.path.join(sf_dir, "events.parquet"),
-                   os.path.join(src, "events.parquet"))
-        # watermarks require TIMESTAMP (not the table's TIMESTAMP_NTZ);
-        # cast on BOTH sides so the cell keys compare apples-to-apples
-        stream = (spark.readStream.schema(ev.schema).parquet(src + "/*")
-                  .withColumn("ts", F.col("ts").cast("timestamp")))
-        agg = jvm_windowed_sketches_stream(
-            stream, "ts", "1 day", ["event_type"], spec, watermark="1 hour")
-        q = start_jvm_sketch_sink(agg, os.path.join(td, "out"),
-                                  os.path.join(td, "ckpt"))
-        # a drain that exceeds the bound is a GATE FAILURE, not a partial
-        # score: stopping mid-flight leaves whatever committed, and
-        # verifying only that subset would weaken the documented "every
-        # window it closes" guarantee to "every window we happened to see"
-        drained = q.awaitTermination(300)
-        if not drained:
-            q.stop()
-        emitted = (spark.read.parquet(os.path.join(td, "out"))
-                   .withColumn("e", jvm_hll_estimate_col(F.col("state")))
-                   .select("window_start", "event_type", "e").collect())
-    jvm_cells = {(r["window_start"], r["event_type"]): r["e"] for r in
-                 jvm_sketches(
-                     ev.withColumn("window_start",
-                                   F.window(F.col("ts").cast("timestamp"),
-                                            "1 day").getField("start")),
-                     ["window_start", "event_type"], spec)
-                 .withColumn("e", jvm_hll_estimate_col(F.col("state")))
-                 .collect()}
-    stream_ok = int(drained and bool(emitted) and all(
-        jvm_cells.get((r["window_start"], r["event_type"])) == r["e"]
-        for r in emitted))
-
-    from fever_spark.ops.jvm_sketch import jvm_rollup_sketches
-
-    ev_ts = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-
-    def _ests(df):
-        return {(r["event_type"], r["window_start"]): r["e"] for r in
-                df.withColumn("e", jvm_hll_estimate_col(F.col("state")))
-                .collect()}
-
-    rolled7 = _ests(jvm_rollup_sketches(
-        ev_ts, "ts", ["event_type"], spec, ["1 day", "7 days"])["7 days"])
-    direct7 = _ests(jvm_sketches(
-        ev_ts.withColumn("window_start", F.window("ts", "7 days")["start"]),
-        ["event_type", "window_start"], spec))
-    jvm_ladder_ok = int(bool(rolled7) and rolled7 == direct7)
-
     return (level(ladder["1 day"], "1 day", None).unionByName(
-        level(ladder["7 days"], "7 days", direct_coarse))
-        .withColumn("stream_ok", F.lit(stream_ok))
-        .withColumn("jvm_ladder_ok", F.lit(jvm_ladder_ok)))
+        level(ladder["7 days"], "7 days", direct_coarse)))
 
 
 def q_hll_overlap(spark, sf_dir):
@@ -843,12 +746,9 @@ def q_hll_overlap(spark, sf_dir):
 
 
 def q_cms_bound(spark, sf_dir):
-    """CMS epsilon-delta gate vs exact counts (python engine). Round-8
-    fold — jvm_cms_ok: the JVM engine's count_min_sketch over the same
-    column at the same (epsilon, delta) must satisfy the same per-type
-    bound, probed through jvm_cms_estimate (driver-side read-back of the
-    Tungsten-built state, same class that built it) — the CMS
-    counterpart of q_hll_bound's jvm_ok."""
+    """CMS epsilon-delta gate vs exact counts: every per-type estimate
+    is at least the exact count and overcounts by at most 3e-4 * N
+    (three times the sketch's epsilon of 1e-4)."""
     ev = _read(spark, sf_dir, "events")
     merged = two_level_merge(
         build_sketches(ev, [], [SketchSpec("c", "cms", "event_type",
@@ -856,38 +756,19 @@ def q_cms_bound(spark, sf_dir):
     exact = ev.groupBy("event_type").count()
     n_total = ev.count()
 
-    from fever_spark.ops import jvm_cms_estimate, jvm_sketches
-
-    jvm_state = bytes(jvm_sketches(
-        ev, [], [SketchSpec("c", "cms", "event_type",
-                            {"epsilon": 1e-4, "delta": 1e-3})])
-        .collect()[0]["state"])
-    counts = {r["event_type"]: r["count"] for r in exact.collect()}
-    types = sorted(counts)
-    ests = jvm_cms_estimate(spark, jvm_state, types)
-    jvm_ok = {t: int(counts[t] <= e <= counts[t] + 3e-4 * n_total)
-              for t, e in zip(types, ests)}
-    ok_map = F.create_map(
-        *[x for t in types for x in (F.lit(t), F.lit(jvm_ok[t]))])
-
     probed = (exact.crossJoin(merged.select("state"))
               .withColumn("est", cms_estimate_col(F.col("state"), F.col("event_type"))))
     return probed.select(
         "event_type",
         ((F.col("est") >= F.col("count"))
          & (F.col("est") - F.col("count") <= F.lit(3e-4 * n_total)))
-        .cast("int").alias("within_bound"),
-        ok_map[F.col("event_type")].alias("jvm_cms_ok"))
+        .cast("int").alias("within_bound"))
 
 
 def q_quantile_bounds(spark, sf_dir):
     """KLL + t-digest rank-error gates vs exact ranks (one indicator
-    aggregate for ALL probes). Round-8 fold — the JVM quantile engine:
-    ops/jvm_sketch.jvm_quantiles (approx_percentile, Greenwald-Khanna,
-    partial-agg-below-one-exchange, no Python boundary) answers the same
-    three probes as rows sketch='gk_jvm', gated on ITS published bound —
-    rank error <= 1/accuracy (+1/n discreteness). Three quantile engines,
-    one gate frame."""
+    aggregate for ALL probes): each sketch's 0.1/0.5/0.9 quantile must
+    sit within its published rank-error bound."""
     ev = _read(spark, sf_dir, "events")
     merged = two_level_merge(
         build_sketches(ev, [], [
@@ -909,18 +790,6 @@ def q_quantile_bounds(spark, sf_dir):
     for j, (sk, i, v) in enumerate(vals):
         eps = 2 * 2.296 / 200 ** 0.9 if sk == "kll" else 0.02
         out.append((sk, float(qs[i]), int(abs(ranks[f"r{j}"] - qs[i]) <= eps)))
-
-    from fever_spark.ops.jvm_sketch import jvm_quantiles
-
-    acc = 1000
-    jq = jvm_quantiles(ev, [], "value", qs, accuracy=acc).first()["q"]
-    n = ev.count()
-    jranks = ev.agg(*[
-        F.avg((F.col("value") <= F.lit(float(v))).cast("double")).alias(f"r{i}")
-        for i, v in enumerate(jq)]).first()
-    for i, p in enumerate(qs):
-        ok = int(abs(jranks[f"r{i}"] - p) <= 1.0 / acc + 1.0 / n)
-        out.append(("gk_jvm", float(p), ok))
     return spark.createDataFrame(out, "sketch string, q double, within_bound int")
 
 
@@ -1728,8 +1597,7 @@ def oracle_sql() -> dict[str, str]:
             WHERE tok <> '' GROUP BY tok ORDER BY n DESC, tok LIMIT 20
         """,
         "q_hll_bound": """
-            SELECT event_type, 1 AS within_bound, 1 AS ctl_ok,
-                   1 AS jvm_ok
+            SELECT event_type, 1 AS within_bound, 1 AS ctl_ok
             FROM events GROUP BY event_type
         """,
         "q_kmv_distinct": """
@@ -1746,16 +1614,14 @@ def oracle_sql() -> dict[str, str]:
                    CAST(CAST(floor(epoch(ts)/86400)*86400 AS BIGINT)
                         AS VARCHAR) AS win,
                    '1 day' AS level, 1 AS within_bound,
-                   1 AS ladder_matches_direct, 1 AS stream_ok,
-                   1 AS jvm_ladder_ok
+                   1 AS ladder_matches_direct
             FROM events GROUP BY 1, 2
             UNION ALL
             SELECT event_type,
                    CAST(CAST(floor(epoch(ts)/604800)*604800 AS BIGINT)
                         AS VARCHAR) AS win,
                    '7 days' AS level, 1 AS within_bound,
-                   1 AS ladder_matches_direct, 1 AS stream_ok,
-                   1 AS jvm_ladder_ok
+                   1 AS ladder_matches_direct
             FROM events GROUP BY 1, 2
         """,
         "q_hll_overlap": """
@@ -1765,12 +1631,12 @@ def oracle_sql() -> dict[str, str]:
             FROM t a JOIN t b ON a.event_type < b.event_type
         """,
         "q_cms_bound": """
-            SELECT event_type, 1 AS within_bound, 1 AS jvm_cms_ok
+            SELECT event_type, 1 AS within_bound
             FROM events GROUP BY event_type
         """,
         "q_quantile_bounds": """
             SELECT sketch, q, 1 AS within_bound FROM (
-              SELECT unnest(['kll','td','gk_jvm']) AS sketch) s
+              SELECT unnest(['kll','td']) AS sketch) s
             CROSS JOIN (SELECT unnest([0.1, 0.5, 0.9]) AS q) qs
         """,
         "q_bloom_zero_fn": """

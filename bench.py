@@ -952,76 +952,6 @@ def bench_streaming(spark):
     drain("windowed_counts", lambda st: windowed_counts_stream(
         st, [], "ts", window="1 minute", watermark="2 minutes"))
 
-    # round-8 streaming engine A/B: the SAME 1-minute windowed HLL states
-    # via (a) the python accumulator — fever-envelope state, one
-    # JVM→Python boundary per trigger — and (b) the JVM state-store path
-    # (streaming/jvm_stream.py), which never crosses the boundary.
-    # Semantics note recorded with the datum: (b) is append-mode, so its
-    # sink holds every CLOSED window (the final open window stays in
-    # state); (a) flushes everything. Both walls cover the identical
-    # drain of s["n"] events.
-    from fever_spark.ops.build import SketchSpec as _Spec
-    from fever_spark.streaming import (jvm_windowed_sketches_stream,
-                                       start_jvm_sketch_sink)
-    from fever_spark.streaming.sketch_stream import StreamingSketchAccumulator
-
-    hll_spec = [_Spec("d", "hll", "doc_id", {"p": 12})]
-
-    def hll_drain(engine, files_per_trigger, tag):
-        reader = spark.readStream.schema(schema)
-        if files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-        st = reader.parquet(s["drop"])
-        ck = tempfile.mkdtemp(prefix=f"fever_bench_stream_ck_{tag}_")
-        out_dir = tempfile.mkdtemp(prefix=f"fever_bench_stream_{tag}_out_")
-        try:
-            if engine in ("python", "python_durable"):
-                # durable mode: per-batch states land as parquet under
-                # state_dir — the apples-to-apples pairing for the JVM
-                # path's committed sink (plain python holds a driver dict)
-                acc = StreamingSketchAccumulator(
-                    ["win"], hll_spec,
-                    state_dir=(out_dir if engine == "python_durable"
-                               else None))
-                st2 = st.withColumn(
-                    "win", F.window("ts", "1 minute").getField("start"))
-                t0 = time.time()
-                q = (st2.writeStream.foreachBatch(acc.process_batch)
-                     .option("checkpointLocation", ck)
-                     .trigger(availableNow=True).start())
-                _await_drain(q, tag)
-                wall = time.time() - t0
-                out_rows = (acc.merged_states(spark).count()  # untimed
-                            if engine == "python_durable"
-                            else len(acc.sketches))
-            else:
-                agg = jvm_windowed_sketches_stream(
-                    st, "ts", "1 minute", [], hll_spec,
-                    watermark="2 minutes")
-                t0 = time.time()
-                q = start_jvm_sketch_sink(agg, out_dir, ck)
-                _await_drain(q, tag)
-                wall = time.time() - t0
-                out_rows = spark.read.parquet(out_dir).count()  # untimed
-            stages[tag] = {"wall_s": round(wall, 3),
-                           "events_per_sec": round(s["n"] / wall, 1),
-                           "out_rows": out_rows}
-        finally:
-            shutil.rmtree(ck, ignore_errors=True)
-            shutil.rmtree(out_dir, ignore_errors=True)
-
-    # both regimes: ONE availableNow trigger (boundary paid once — the
-    # python accumulator's best case) and 8 triggers of 2 files (the
-    # live-daemon shape, boundary paid per trigger). The _durable rows
-    # are the fair pairing for the JVM path (both write committed
-    # parquet inside the timed region); plain python holds a driver dict.
-    hll_drain("python", None, "py_windowed_hll")
-    hll_drain("python_durable", None, "py_windowed_hll_durable")
-    hll_drain("jvm", None, "jvm_windowed_hll")
-    hll_drain("python", 2, "py_windowed_hll_8trig")
-    hll_drain("python_durable", 2, "py_windowed_hll_durable_8trig")
-    hll_drain("jvm", 2, "jvm_windowed_hll_8trig")
-
     # both dedup paths must actually drop the planted ~30% (bloom may
     # over-drop by its FPR — sub-ppm at this capacity, allow 5)
     ok = all(s["n_distinct"] - 5 <= stages[k]["out_rows"] < s["n"]
@@ -1105,101 +1035,6 @@ def bench_sf1(spark):
         return detail["curate"]["counts"]["written"]
     finally:
         shutil.rmtree(out, ignore_errors=True)
-
-
-def bench_sketch_pipeline_jvm(spark):
-    """sketch_pipeline on the JVM-native engine (ops/jvm_sketch.py):
-    same cached pages, same groups, hll+cms via Tungsten aggregates —
-    no Python boundary. NOT in the default query list (the comparable
-    subset and the scaling study's 193/193 invariant are pinned to the
-    python-engine plan); the scaling harness requests it explicitly
-    (FEVER_SCALING_QUERY=sketch_pipeline_jvm) to measure N→4N scaling
-    of the boundary-free plan. State bytes are force-materialized so
-    Catalyst can't prune the aggregates (see bench_engine_ab)."""
-    from fever_spark.ops import jvm_sketches
-
-    pages = _pages_projected(spark)
-    st = jvm_sketches(pages, ["lang"], [
-        SketchSpec("distinct_urls", "hll", "url", {"p": 14}),
-        SketchSpec("host_freq", "cms", "url",
-                   {"epsilon": 1e-4, "delta": 1e-3})])
-    n = st.agg(F.sum(F.octet_length("state"))).collect()[0][0]
-    assert n and n > 0
-    return n
-
-
-_ENGINE_AB_DETAIL = {}
-
-
-def bench_engine_ab(spark):
-    """Python-format engine vs the JVM-native engine (ops/jvm_sketch.py)
-    over the same cached 10M pages — the crossover datum behind the
-    engine-choice rule in jvm_sketch.py's docstring. Four best-of-3
-    walls: {hll-only, hll+cms} x {python, jvm}. Decomposition context
-    (BENCH/BASELINE.md round 8): a NO-OP mapInPandas ship costs ~92% of
-    the python pipeline's wall — the python walls are transfer-bound
-    and near-identical for hll vs hll+cms, while the JVM engine skips
-    the boundary entirely (measured at 10M pages/local[32]: hll-only
-    7.1x, bundle 3.2x)."""
-    from fever_spark.ops import jvm_hll_estimate_col, jvm_sketches
-
-    pages = _pages_projected(spark)
-    hll = [SketchSpec("distinct_urls", "hll", "url", {"p": 14})]
-    bundle = hll + [SketchSpec("host_freq", "cms", "url",
-                               {"epsilon": 1e-4, "delta": 1e-3},
-                               prehash=True)]
-    jvm_bundle = [hll[0], SketchSpec("host_freq", "cms", "url",
-                                     {"epsilon": 1e-4, "delta": 1e-3})]
-
-    # materialize by summing EVERY state's byte length: .count() (or a
-    # filter to one sketch name) would let Catalyst PRUNE unread
-    # aggregate expressions from the JVM plan — the opaque Python
-    # closure can't be pruned, so the A/B would be phantom-fast on one
-    # side. Verified: the pruned variant reported 0.25s for hll+cms,
-    # the forced one pays for both aggregates.
-    def py_run(specs):
-        merged = two_level_merge(
-            build_sketches(pages, ["lang"], specs, coalesce_to=0), ["lang"])
-        return merged.agg(F.sum(F.octet_length("state"))).collect()[0][0]
-
-    def jvm_run(specs):
-        df = jvm_sketches(pages, ["lang"], specs)
-        return df.agg(F.sum(F.octet_length("state"))).collect()[0][0]
-
-    # round-8: the quantile counterpart — python KLL (the state-product
-    # engine) vs jvm_quantiles/approx_percentile (in-job reporting, no
-    # boundary, no exposable state) over the same text_len column
-    from fever_spark.ops.jvm_sketch import jvm_quantiles
-
-    kll = [SketchSpec("len_q", "kll", "text_len", {"k": 200})]
-
-    def jvm_q_run(_):
-        out = jvm_quantiles(pages, ["lang"], "text_len",
-                            [0.1, 0.5, 0.9], 10000)
-        return out.agg(F.sum(F.element_at("q", 2))).collect()[0][0]
-
-    walls = {}
-    for name, fn, specs in [
-            ("python_hll", py_run, hll), ("jvm_hll", jvm_run, hll),
-            ("python_hll_cms", py_run, bundle),
-            ("jvm_hll_cms", jvm_run, jvm_bundle),
-            ("python_kll", py_run, kll), ("jvm_gk", jvm_q_run, None)]:
-        fn(specs)  # warm (worker reuse / codegen)
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            n = fn(specs)
-            best = min(best, time.time() - t0)
-        assert n > 0
-        walls[name] = round(best, 3)
-    _ENGINE_AB_DETAIL.update(
-        walls_s=walls, n_pages=N_PAGES,
-        jvm_hll_speedup=round(walls["python_hll"] / walls["jvm_hll"], 2),
-        jvm_bundle_speedup=round(
-            walls["python_hll_cms"] / walls["jvm_hll_cms"], 2),
-        jvm_quantile_speedup=round(walls["python_kll"] / walls["jvm_gk"], 2),
-        pages_per_sec_jvm_hll=round(N_PAGES / walls["jvm_hll"], 1))
-    return sum(walls.values())
 
 
 _DEDUP1M_DETAIL = {}
@@ -1290,20 +1125,13 @@ BENCHES = {
     "streaming": bench_streaming,
     "sf1": bench_sf1,
     "dedup_1m": bench_dedup_1m,
-    "engine_ab": bench_engine_ab,
-    "sketch_pipeline_jvm": bench_sketch_pipeline_jvm,
 }
 
 # Heavy composed entries (model training / corpus-index state per run):
 # run ONCE after the rep loop, recorded in `queries` but excluded from
 # the headline `value` so the comparable subset stays stable per round.
 ONE_SHOT = {"text_models", "ingest", "crawl_gated", "eve_pipeline",
-            "streaming", "sf1", "dedup_1m", "engine_ab"}
-
-# in BENCHES (requestable, full rep loop) but not in the default list:
-# the comparable subset and the scaling invariants are pinned to the
-# python-engine plans
-NON_DEFAULT = {"sketch_pipeline_jvm"}
+            "streaming", "sf1", "dedup_1m"}
 
 
 # footprint-matched parallel control (round-8, the round-7 verdict's #1
@@ -1365,8 +1193,7 @@ def main(argv=None):
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--master", default=f"local[{CPUS}]")
-    ap.add_argument("--queries", default=",".join(
-        n for n in BENCHES if n not in NON_DEFAULT))
+    ap.add_argument("--queries", default=",".join(BENCHES))
     ap.add_argument("--skip-warmup", action="store_true")
     args = ap.parse_args(argv)
 
@@ -1471,11 +1298,6 @@ def main(argv=None):
     if "sketch_pipeline" in timings:
         result["pages_per_sec"] = round(N_PAGES / timings["sketch_pipeline"], 1)
         result["n_pages"] = N_PAGES
-    if "sketch_pipeline_jvm" in timings and "sketch_pipeline" not in timings:
-        # scaling-harness contract when the JVM engine is the scaled workload
-        result["pages_per_sec"] = round(
-            N_PAGES / timings["sketch_pipeline_jvm"], 1)
-        result["n_pages"] = N_PAGES
     if "warc_parse" in timings:
         result["warc_pages_per_sec"] = round(
             N_WARC_PAGES / timings["warc_parse"], 1)
@@ -1500,8 +1322,6 @@ def main(argv=None):
         result["streaming_stages"] = _STREAM_DETAIL
     if "sf1" in requested and _SF1_DETAIL:
         result["sf1_stages"] = _SF1_DETAIL
-    if "engine_ab" in requested and _ENGINE_AB_DETAIL:
-        result["engine_ab"] = _ENGINE_AB_DETAIL
     if "dedup_1m" in requested and _DEDUP1M_DETAIL:
         result["dedup_1m_stages"] = _DEDUP1M_DETAIL
     if one_shot:

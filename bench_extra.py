@@ -223,73 +223,6 @@ def cmd_minhash_kernel(reps: int = 5):
                       "perm_loop_s": round(best, 3)}))
 
 
-def cmd_stream_ab(rounds: int = 5):
-    """Clean-window sample collection for the 8-trigger streaming A/B
-    (VERDICT r8 #1): each round drains the 500k-doc drop through
-    py_plain / py_durable / jvm at 2 files per trigger, interleaved, and
-    records the parallel-control weather right before the round so
-    clean-window rows are identifiable."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    import bench
-    from fever_spark.ops.build import SketchSpec as _Spec
-    from fever_spark.streaming import (jvm_windowed_sketches_stream,
-                                       start_jvm_sketch_sink)
-    from fever_spark.streaming.sketch_stream import StreamingSketchAccumulator
-
-    spark = _spark()
-    s = bench._stream_setup(spark)
-    schema = "doc_id long, ts timestamp, text string"
-    hll_spec = [_Spec("d", "hll", "doc_id", {"p": 12})]
-
-    def drain(engine):
-        st = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 2).parquet(s["drop"]))
-        ck = tempfile.mkdtemp(prefix=f"bx_ab_ck_{engine}_")
-        out_dir = tempfile.mkdtemp(prefix=f"bx_ab_out_{engine}_")
-        try:
-            if engine in ("python", "python_durable"):
-                acc = StreamingSketchAccumulator(
-                    ["win"], hll_spec,
-                    state_dir=(out_dir if engine == "python_durable"
-                               else None))
-                st2 = st.withColumn(
-                    "win", F.window("ts", "1 minute").getField("start"))
-                t0 = time.time()
-                q = (st2.writeStream.foreachBatch(acc.process_batch)
-                     .option("checkpointLocation", ck)
-                     .trigger(availableNow=True).start())
-                q.awaitTermination(600)
-                return time.time() - t0
-            agg = jvm_windowed_sketches_stream(
-                st, "ts", "1 minute", [], hll_spec, watermark="2 minutes")
-            t0 = time.time()
-            q = start_jvm_sketch_sink(agg, out_dir, ck)
-            q.awaitTermination(600)
-            return time.time() - t0
-        finally:
-            shutil.rmtree(ck, ignore_errors=True)
-            shutil.rmtree(out_dir, ignore_errors=True)
-
-    rows = []
-    for engine in ("python", "python_durable", "jvm"):
-        drain(engine)  # warm: codegen + state-store init
-    for _ in range(rounds):
-        ctrl = bench._parallel_control()
-        row = {"ctrl": ctrl,
-               "multiplier": round(max(1.0, ctrl / bench.PARCTRL_IDLE_SEC),
-                                   3)}
-        for engine in ("python", "python_durable", "jvm"):
-            w = drain(engine)
-            row[engine] = round(s["n"] / w, 1)
-        rows.append(row)
-        print(json.dumps(row), flush=True)
-    print(json.dumps({"rounds": rows, "n_events": s["n"]}))
-
-
 def cmd_subset(names: str, reps: int = 3):
     """Best-of-N walls for a comma-separated subset of bench.py BENCHES
     (same setup exclusions as bench.main, no warmup pandas pass)."""
@@ -332,8 +265,6 @@ def main():
         cmd_eve8()
     elif cmd == "minhash_kernel":
         cmd_minhash_kernel()
-    elif cmd == "stream_ab":
-        cmd_stream_ab(rounds=int(args[0]) if args else 5)
     elif cmd == "subset":
         cmd_subset(args[0])
     else:

@@ -262,9 +262,7 @@ metric is sketch-BUILD+MERGE throughput; single-VM disk bandwidth is the
 one resource a real cluster scales per-executor and this box cannot).
 sketch_pipeline = mapInPandas partition-local sketch build (HLL p=14 +
 CMS ε=1e-4,δ=1e-3 + KLL k=200, per lang) → two-level salted shuffle
-merge → estimate; sketch_pipeline_jvm = the same groups via the
-JVM-native engine (hll_sketch_agg + count_min_sketch, Tungsten partial
-agg, no Python boundary); warc_parse = the raw-crawl ingest map.
+merge → estimate; warc_parse = the raw-crawl ingest map.
 Python workers pre-warmed, best-of-reps wall per level, median of {RUNS}
 interleaved control/job rounds. Round 1 measured a 2.5s job where fixed
 costs dominate (Amdahl); at {N_PAGES:,} pages fixed costs are <5% of wall.

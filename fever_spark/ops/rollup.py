@@ -33,6 +33,44 @@ __all__ = ["rollup_sketches"]
 
 WINDOW_COL = "window_start"
 
+_INTERVAL_UNIT_SECONDS = {
+    "week": 604800, "weeks": 604800,
+    "day": 86400, "days": 86400,
+    "hour": 3600, "hours": 3600,
+    "minute": 60, "minutes": 60, "min": 60, "mins": 60,
+    "second": 1, "seconds": 1, "sec": 1, "secs": 1,
+}
+
+
+def validate_resolution_ladder(resolutions: list[str]) -> None:
+    """Fail loudly on a ladder whose coarser rungs are NOT integer
+    multiples of the one below (e.g. ['1 day', '36 hours']): the
+    window-of-windows truncation rollup_sketches uses assumes aligned
+    buckets, and misuse silently yields wrong coarse buckets. Only
+    fixed-width units are accepted — F.window rejects calendar units
+    (months) anyway, so an unparseable resolution is itself an error."""
+    import re
+
+    def seconds(res: str) -> int:
+        m = re.fullmatch(r"\s*(\d+)\s+([a-zA-Z]+)\s*", res)
+        if not m or m.group(2).lower() not in _INTERVAL_UNIT_SECONDS:
+            raise ValueError(
+                f"unparseable rollup resolution {res!r}: expected "
+                f"'<n> <unit>' with unit one of "
+                f"{sorted(set(_INTERVAL_UNIT_SECONDS))}")
+        return int(m.group(1)) * _INTERVAL_UNIT_SECONDS[m.group(2).lower()]
+
+    secs = [seconds(r) for r in resolutions]
+    for prev, cur, pr, cr in zip(secs, secs[1:], resolutions,
+                                 resolutions[1:]):
+        if cur % prev != 0 or cur <= prev:
+            raise ValueError(
+                f"rollup resolutions must be ordered finest -> coarsest "
+                f"with each level an integer multiple of the previous: "
+                f"{cr!r} ({cur}s) is not a strict multiple of {pr!r} "
+                f"({prev}s) — the window-of-windows truncation would "
+                "produce misaligned coarse buckets")
+
 
 def rollup_sketches(df: DataFrame, ts_col: str, keys: list[str],
                     specs: list[SketchSpec],
@@ -41,16 +79,13 @@ def rollup_sketches(df: DataFrame, ts_col: str, keys: list[str],
     keyed by (keys..., window_start, sketch).
 
     ``resolutions`` is ordered finest → coarsest (e.g. ``["1 hour",
-    "1 day"]``); every coarser level MUST be a multiple of the finest
-    (the window-of-windows truncation assumes aligned buckets — the
-    hypertable contract). Raw data is scanned exactly once, at the
+    "1 day"]``); each rung MUST be a strict integer multiple of the rung
+    below it (the window-of-windows truncation assumes aligned buckets —
+    the hypertable contract), so ``["1 hour", "2 hours", "3 hours"]`` is
+    rejected. Raw data is scanned exactly once, at the
     finest level; every other level is a state-only two_level_merge."""
     if not resolutions:
         raise ValueError("need at least one resolution")
-    # same aligned-buckets contract as the JVM ladder, now VALIDATED
-    # (was documented-only): unaligned rungs silently mis-bucket
-    from fever_spark.ops.jvm_sketch import validate_resolution_ladder
-
     validate_resolution_ladder(resolutions)
     finest = resolutions[0]
     fine = (df.withColumn(WINDOW_COL,

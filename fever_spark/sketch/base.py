@@ -117,13 +117,25 @@ def payload_of(data: bytes) -> bytes:
     _, flags = _check_header(data)
     payload = bytes(memoryview(data)[8:])
     if flags & FLAG_ZLIB:
-        payload = zlib.decompress(payload)
+        payload = _inflate(payload)
     return payload
 
 
+def _inflate(payload) -> bytes:
+    """Decompress a zlib payload; a cut or garbled stream is a corrupt
+    state (``ValueError``), not a ``zlib.error``."""
+    try:
+        return zlib.decompress(payload)
+    except zlib.error as e:
+        raise ValueError(f"corrupt sketch state: {e}") from e
+
+
 def _check_header(data: bytes) -> tuple[int, int]:
-    """Check a serialized state's magic, version and kind; return
+    """Check a serialized state's length, magic, version and kind; return
     ``(kind, flags)``."""
+    if len(data) < 8:
+        raise ValueError(f"corrupt sketch state: {len(data)} bytes is "
+                         "shorter than the 8-byte header")
     magic, version, kind, flags = struct.unpack_from("<4sBBH", data, 0)
     if magic != MAGIC:
         raise ValueError(f"bad sketch magic {magic!r}")
@@ -141,6 +153,8 @@ def merge_many(states: list[bytes]) -> Sketch:
     (Bloom/HLL/CMS reduce over zero-copy buffer views — the hot path of
     the shuffle-merge stage), else falls back to pairwise
     deserialize+merge."""
+    if not states:
+        raise ValueError("merge_many needs at least one state")
     kinds = {_check_header(s)[0] for s in states}
     if len(kinds) > 1:
         names = sorted(SKETCH_REGISTRY[k].NAME for k in kinds)
@@ -158,5 +172,5 @@ def sketch_from_bytes(data: bytes) -> Sketch:
     kind, flags = _check_header(data)
     payload = memoryview(data)[8:]
     if flags & FLAG_ZLIB:
-        payload = memoryview(zlib.decompress(payload))
+        payload = memoryview(_inflate(payload))
     return SKETCH_REGISTRY[kind]._from_payload(payload)

@@ -4,12 +4,7 @@ from fever_spark.streaming.sketch_stream import (
 from fever_spark.streaming.dedup_stream import (
     bloom_stream_dedup, exact_stream_dedup,
 )
-from fever_spark.streaming.jvm_stream import (
-    jvm_session_sketches_stream, jvm_windowed_sketches_stream,
-    start_jvm_sketch_sink,
-)
 
 __all__ = ["StreamingSketchAccumulator", "windowed_counts_stream",
            "session_collector_stream", "bloom_stream_dedup",
-           "exact_stream_dedup", "jvm_windowed_sketches_stream",
-           "jvm_session_sketches_stream", "start_jvm_sketch_sink"]
+           "exact_stream_dedup"]

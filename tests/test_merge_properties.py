@@ -309,3 +309,10 @@ def test_merge_many_checks_every_state_in_any_order(kind_b, match):
     for states in ([good, bad], [bad, good]):
         with pytest.raises(ValueError, match=match):
             merge_many(states)
+
+
+def test_merge_many_empty_raises():
+    from fever_spark.sketch.base import merge_many
+
+    with pytest.raises(ValueError, match="at least one state"):
+        merge_many([])

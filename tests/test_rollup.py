@@ -97,9 +97,12 @@ class TestResolutionValidation:
     def test_unaligned_ladder_raises(self, spark, events):
         import pytest as _pt
 
-        with _pt.raises(ValueError, match="integer multiple"):
-            rollup_sketches(events, "ts", [], [SPECS[0]],
-                            ["1 day", "36 hours"])
+        # not a multiple; equal rungs; each a multiple of the finest but
+        # "3 hours" not a multiple of the rung below it
+        for ladder in (["1 day", "36 hours"], ["1 day", "24 hours"],
+                       ["1 hour", "2 hours", "3 hours"]):
+            with _pt.raises(ValueError, match="integer multiple"):
+                rollup_sketches(events, "ts", [], [SPECS[0]], ladder)
 
     def test_unparseable_resolution_raises(self, spark, events):
         import pytest as _pt

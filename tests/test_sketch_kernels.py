@@ -16,6 +16,7 @@ from fever_spark.sketch import (
     BloomFilter, CountMinSketch, HyperLogLog, KLLSketch, TDigest,
     sketch_from_bytes,
 )
+from fever_spark.sketch.base import FLAG_ZLIB, payload_of
 
 RNG = np.random.default_rng(42)
 
@@ -153,6 +154,33 @@ class TestBloom:
         bf = BloomFilter(capacity=100, fpp=1e-8)
         info = bf.info()
         assert info["capacity"] == 100 and info["k"] >= 1 and info["m"] >= 8
+
+
+class TestCorruptState:
+    """Damage to the envelope (its 8-byte header or a zlib-compressed
+    payload) raises ValueError, never a zlib or struct error."""
+
+    def test_cut_compressed_state_raises(self):
+        # a real-size filter serializes zlib-compressed; cutting it leaves
+        # a truncated stream, not a short bit array
+        data = BloomFilter(capacity=100000, fpp=1e-6).to_bytes()
+        assert data[6] & FLAG_ZLIB
+        cut = data[: len(data) // 2]
+        with pytest.raises(ValueError, match="corrupt sketch state"):
+            BloomFilter.from_bytes(cut)
+        with pytest.raises(ValueError, match="corrupt sketch state"):
+            payload_of(cut)
+
+    @pytest.mark.parametrize("n", [0, 4, 7])
+    def test_state_shorter_than_header_raises(self, n):
+        data = HyperLogLog(p=12).to_bytes()[:n]
+        with pytest.raises(ValueError, match="corrupt sketch state"):
+            sketch_from_bytes(data)
+
+    def test_foreign_bytes_rejected(self):
+        # a DataSketches-style preamble, not the FVSK envelope
+        with pytest.raises(ValueError, match="bad sketch magic"):
+            sketch_from_bytes(bytes([2, 1, 7, 12, 3, 8, 0, 0]) + bytes(32))
 
 
 # ---------------------------------------------------------------- HLL
