@@ -66,9 +66,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from fever_spark.ops import (  # noqa: E402
     SketchSpec, build_sketches, hll_estimate_col, quantile_col, two_level_merge,
 )
-from fever_spark.ops.bloom_match import (  # noqa: E402
-    bloom_match_pages, build_ioc_filter, build_ioc_filter_prehashed,
-)
+from fever_spark.ops.bloom_match import bloom_match_pages, build_ioc_filter  # noqa: E402
 from fever_spark.operators import dedup  # noqa: E402
 from fever_spark.session import get_spark  # noqa: E402
 from fever_spark.sources.synth import synth_iocs, synth_pages, synth_pages_df  # noqa: E402
@@ -152,8 +150,7 @@ def _bloom_setup(spark):
     outside the timed region."""
     if "bc" not in _BLOOM_SETUP:
         iocs = synth_iocs(synth_pages(20_000), n_extra=2000)
-        bf = build_ioc_filter_prehashed(
-            spark, iocs[~iocs.blacklisted]["ioc"], fpp=1e-6)
+        bf = build_ioc_filter(iocs[~iocs.blacklisted]["ioc"], fpp=1e-6)
         _BLOOM_SETUP["bc"] = spark.sparkContext.broadcast(bf.to_bytes())
         _BLOOM_SETUP["blacklist"] = list(iocs[iocs.blacklisted]["ioc"])
     return _BLOOM_SETUP
@@ -162,8 +159,7 @@ def _bloom_setup(spark):
 def bench_bloom_match(spark):
     pages = ensure_pages(spark)
     s = _bloom_setup(spark)
-    alerts = bloom_match_pages(pages, s["bc"], prehashed=True,
-                               blacklist=s["blacklist"])
+    alerts = bloom_match_pages(pages, s["bc"], blacklist=s["blacklist"])
     return _materialize(alerts.groupBy("match_type").count())
 
 

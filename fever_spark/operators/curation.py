@@ -225,8 +225,8 @@ def word_ngrams(text: Column, n: int = 8) -> Column:
 def ngram_hashes(text: Column, n: int = 8) -> Column:
     """array<bigint> of xxhash64(n-gram) — the probe payload. Hashing
     JVM-side means n-gram STRINGS never cross the Arrow boundary; only
-    fixed-width int64s do (same win as the prehashed Bloom IOC path,
-    ops/bloom_match.py)."""
+    fixed-width int64s do (same win as ``prehash_col`` for CMS,
+    ops/build.py)."""
     return F.transform(word_ngrams(text, n), lambda g: F.xxhash64(g))
 
 

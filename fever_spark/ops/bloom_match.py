@@ -4,17 +4,19 @@ Behavioral reference: /root/reference/processing/bloom_handler.go:165-291
 (probe logic), util/alertifier.go:86-168 + util/alertifier_providers.go:12-73
 (alert row synthesis), with the blacklist veto of bloom_handler.go:171-226.
 
-Spark-first shape: the filter state is a BROADCAST byte array probed by a
-vectorized pandas UDF (one Arrow batch per call — the "broadcast-side
-membership test" of the north_star). Everything else — probe-string
-construction, match-type precedence, blacklist suppression, alert-row
-projection — is native Catalyst expressions, so the only Python in the hot
-path is the k-probe bitset lookup itself.
+Spark-first shape: the filter state is a BROADCAST byte array of raw
+indicator strings (what ``bloomctl`` writes and ``pages_report``/
+``run_pipeline`` load; the only broadcast format) probed by a vectorized
+pandas UDF. Everything else — probe strings, match-type precedence,
+blacklist veto, alert rows — is native Catalyst, so the only Python in the
+hot path is the k-probe bitset lookup itself.
 
 Match semantics reproduced exactly:
-- http: the host probe fires INDEPENDENTLY ("http-host"); the url probes are
-  an if/else-if chain — full URL, else host+path, else path — emitting at
-  most ONE "http-url" alert per event (bloom_handler.go:201-235).
+- http (events and pages, one shared rule): the host probe fires
+  INDEPENDENTLY ("http-host"); the url probes are an if/else-if chain —
+  full URL, else host+path, else path — emitting at most ONE "http-url"
+  alert per event (bloom_handler.go:201-235).
+- a null or empty probe never matches (bloom_handler.go's skip-on-empty).
 - dns: rrname probe, match type "dns-req" for queries / "dns-resp" for
   answers (bloom_handler.go:239-263).
 - tls: SNI first, else fingerprint (bloom_handler.go:265-288).
@@ -27,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fever_spark.functions import urls as U
-from fever_spark.ops.estimate import bloom_contains_col
+from fever_spark.ops.estimate import bloom_contains_multi
 from fever_spark.sketch import BloomFilter
 
 DEFAULT_PREFIX = "BLF"  # reference default, cmd/fever/cmds/run.go:719
@@ -58,36 +60,32 @@ def build_ioc_filter(iocs, capacity: int | None = None, fpp: float = 1e-7,
     return bf
 
 
-def build_ioc_filter_prehashed(spark, iocs, capacity: int | None = None,
-                               fpp: float = 1e-7, seed: int = 0) -> BloomFilter:
-    """IOC filter over JVM xxhash64 of each string — pair with
-    ``bloom_match_pages(..., prehashed=True)``: probe strings then never
-    cross the Arrow boundary (int64 hashes do), the hot-path win for wide
-    URL columns. Zero-FN semantics unchanged (same deterministic hash on
-    both sides)."""
-    import numpy as np
-    from pyspark.sql import functions as F2
+def _http_alert_rule(blacklist: list[str] | None):
+    """fever's HTTP alert rule over the staged ``_host``/``_full``/
+    ``_hostpath``/``_path`` probes, whose hits are bits 0-3 of ``_hits``.
+    Returns ``bit(i)``, the "http-host" and "http-url" alert structs (host
+    fires on its own; url is the else-if chain) and ``keep_alert``, the
+    filter on the exploded alert ``a`` that drops empty alerts and applies
+    the blacklist veto."""
+    def bit(i):
+        return F.col("_hits").bitwiseAND(F.lit(1 << i)) != 0
 
-    # empty lines in an IOC feed are noise, never indicators (the reference
-    # skips them on load); inserting xxhash64('') would make every
-    # empty-probe row "match" on the prehashed path
-    iocs = [i for i in iocs if i]
-    bf = BloomFilter(capacity=capacity or max(len(iocs), 1), fpp=fpp, seed=seed)
-    if iocs:
-        hashed = (spark.createDataFrame([(s,) for s in iocs], "ioc string")
-                  .select(F2.xxhash64("ioc").alias("h")).collect())
-        bf.update(np.array([r["h"] for r in hashed], dtype=np.int64))
-    return bf
-
-
-def _prehash_probe(c):
-    """Probe-side hash for prehashed filters: NULL **and empty string** map
-    to the null sentinel so the prehashed path matches the raw path's
-    empty-tests-False semantics exactly."""
-    from fever_spark.ops.build import _PREHASH_NULL
-
-    return (F.when(c.isNotNull() & (c != ""), F.xxhash64(c))
-            .otherwise(F.lit(_PREHASH_NULL)))
+    host_ioc = F.when(bit(0), F.col("_host"))
+    url_ioc = (F.when(bit(1), F.col("_full"))
+               .when(bit(2), F.col("_hostpath"))
+               .when(bit(3), F.col("_path")))
+    http_alerts = [
+        F.struct(F.lit("http-host").alias("match_type"),
+                 host_ioc.alias("ioc")),
+        F.struct(F.lit("http-url").alias("match_type"),
+                 url_ioc.alias("ioc"))]
+    not_blacklisted = (
+        ~F.array_contains(F.array(*map(F.lit, blacklist)), F.col("a.ioc"))
+        if blacklist else F.lit(True))
+    keep_alert = (F.col("a.ioc").isNotNull()
+                  & F.col("a.match_type").isNotNull()
+                  & not_blacklisted)
+    return bit, http_alerts, keep_alert
 
 
 def make_event_matcher(bloom_bc, blacklist: list[str] | None = None,
@@ -101,12 +99,7 @@ def make_event_matcher(bloom_bc, blacklist: list[str] | None = None,
     pays the ~60 py4j expression builds and the UDF pickling once per
     filter (re)load instead of once per micro-batch; applying the
     matcher is a handful of DataFrame method calls."""
-    from fever_spark.ops.estimate import bloom_contains_multi
-
-    bl = F.array(*[F.lit(b) for b in (blacklist or [])])
-
-    def not_blacklisted(ioc):
-        return ~F.array_contains(bl, ioc) if blacklist else F.lit(True)
+    bit, http_alerts, keep_alert = _http_alert_rule(blacklist)
 
     is_http = F.col("event_type") == "http"
     # invalid dns_type rows are dropped (bloom_handler.go:257-261)
@@ -128,15 +121,6 @@ def make_event_matcher(bloom_bc, blacklist: list[str] | None = None,
         bloom_bc, F.col("_host"), F.col("_full"), F.col("_hostpath"),
         F.col("_path"), F.col("_rrname"), F.col("_sni"), F.col("_fp"))
 
-    def bit(i):
-        return F.col("_hits").bitwiseAND(F.lit(1 << i)) != 0
-
-    # host probe fires independently (go:170-180); url probes are an
-    # else-if chain — at most ONE http-url alert per event (go:201-235)
-    host_ioc = F.when(bit(0), F.col("_host"))
-    url_ioc = (F.when(bit(1), F.col("_full"))
-               .when(bit(2), F.col("_hostpath"))
-               .when(bit(3), F.col("_path")))
     dns_mt = F.when(F.col("dns_type") == "query",
                     F.lit("dns-req")).otherwise(F.lit("dns-resp"))
     # tls: SNI first, else fingerprint (go:265-288)
@@ -146,18 +130,12 @@ def make_event_matcher(bloom_bc, blacklist: list[str] | None = None,
 
     hits_nonzero = F.col("_hits") != 0
     alerts_col = F.array(
-        F.struct(F.lit("http-host").alias("match_type"),
-                 host_ioc.alias("ioc")),
-        F.struct(F.lit("http-url").alias("match_type"),
-                 url_ioc.alias("ioc")),
+        *http_alerts,
         F.struct(dns_mt.alias("match_type"),
                  F.when(bit(4), F.col("_rrname")).alias("ioc")),
         F.struct(tls_mt.alias("match_type"), tls_ioc.alias("ioc")))
     ts_alias = F.col("ts").alias("timestamp_event")  # original event time
     explode_col = F.explode("_alerts").alias("a")
-    keep_alert = (F.col("a.ioc").isNotNull()
-                  & F.col("a.match_type").isNotNull()
-                  & not_blacklisted(F.col("a.ioc")))
     out_cols = [F.col("timestamp_event"),
                 F.lit("alert").alias("event_type"),
                 F.col("a.match_type").alias("match_type"),
@@ -192,9 +170,7 @@ def bloom_match_events(events: DataFrame, bloom_bc, blacklist: list[str] | None 
     columns (http host/url/hostpath/path, dns rrname, tls sni/fingerprint)
     → int64 bitmask, same plan shape as ``bloom_match_pages``. Non-relevant
     event types carry NULL in a probe column (tests False, near-free), so
-    the Arrow round-trip count is 1 regardless of event mix — the per-branch
-    multi-UDF version was re-evaluated by Catalyst filter pushdown (2x
-    ArrowEvalPython, see estimate.bloom_contains_multi's note).
+    the Arrow round-trip count is 1 regardless of event mix.
 
     Per-trigger callers: build the matcher once with
     ``make_event_matcher`` and reuse it across micro-batches.
@@ -203,7 +179,6 @@ def bloom_match_events(events: DataFrame, bloom_bc, blacklist: list[str] | None 
 
 
 def _msg_col():
-    c = F.lit(None).cast("string")
     expr = None
     for mt, msg in _MSG.items():
         cond = F.col("match_type") == mt
@@ -213,63 +188,31 @@ def _msg_col():
 
 def bloom_match_pages(pages: DataFrame, bloom_bc,
                       blacklist: list[str] | None = None,
-                      prefix: str = DEFAULT_PREFIX,
-                      prehashed: bool = False) -> DataFrame:
+                      prefix: str = DEFAULT_PREFIX) -> DataFrame:
     """The same 4-probe matching over the Common-Crawl-style pages table:
-    the url column supplies host / full-url / host+path / path probes.
-    Host matches emit independently; url/hostpath/path follow the else-if
-    precedence, exactly like the http branch of the reference. Returns
+    the url column supplies host / full-url / host+path / path probes, and
+    the HTTP alert rule of the events matcher applies unchanged. Returns
     (url, warc_ts, match_type, ioc, signature).
 
     ONE table scan, ONE vectorized membership UDF call for all four probes
-    (array<bool> out), then an explode over the at-most-two alert rows —
+    (int64 bitmask out), then an explode over the at-most-two alert rows —
     the Arrow round-trip count doesn't grow with probe count."""
-    from fever_spark.ops.estimate import bloom_contains_multi
-
-    bl = F.array(*[F.lit(b) for b in (blacklist or [])])
-
-    def not_blacklisted(ioc):
-        return ~F.array_contains(bl, ioc) if blacklist else F.lit(True)
-
+    _, http_alerts, keep_alert = _http_alert_rule(blacklist)
     probes = U.page_url_probes(F.col("url"))
-    staged = (
-        pages.select("url", "warc_ts")
-        .withColumn("_host", probes["host"])
-        .withColumn("_full", probes["url"])
-        .withColumn("_hostpath", probes["hostpath"])
-        .withColumn("_path", probes["path"]))
-    if prehashed:
-        # filter built by build_ioc_filter_prehashed: probe with JVM
-        # xxhash64 so only int64 hashes cross into Python. Empty strings map
-        # to the null sentinel — the raw-string path tests '' as False
-        # (reference skip-on-empty, bloom_handler.go), and xxhash64('') is a
-        # real value that WOULD match if an empty line slipped into the feed
-        probe_cols = [_prehash_probe(F.col(c))
-                      for c in ("_host", "_full", "_hostpath", "_path")]
-    else:
-        probe_cols = [F.col(c) for c in ("_host", "_full", "_hostpath", "_path")]
-    staged = staged.withColumn("_hits", bloom_contains_multi(bloom_bc, *probe_cols))
-
-    def bit(i):
-        return F.col("_hits").bitwiseAND(F.lit(1 << i)) != 0
-
-    host_ioc = F.when(bit(0), F.col("_host"))
-    url_ioc = (F.when(bit(1), F.col("_full"))
-               .when(bit(2), F.col("_hostpath"))
-               .when(bit(3), F.col("_path")))
-    alerts = (
-        staged
+    return (
+        pages.select("url", "warc_ts",
+                     probes["host"].alias("_host"),
+                     probes["url"].alias("_full"),
+                     probes["hostpath"].alias("_hostpath"),
+                     probes["path"].alias("_path"))
+        .withColumn("_hits", bloom_contains_multi(
+            bloom_bc, F.col("_host"), F.col("_full"), F.col("_hostpath"),
+            F.col("_path")))
         .filter(F.col("_hits") != 0)  # early-out: most pages match nothing
-        .withColumn("_alerts", F.array(
-            F.struct(F.lit("http-host").alias("match_type"),
-                     host_ioc.alias("ioc")),
-            F.struct(F.lit("http-url").alias("match_type"),
-                     url_ioc.alias("ioc"))))
-        .select("url", "warc_ts", F.explode("_alerts").alias("a"))
+        .select("url", "warc_ts", F.explode(F.array(*http_alerts)).alias("a"))
+        .filter(keep_alert)
         .select("url", "warc_ts", F.col("a.match_type").alias("match_type"),
                 F.col("a.ioc").alias("ioc"))
-        .filter(F.col("ioc").isNotNull() & not_blacklisted(F.col("ioc"))))
-
-    return alerts.select(
-        "url", "warc_ts", "match_type", "ioc",
-        F.concat(F.lit(prefix + " "), _msg_col(), F.col("ioc")).alias("signature"))
+        .select("url", "warc_ts", "match_type", "ioc",
+                F.concat(F.lit(prefix + " "), _msg_col(),
+                         F.col("ioc")).alias("signature")))

@@ -4,23 +4,19 @@ driver-side or broadcast as one blob.
 
 Sharding key and membership share ONE hash: h = xxhash64(ioc) (JVM-side,
 codegen), shard = pmod(h, n_shards), and the shard's filter is built over
-the h values themselves (the prehashed-Bloom path of ops/bloom_match.py —
-zero false negatives preserved because both sides hash identical bytes).
+the h values themselves — zero false negatives preserved because both sides
+hash identical bytes. Null and empty iocs and probes are dropped first
+(fever's skip-on-empty; xxhash64(NULL) is the seed and would "match").
 
 Build is DISTRIBUTED: the ioc table flows through the ordinary
 build_sketches → two_level_merge pipeline grouped by shard, so a 10^9-entry
 indicator list builds with the same bounded-state plan as any other sketch
 (the driver-side build_ioc_filter is for small lists only).
 
-Two probe paths:
-- probe_sharded_col: broadcast dict {shard: state}; the vectorized UDF
-  deserializes ONLY the shards its batch actually probes (per-executor LRU).
-  Right when the total filter fits executor memory but build must scale.
-- bloom_semi_join_sharded: repartition probes BY SHARD and cogroup with the
-  shard-state table — no executor ever materializes more than one shard
-  state. Right when the filter itself is too big to broadcast (the 100-TB
-  path); shuffle volume is the probes (ids + 8-byte hashes), states move
-  once each.
+One probe path, bloom_semi_join_sharded: repartition probes BY SHARD and
+cogroup with the shard-state table — no executor ever materializes more
+than one shard state (the 100-TB path); shuffle volume is the probes
+(ids + 8-byte hashes), states move once each.
 
 Reference behavior: processing/bloom_handler.go:165-291 membership
 semantics; sharding is our scale addition (the reference is single-node).
@@ -28,15 +24,13 @@ semantics; sharding is our scale addition (the reference is single-node).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from fever_spark.ops.build import SketchSpec, build_sketches
 from fever_spark.ops.merge import two_level_merge
-from fever_spark.sketch import BloomFilter, sketch_from_bytes
+from fever_spark.sketch.base import merge_many
 
 
 def shard_col(col, n_shards: int):
@@ -44,12 +38,18 @@ def shard_col(col, n_shards: int):
     return F.pmod(F.xxhash64(col), F.lit(n_shards)).cast("int")
 
 
+def _nonempty(col: str) -> F.Column:
+    return F.col(col).isNotNull() & (F.col(col) != "")
+
+
 def build_sharded_ioc_states(iocs: DataFrame, ioc_col: str = "ioc",
                              n_shards: int = 16, fpp: float = 1e-7,
                              capacity_per_shard: int | None = None) -> DataFrame:
     """Distributed sharded build → DataFrame(shard int, state binary),
     one Bloom state per shard, built over xxhash64(ioc) values through the
-    standard partial-build + two-level merge pipeline."""
+    standard partial-build + two-level merge pipeline. Null and empty iocs
+    are skipped."""
+    iocs = iocs.filter(_nonempty(ioc_col))
     if capacity_per_shard is None:
         # one count() sizing pass; at scale pass the known cardinality in
         n = iocs.count()
@@ -64,72 +64,20 @@ def build_sharded_ioc_states(iocs: DataFrame, ioc_col: str = "ioc",
     return two_level_merge(built, ["shard"]).select("shard", "state")
 
 
-def collect_shard_map(states: DataFrame) -> dict[int, bytes]:
-    """{shard: state bytes} for broadcasting (total bytes == the single
-    unsharded filter at the same capacity/fpp — collecting is fine whenever
-    broadcasting would be)."""
-    return {r["shard"]: bytes(r["state"]) for r in states.collect()}
-
-
-_SHARD_CACHE: dict[bytes, BloomFilter] = {}
-
-
-def _shard_filter(state: bytes) -> BloomFilter:
-    # keyed by the state BYTES (content), like ops/estimate._sketch_of —
-    # an id()-based key could alias after garbage collection
-    bf = _SHARD_CACHE.get(state)
-    if bf is None:
-        if len(_SHARD_CACHE) > 256:
-            _SHARD_CACHE.clear()
-        bf = _SHARD_CACHE[state] = BloomFilter.from_bytes(state)
-    return bf
-
-
-def probe_sharded_col(shards_bc, n_shards: int, *cols) -> F.Column:
-    """Membership bitmask over N probe columns against a BROADCAST shard
-    map. Accepts prehashed int64 columns (prehash_col) — shard derived from
-    the hash, so probes ship as 8-byte ints. One ArrowEvalPython."""
-    from fever_spark.ops.build import _PREHASH_NULL
-
-    @F.pandas_udf(T.LongType())
-    def _probe(*series: pd.Series) -> pd.Series:
-        shards = shards_bc.value
-        out = np.zeros(len(series[0]), dtype=np.int64)
-        for i, s in enumerate(series):
-            h = s.to_numpy()
-            mask = h != _PREHASH_NULL
-            if not mask.any():
-                continue
-            hv = h[mask]
-            sh = (hv % n_shards + n_shards) % n_shards  # pmod parity
-            hits = np.zeros(len(hv), dtype=bool)
-            for shard in np.unique(sh):
-                state = shards.get(int(shard))
-                if state is None:
-                    continue
-                m = sh == shard
-                hits[m] = _shard_filter(state).contains(hv[m])
-            full = np.zeros(len(s), dtype=bool)
-            full[mask] = hits
-            out |= full.astype(np.int64) << i
-        return pd.Series(out)
-
-    return _probe.asNondeterministic()(*cols)
-
-
 def bloom_semi_join_sharded(probes: DataFrame, states: DataFrame,
                             probe_col: str, n_shards: int) -> DataFrame:
     """Semi-join `probes` against a sharded filter WITHOUT broadcasting it:
     cogroup probes and states on shard; each task deserializes exactly one
     shard state and tests its probe group vectorized. Returns the probe rows
     whose probe_col is (probably) a member — zero false negatives, FPs at
-    the configured fpp.
+    the configured fpp; a null or empty probe is never kept.
 
     Plan shape: one exchange of probes hashed by shard (ids + int64 hash),
     one exchange of the S states; output schema == input probes schema."""
     out_schema = probes.schema
     in_cols = [f.name for f in probes.schema.fields]
-    keyed = probes.withColumn("__h", F.xxhash64(probe_col)) \
+    keyed = probes.filter(_nonempty(probe_col)) \
+        .withColumn("__h", F.xxhash64(probe_col)) \
         .withColumn("__shard", F.pmod(F.col("__h"), F.lit(n_shards)).cast("int"))
     skeyed = states.withColumnRenamed("shard", "__shard")
 
@@ -139,8 +87,6 @@ def bloom_semi_join_sharded(probes: DataFrame, states: DataFrame,
         # a shard group may carry several partial states (caller passed a
         # pre-merge frame or a union) — probing only the first would drop
         # members of the others, a silent false negative
-        from fever_spark.sketch.base import merge_many
-
         bf = merge_many([bytes(b) for b in state_pdf["state"]])
         hv = probe_pdf["__h"].to_numpy()
         keep = bf.contains(hv)

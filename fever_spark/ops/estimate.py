@@ -144,15 +144,10 @@ def bloom_contains_multi(bloom_bytes_bc, *cols: Column) -> Column:
 
     @F.pandas_udf(T.LongType())
     def _contains_n(*series: pd.Series) -> pd.Series:
-        from fever_spark.ops.build import _PREHASH_NULL
-
         bf = _sketch_of(bytes(bloom_bytes_bc.value))
         out = np.zeros(len(series[0]), dtype=np.int64)
         for i, s in enumerate(series):
-            if s.dtype.kind == "i":  # prehashed int64 probes (sentinel=NULL)
-                mask = (s != _PREHASH_NULL).to_numpy()
-            else:
-                mask = (s.notna() & (s != "")).to_numpy()
+            mask = (s.notna() & (s != "")).to_numpy()
             if mask.any():
                 hits = np.zeros(len(s), dtype=bool)
                 hits[mask] = bf.contains(s[mask].to_numpy())

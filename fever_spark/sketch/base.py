@@ -24,6 +24,7 @@ from __future__ import annotations
 import struct
 import zlib
 from abc import ABC, abstractmethod
+from contextlib import contextmanager
 
 MAGIC = b"FVSK"
 VERSION = 1
@@ -146,6 +147,15 @@ def _check_header(data: bytes) -> tuple[int, int]:
     return kind, flags
 
 
+@contextmanager
+def _short_state_is_corrupt():
+    """A kind header cut short raises ``struct.error``: a corrupt state."""
+    try:
+        yield
+    except struct.error as e:
+        raise ValueError(f"corrupt sketch state: {e}") from e
+
+
 def merge_many(states: list[bytes]) -> Sketch:
     """Merge serialized states efficiently. Every state's header is checked
     and all must share one kind, whatever their order; then dispatches to
@@ -161,7 +171,8 @@ def merge_many(states: list[bytes]) -> Sketch:
         raise ValueError(f"cannot merge different sketch kinds: {names}")
     fast = getattr(SKETCH_REGISTRY[kinds.pop()], "_merge_many", None)
     if fast is not None and len(states) > 1:
-        return fast(states)
+        with _short_state_is_corrupt():
+            return fast(states)
     first = sketch_from_bytes(states[0])
     for b in states[1:]:
         first.merge(sketch_from_bytes(b))
@@ -173,4 +184,5 @@ def sketch_from_bytes(data: bytes) -> Sketch:
     payload = memoryview(data)[8:]
     if flags & FLAG_ZLIB:
         payload = memoryview(_inflate(payload))
-    return SKETCH_REGISTRY[kind]._from_payload(payload)
+    with _short_state_is_corrupt():
+        return SKETCH_REGISTRY[kind]._from_payload(payload)

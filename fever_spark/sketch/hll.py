@@ -100,14 +100,14 @@ class HyperLogLog(Sketch):
         from fever_spark.sketch.base import payload_of
 
         payloads = [payload_of(s) for s in states]
-        p, seed = _HEADER.unpack_from(payloads[0], 0)
+        p, seed, _ = _decode(payloads[0])
         views = []
         for pl in payloads:
-            p2, seed2 = _HEADER.unpack_from(pl, 0)
+            p2, seed2, regs = _decode(pl)
             if (p2, seed2) != (p, seed):
                 raise ValueError("cannot merge HLLs with different (p, seed): "
                                  f"{(p, seed)} vs {(p2, seed2)}")
-            views.append(np.frombuffer(pl, dtype=np.uint8, offset=_HEADER.size))
+            views.append(regs)
         return cls(p=p, seed=seed,
                    _registers=np.maximum.reduce(views))
 
@@ -116,9 +116,19 @@ class HyperLogLog(Sketch):
 
     @classmethod
     def _from_payload(cls, buf: memoryview) -> "HyperLogLog":
-        p, seed = _HEADER.unpack_from(buf, 0)
-        regs = np.frombuffer(buf[_HEADER.size:], dtype=np.uint8).copy()
-        return cls(p=p, seed=seed, _registers=regs)
+        p, seed, regs = _decode(buf)
+        return cls(p=p, seed=seed, _registers=regs.copy())
+
+
+def _decode(buf) -> tuple[int, int, np.ndarray]:
+    """``(p, seed, register view)``; the payload must hold exactly the
+    ``1 << p`` registers its header declares."""
+    p, seed = _HEADER.unpack_from(buf, 0)
+    regs = np.frombuffer(buf, dtype=np.uint8, offset=_HEADER.size)
+    if len(regs) != 1 << p:
+        raise ValueError(f"corrupt sketch state: HLL p={p} needs {1 << p} "
+                         f"registers, payload holds {len(regs)}")
+    return p, seed, regs
 
 
 # -- set-operation estimators (module level: they consume, never mutate) ----

@@ -140,6 +140,10 @@ class KMVSketch(Sketch):
         off += 8 * n
         lens = np.frombuffer(buf, dtype=np.uint32, count=n, offset=off)
         off += 4 * n
+        if off + int(lens.sum()) != len(buf):
+            raise ValueError(
+                f"corrupt sketch state: KMV with {n} entries declares "
+                f"{off + int(lens.sum())} payload bytes, holds {len(buf)}")
         vals = np.empty(n, dtype=object)
         for i, ln in enumerate(lens):
             vals[i] = bytes(buf[off:off + ln]).decode("utf-8")

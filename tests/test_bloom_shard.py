@@ -1,9 +1,10 @@
-"""Partitioned (sharded) Bloom filter: distributed build + both probe paths.
+"""Partitioned (sharded) Bloom filter: distributed build + the cogroup
+semi-join probe.
 
 Acceptance mirrors the reference's zero-false-negative invariant
 (processing/bloom_handler_test.go:409-427) with sharding as the scale
-addition: every true member MUST test positive through every path, and the
-two paths must agree with the single unsharded filter's semantics.
+addition: every true member MUST test positive, and a null or empty
+indicator or probe never matches (the reference's skip-on-empty).
 """
 
 import numpy as np
@@ -11,9 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fever_spark.ops.bloom_shard import (
-    bloom_semi_join_sharded, build_sharded_ioc_states, collect_shard_map,
-    probe_sharded_col, shard_col)
-from fever_spark.ops.build import prehash_col
+    bloom_semi_join_sharded, build_sharded_ioc_states, shard_col)
 
 N_SHARDS = 8
 
@@ -44,35 +43,6 @@ class TestShardedBuild:
             assert r["s"] == (r["h"] % N_SHARDS + N_SHARDS) % N_SHARDS
 
 
-class TestBroadcastDictPath:
-    def test_zero_false_negatives_and_bounded_fps(self, spark, ioc_strings,
-                                                  shard_states):
-        shards_bc = spark.sparkContext.broadcast(collect_shard_map(shard_states))
-        members = spark.createDataFrame(
-            [(s,) for s in ioc_strings], "probe string")
-        non = spark.createDataFrame(
-            [(f"clean-host-{i}.example.net",) for i in range(5000)],
-            "probe string")
-        def hits(df):
-            return (df.withColumn("m", probe_sharded_col(
-                        shards_bc, N_SHARDS, prehash_col(F.col("probe"))))
-                    .filter(F.col("m") != 0).count())
-        assert hits(members) == len(ioc_strings)  # zero FN
-        assert hits(non) <= 5                     # fpp=1e-6 over 5k probes
-
-    def test_multi_column_bitmask(self, spark, ioc_strings, shard_states):
-        shards_bc = spark.sparkContext.broadcast(collect_shard_map(shard_states))
-        df = spark.createDataFrame(
-            [(ioc_strings[0], "clean.example.net"),
-             ("clean2.example.net", ioc_strings[1])],
-            "a string, b string")
-        got = df.select(probe_sharded_col(
-            shards_bc, N_SHARDS,
-            prehash_col(F.col("a")), prehash_col(F.col("b"))).alias("m")) \
-            .collect()
-        assert [r["m"] for r in got] == [1, 2]
-
-
 class TestCogroupPath:
     def test_semi_join_zero_fn(self, spark, ioc_strings, shard_states):
         probes = spark.createDataFrame(
@@ -92,3 +62,15 @@ class TestCogroupPath:
         probes = spark.createDataFrame([], "pid long, probe string")
         assert bloom_semi_join_sharded(probes, shard_states, "probe",
                                        N_SHARDS).count() == 0
+
+    def test_null_and_empty_never_match(self, spark):
+        # xxhash64(NULL) is the seed, so hashing a NULL ioc and a NULL
+        # probe alike would make every NULL probe "match"
+        iocs = spark.createDataFrame(
+            [("evil.example",), ("",), (None,)], "ioc string")
+        states = build_sharded_ioc_states(iocs, n_shards=4)
+        probes = spark.createDataFrame(
+            [(1, "evil.example"), (2, ""), (3, None), (4, "clean.example")],
+            "pid long, probe string")
+        kept = bloom_semi_join_sharded(probes, states, "probe", 4)
+        assert sorted(r["pid"] for r in kept.collect()) == [1]

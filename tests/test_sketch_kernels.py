@@ -16,7 +16,7 @@ from fever_spark.sketch import (
     BloomFilter, CountMinSketch, HyperLogLog, KLLSketch, TDigest,
     sketch_from_bytes,
 )
-from fever_spark.sketch.base import FLAG_ZLIB, payload_of
+from fever_spark.sketch.base import FLAG_ZLIB, merge_many, payload_of
 
 RNG = np.random.default_rng(42)
 
@@ -157,8 +157,9 @@ class TestBloom:
 
 
 class TestCorruptState:
-    """Damage to the envelope (its 8-byte header or a zlib-compressed
-    payload) raises ValueError, never a zlib or struct error."""
+    """Damage to a state (its 8-byte envelope header, a zlib-compressed
+    payload, a kind header, or a payload shorter than its header declares)
+    raises ValueError, never a zlib or struct error or a silent load."""
 
     def test_cut_compressed_state_raises(self):
         # a real-size filter serializes zlib-compressed; cutting it leaves
@@ -176,6 +177,33 @@ class TestCorruptState:
         data = HyperLogLog(p=12).to_bytes()[:n]
         with pytest.raises(ValueError, match="corrupt sketch state"):
             sketch_from_bytes(data)
+
+    @pytest.mark.parametrize("cut", [9, 12, 20, -1])
+    @pytest.mark.parametrize("kind", ["hll", "cms", "kll", "tdigest",
+                                      "cmstopk", "kmv"])
+    def test_cut_state_raises(self, kind, cut):
+        # cuts 9/12/20 fall inside (or just past) each kind's own header;
+        # -1 drops the last byte, which HLL and KMV used to load silently
+        # with too few registers / a shortened sample value
+        from fever_spark.sketch.kmv import KMVSketch
+        from fever_spark.sketch.topk import CMSTopK
+
+        vals = np.array([str(i) for i in range(500)], dtype=object)
+        sk = {"hll": lambda: HyperLogLog(p=10),
+              "cms": lambda: CountMinSketch(epsilon=0.05, delta=0.1),
+              "kll": lambda: KLLSketch(k=16),
+              "tdigest": lambda: TDigest(delta=20),
+              "cmstopk": lambda: CMSTopK(epsilon=0.05, delta=0.1, track=8),
+              "kmv": lambda: KMVSketch(k=16)}[kind]()
+        sk.update(np.arange(500, dtype=np.float64)
+                  if kind in ("kll", "tdigest") else vals)
+        data = sk.to_bytes()
+        assert not data[6] & FLAG_ZLIB  # the cut hits the kind's own bytes
+        cut_data = data[:cut]
+        with pytest.raises(ValueError):
+            sketch_from_bytes(cut_data)
+        with pytest.raises(ValueError):
+            merge_many([cut_data, data])
 
     def test_foreign_bytes_rejected(self):
         # a DataSketches-style preamble, not the FVSK envelope

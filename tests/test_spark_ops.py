@@ -201,19 +201,6 @@ class TestReviewRegressions2:
             probes, states, "probe", 2).collect()}
         assert {f"bad{i}" for i in range(40)} <= kept  # zero FN
 
-    def test_prehashed_empty_string_never_matches(self, spark):
-        from fever_spark.ops.bloom_match import (bloom_match_pages,
-                                                 build_ioc_filter_prehashed)
-
-        # feed with a stray empty line; page whose path probe is ''
-        bf = build_ioc_filter_prehashed(spark, ["", "evil.example"])
-        bc = spark.sparkContext.broadcast(bf.to_bytes())
-        pages = spark.createDataFrame(
-            [("https://ok.example", "2024-01-01T00:00:00Z")],
-            "url string, warc_ts string")
-        alerts = bloom_match_pages(pages, bc, prehashed=True).collect()
-        assert alerts == []  # '' must test False, exactly like the raw path
-
     def test_bloom_fill_ratio_partial_byte(self):
         import numpy as np
         from fever_spark.sketch import BloomFilter

@@ -96,26 +96,20 @@ class TestBloomMatchPages:
         hits = alerts.filter(F.col("ioc").isin(blacklist)).count()
         assert hits == 0
 
-    def test_prehashed_parity(self, spark, pages_df, iocs):
-        # JVM-xxhash64 probe path finds exactly the same true matches
-        from fever_spark.ops.bloom_match import build_ioc_filter_prehashed
-
-        active = iocs[~iocs["blacklisted"]]["ioc"].to_numpy()
-        bf_s = build_ioc_filter(active, fpp=1e-7)
-        bf_h = build_ioc_filter_prehashed(spark, active, fpp=1e-7)
-        bc_s = spark.sparkContext.broadcast(bf_s.to_bytes())
-        bc_h = spark.sparkContext.broadcast(bf_h.to_bytes())
-        a_s = {(r["url"], r["match_type"], r["ioc"]) for r in
-               bloom_match_pages(pages_df, bc_s).collect()}
-        a_h = {(r["url"], r["match_type"], r["ioc"]) for r in
-               bloom_match_pages(pages_df, bc_h, prehashed=True).collect()}
-        # the two hash families share ZERO false negatives (every true-IOC
-        # alert present in both); their rare false positives may differ
-        true_set = set(active)
-        true_s = {t for t in a_s if t[2] in true_set}
-        true_h = {t for t in a_h if t[2] in true_set}
-        assert true_s == true_h and true_s
-        assert len(a_s - true_s) <= 5 and len(a_h - true_h) <= 5  # stray FPs
+    def test_url_chain_precedence(self, spark):
+        # the full URL matches, so host+path must NOT emit a second alert
+        # (else-if chain, bloom_handler.go:201-235); the host fires on its own
+        iocs = ["https://fq.example.com/x", "fq.example.com/x",
+                "fq.example.com"]
+        bc = spark.sparkContext.broadcast(
+            build_ioc_filter(iocs, fpp=1e-7).to_bytes())
+        pages = spark.createDataFrame(
+            [("https://fq.example.com/x", "2026-06-01T12:00:00Z")],
+            "url string, warc_ts string")
+        got = sorted((r["match_type"], r["ioc"])
+                     for r in bloom_match_pages(pages, bc).collect())
+        assert got == [("http-host", "fq.example.com"),
+                       ("http-url", "https://fq.example.com/x")]
 
     def test_signature_format(self, spark, pages_df, iocs):
         active = iocs[~iocs["blacklisted"]]["ioc"].to_numpy()
@@ -193,6 +187,29 @@ class TestBloomMatchEvents:
         bc = spark.sparkContext.broadcast(bf.to_bytes())
         alerts = bloom_match_events(_events_df(spark), bc).toPandas()
         assert (alerts["timestamp_event"] == pd.Timestamp("2026-06-01 12:00:00")).all()
+
+
+def test_pages_and_events_share_http_rule(spark, pages_df, iocs):
+    """A page url and the http event carrying the same URL (host =
+    try_parse_url(url, 'HOST')) give the same (match_type, ioc) multiset."""
+    from collections import Counter
+
+    # blacklisted iocs go INTO the filter, so both paths must veto them
+    bc = spark.sparkContext.broadcast(
+        build_ioc_filter(iocs["ioc"].to_numpy()).to_bytes())
+    blacklist = list(iocs[iocs["blacklisted"]]["ioc"])
+    events = pages_df.select(
+        F.lit("http").alias("event_type"),
+        F.try_parse_url("url", F.lit("HOST")).alias("http_host"),
+        F.col("url").alias("http_url"),
+        *[F.lit(None).cast("string").alias(c) for c in (
+            "dns_rrname", "dns_type", "tls_sni", "tls_fingerprint")],
+        F.col("warc_ts").alias("ts"))
+    by_page = Counter((r["match_type"], r["ioc"]) for r in
+                      bloom_match_pages(pages_df, bc, blacklist).collect())
+    by_event = Counter((r["match_type"], r["ioc"]) for r in
+                       bloom_match_events(events, bc, blacklist).collect())
+    assert by_page and by_page == by_event
 
 
 class TestBloomReloadLifecycle:
