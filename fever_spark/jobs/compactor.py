@@ -87,11 +87,9 @@ def _write_roll(root: str, lo: int, hi: int, kind: str,
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        # STREAM row-group-at-a-time (round-9): the log-structured design
-        # means the biggest roll asymptotically holds the daemon's entire
-        # history, and the previous read_table-then-concat loaded every
-        # input whole — an all-history RAM spike per fanin merge on a
-        # months-long run. Memory is now bounded by one record batch.
+        # STREAM row-group-at-a-time: the biggest roll can hold the
+        # daemon's entire history, so memory stays bounded by one record
+        # batch, not every input whole (see BENCH/MEASUREMENTS.md).
         # Schemas are unified up front from file FOOTERS (metadata only),
         # preserving the old promote_options="default" semantics. A
         # schema-evolving sink gives files with a column missing or in

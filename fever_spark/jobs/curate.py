@@ -75,7 +75,7 @@ def curate(spark: SparkSession, input_path: str, output_path: str,
     counts = {"input": docs.count()}
     # wall seconds per pipeline stage (stage = work up to its survivor
     # count), recorded in the manifest so the composed pipeline — not just
-    # its pieces — is benchmarkable (bench.py's curate entry reads this)
+    # its pieces — is measurable (perfbench's crawl_curate reads it)
     stage_seconds = {}
     _t = time.time()
 
@@ -218,8 +218,8 @@ def curate(spark: SparkSession, input_path: str, output_path: str,
 
     # The model-driven gates are their own stages (numbered past the
     # fixed pipeline so earlier workdirs keep their names): their wall
-    # time must show up in stage_seconds — crawl/curate benches read it —
-    # instead of folding invisibly into quality_filter.
+    # time must show up in stage_seconds instead of folding invisibly
+    # into quality_filter.
     if quality_model is not None:
         # trusted-vs-crawl classifier (functions/quality_clf.py):
         # coefficients inline as literals into one codegen filter pass

@@ -138,8 +138,7 @@ def ingest(spark: SparkSession, batch_path: str, corpus_dir: str,
     counts = {"batch": batch.count()}
 
     # wall seconds per phase (screen → dedup → append → index update),
-    # recorded in the manifest so the composed living-corpus path is
-    # benchmarkable (bench.py's ingest entry reads this)
+    # recorded in the manifest so each batch's phase costs stay on record
     stage_seconds = {}
     _t = time.time()
 
@@ -223,9 +222,9 @@ def ingest(spark: SparkSession, batch_path: str, corpus_dir: str,
     # exactly history-with-this-batch either way). Built from the
     # CHECKPOINTED survivor frame — the same rows the corpus partition
     # write just materialized — rather than re-reading that partition
-    # from parquet (round-9: the read-back re-scanned and re-planned the
-    # batch for no information gain; Bloom bitset OR is partitioning-
-    # independent, so the delta bytes are identical either way)
+    # (a read-back re-scans the batch for no gain; Bloom bitset OR is
+    # partitioning-independent, so the delta bytes are identical either
+    # way; see BENCH/MEASUREMENTS.md)
     delta = BloomFilter.from_bytes(corpus_fingerprint_bloom(
         kept, text_col, capacity=bloom_capacity, fpp=bloom_fpp))
     tmp = own_delta + ".tmp"

@@ -102,13 +102,12 @@ def write_training_shards(spark: SparkSession, input_path: str,
     # inner join on the unique pack id (checked below against the rows
     # observed on the write), so the aggregate is exactly what
     # a read-back of the output would count — without listing +
-    # re-scanning the just-written corpus (round-9; measured on a
-    # 20k-doc interleaved A/B: read-back 1.63s, naive assign-aggregate
-    # 1.90s — it re-ran the packing plan — checkpointed 1.51s). The flag
-    # keys on the doc's own size, not shard occupancy — a doc alone
-    # larger than the budget spans its shard regardless of where it
-    # starts (a shard can legitimately hold small docs plus one
-    # oversized tail).
+    # re-scanning the just-written corpus (measured faster than both a
+    # read-back and an uncheckpointed aggregate; see BENCH/MEASUREMENTS.md).
+    # The flag keys on the doc's own size, not shard occupancy — a doc
+    # alone larger than the budget spans its shard regardless of where it
+    # starts (a shard can legitimately hold small docs plus one oversized
+    # tail).
     per_shard = (assign
                  .groupBy("shard")
                  .agg(F.count(F.lit(1)).alias("docs"),

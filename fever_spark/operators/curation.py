@@ -480,7 +480,7 @@ def substring_dedup(df: DataFrame, id_col: str = "doc_id",
     # fps feeds BOTH the duplicated-firsts aggregation and the join probe;
     # the roll-UDF subtree does not canonicalize, so without materializing
     # it the tokenize+hash+rolling-fingerprint pass — the expensive stage —
-    # would run twice (measured ~1.9x on the bench). The checkpointed rows
+    # would run twice (measured ~1.9x the wall). The checkpointed rows
     # are (id, pos, fp): 20 bytes per gram, disk-spillable.
     fps = fps.localCheckpoint(eager=False)
 

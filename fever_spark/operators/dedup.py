@@ -217,14 +217,8 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
         n_docs = len(texts)
         out = np.full((n_docs, num_hashes), np.iinfo(np.int64).max,
                       dtype=np.int64)
-        # Round-9 measured-and-rejected: slicing this batch into
-        # 4096-doc chunks to keep the permutation loop's operands
-        # cache-resident. A synthetic 65k-doc batch showed 1.7x for the
-        # chunked loop, but REAL batches are partition-limited to
-        # ~15.6k docs (1M docs / 64 files), whose ~37 MB operands are
-        # already semi-cache-friendly — in situ the chunked UDF ran
-        # 12.1s vs 6.8s steady-state at 1M docs. Kept shape: one pass
-        # over the whole batch.
+        # one pass over the whole batch: cache-sized chunks measured
+        # slower on real partitions; see BENCH/MEASUREMENTS.md
         doc_idx, shingles = _hashed_shingles(texts, shingle_size, seed)
         if len(shingles):
             h1, h2 = double_hash64(shingles, seed=seed)
@@ -308,30 +302,17 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     # signatures are re-attached once per SURVIVING pair below
     banded = _band_hashes(signatures, id_col, bands, rows_per_band)
 
-    # Round-9 measured-and-rejected: a (band, band_hash) bucket-count
-    # prefilter ahead of this self-join (VERDICT r8 #5 — singleton
-    # buckets produce no pairs). Interleaved same-session A/B at 1M
-    # docs, noop sink, full pair pipeline: prefiltered 26.9s vs this
-    # plan's 19.2s. Mechanism: AQE's runtime stage reuse already
-    # evaluates the banded explode ONCE for both self-join sides (the
-    # two exchanges are canonically identical), so the prefilter's
-    # count aggregation ADDS a third banded evaluation (~6s) plus a
-    # 32M-row exchange without removing any work the reused plan pays.
+    # no bucket-count prefilter: AQE already reuses the banded explode for
+    # both sides, so it measured slower; see BENCH/MEASUREMENTS.md
     a = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "band_hash")
     cand = (a.join(b, ["band", "band_hash"])
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b")
             .dropDuplicates(["id_a", "id_b"]))
-    # Round-9 measured-and-rejected: semi-filtering the signature table
-    # to candidate ids before these re-attach joins (explode pair ids →
-    # distinct → left_semi). Interleaved A/B: 1M docs 19.05s → 18.36s
-    # (AQE broadcasts the pair side, so the full-signature shuffle the
-    # filter would avoid doesn't happen in practice), but 5k docs 0.80s
-    # → 1.04s — the extra explode/distinct/semi stages dominate exactly
-    # where this operator runs per-curation-batch. Net negative; if a
-    # corpus ever produces a pair frame too big for AQE to broadcast,
-    # reintroduce the semi-filter gated on that size.
+    # no signature semi-filter: AQE broadcasts the pair side, so it
+    # measured net slower; bring it back only gated on a pair frame too
+    # big to broadcast; see BENCH/MEASUREMENTS.md
     sig_a = signatures.select(F.col(id_col).alias("id_a"),
                               F.col("minhash").alias("sig_a"))
     sig_b = signatures.select(F.col(id_col).alias("id_b"),
@@ -351,21 +332,9 @@ def _band_hashes(signatures: DataFrame, id_col: str, bands: int,
     with this code and the formula can evolve without versioning state).
 
     The band hash chains ``xxhash64(acc, element)`` over the slice —
-    long-only arithmetic the whole way. The previous formula stringified
-    every element into a joined key and hashed that; at 1M docs × 32
-    bands that is 128M int→string conversions, measured ~2× slower for
-    the banding stage (9.5s → 4.8s at 1M docs, local[32]; candidate-pair
-    output identical). A groupBy+collect_list+combinations rewrite of
-    the candidate self-join was ALSO measured and rejected: warm walls
-    8.3-9.4s vs the join's 5.4-6.6s on the same banded input — AQE's
-    handling of the ids-only equi-join beats per-bucket array
-    combinatorics here. Round-9 re-measured (1M docs, interleaved
-    same-session A/B, noop sink) and rejected two more variants: a
-    variadic codegen ``xxhash64(element_at...×4)`` per band (10.5s vs
-    the chain's 6.1s per banded evaluation — the 128-element_at
-    expression defeats codegen) and ``xxhash64(slice(...))`` hashing
-    the slice array in one call (23.7s — array allocation plus generic
-    array hashing). The interpreted chain is the measured optimum."""
+    long-only arithmetic the whole way; every other formula tried, and a
+    groupBy+collect_list rewrite of the candidate join, measured slower
+    (see BENCH/MEASUREMENTS.md)."""
     return signatures.select(
         id_col,
         F.posexplode(F.transform(
@@ -388,7 +357,7 @@ def minhash_near_duplicates(df: DataFrame, text_col: str = "text",
     + both re-attach joins); at 100-TB scale this is the signature
     checkpoint you'd write to parquet. localCheckpoint rather than persist
     so the cached table is ContextCleaner-managed — long-lived sessions
-    calling this repeatedly (curate, bench reps) must not accumulate
+    calling this repeatedly (curate, ingest batches) must not accumulate
     CacheManager entries that nothing ever unpersists."""
     sigs = (minhash_signatures(df, text_col, id_col, num_hashes, shingle_size)
             .localCheckpoint(eager=False))
@@ -674,8 +643,8 @@ def near_dup_clusters(pairs: DataFrame, max_iterations: int = 20,
                                        pdf["id_b"].to_numpy())
         # ship the label table back through Arrow (one columnar batch)
         # rather than a list of Python tuples: createDataFrame over rows
-        # pickles per element — measured as most of the clusters_driver
-        # wall at the 130k-pair bench scale (round-9)
+        # pickles per element — measured as most of the driver-side
+        # clustering wall at 130k pairs
         return spark.createDataFrame(
             pd.DataFrame({"id": ids, "cluster_id": roots}), schema)
     edges = (pairs_ck.select(F.col("id_a").alias("src"),

@@ -103,7 +103,7 @@ def rollup_sketches(df: DataFrame, ts_col: str, keys: list[str],
         # upward merges see <= (coarse/fine ratio) already-merged states
         # per key — skew-free by construction, so salt=1 (a single
         # shuffle) replaces the two-level tree: measured 2.0s -> sub-second
-        # on the 336-state day level of the bench ladder
+        # on a 336-state day level
         prev = two_level_merge(coarser, keys + [WINDOW_COL], salt=1)
         ladder[res] = prev
     return ladder

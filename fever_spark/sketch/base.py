@@ -147,6 +147,15 @@ def _check_header(data: bytes) -> tuple[int, int]:
     return kind, flags
 
 
+def take(buf, off: int, n: int) -> memoryview:
+    """``buf[off:off + n]``, or a corrupt-state ``ValueError`` if the
+    payload ends before those ``n`` bytes do."""
+    if off + n > len(buf):
+        raise ValueError(f"corrupt sketch state: needs {off + n} payload "
+                         f"bytes, holds {len(buf)}")
+    return buf[off:off + n]
+
+
 @contextmanager
 def _short_state_is_corrupt():
     """A kind header cut short raises ``struct.error``: a corrupt state."""

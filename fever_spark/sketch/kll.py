@@ -22,7 +22,7 @@ import struct
 import numpy as np
 
 from fever_spark.hashing import splitmix64
-from fever_spark.sketch.base import KIND_KLL, Sketch, register
+from fever_spark.sketch.base import KIND_KLL, Sketch, register, take
 
 _C = 2.0 / 3.0
 _MIN_CAP = 8
@@ -225,6 +225,6 @@ class KLLSketch(Sketch):
         for _ in range(n_levels):
             (ln,) = struct.unpack_from("<I", buf, off)
             off += 4
-            levels.append(np.frombuffer(buf[off:off + 8 * ln], dtype=np.float64).copy())
+            levels.append(np.frombuffer(take(buf, off, 8 * ln), dtype=np.float64).copy())
             off += 8 * ln
         return cls(k=k, _levels=levels, _n=n, _rng_state=rng_state)

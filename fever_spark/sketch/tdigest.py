@@ -22,7 +22,7 @@ import struct
 
 import numpy as np
 
-from fever_spark.sketch.base import KIND_TDIGEST, Sketch, register
+from fever_spark.sketch.base import KIND_TDIGEST, Sketch, register, take
 
 _HEADER = struct.Struct("<dqdI")  # delta, n, buffered_count_unused, n_centroids
 
@@ -199,7 +199,7 @@ class TDigest(Sketch):
     def _from_payload(cls, buf: memoryview) -> "TDigest":
         delta, n, _, nc = _HEADER.unpack_from(buf, 0)
         off = _HEADER.size
-        means = np.frombuffer(buf[off:off + 8 * nc], dtype=np.float64).copy()
+        means = np.frombuffer(take(buf, off, 8 * nc), dtype=np.float64).copy()
         off += 8 * nc
-        weights = np.frombuffer(buf[off:off + 8 * nc], dtype=np.float64).copy()
+        weights = np.frombuffer(take(buf, off, 8 * nc), dtype=np.float64).copy()
         return cls(delta=delta, _means=means, _weights=weights, _n=n)

@@ -29,7 +29,7 @@ import struct
 
 import numpy as np
 
-from fever_spark.sketch.base import Sketch, register
+from fever_spark.sketch.base import Sketch, register, take
 from fever_spark.sketch.cms import CountMinSketch
 
 KIND_CMSTOPK = 6
@@ -165,12 +165,12 @@ class CMSTopK(Sketch):
     def _from_payload(cls, buf: memoryview) -> "CMSTopK":
         track, n_cand, is_int, cms_len = _TK_HEADER.unpack_from(buf, 0)
         off = _TK_HEADER.size
-        cms = CountMinSketch._from_payload(buf[off:off + cms_len])
+        cms = CountMinSketch._from_payload(take(buf, off, cms_len))
         off += cms_len
-        counts = np.frombuffer(buf[off:off + 8 * n_cand], dtype=np.int64).copy()
+        counts = np.frombuffer(take(buf, off, 8 * n_cand), dtype=np.int64).copy()
         off += 8 * n_cand
         if is_int:
-            items = np.frombuffer(buf[off:off + 8 * n_cand],
+            items = np.frombuffer(take(buf, off, 8 * n_cand),
                                   dtype=np.int64).tolist()
         else:
             items = json.loads(bytes(buf[off:]).decode("utf-8")) if n_cand else []

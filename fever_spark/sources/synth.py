@@ -4,7 +4,7 @@ the ``iocs`` indicator list (FIXTURES.md §1-2, BASELINE.json input_hint).
 Schema: pages(url string, warc_ts timestamp, html binary, text string,
 lang string). Same seed + row count ⇒ byte-identical table. Generation is
 pure numpy/pyarrow on the driver for small scales and distributed via
-``spark.range`` + mapInPandas for bench scales, producing IDENTICAL rows for
+``spark.range`` + mapInPandas for large scales, producing IDENTICAL rows for
 a given (seed, n) — the distributed path partitions the same id space.
 
 Design notes for the workload shape:

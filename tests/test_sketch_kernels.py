@@ -178,13 +178,15 @@ class TestCorruptState:
         with pytest.raises(ValueError, match="corrupt sketch state"):
             sketch_from_bytes(data)
 
-    @pytest.mark.parametrize("cut", [9, 12, 20, -1])
+    @pytest.mark.parametrize("cut", [9, 12, 20, -1, -8, -16])
     @pytest.mark.parametrize("kind", ["hll", "cms", "kll", "tdigest",
-                                      "cmstopk", "kmv"])
+                                      "cmstopk", "cmstopk_int", "kmv"])
     def test_cut_state_raises(self, kind, cut):
         # cuts 9/12/20 fall inside (or just past) each kind's own header;
         # -1 drops the last byte, which HLL and KMV used to load silently
-        # with too few registers / a shortened sample value
+        # with too few registers / a shortened sample value; -8/-16 drop
+        # whole float64/int64 slots, which KLL, t-digest and int-item
+        # CMSTopK used to load silently with a short level / array
         from fever_spark.sketch.kmv import KMVSketch
         from fever_spark.sketch.topk import CMSTopK
 
@@ -194,9 +196,11 @@ class TestCorruptState:
               "kll": lambda: KLLSketch(k=16),
               "tdigest": lambda: TDigest(delta=20),
               "cmstopk": lambda: CMSTopK(epsilon=0.05, delta=0.1, track=8),
+              "cmstopk_int": lambda: CMSTopK(epsilon=0.05, delta=0.1, track=8),
               "kmv": lambda: KMVSketch(k=16)}[kind]()
-        sk.update(np.arange(500, dtype=np.float64)
-                  if kind in ("kll", "tdigest") else vals)
+        sk.update(np.arange(500, dtype=np.float64) if kind in ("kll", "tdigest")
+                  else np.arange(500, dtype=np.int64) if kind == "cmstopk_int"
+                  else vals)
         data = sk.to_bytes()
         assert not data[6] & FLAG_ZLIB  # the cut hits the kind's own bytes
         cut_data = data[:cut]
