@@ -54,7 +54,8 @@ def _state_rows(path_glob: str) -> list[dict]:
 
 def _merge_rows(rows: list[dict]) -> list[dict]:
     """Group rows by (keys..., sketch) and merge each group's states with
-    the kernels' merge_many fast path (zero-copy reduce for Bloom/HLL/CMS)."""
+    the kernels' ``merge_many``, which checks every state's envelope and
+    CRC32 before it merges."""
     from fever_spark.sketch.base import merge_many
 
     groups: dict[tuple, dict] = {}

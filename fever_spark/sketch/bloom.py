@@ -20,9 +20,11 @@ import struct
 import numpy as np
 
 from fever_spark.hashing import double_hash64
-from fever_spark.sketch.base import KIND_BLOOM, Sketch, canonical_seed, register
+from fever_spark.sketch.base import (
+    KIND_BLOOM, Cursor, Sketch, canonical_seed, corrupt, register)
 
-_HEADER = struct.Struct("<QQIqQ")  # capacity n, m bits, k, seed (signed 64), N inserted
+# capacity n, m bits, k, seed (signed 64), N inserted, fpp
+_HEADER = struct.Struct("<QQIqQd")
 
 
 @register(KIND_BLOOM, "bloom")
@@ -139,47 +141,19 @@ class BloomFilter(Sketch):
 
     # -- serde ----------------------------------------------------------------
 
-    @classmethod
-    def _merge_many(cls, states: list[bytes]) -> "BloomFilter":
-        """Vectorized N-way merge: one bitwise-or reduce over bit views."""
-        from fever_spark.sketch.base import payload_of
-
-        payloads = [payload_of(s) for s in states]
-        cap, m, k, seed, _ = _HEADER.unpack_from(payloads[0], 0)
-        (fpp,) = struct.unpack_from("<d", payloads[0], _HEADER.size)
-        off = _HEADER.size + 8
-        n_ins = 0
-        views = []
-        for pl in payloads:
-            m2 = _HEADER.unpack_from(pl, 0)
-            if (m2[1], m2[2], m2[3]) != (m, k, seed):
-                raise ValueError(
-                    "cannot merge Bloom filters with different (m, k, seed): "
-                    f"{(m, k, seed)} vs {(m2[1], m2[2], m2[3])}")
-            n_ins += m2[4]
-            views.append(np.frombuffer(pl, dtype=np.uint8, offset=off))
-        bits = np.bitwise_or.reduce(views)
-        return cls(capacity=cap, fpp=fpp, seed=seed, _bits=bits.copy(),
-                   _m=m, _k=k, _n_inserted=n_ins)
-
     def _payload_bytes(self) -> bytes:
-        return (_HEADER.pack(self.capacity, self.m, self.k, self.seed, self.n_inserted)
-                + struct.pack("<d", self.fpp) + self.bits.tobytes())
+        return (_HEADER.pack(self.capacity, self.m, self.k, self.seed,
+                             self.n_inserted, self.fpp)
+                + self.bits.tobytes())
 
     @classmethod
-    def _from_payload(cls, buf: memoryview) -> "BloomFilter":
-        if len(buf) < _HEADER.size + 8:
-            raise ValueError(f"corrupt Bloom filter: {len(buf)} payload bytes "
-                             f"(header needs {_HEADER.size + 8})")
-        cap, m, k, seed, n_ins = _HEADER.unpack_from(buf, 0)
-        (fpp,) = struct.unpack_from("<d", buf, _HEADER.size)
-        bits = np.frombuffer(buf[_HEADER.size + 8:], dtype=np.uint8).copy()
-        # a truncated file would otherwise load and fail every later probe
-        # with IndexError; k=0 would report every value present
-        if m < 1 or k < 1 or len(bits) != (m + 7) // 8:
-            raise ValueError(
-                f"corrupt Bloom filter: m={m}, k={k}, {len(bits)} bit bytes "
-                f"(expected {(m + 7) // 8})")
+    def _from_payload(cls, cur: Cursor) -> "BloomFilter":
+        cap, m, k, seed, n_ins, fpp = cur.unpack(_HEADER)
+        # k=0 would report every value present
+        if m < 1 or k < 1:
+            raise corrupt(f"Bloom filter with m={m}, k={k}")
+        bits = cur.array(np.uint8, (m + 7) // 8).copy()
+        cur.end()
         return cls(capacity=cap, fpp=fpp, seed=seed, _bits=bits, _m=m, _k=k,
                    _n_inserted=n_ins)
 

@@ -17,7 +17,8 @@ import struct
 import numpy as np
 
 from fever_spark.hashing import double_hash64
-from fever_spark.sketch.base import KIND_CMS, Sketch, canonical_seed, register
+from fever_spark.sketch.base import (
+    KIND_CMS, Cursor, Sketch, canonical_seed, corrupt, register)
 
 _HEADER = struct.Struct("<IIqqB")  # depth d, width w, seed (signed 64), total N, cell dtype code
 
@@ -120,28 +121,6 @@ class CountMinSketch(Sketch):
 
     # -- serde ---------------------------------------------------------------
 
-    @classmethod
-    def _merge_many(cls, states: list[bytes]) -> "CountMinSketch":
-        """Vectorized N-way merge: one np.sum over stacked table views."""
-        from fever_spark.sketch.base import payload_of
-
-        payloads = [payload_of(s) for s in states]
-        d, w, seed, _, _ = _HEADER.unpack_from(payloads[0], 0)
-        total = 0
-        views = []
-        for pl in payloads:
-            d2, w2, seed2, t, code = _HEADER.unpack_from(pl, 0)
-            if (d2, w2, seed2) != (d, w, seed):
-                raise ValueError(
-                    "cannot merge CMS with different (depth, width, seed): "
-                    f"{(d, w, seed)} vs {(d2, w2, seed2)}")
-            total += t
-            views.append(np.frombuffer(pl, dtype=_DTYPE_BY_CODE[code],
-                                       offset=_HEADER.size, count=d * w))
-        # np.sum promotes the mixed-width views through one int64 stack
-        table = np.sum(views, axis=0, dtype=np.int64).reshape(d, w)
-        return cls(seed=seed, _table=table, _total=total, depth=d, width=w)
-
     def _wire_dtype(self):
         if self.table.min(initial=0) < 0:  # negative weights: stay int64
             return np.int64
@@ -161,9 +140,11 @@ class CountMinSketch(Sketch):
                 + np.ascontiguousarray(self.table, dtype=dt).tobytes())
 
     @classmethod
-    def _from_payload(cls, buf: memoryview) -> "CountMinSketch":
-        d, w, seed, total, code = _HEADER.unpack_from(buf, 0)
-        table = (np.frombuffer(buf[_HEADER.size:],
-                               dtype=_DTYPE_BY_CODE[code])
-                 .reshape(d, w).astype(np.int64))
-        return cls(seed=seed, _table=table, _total=total, depth=d, width=w)
+    def _from_payload(cls, cur: Cursor) -> "CountMinSketch":
+        d, w, seed, total, code = cur.unpack(_HEADER)
+        if code not in _DTYPE_BY_CODE:
+            raise corrupt(f"CMS cell dtype code {code}")
+        table = cur.array(_DTYPE_BY_CODE[code], d * w).reshape(d, w)
+        cur.end()
+        return cls(seed=seed, _table=table.astype(np.int64), _total=total,
+                   depth=d, width=w)

@@ -16,7 +16,7 @@ import struct
 import numpy as np
 
 from fever_spark.hashing import hash64
-from fever_spark.sketch.base import KIND_HLL, Sketch, canonical_seed, register
+from fever_spark.sketch.base import KIND_HLL, Cursor, Sketch, canonical_seed, register
 
 _HEADER = struct.Struct("<Bq")  # p, seed (signed 64)
 
@@ -94,41 +94,15 @@ class HyperLogLog(Sketch):
 
     # -- serde ---------------------------------------------------------------
 
-    @classmethod
-    def _merge_many(cls, states: list[bytes]) -> "HyperLogLog":
-        """Vectorized N-way merge over register views."""
-        from fever_spark.sketch.base import payload_of
-
-        payloads = [payload_of(s) for s in states]
-        p, seed, _ = _decode(payloads[0])
-        views = []
-        for pl in payloads:
-            p2, seed2, regs = _decode(pl)
-            if (p2, seed2) != (p, seed):
-                raise ValueError("cannot merge HLLs with different (p, seed): "
-                                 f"{(p, seed)} vs {(p2, seed2)}")
-            views.append(regs)
-        return cls(p=p, seed=seed,
-                   _registers=np.maximum.reduce(views))
-
     def _payload_bytes(self) -> bytes:
         return _HEADER.pack(self.p, self.seed) + self.registers.tobytes()
 
     @classmethod
-    def _from_payload(cls, buf: memoryview) -> "HyperLogLog":
-        p, seed, regs = _decode(buf)
-        return cls(p=p, seed=seed, _registers=regs.copy())
-
-
-def _decode(buf) -> tuple[int, int, np.ndarray]:
-    """``(p, seed, register view)``; the payload must hold exactly the
-    ``1 << p`` registers its header declares."""
-    p, seed = _HEADER.unpack_from(buf, 0)
-    regs = np.frombuffer(buf, dtype=np.uint8, offset=_HEADER.size)
-    if len(regs) != 1 << p:
-        raise ValueError(f"corrupt sketch state: HLL p={p} needs {1 << p} "
-                         f"registers, payload holds {len(regs)}")
-    return p, seed, regs
+    def _from_payload(cls, cur: Cursor) -> "HyperLogLog":
+        p, seed = cur.unpack(_HEADER)
+        regs = cur.array(np.uint8, 1 << p).copy()
+        cur.end()
+        return cls(p=p, seed=seed, _registers=regs)
 
 
 # -- set-operation estimators (module level: they consume, never mutate) ----

@@ -22,11 +22,12 @@ import struct
 import numpy as np
 
 from fever_spark.hashing import splitmix64
-from fever_spark.sketch.base import KIND_KLL, Sketch, register, take
+from fever_spark.sketch.base import KIND_KLL, Cursor, Sketch, register
 
 _C = 2.0 / 3.0
 _MIN_CAP = 8
 _HEADER = struct.Struct("<IqQI")  # k, n, rng_state, n_levels
+_LEVEL_LEN = struct.Struct("<I")
 
 
 @register(KIND_KLL, "kll")
@@ -127,44 +128,23 @@ class KLLSketch(Sketch):
         return self
 
     @classmethod
-    def _merge_many(cls, states: list[bytes]) -> "KLLSketch":
-        """N-way shuffle-merge fast path (see base.merge_many): decode every
-        payload once, concatenate level-wise across ALL inputs, then run ONE
-        compression pass — versus the pairwise fallback's N-1 full
-        deserialize+compress rounds. Same estimator guarantees: compaction
-        is randomized, and the rng fold matches pairwise merge's mixing."""
-        from fever_spark.sketch.base import payload_of
-
-        payloads = [payload_of(s) for s in states]
-        k0, _, _, _ = _HEADER.unpack_from(payloads[0], 0)
-        level_parts: list[list[np.ndarray]] = []
-        total_n = 0
-        rng_state = None
-        for pl in payloads:
-            k, n, rs, n_levels = _HEADER.unpack_from(pl, 0)
-            if k != k0:
-                raise ValueError("cannot merge KLL sketches with different k")
-            total_n += n
-            if rng_state is None:
-                rng_state = rs
-            else:
-                rng_state ^= rs * 0x9E3779B97F4A7C15 & 0xFFFFFFFFFFFFFFFF
-                rng_state &= 0xFFFFFFFFFFFFFFFF
-            off = _HEADER.size
-            for h in range(n_levels):
-                (ln,) = struct.unpack_from("<I", pl, off)
-                off += 4
-                while len(level_parts) <= h:
-                    level_parts.append([])
-                if ln:
-                    level_parts[h].append(
-                        np.frombuffer(pl, dtype=np.float64, count=ln,
-                                      offset=off))
-                off += 8 * ln
-        levels = [np.concatenate(parts) if parts
-                  else np.empty(0, dtype=np.float64)
-                  for parts in (level_parts or [[]])]
-        out = cls(k=k0, _levels=levels, _n=total_n, _rng_state=rng_state)
+    def _merge_many(cls, sketches: list["KLLSketch"]) -> "KLLSketch":
+        """N-way merge (see base.merge_many): concatenate level-wise across
+        ALL inputs, then run ONE compression pass — versus N-1 pairwise
+        merge+compress rounds. Same estimator guarantees: compaction is
+        randomized, and the rng fold matches pairwise merge's mixing."""
+        k = sketches[0].k
+        if any(sk.k != k for sk in sketches):
+            raise ValueError("cannot merge KLL sketches with different k")
+        depth = max(len(sk.levels) for sk in sketches)
+        levels = [np.concatenate([sk.levels[h] for sk in sketches
+                                  if h < len(sk.levels)])
+                  for h in range(depth)]
+        rng_state = sketches[0].rng_state
+        for sk in sketches[1:]:
+            rng_state ^= sk.rng_state * 0x9E3779B97F4A7C15 & 0xFFFFFFFFFFFFFFFF
+        out = cls(k=k, _levels=levels, _n=sum(sk.n for sk in sketches),
+                  _rng_state=rng_state)
         out._compress()
         return out
 
@@ -213,18 +193,16 @@ class KLLSketch(Sketch):
     def _payload_bytes(self) -> bytes:
         parts = [_HEADER.pack(self.k, self.n, self.rng_state, len(self.levels))]
         for lv in self.levels:
-            parts.append(struct.pack("<I", len(lv)))
+            parts.append(_LEVEL_LEN.pack(len(lv)))
             parts.append(np.ascontiguousarray(lv, dtype=np.float64).tobytes())
         return b"".join(parts)
 
     @classmethod
-    def _from_payload(cls, buf: memoryview) -> "KLLSketch":
-        k, n, rng_state, n_levels = _HEADER.unpack_from(buf, 0)
-        off = _HEADER.size
+    def _from_payload(cls, cur: Cursor) -> "KLLSketch":
+        k, n, rng_state, n_levels = cur.unpack(_HEADER)
         levels = []
         for _ in range(n_levels):
-            (ln,) = struct.unpack_from("<I", buf, off)
-            off += 4
-            levels.append(np.frombuffer(take(buf, off, 8 * ln), dtype=np.float64).copy())
-            off += 8 * ln
+            (ln,) = cur.unpack(_LEVEL_LEN)
+            levels.append(cur.array(np.float64, ln).copy())
+        cur.end()
         return cls(k=k, _levels=levels, _n=n, _rng_state=rng_state)

@@ -36,9 +36,9 @@ import struct
 import numpy as np
 
 from fever_spark.hashing import hash64
-from fever_spark.sketch.base import Sketch, canonical_seed, register
+from fever_spark.sketch.base import (
+    KIND_KMV, Cursor, Sketch, canonical_seed, register)
 
-KIND_KMV = 7
 _HEADER = struct.Struct("<IqQ")  # k, seed (signed 64), n_entries
 _TWO64 = float(1 << 64)
 
@@ -133,21 +133,14 @@ class KMVSketch(Sketch):
                 + self.hashes.tobytes() + lens.tobytes() + b"".join(enc))
 
     @classmethod
-    def _from_payload(cls, buf: memoryview) -> "KMVSketch":
-        k, seed, n = _HEADER.unpack_from(buf, 0)
-        off = _HEADER.size
-        hashes = np.frombuffer(buf, dtype=np.uint64, count=n, offset=off).copy()
-        off += 8 * n
-        lens = np.frombuffer(buf, dtype=np.uint32, count=n, offset=off)
-        off += 4 * n
-        if off + int(lens.sum()) != len(buf):
-            raise ValueError(
-                f"corrupt sketch state: KMV with {n} entries declares "
-                f"{off + int(lens.sum())} payload bytes, holds {len(buf)}")
+    def _from_payload(cls, cur: Cursor) -> "KMVSketch":
+        k, seed, n = cur.unpack(_HEADER)
+        hashes = cur.array(np.uint64, n).copy()
+        lens = cur.array(np.uint32, n)
         vals = np.empty(n, dtype=object)
-        for i, ln in enumerate(lens):
-            vals[i] = bytes(buf[off:off + ln]).decode("utf-8")
-            off += int(ln)
+        for i, ln in enumerate(lens.tolist()):
+            vals[i] = bytes(cur.take(ln)).decode("utf-8")
+        cur.end()
         return cls(k=k, seed=seed, _hashes=hashes, _values=vals)
 
 

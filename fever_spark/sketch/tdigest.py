@@ -22,7 +22,7 @@ import struct
 
 import numpy as np
 
-from fever_spark.sketch.base import KIND_TDIGEST, Sketch, register, take
+from fever_spark.sketch.base import KIND_TDIGEST, Cursor, Sketch, register
 
 _HEADER = struct.Struct("<dqdI")  # delta, n, buffered_count_unused, n_centroids
 
@@ -133,31 +133,20 @@ class TDigest(Sketch):
         return self.means, self.weights
 
     @classmethod
-    def _merge_many(cls, states: list[bytes]) -> "TDigest":
-        """N-way shuffle-merge fast path (see base.merge_many): concatenate
-        every input's centroid list and run ONE compression pass, versus the
-        pairwise fallback's N-1 deserialize+compress rounds. Accuracy is the
-        documented merge approximation either way (rank-error-bound tests,
-        not byte equality, across merge orders)."""
-        from fever_spark.sketch.base import payload_of
-
-        payloads = [payload_of(s) for s in states]
-        d0, _, _, _ = _HEADER.unpack_from(payloads[0], 0)
-        mean_parts, weight_parts = [], []
-        for pl in payloads:
-            delta, n, _, nc = _HEADER.unpack_from(pl, 0)
-            if delta != d0:
-                raise ValueError("cannot merge t-digests with different delta")
-            if nc:
-                off = _HEADER.size
-                mean_parts.append(np.frombuffer(pl, dtype=np.float64,
-                                                count=nc, offset=off))
-                weight_parts.append(np.frombuffer(pl, dtype=np.float64,
-                                                  count=nc, offset=off + 8 * nc))
-        out = cls(delta=d0)
-        if mean_parts:
+    def _merge_many(cls, digests: list["TDigest"]) -> "TDigest":
+        """N-way merge (see base.merge_many): concatenate every input's
+        centroid list and run ONE compression pass, versus N-1 pairwise
+        merge+compress rounds. Accuracy is the documented merge
+        approximation either way (rank-error-bound tests, not byte
+        equality, across merge orders)."""
+        out = cls(delta=digests[0].delta)
+        if any(d.delta != out.delta for d in digests):
+            raise ValueError("cannot merge t-digests with different delta")
+        # decoded states hold no update buffer: means/weights are complete
+        means = np.concatenate([d.means for d in digests])
+        if len(means):
             out.means, out.weights = out._compress(
-                np.concatenate(mean_parts), np.concatenate(weight_parts))
+                means, np.concatenate([d.weights for d in digests]))
             out.n = int(round(out.weights.sum()))
         return out
 
@@ -196,10 +185,9 @@ class TDigest(Sketch):
                 + self.means.tobytes() + self.weights.tobytes())
 
     @classmethod
-    def _from_payload(cls, buf: memoryview) -> "TDigest":
-        delta, n, _, nc = _HEADER.unpack_from(buf, 0)
-        off = _HEADER.size
-        means = np.frombuffer(take(buf, off, 8 * nc), dtype=np.float64).copy()
-        off += 8 * nc
-        weights = np.frombuffer(take(buf, off, 8 * nc), dtype=np.float64).copy()
+    def _from_payload(cls, cur: Cursor) -> "TDigest":
+        delta, n, _, nc = cur.unpack(_HEADER)
+        means = cur.array(np.float64, nc).copy()
+        weights = cur.array(np.float64, nc).copy()
+        cur.end()
         return cls(delta=delta, _means=means, _weights=weights, _n=n)

@@ -29,10 +29,9 @@ import struct
 
 import numpy as np
 
-from fever_spark.sketch.base import Sketch, register, take
+from fever_spark.sketch.base import (
+    KIND_CMSTOPK, Cursor, Sketch, corrupt, register)
 from fever_spark.sketch.cms import CountMinSketch
-
-KIND_CMSTOPK = 6
 
 _TK_HEADER = struct.Struct("<IIBQ")  # track, n_candidates, items_are_int, cms_len
 
@@ -162,17 +161,19 @@ class CMSTopK(Sketch):
         return head + cms_payload + counts.tobytes() + items_blob
 
     @classmethod
-    def _from_payload(cls, buf: memoryview) -> "CMSTopK":
-        track, n_cand, is_int, cms_len = _TK_HEADER.unpack_from(buf, 0)
-        off = _TK_HEADER.size
-        cms = CountMinSketch._from_payload(take(buf, off, cms_len))
-        off += cms_len
-        counts = np.frombuffer(take(buf, off, 8 * n_cand), dtype=np.int64).copy()
-        off += 8 * n_cand
+    def _from_payload(cls, cur: Cursor) -> "CMSTopK":
+        track, n_cand, is_int, cms_len = cur.unpack(_TK_HEADER)
+        cms = CountMinSketch._from_payload(Cursor(cur.take(cms_len)))
+        counts = cur.array(np.int64, n_cand).copy()
         if is_int:
-            items = np.frombuffer(take(buf, off, 8 * n_cand),
-                                  dtype=np.int64).tolist()
+            items = cur.array(np.int64, n_cand).tolist()
         else:
-            items = json.loads(bytes(buf[off:]).decode("utf-8")) if n_cand else []
+            try:
+                items = json.loads(bytes(cur.rest()).decode("utf-8"))
+            except ValueError as e:  # bad UTF-8 or JSON
+                raise corrupt(f"CMSTopK items: {e}") from e
+            if not isinstance(items, list) or len(items) != n_cand:
+                raise corrupt(f"CMSTopK items do not match its {n_cand} counts")
+        cur.end()
         return cls(track=track, _cms=cms, _items=items, _counts=counts,
                    _items_are_int=bool(is_int) if n_cand else None)

@@ -94,7 +94,7 @@ def test_report_truncated_filter_file_raises(spark, pages_dir, tmp_path):
     data = build_ioc_filter(["evil.example.com", "bad.example"]).to_bytes()
     cut = tmp_path / "iocs.bloom"
     cut.write_bytes(data[: len(data) // 2])
-    with pytest.raises(ValueError, match="corrupt Bloom filter"):
+    with pytest.raises(ValueError, match="corrupt sketch state"):
         build_report(spark, pages_dir, str(tmp_path / "ck"),
                      ioc_file=str(cut))
 

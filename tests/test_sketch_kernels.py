@@ -6,7 +6,9 @@ zero-false-negative Bloom property (bloom_handler_test.go:409-427 analog),
 and serde round-trips (flow_extractor_test.go:94-220 analog).
 """
 
+import base64
 import struct
+import zlib
 
 import numpy as np
 import pytest
@@ -16,7 +18,7 @@ from fever_spark.sketch import (
     BloomFilter, CountMinSketch, HyperLogLog, KLLSketch, TDigest,
     sketch_from_bytes,
 )
-from fever_spark.sketch.base import FLAG_ZLIB, merge_many, payload_of
+from fever_spark.sketch.base import FLAG_CRC32, FLAG_ZLIB, merge_many
 
 RNG = np.random.default_rng(42)
 
@@ -24,6 +26,19 @@ RNG = np.random.default_rng(42)
 def rand_strings(n, n_distinct, prefix="v", rng=RNG):
     ids = rng.integers(0, n_distinct, size=n)
     return np.array([f"{prefix}{i}" for i in ids], dtype=object), ids
+
+
+def with_crc(data: bytearray) -> bytes:
+    """Re-seal a hand-edited state so its CRC32 trailer matches again."""
+    struct.pack_into("<I", data, len(data) - 4, zlib.crc32(data[:-4]))
+    return bytes(data)
+
+
+def legacy(data: bytes) -> bytes:
+    """The same state as written before the CRC32 trailer existed: flag
+    bit 1 clear and no trailer."""
+    assert data[6] & FLAG_CRC32
+    return data[:6] + bytes([data[6] & ~FLAG_CRC32]) + data[7:-4]
 
 
 # ---------------------------------------------------------------- hashing
@@ -124,7 +139,7 @@ class TestBloom:
         return p
 
     def test_load_truncated_raises(self, tmp_path):
-        with pytest.raises(ValueError, match="corrupt Bloom filter"):
+        with pytest.raises(ValueError, match="corrupt sketch state"):
             BloomFilter.load(str(self._truncated(tmp_path)))
 
     def test_load_cut_inside_header_raises(self, tmp_path):
@@ -132,7 +147,7 @@ class TestBloom:
         data = BloomFilter(capacity=100, fpp=1e-8).to_bytes()
         p = tmp_path / "short.bloom"
         p.write_bytes(data[:8 + 20])
-        with pytest.raises(ValueError, match="corrupt Bloom filter"):
+        with pytest.raises(ValueError, match="corrupt sketch state"):
             BloomFilter.load(str(p))
 
     def test_load_zero_hashes_raises(self, tmp_path):
@@ -140,8 +155,8 @@ class TestBloom:
         bf = BloomFilter(capacity=100, fpp=1e-8)
         data = bytearray(bf.to_bytes())
         struct.pack_into("<I", data, 8 + 16, 0)  # header: n, m, then k
-        with pytest.raises(ValueError, match="corrupt Bloom filter"):
-            BloomFilter.from_bytes(bytes(data))
+        with pytest.raises(ValueError, match="corrupt sketch state"):
+            BloomFilter.from_bytes(with_crc(data))
 
     def test_load_or_empty_on_truncated(self, tmp_path):
         bf = BloomFilter.load_or_empty(str(self._truncated(tmp_path)))
@@ -156,21 +171,66 @@ class TestBloom:
         assert info["capacity"] == 100 and info["k"] >= 1 and info["m"] >= 8
 
 
+# Each kind as a small state, as written before the CRC32 trailer existed
+# (flags 0, or 1 for the zlib one): every one must still load.
+_LEGACY_STATES = {
+    "bloom": "RlZTSwEBAAAUAAAAAAAAAMAAAAAAAAAABwAAAAAAAAAAAAAAMgAAAAAAAAB7FK5H4XqEP39dt3+/fv//39/63b//+/e////7Gd/vfw==",
+    "hll": "RlZTSwECAAAEAAAAAAAAAAAFAQMDAgADAgMKBQICAgIB",
+    "hll_zlib": "RlZTSwECAQB4Ae1Vyw6DMAwrY9Mu/P/3Im3lQGKch5R1sHFBtR3nQVCXhp8Jwx29UfaA5JYHQRxO1fGyfHDjK7FTQ5NHWKTrd/wcCfmUNr8VtMIfWhk6hwRJlo1QRqJ8pGH8pyMT4H8bZyN5vlwrt1GeneWLMHF0mnTZLnh3aPBKCLjjzypyBPzGS7eOtre7ouC1cHcYe+fYdVT+dOSTkjG3Om1Dlniyc3ir7P4KLO2kOQX/sprViM6LNRjV0bVIURW2ra0obHxU8lF5C0fJrXXDGuEOgF0BrRAAYg==",
+    "cms": "RlZTSwEDAAABAAAACAAAAAAAAAAAAAAAMgAAAAAAAAABBQUGCAYFBgk=",
+    "kll": "RlZTSwEEAAAIAAAAMgAAAAAAAAAFVE6TPi2tFgMAAAAAAAAAAQAAAAAAAAAAgEhADAAAAAAAAAAAAPA/AAAAAAAAFEAAAAAAAAAiQAAAAAAAACpAAAAAAAAAMUAAAAAAAAA1QAAAAAAAADlAAAAAAAAAPUAAAAAAAIBAQAAAAAAAgEJAAAAAAACAREAAAAAAAIBGQA==",
+    "tdigest": "RlZTSwEFAAAAAAAAAAAkQDIAAAAAAAAAAAAAAAAAAAAGAAAAAAAAAAAA4D8AAAAAAAAYQAAAAAAAgDFAAAAAAAAAQEAAAAAAAABGQAAAAAAAgEhAAAAAAAAAAEAAAAAAAAAiQAAAAAAAACxAAAAAAAAALkAAAAAAAAAiQAAAAAAAAPA/",
+    "cmstopk": "RlZTSwEGAAADAAAAAwAAAAAhAAAAAAAAAAEAAAAIAAAAAAAAAAAAAAAyAAAAAAAAAAEFBQYIBgUGCQkAAAAAAAAACQAAAAAAAAAJAAAAAAAAAFsiMzIiLCI0IiwiNDEiXQ==",
+    "cmstopk_int": "RlZTSwEGAAADAAAAAwAAAAEhAAAAAAAAAAEAAAAIAAAAAAAAAAAAAAAyAAAAAAAAAAEGBAkGBgYGBwkAAAAAAAAACQAAAAAAAAAJAAAAAAAAABYAAAAAAAAAKAAAAAAAAAAFAAAAAAAAAA==",
+    "kmv": "RlZTSwEHAAADAAAAAAAAAAAAAAADAAAAAAAAALeVLNdG6/0AAskE/cuL1wK7zYDwZmUpBgIAAAACAAAAAgAAADE0MzkzMQ==",
+}
+
+_CORRUPT_KINDS = ["hll", "cms", "kll", "tdigest", "cmstopk", "cmstopk_int",
+                  "kmv", "bloom"]
+
+
+def _small_state(kind: str) -> bytes:
+    """A small uncompressed state of ``kind``, so damage hits its bytes."""
+    from fever_spark.sketch.kmv import KMVSketch
+    from fever_spark.sketch.topk import CMSTopK
+
+    vals = np.array([str(i) for i in range(500)], dtype=object)
+    sk = {"hll": lambda: HyperLogLog(p=10),
+          "cms": lambda: CountMinSketch(epsilon=0.05, delta=0.1),
+          "kll": lambda: KLLSketch(k=16),
+          "tdigest": lambda: TDigest(delta=20),
+          "cmstopk": lambda: CMSTopK(epsilon=0.05, delta=0.1, track=8),
+          "cmstopk_int": lambda: CMSTopK(epsilon=0.05, delta=0.1, track=8),
+          "kmv": lambda: KMVSketch(k=16),
+          "bloom": lambda: BloomFilter(capacity=100, fpp=1e-8)}[kind]()
+    sk.update(np.arange(500, dtype=np.float64) if kind in ("kll", "tdigest")
+              else np.arange(500, dtype=np.int64) if kind == "cmstopk_int"
+              else vals)
+    data = sk.to_bytes()
+    assert data[6] == FLAG_CRC32  # raw payload under a CRC32 trailer
+    return data
+
+
 class TestCorruptState:
     """Damage to a state (its 8-byte envelope header, a zlib-compressed
-    payload, a kind header, or a payload shorter than its header declares)
-    raises ValueError, never a zlib or struct error or a silent load."""
+    payload, a kind header, a payload shorter or longer than its header
+    declares, or any flipped byte) raises ValueError, never a zlib, struct
+    or numpy error or a silent load."""
 
     def test_cut_compressed_state_raises(self):
         # a real-size filter serializes zlib-compressed; cutting it leaves
-        # a truncated stream, not a short bit array
+        # a truncated stream, not a short bit array. In a state without
+        # the CRC32 trailer the zlib stream itself must end exactly at the
+        # payload end: cut or padded, it is corrupt.
         data = BloomFilter(capacity=100000, fpp=1e-6).to_bytes()
         assert data[6] & FLAG_ZLIB
-        cut = data[: len(data) // 2]
-        with pytest.raises(ValueError, match="corrupt sketch state"):
-            BloomFilter.from_bytes(cut)
-        with pytest.raises(ValueError, match="corrupt sketch state"):
-            payload_of(cut)
+        old = legacy(data)
+        for bad in (data[: len(data) // 2], old[: len(old) // 2],
+                    old + bytes(8)):
+            with pytest.raises(ValueError, match="corrupt sketch state"):
+                BloomFilter.from_bytes(bad)
+            with pytest.raises(ValueError, match="corrupt sketch state"):
+                merge_many([bad, data])
 
     @pytest.mark.parametrize("n", [0, 4, 7])
     def test_state_shorter_than_header_raises(self, n):
@@ -178,36 +238,69 @@ class TestCorruptState:
         with pytest.raises(ValueError, match="corrupt sketch state"):
             sketch_from_bytes(data)
 
-    @pytest.mark.parametrize("cut", [9, 12, 20, -1, -8, -16])
-    @pytest.mark.parametrize("kind", ["hll", "cms", "kll", "tdigest",
-                                      "cmstopk", "cmstopk_int", "kmv"])
+    @pytest.mark.parametrize("cut", [9, 12, 20, -1, -8, -16, "+8"])
+    @pytest.mark.parametrize("kind", _CORRUPT_KINDS)
     def test_cut_state_raises(self, kind, cut):
         # cuts 9/12/20 fall inside (or just past) each kind's own header;
         # -1 drops the last byte, which HLL and KMV used to load silently
         # with too few registers / a shortened sample value; -8/-16 drop
         # whole float64/int64 slots, which KLL, t-digest and int-item
-        # CMSTopK used to load silently with a short level / array
-        from fever_spark.sketch.kmv import KMVSketch
-        from fever_spark.sketch.topk import CMSTopK
+        # CMSTopK used to load silently with a short level / array; +8
+        # appends a slot, which they used to load as well
+        data = _small_state(kind)
+        for bad in (data, legacy(data)):
+            bad = bad + bytes(8) if cut == "+8" else bad[:cut]
+            with pytest.raises(ValueError, match="corrupt sketch state"):
+                sketch_from_bytes(bad)
+            with pytest.raises(ValueError, match="corrupt sketch state"):
+                merge_many([bad, data])
 
-        vals = np.array([str(i) for i in range(500)], dtype=object)
-        sk = {"hll": lambda: HyperLogLog(p=10),
-              "cms": lambda: CountMinSketch(epsilon=0.05, delta=0.1),
-              "kll": lambda: KLLSketch(k=16),
-              "tdigest": lambda: TDigest(delta=20),
-              "cmstopk": lambda: CMSTopK(epsilon=0.05, delta=0.1, track=8),
-              "cmstopk_int": lambda: CMSTopK(epsilon=0.05, delta=0.1, track=8),
-              "kmv": lambda: KMVSketch(k=16)}[kind]()
-        sk.update(np.arange(500, dtype=np.float64) if kind in ("kll", "tdigest")
-                  else np.arange(500, dtype=np.int64) if kind == "cmstopk_int"
-                  else vals)
-        data = sk.to_bytes()
-        assert not data[6] & FLAG_ZLIB  # the cut hits the kind's own bytes
-        cut_data = data[:cut]
-        with pytest.raises(ValueError):
-            sketch_from_bytes(cut_data)
-        with pytest.raises(ValueError):
-            merge_many([cut_data, data])
+    @pytest.mark.parametrize("kind", _CORRUPT_KINDS)
+    def test_every_cut_and_byte_flip_raises(self, kind):
+        data = _small_state(kind)
+        for n in range(len(data)):
+            with pytest.raises(ValueError):
+                sketch_from_bytes(data[:n])
+        for i in range(len(data)):
+            flipped = bytearray(data)
+            flipped[i] ^= 0xFF
+            with pytest.raises(ValueError):
+                sketch_from_bytes(bytes(flipped))
+
+    @pytest.mark.parametrize("kind", _CORRUPT_KINDS)
+    def test_every_cut_of_legacy_state_raises(self, kind):
+        # without the trailer only the payload's own lengths can tell
+        data = legacy(_small_state(kind))
+        for n in range(len(data)):
+            with pytest.raises(ValueError, match="corrupt sketch state"):
+                sketch_from_bytes(data[:n])
+
+    def test_zeroed_byte_in_raw_filter_raises(self):
+        # large filters barely compress and are stored raw: before the
+        # CRC32 trailer a zeroed byte loaded and 13 of these IOCs then
+        # tested absent, a false negative
+        iocs = np.array([f"ioc-{i}.example" for i in range(100_000)],
+                        dtype=object)
+        bf = BloomFilter(capacity=100_000, fpp=1e-6)
+        bf.update(iocs)
+        data = bytearray(bf.to_bytes())
+        assert data[6] == FLAG_CRC32
+        mid = len(data) // 2
+        assert data[mid] != 0
+        data[mid] = 0
+        with pytest.raises(ValueError, match="corrupt sketch state"):
+            BloomFilter.from_bytes(bytes(data))
+
+    @pytest.mark.parametrize("kind", sorted(_LEGACY_STATES))
+    def test_state_without_crc_still_loads(self, kind):
+        data = base64.b64decode(_LEGACY_STATES[kind])
+        assert not data[6] & FLAG_CRC32
+        payload = data[8:]
+        if data[6] & FLAG_ZLIB:
+            payload = zlib.decompress(payload)
+        sk = sketch_from_bytes(data)
+        assert sk._payload_bytes() == payload
+        assert sketch_from_bytes(sk.to_bytes())._payload_bytes() == payload
 
     def test_foreign_bytes_rejected(self):
         # a DataSketches-style preamble, not the FVSK envelope
