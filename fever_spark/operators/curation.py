@@ -272,11 +272,11 @@ def contamination_screen(df: DataFrame, bloom_bc, n: int = 8,
     the exact verify (contamination_exact) — fever's FP-tolerated-then-
     verified discipline. One scan, no shuffle: the filter is broadcast and
     probing is one Arrow-batched UDF over int64 arrays."""
-    from fever_spark.sketch.bloom import BloomFilter
+    from fever_spark.ops.estimate import _sketch_of
 
     @F.pandas_udf(T.LongType())
     def hit_count(hs: pd.Series) -> pd.Series:
-        bf = BloomFilter.from_bytes(bloom_bc.value)
+        bf = _sketch_of(bytes(bloom_bc.value))  # decoded once per worker
         lens = np.fromiter((len(a) for a in hs), dtype=np.int64,
                            count=len(hs))
         if lens.sum() == 0:
@@ -685,11 +685,11 @@ def rare_token_stats(df: DataFrame, cms_bc, min_count: int = 5,
     One scan, no shuffle: tokens are hashed JVM-side into int64 arrays
     (matching the prehash=True build), and the probe is one Arrow-batched
     UDF doing a single vectorized CMS estimate per batch."""
-    from fever_spark.sketch.cms import CountMinSketch
+    from fever_spark.ops.estimate import _sketch_of
 
     @F.pandas_udf(T.DoubleType())
     def rare_frac(hs: pd.Series) -> pd.Series:
-        sk = CountMinSketch.from_bytes(bytes(cms_bc.value))
+        sk = _sketch_of(bytes(cms_bc.value))  # decoded once per worker
         lens = np.fromiter((len(a) for a in hs), dtype=np.int64,
                            count=len(hs))
         out = np.zeros(len(hs), dtype=np.float64)

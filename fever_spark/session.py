@@ -3,6 +3,11 @@
 Local-mode knobs mirror what we'd set on a real cluster: AQE on (runtime
 re-plan, skew-join splitting), shuffle partitions sized to parallelism
 instead of the 200 default, Arrow enabled for every pandas UDF exchange.
+
+On a local master the Python workers start through ``fever_spark._pydaemon``,
+which stops each task from re-reading ``pyspark.zip`` (see that module). On
+any other master the executors may not have ``fever_spark`` on their path,
+so Spark's own daemon is left in place.
 """
 
 from __future__ import annotations
@@ -43,6 +48,11 @@ def get_spark(master: str | None = None, app_name: str = "fever_spark",
         .config("spark.driver.memory", os.environ.get("FEVER_SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
+    if master == "local" or master.startswith("local["):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = (builder
+                   .config("spark.python.daemon.module", "fever_spark._pydaemon")
+                   .config("spark.executorEnv.PYTHONPATH", root))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -22,7 +22,7 @@ import struct
 import numpy as np
 
 from fever_spark.hashing import splitmix64
-from fever_spark.sketch.base import KIND_KLL, Cursor, Sketch, register
+from fever_spark.sketch.base import KIND_KLL, Cursor, Sketch, corrupt, register
 
 _C = 2.0 / 3.0
 _MIN_CAP = 8
@@ -200,6 +200,9 @@ class KLLSketch(Sketch):
     @classmethod
     def _from_payload(cls, cur: Cursor) -> "KLLSketch":
         k, n, rng_state, n_levels = cur.unpack(_HEADER)
+        # every writer keeps level 0; without it update() has nowhere to go
+        if n_levels < 1:
+            raise corrupt("KLL state with 0 levels")
         levels = []
         for _ in range(n_levels):
             (ln,) = cur.unpack(_LEVEL_LEN)

@@ -307,6 +307,18 @@ class TestCorruptState:
         with pytest.raises(ValueError, match="bad sketch magic"):
             sketch_from_bytes(bytes([2, 1, 7, 12, 3, 8, 0, 0]) + bytes(32))
 
+    def test_kll_zero_levels_raises(self):
+        # a well-sealed KLL header declaring 0 levels: no writer emits it,
+        # and loaded it would give quantile() nan and update() IndexError
+        from fever_spark.sketch.kll import _HEADER
+
+        envelope = KLLSketch(k=16).to_bytes()[:8]
+        data = with_crc(bytearray(envelope + _HEADER.pack(16, 0, 1, 0) + bytes(4)))
+        with pytest.raises(ValueError, match="corrupt sketch state"):
+            sketch_from_bytes(data)
+        with pytest.raises(ValueError, match="corrupt sketch state"):
+            merge_many([data, KLLSketch(k=16).to_bytes()])
+
 
 # ---------------------------------------------------------------- HLL
 
