@@ -33,7 +33,6 @@ from fever_spark.ops import (
 )
 from fever_spark.ops.bloom_match import bloom_match_events, build_ioc_filter
 from fever_spark.ops.estimate import bloom_contains_col
-from fever_spark.ops.merge import merge_to_driver
 from fever_spark.sketch import BloomFilter, CountMinSketch, HyperLogLog
 from fever_spark.sources.synth import synth_events
 

@@ -42,20 +42,10 @@ from pyspark.sql import functions as F
 from fever_spark.ops.bloom_match import build_ioc_filter, make_event_matcher
 from fever_spark.ops.build import SketchSpec
 from fever_spark.sources.eve import eve_projection
+from fever_spark.sources.io import parquet_row_count
 from fever_spark.streaming.sketch_stream import StreamingSketchAccumulator
 
 __all__ = ["run_pipeline"]
-
-
-def _parquet_rows(path: str) -> int:
-    """Row count of a just-written parquet dir from file FOOTERS —
-    driver-side metadata only, no Spark job, no data read."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(f).metadata.num_rows
-               for f in glob.glob(os.path.join(path, "*.parquet")))
 
 
 def default_stats_specs() -> list[SketchSpec]:
@@ -282,7 +272,7 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
             acc.process_batch(parsed, batch_id)
             t5 = _t.time()
             run_batches.append(batch_id)
-            run_alerts[0] += _parquet_rows(batch_dir)
+            run_alerts[0] += parquet_row_count(batch_dir) or 0
             run_files["alerts"] += len(
                 glob.glob(os.path.join(batch_dir, "*.parquet")))
             run_events[0] += int(counts["_total"])

@@ -44,8 +44,8 @@ from pyspark.sql import types as T
 
 
 def _words(text: Column) -> Column:
-    """Lowered whitespace tokens — the shared tokenization of the dedup
-    family (dedup._word_shingles) expressed as a JVM column."""
+    """Lowered whitespace tokens — the tokens dedup._hashed_shingles
+    builds its word n-grams from, expressed as a JVM column."""
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 

@@ -89,24 +89,6 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------- shingles
 
 
-def _word_shingles(texts: pd.Series, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Flat (doc_index, shingle_string) arrays for a batch — one Python loop
-    over docs for splitting, then flat numpy for everything downstream."""
-    doc_idx, shingles = [], []
-    for i, t in enumerate(texts):
-        toks = (t or "").lower().split()
-        if len(toks) < n:
-            if toks:
-                shingles.append(" ".join(toks))
-                doc_idx.append(i)
-            continue
-        for j in range(len(toks) - n + 1):
-            shingles.append(" ".join(toks[j:j + n]))
-            doc_idx.append(i)
-    return (np.asarray(doc_idx, dtype=np.int64),
-            np.asarray(shingles, dtype=object))
-
-
 def _flat_tokens(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     """Lowercased whitespace tokens of a batch, flattened: (per-doc token
     counts int64[n_docs], flat token object array). The only Python loop is
@@ -140,8 +122,9 @@ SIGNATURE_HASH_FAMILY = 2
 
 def _hashed_shingles(texts: pd.Series, n: int,
                      seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """Flat (doc_index int64, shingle_hash uint64) for a batch — the
-    vectorized replacement for hashing _word_shingles' joined strings.
+    """Flat (doc_index int64, shingle_hash uint64) for a batch: one hash
+    per word n-gram — every window of n consecutive lowercased whitespace
+    tokens of a doc.
 
     Tokenize once, hash TOKENS (hash64 factorizes, so each distinct token
     is siphashed once — Zipf reuse makes this ~25x cheaper than siphashing
@@ -149,8 +132,8 @@ def _hashed_shingles(texts: pd.Series, n: int,
     consecutive token hashes with position-distinct odd multipliers.
     Profiled 4x faster end-to-end than the string-join + siphash path on
     300-token docs. Docs shorter than n tokens fall back to one shingle
-    over all their tokens (same semantics as _word_shingles); empty docs
-    contribute nothing. Output is doc-contiguous (reduceat-ready).
+    over all their tokens; empty docs contribute nothing. Output is
+    doc-contiguous (reduceat-ready).
 
     NOTE: this is a different hash family than the pre-round-5 string
     shingles — MinHash signatures are not comparable across the change

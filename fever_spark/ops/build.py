@@ -14,7 +14,6 @@ independent of row count.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 from typing import Iterator
 
@@ -34,6 +33,9 @@ SKETCH_SCHEMA_SUFFIX = [
 # NULL marker inside JVM-prehashed columns (int64 min; collision chance with
 # a real xxhash64 value is 2^-64 per row)
 _PREHASH_NULL = -(2 ** 63)
+
+# default in-task group-map budget of build_sketches (see its docstring)
+MEM_BUDGET_BYTES = 1 << 30
 
 
 @dataclass(frozen=True)
@@ -74,18 +76,17 @@ def _output_schema(df: DataFrame, keys: list[str]) -> T.StructType:
 
 def build_sketches(df: DataFrame, keys: list[str],
                    specs: list[SketchSpec],
-                   coalesce_to: int | None = None,
-                   memory_budget_bytes: int | None = None) -> DataFrame:
+                   memory_budget_bytes: int = MEM_BUDGET_BYTES) -> DataFrame:
     """→ DataFrame(keys..., sketch: string, state: binary), one row per
     (input partition, group key, spec) — MORE rows when the in-task group
-    map overflows ``memory_budget_bytes`` (default 1 GiB, env
-    ``FEVER_BUILD_MEM_BUDGET``): the accumulated partials are emitted and
-    the map reset, bounding task memory at budget + one Arrow batch no
-    matter how many distinct keys a partition holds (per-host keys over web
-    pages can reach millions of groups × 16 KB-1.5 MB dense state). The
-    extra partials are indistinguishable from another partition's to
-    ``two_level_merge``, which combines any number of partials per key —
-    the same spill-to-downstream fallback Spark's own hash aggregate uses.
+    map overflows ``memory_budget_bytes`` (default 1 GiB): the accumulated
+    partials are emitted and the map reset, bounding task memory at budget
+    + one Arrow batch no matter how many distinct keys a partition holds
+    (per-host keys over web pages can reach millions of groups × 16 KB-1.5
+    MB dense state). The extra partials are indistinguishable from another
+    partition's to ``two_level_merge``, which combines any number of
+    partials per key — the same spill-to-downstream fallback Spark's own
+    hash aggregate uses.
     Feed to ``two_level_merge``.
 
     Only the key columns + referenced value columns are selected, so Catalyst
@@ -95,24 +96,20 @@ def build_sketches(df: DataFrame, keys: list[str],
     Partial-state volume is O(input partitions × groups × state_size), so
     when the input has many more partitions than cores we coalesce (no
     shuffle — adjacent files merge into one task) down to 2× parallelism:
-    same scan parallelism, far fewer partials into the merge. Override with
-    ``coalesce_to`` (0 disables).
+    same scan parallelism, far fewer partials into the merge.
     """
     for s in specs:
         s.make()  # fail fast on unknown kind / bad params, not inside a task
-    if coalesce_to is None:
-        # file count as the partition proxy (df.rdd.getNumPartitions would
-        # force a plan→RDD conversion per call); non-file inputs (inputFiles
-        # empty) skip auto-coalesce and leave sizing to AQE
-        par = df.sparkSession.sparkContext.defaultParallelism
-        try:
-            n_files = len(df.inputFiles())
-        except Exception:
-            n_files = 0
-        if n_files > 4 * par:
-            coalesce_to = 2 * par
-    if coalesce_to:
-        df = df.coalesce(coalesce_to)
+    # file count as the partition proxy (df.rdd.getNumPartitions would
+    # force a plan→RDD conversion per call); non-file inputs (inputFiles
+    # empty) skip the coalesce and leave sizing to AQE
+    par = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        n_files = len(df.inputFiles())
+    except Exception:
+        n_files = 0
+    if n_files > 4 * par:
+        df = df.coalesce(2 * par)
 
     # JVM-side pre-hash (hot-path optimization, measured ~10x at high
     # parallelism): hash-only sketches (HLL/CMS) never need the original
@@ -160,9 +157,6 @@ def build_sketches(df: DataFrame, keys: list[str],
                          T.ByteType, T.ShortType, T.IntegerType, T.LongType))}
     out_schema = _output_schema(df, keys)
     key_names = list(keys)
-    if memory_budget_bytes is None:
-        memory_budget_bytes = int(os.environ.get(
-            "FEVER_BUILD_MEM_BUDGET", str(1 << 30)))
     # per-group in-memory footprint = each sketch's SATURATED state bound
     # (Sketch.max_state_bytes), not the fresh payload size: a freshly-made
     # KMV is ~16 bytes but holds k hashes + k value strings when full, so

@@ -83,12 +83,3 @@ def two_level_merge(sketch_df: DataFrame, keys: list[str],
     salted = sketch_df.withColumn(_SALT, F.pmod(F.spark_partition_id(), F.lit(salt)))
     level1 = _merge_level(salted, keys + ["sketch", _SALT], keys)
     return _merge_level(level1, keys + ["sketch"], keys)
-
-
-def merge_to_driver(sketch_df: DataFrame):
-    """Merge ALL rows of a keyless sketch_df (single spec) into one Sketch
-    object on the driver. Use only after a two_level_merge or on tiny frames."""
-    rows = sketch_df.select("state").collect()
-    if not rows:
-        return None
-    return merge_many([bytes(r["state"]) for r in rows])

@@ -45,7 +45,7 @@ _TWO64 = float(1 << 64)
 # saturated-state sizing assumption for max_state_bytes: stored values are
 # URL/hostname-shaped strings; 128 bytes/value is the provisioning estimate
 # (generous for hosts, right for long URLs). Callers storing bigger values
-# should budget via FEVER_BUILD_MEM_BUDGET accordingly.
+# should pass build_sketches a memory_budget_bytes to match.
 _EST_VALUE_BYTES = 128
 
 

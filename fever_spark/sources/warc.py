@@ -7,15 +7,14 @@ real, spec-driven parser (no external warc library needed: a WARC record
 is a header block, CRLF CRLF, a Content-Length-delimited payload, CRLF
 CRLF).
 
-Scale shape: the split unit is the FILE (the standard for WARC — crawls
-ship as many ~1 GB .warc.gz members), and parallelism is PATH-driven: the
-reader shuffles file paths (not bytes) into min(n_files, 4×parallelism)
-partitions and an iterator ``mapInPandas`` streams + parses each file
-inside the task, so task memory = one archive + its records and small
-archives still fan out (see _read_records).
-Multi-member gzip (how Common Crawl concatenates per-record compression)
-is handled by looping zlib over ``unused_data``. Malformed records are
-skipped, never fatal — the fever input discipline
+Every reader shares one decode path: ``_input_file`` (pyarrow.fs, so
+local paths and file://, s3://, hdfs:// URIs alike), one gzip-member
+walker, ``_records`` (members joined, parsed once, one WARC type),
+``_body`` (HTTP response decoding) and ``_map_rows`` (the task loop and
+the warc_date → warc_ts step). Readers differ only in how they plan byte
+ranges — whole files shuffled by path (_read_records), CDX captures, byte
+ranges of one archive, a file stream — and how they build rows.
+Malformed records are skipped, never fatal — the fever input discipline
 (input/input_socket.go:94-101 logs-and-skips) applied to archives: bad
 Content-Length values (including negative — which would otherwise
 re-parse the same bytes forever), folded headers, chunked
@@ -39,48 +38,76 @@ __all__ = ["read_warc", "read_wet", "read_cdx", "fetch_cdx_records",
            "read_warc_ranges"]
 
 _CRLF2 = b"\r\n\r\n"
-
-
+_GZ_MAGIC = b"\x1f\x8b\x08"
 _GZ_CHUNK = 1 << 18
 
 
-def _next_gzip_member(mv: memoryview, pos: int) -> tuple[bytes, int]:
-    """Decompress ONE gzip member starting at ``pos``; returns
-    (decompressed, end_offset). Feeds zlib in bounded chunks — handing it
-    the whole remaining buffer makes every member COPY the tail into
-    ``unused_data``, an O(members × buffer) memcpy that measured 10×
-    slower than the parse itself on many-member archives. Raises
-    zlib.error on a non-member."""
-    d = zlib.decompressobj(47)  # gzip wrapper
-    out = []
-    p = pos
-    n = len(mv)
-    while p < n:
-        out.append(d.decompress(mv[p:p + _GZ_CHUNK]))
-        p = min(p + _GZ_CHUNK, n)
-        if d.eof:
-            break
-    out.append(d.flush())
-    return b"".join(out), p - len(d.unused_data)
+def _input_file(path: str):
+    """The one file opener: a seekable handle on a local path or a
+    file://, s3://, hdfs:// URI, resolved through pyarrow.fs the way
+    executors resolve it on a cluster."""
+    import pyarrow.fs as pafs
+
+    fs, fpath = pafs.FileSystem.from_uri(path)
+    return fs.open_input_file(fpath)
+
+
+def _iter_gzip_members_from(buf: bytes, limit: int | None = None,
+                            resync: bool = False) -> Iterator[bytes]:
+    """The one loop over gzip members (how Common Crawl concatenates
+    per-record compression): yield the decompressed bytes of every member
+    STARTING before ``limit`` (default: anywhere in ``buf``); stop at
+    trailing garbage or a bad member. With ``resync`` (a mid-file range),
+    scan forward to the first offset that both looks like a gzip header
+    AND decompresses to bytes starting with ``WARC/`` — the double check
+    rejects the \\x1f\\x8b byte pairs that occur by chance inside
+    compressed payloads."""
+    pos = 0
+    n = len(buf)
+    limit = n if limit is None else limit
+    mv = memoryview(buf)
+    while pos < limit and pos < n:
+        if not buf.startswith(_GZ_MAGIC, pos):
+            if not resync:
+                return  # trailing garbage in a trusted stream: stop
+            nxt = buf.find(_GZ_MAGIC, pos + 1)
+            if nxt < 0 or nxt >= limit:
+                return
+            pos = nxt
+            continue
+        # feed zlib in bounded chunks: handing it the whole remaining
+        # buffer makes every member COPY the tail into ``unused_data``, an
+        # O(members × buffer) memcpy measured 10× slower than the parse
+        # itself on many-member archives
+        d = zlib.decompressobj(47)  # gzip wrapper
+        out, end = [], pos
+        try:
+            while end < n and not d.eof:
+                out.append(d.decompress(mv[end:end + _GZ_CHUNK]))
+                end = min(end + _GZ_CHUNK, n)
+            out.append(d.flush())
+        except zlib.error:
+            if not resync:
+                return
+            pos += 1
+            continue
+        data = b"".join(out)
+        end -= len(d.unused_data)
+        if resync and not data.startswith(b"WARC/"):
+            pos += 1  # false magic inside compressed bytes — keep scanning
+            continue
+        yield data
+        if end <= pos:
+            return
+        pos = end
+        resync = False  # once locked onto the member chain, stay exact
 
 
 def _gunzip_members(data: bytes) -> bytes:
     """Decompress (possibly multi-member) gzip; pass through plain bytes."""
-    if not data[:2] == b"\x1f\x8b":
+    if data[:2] != b"\x1f\x8b":
         return data
-    mv = memoryview(data)
-    out = []
-    pos = 0
-    while pos < len(data):
-        try:
-            member, end = _next_gzip_member(mv, pos)
-        except zlib.error:
-            break  # trailing garbage / truncated member: keep what we have
-        out.append(member)
-        if end <= pos:
-            break
-        pos = end
-    return b"".join(out)
+    return b"".join(_iter_gzip_members_from(data))
 
 
 def parse_warc_records(data: bytes) -> list[dict]:
@@ -225,9 +252,43 @@ def html_to_text(raw: bytes) -> str:
                                                    "replace"))).strip()
 
 
+def _records(data: bytes, warc_type: str) -> list[dict]:
+    """The ``warc_type`` records of one archive (or fetched byte range):
+    gzip members joined first, then ONE parse of the joined stream — a
+    record may span members, and a member-by-member parse would lose
+    it."""
+    return [r for r in parse_warc_records(_gunzip_members(data))
+            if r["type"] == warc_type]
+
+
+def _body(r: dict) -> bytes:
+    """A response record's body: HTTP envelope stripped and decoded when
+    the block is an HTTP message, the block as stored otherwise."""
+    if "application/http" in r["content_type"]:
+        return _http_body(r["payload"])
+    return r["payload"]
+
+
+def _map_rows(df: DataFrame, rows, schema: str) -> DataFrame:
+    """The one task loop: ``rows(pdf)`` yields tuples in ``schema`` order
+    for each Arrow batch of ``df``; the raw ``warc_date`` column then
+    becomes ``warc_ts``. try_to_timestamp: one malformed WARC-Date nulls
+    out instead of aborting the scan under ANSI mode (skip-malformed
+    discipline)."""
+    columns = [f.split(" ")[0] for f in schema.split(", ")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(list(rows(pdf)), columns=columns)
+
+    return (df.mapInPandas(run, schema=schema)
+            .withColumn("warc_ts", F.try_to_timestamp("warc_date"))
+            .drop("warc_date"))
+
+
 def _read_records(spark: SparkSession, path: str, warc_type: str,
                   build_row, schema: str) -> DataFrame:
-    """Shared scaffold for WARC-family readers: file listing → path
+    """Shared scaffold for the whole-file readers: file listing → path
     shuffle → per-file record parse inside the task → rows of
     ``build_row(record, path)`` for records of ``warc_type``.
 
@@ -236,34 +297,24 @@ def _read_records(spark: SparkSession, path: str, warc_type: str,
     a directory of sub-128 MB archives — every test corpus, and plenty of
     real WET/CDX segment layouts — would collapse onto ONE task if the
     content rode the scan. Instead only the (tiny) path strings shuffle,
-    into min(n_files, 4×parallelism) partitions, and each task streams its
-    files' bytes via pyarrow.fs — which resolves the same file://, s3://,
-    hdfs:// URIs executors would use on a cluster. One archive is still
-    the indivisible unit (WARC records are sequential within a member);
-    fan-out WITHIN one big archive is what fetch_cdx_records' offset-range
-    split is for."""
+    into min(n_files, 4×parallelism) partitions, and each task reads its
+    files through ``_input_file``. One archive is still the indivisible
+    unit (WARC records are sequential within a member); fan-out WITHIN
+    one big archive is what fetch_cdx_records' offset-range split and
+    read_warc_ranges are for."""
     files = spark.read.format("binaryFile").load(path).select("path")
     n_files = files.count()  # metadata-only: content column never read
     n_parts = max(1, min(n_files,
                          spark.sparkContext.defaultParallelism * 4))
-    columns = [f.split(" ")[0] for f in schema.split(", ")]
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.fs as pafs
+    def rows(pdf: pd.DataFrame):
+        for path_ in pdf["path"]:
+            with _input_file(path_) as fh:
+                data = fh.read()
+            for r in _records(data, warc_type):
+                yield build_row(r, path_)
 
-        for pdf in batches:
-            rows = []
-            for path_ in pdf["path"]:
-                fs, fpath = pafs.FileSystem.from_uri(path_)
-                with fs.open_input_stream(fpath) as fh:
-                    content = fh.read()
-                for r in parse_warc_records(_gunzip_members(content)):
-                    if r["type"] != warc_type:
-                        continue
-                    rows.append(build_row(r, path_))
-            yield pd.DataFrame(rows, columns=columns)
-
-    return files.repartition(n_parts).mapInPandas(parse, schema=schema)
+    return _map_rows(files.repartition(n_parts), rows, schema)
 
 
 def read_warc(spark: SparkSession, path: str,
@@ -281,9 +332,7 @@ def read_warc(spark: SparkSession, path: str,
     header envelope, before transfer/content decoding (warcio
     semantics)."""
     def row(r, path_):
-        body = (_http_body(r["payload"])
-                if "application/http" in r["content_type"]
-                else r["payload"])
+        body = _body(r)
         if not verify_digests:
             return (r["url"], r["date"], r["content_type"], body, path_)
         raw = r["payload"]
@@ -304,11 +353,7 @@ def read_warc(spark: SparkSession, path: str,
               "html binary, warc_file string")
     if verify_digests:
         schema += ", block_digest_ok boolean, payload_digest_ok boolean"
-    parsed = _read_records(spark, path, "response", row, schema)
-    # try_to_timestamp: one malformed WARC-Date nulls out instead of
-    # aborting the scan under ANSI mode (skip-malformed discipline)
-    return parsed.withColumn(
-        "warc_ts", F.try_to_timestamp("warc_date")).drop("warc_date")
+    return _read_records(spark, path, "response", row, schema)
 
 
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
@@ -319,10 +364,8 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
     def row(r, path_):
         return (r["url"], r["date"], r["payload"].decode("utf-8", "replace"))
 
-    parsed = _read_records(spark, path, "conversion", row,
-                           "url string, warc_date string, text string")
-    return parsed.withColumn(
-        "warc_ts", F.try_to_timestamp("warc_date")) \
+    return _read_records(spark, path, "conversion", row,
+                         "url string, warc_date string, text string") \
         .select("url", "warc_ts", "text")
 
 
@@ -416,39 +459,33 @@ def fetch_cdx_records(spark: SparkSession, cdx_df: DataFrame,
     sequential-ish.
 
     ``warc_dir`` is the directory holding the archives named by
-    ``warc_filename`` (on a cluster, a mounted/object-store path readable
-    from executors). Captures with a null filename or null offset/length
-    are unfetchable and skipped, never fatal."""
+    ``warc_filename``: a local path or any URI pyarrow.fs resolves
+    (file://, s3://, hdfs://), like every other reader here; on a cluster
+    it must be readable from executors. Captures with a null filename or
+    null offset/length, and captures of a missing archive, are skipped,
+    never fatal."""
     import os
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fname, grp in pdf.groupby("warc_filename"):
-                path = os.path.join(warc_dir, fname)
-                try:
-                    f = open(path, "rb")
-                except OSError:
-                    continue  # missing archive: skip its captures
-                with f:
-                    for _, r in grp.sort_values("offset").iterrows():
-                        f.seek(int(r["offset"]))
-                        raw = f.read(int(r["length"]))
-                        for rec in parse_warc_records(_gunzip_members(raw)):
-                            if rec["type"] != "response":
-                                continue
-                            body = (_http_body(rec["payload"])
-                                    if "application/http"
-                                    in rec["content_type"]
-                                    else rec["payload"])
-                            rows.append((rec["url"], rec["date"], body))
-            yield pd.DataFrame(rows, columns=["url", "warc_date", "html"])
+    if ":" not in warc_dir:
+        # pyarrow.fs takes absolute paths and URIs: anchor a relative dir
+        # at the driver's working directory
+        warc_dir = os.path.abspath(warc_dir)
 
-    keyed = _cdx_fetch_plan(cdx_df, range_bytes)
-    parsed = keyed.mapInPandas(
-        fetch, schema="url string, warc_date string, html binary")
-    return parsed.withColumn(
-        "warc_ts", F.try_to_timestamp("warc_date")).drop("warc_date")
+    def rows(pdf: pd.DataFrame):
+        for fname, grp in pdf.groupby("warc_filename"):
+            try:
+                fh = _input_file(os.path.join(warc_dir, fname))
+            except OSError:
+                continue  # missing archive: skip its captures
+            with fh:
+                grp = grp.sort_values("offset")
+                for offset, length in zip(grp["offset"], grp["length"]):
+                    fh.seek(int(offset))
+                    for r in _records(fh.read(int(length)), "response"):
+                        yield r["url"], r["date"], _body(r)
+
+    return _map_rows(_cdx_fetch_plan(cdx_df, range_bytes), rows,
+                     "url string, warc_date string, html binary")
 
 
 # --------------------------------------------------------------- streaming
@@ -472,9 +509,8 @@ def stream_warc_to_pages(spark: SparkSession, watch_dir: str,
     jobs/ingest.py's replay-safe batch accretion. Parallelism is one task
     per file per micro-batch (``max_files_per_trigger`` bounds batch
     size); parsing + extraction reuse the exact batch-path kernels
-    (parse_warc_records / _http_body / the boilerplate-aware extractor),
-    so stream and batch produce identical rows for identical archives
-    (tested)."""
+    (_records / _body / the boilerplate-aware extractor), so stream and
+    batch produce identical rows for identical archives (tested)."""
     reader = (spark.readStream.format("binaryFile")
               .schema(_BINARYFILE_SCHEMA))
     if max_files_per_trigger is not None:
@@ -482,68 +518,18 @@ def stream_warc_to_pages(spark: SparkSession, watch_dir: str,
                                str(max_files_per_trigger))
     files = reader.load(watch_dir).select("content")
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows(pdf: pd.DataFrame):
         from fever_spark.sources.boilerplate import extract_main_text
 
         fn = extractor or extract_main_text
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                for r in parse_warc_records(_gunzip_members(bytes(content))):
-                    if r["type"] != "response":
-                        continue
-                    body = (_http_body(r["payload"])
-                            if "application/http" in r["content_type"]
-                            else r["payload"])
-                    rows.append((r["url"], r["date"], fn(body)))
-            yield pd.DataFrame(rows, columns=["url", "warc_date", "text"])
+        for content in pdf["content"]:
+            for r in _records(bytes(content), "response"):
+                yield r["url"], r["date"], fn(_body(r))
 
-    parsed = files.mapInPandas(
-        parse, schema="url string, warc_date string, text string")
-    return parsed.withColumn(
-        "warc_ts", F.try_to_timestamp("warc_date")).drop("warc_date")
+    return _map_rows(files, rows, "url string, warc_date string, text string")
 
 
 # ------------------------------------------------- intra-archive splitting
-
-_GZ_MAGIC = b"\x1f\x8b\x08"
-
-
-def _iter_gzip_members_from(buf: bytes, limit: int, resync: bool):
-    """Yield (compressed_offset, decompressed) for every gzip member
-    STARTING before ``limit`` in ``buf``. With ``resync`` (a mid-file
-    range), scan forward to the first offset that both looks like a gzip
-    header AND decompresses to bytes starting with ``WARC/`` — the
-    double check rejects the \\x1f\\x8b byte pairs that occur by chance
-    inside compressed payloads."""
-    pos = 0
-    n = len(buf)
-    mv = memoryview(buf)
-    while pos < limit and pos < n:
-        if not buf.startswith(_GZ_MAGIC, pos):
-            if not resync:
-                return  # trailing garbage in a trusted stream: stop
-            nxt = buf.find(_GZ_MAGIC, pos + 1)
-            if nxt < 0 or nxt >= limit:
-                return
-            pos = nxt
-            continue
-        try:
-            data, end = _next_gzip_member(mv, pos)
-        except zlib.error:
-            if not resync:
-                return
-            pos += 1
-            continue
-        if resync and not data.startswith(b"WARC/"):
-            pos += 1  # false magic inside compressed bytes — keep scanning
-            continue
-        yield pos, data
-        if end <= pos:
-            return
-        pos = end
-        resync = False  # once locked onto the member chain, stay exact
-
 
 def read_warc_ranges(spark: SparkSession, path: str,
                      range_bytes: int = 64 << 20,
@@ -558,15 +544,15 @@ def read_warc_ranges(spark: SparkSession, path: str,
     member chain (at offset 0 it is trusted; mid-file it resyncs on gzip
     magic + a decompressed ``WARC/`` prefix, which unambiguously rejects
     chance magic bytes), and parses every member STARTING inside its
-    range — a member straddling the range end is completed from the tail
-    read, so each record is owned by exactly one range. Members larger
-    than ``tail_bytes`` are skipped with the module's never-fatal
-    discipline (bound the tail like a max-record-size guard). A plain
-    (non-gzipped) or single-member-gzip archive is handled entirely by
-    its offset-0 range — correct, just not intra-file parallel; use the
-    CDX targeted fetch or re-pack for those."""
-    import math
-
+    range, member by member — a member straddling the range end is
+    completed from the tail read, so each record is owned by exactly one
+    range. Members larger than ``tail_bytes`` are skipped with the
+    module's never-fatal discipline (bound the tail like a
+    max-record-size guard). A plain (non-gzipped) or single-member-gzip
+    archive is handled entirely by its offset-0 range, which reads a
+    plain archive to its end in the same open — correct, just not
+    intra-file parallel; use the CDX targeted fetch or re-pack for
+    those."""
     files = (spark.read.format("binaryFile").load(path)
              .select("path", "length"))
     ranges = files.select(
@@ -583,44 +569,26 @@ def read_warc_ranges(spark: SparkSession, path: str,
                 F.col("length")).alias("end")) \
         .repartition(F.col("path"), F.col("start"))
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.fs as pafs
+    def rows(pdf: pd.DataFrame):
+        for path_, start, end in zip(pdf["path"], pdf["start"], pdf["end"]):
+            start, end = int(start), int(end)
+            try:
+                with _input_file(path_) as fh:
+                    fh.seek(start)
+                    buf = fh.read((end - start) + int(tail_bytes))
+                    plain = start == 0 and not buf.startswith(_GZ_MAGIC)
+                    if plain:  # the offset-0 range owns the whole file
+                        buf += fh.read()
+            except OSError:
+                continue  # vanished/unreadable file: skip its ranges
+            members = [buf] if plain else _iter_gzip_members_from(
+                buf, end - start, resync=start > 0)
+            for data in members:
+                for r in parse_warc_records(data):
+                    if r["type"] == "response":
+                        yield (r["url"], r["date"], r["content_type"],
+                               _body(r), path_)
 
-        for pdf in batches:
-            rows = []
-            for path_, start, end in zip(pdf["path"], pdf["start"],
-                                         pdf["end"]):
-                start, end = int(start), int(end)
-                fs, fpath = pafs.FileSystem.from_uri(path_)
-                try:
-                    with fs.open_input_file(fpath) as fh:
-                        fh.seek(start)
-                        buf = fh.read((end - start) + int(tail_bytes))
-                except OSError:
-                    continue  # vanished/unreadable file: skip its ranges
-                limit = end - start
-                if start == 0 and not buf.startswith(_GZ_MAGIC):
-                    # plain archive: offset-0 range owns the whole file
-                    with fs.open_input_file(fpath) as fh:
-                        whole = fh.read()
-                    members = [(0, whole)]
-                else:
-                    members = _iter_gzip_members_from(buf, limit,
-                                                      resync=start > 0)
-                for _, data in members:
-                    for r in parse_warc_records(data):
-                        if r["type"] != "response":
-                            continue
-                        body = (_http_body(r["payload"])
-                                if "application/http" in r["content_type"]
-                                else r["payload"])
-                        rows.append((r["url"], r["date"], r["content_type"],
-                                     body, path_))
-            yield pd.DataFrame(rows, columns=[
-                "url", "warc_date", "content_type", "html", "warc_file"])
-
-    parsed = ranges.mapInPandas(
-        parse, schema="url string, warc_date string, content_type string, "
-                      "html binary, warc_file string")
-    return parsed.withColumn(
-        "warc_ts", F.try_to_timestamp("warc_date")).drop("warc_date")
+    return _map_rows(ranges, rows,
+                     "url string, warc_date string, content_type string, "
+                     "html binary, warc_file string")

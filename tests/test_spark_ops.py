@@ -13,7 +13,6 @@ from fever_spark.ops import (
     hll_estimate_col, cms_estimate_col, quantile_col, bloom_contains_col,
 )
 from fever_spark.ops.build import sketches_to_dict
-from fever_spark.ops.merge import merge_to_driver
 from fever_spark.sketch import BloomFilter, HyperLogLog
 
 
@@ -113,7 +112,7 @@ def test_global_sketch_no_keys(spark, events):
     specs = [SketchSpec("all_users", "hll", "user_id", {"p": 12})]
     merged = two_level_merge(build_sketches(events, [], specs), [])
     assert merged.count() == 1
-    sk = merge_to_driver(merged)
+    sk = sketches_to_dict(merged, [])[("all_users",)]
     exact = events.select("user_id").distinct().count()
     assert abs(sk.estimate() - exact) / exact <= 4 * sk.relative_error
 

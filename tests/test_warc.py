@@ -121,6 +121,31 @@ class TestWet:
         assert got[0]["warc_ts"] is not None
 
 
+class TestGzipMemberSpan:
+    def test_record_spanning_members_kept(self, spark, tmp_path):
+        """Members are joined before the parse: records cut across two
+        gzip members (here mid-way through a response and a conversion
+        record) still come back from read_warc and read_wet."""
+        from fever_spark.sources.warc import read_wet
+
+        conversion = _record(b"conversion", b"http://w.example/t",
+                             b"2026-02-03T00:00:00Z", b"wet text here",
+                             ctype=b"text/plain")
+        data = _archive() + conversion
+        cuts = [data.index(b"Alpha"), len(data) - len(conversion) // 2]
+        parts = [data[:cuts[0]], data[cuts[0]:cuts[1]], data[cuts[1]:]]
+        (tmp_path / "s.warc.gz").write_bytes(
+            b"".join(gzip.compress(p) for p in parts))
+        warc = {r["url"]: bytes(r["html"])
+                for r in read_warc(spark, str(tmp_path)).collect()}
+        assert warc == {
+            "http://a.example/x": b"<html><body>Alpha page body</body></html>",
+            "http://b.example/y": b"<html><body>Beta page body</body></html>"}
+        wet = [(r["url"], r["text"])
+               for r in read_wet(spark, str(tmp_path)).collect()]
+        assert wet == [("http://w.example/t", "wet text here")]
+
+
 class TestWarcRobustness:
     def test_negative_content_length_terminates(self):
         """CONFIRMED infinite-loop shape before the fix: a negative
@@ -132,6 +157,21 @@ class TestWarcRobustness:
             b"response", b"http://ok.example/", b"2026-02-01T00:00:00Z",
             _http(b"<html>fine</html>")))
         assert [r["url"] for r in recs] == ["http://ok.example/"]
+
+    def test_truncated_gzip_archive_keeps_whole_members(self, spark,
+                                                        tmp_path):
+        """A .warc.gz cut mid-member (a crawler killed mid-write) keeps
+        the records of its complete members instead of failing the
+        read."""
+        members = [gzip.compress(_record(
+            b"response", f"http://cut.example/{i}".encode(),
+            b"2026-02-01T00:00:00Z", _http(b"<html>%d</html>" % i)))
+            for i in range(3)]
+        data = b"".join(members)
+        (tmp_path / "cut.warc.gz").write_bytes(data[:-20])
+        got = sorted(r["url"] for r in
+                     read_warc(spark, str(tmp_path)).collect())
+        assert got == ["http://cut.example/0", "http://cut.example/1"]
 
     def test_folded_header_unfolds(self):
         rec = (b"WARC/1.0\r\nWARC-Type: response\r\n"
@@ -207,13 +247,13 @@ class TestCdx:
 
 
 class TestCdxFetch:
-    def test_targeted_range_fetch(self, spark, tmp_path):
-        """Build a per-record-gzipped archive + its CDX with REAL
-        offsets/lengths, fetch a subset through the index, compare
-        bodies."""
+    @staticmethod
+    def _indexed_archive(spark, tmp_path):
+        """A per-record-gzipped archive of 6 responses + a CDX with REAL
+        offsets/lengths naming two of them (p1, p4)."""
         import gzip
         import json as _json
-        from fever_spark.sources.warc import fetch_cdx_records, read_cdx
+        from fever_spark.sources.warc import read_cdx
 
         members, offsets = [], []
         pos = 0
@@ -233,12 +273,38 @@ class TestCdxFetch:
                     "url": f"http://t.example/p{i}", "mime": "text/html",
                     "status": "200", "digest": f"D{i}", "length": str(ln),
                     "offset": str(off), "filename": "a-00.warc.gz"}) + "\n")
-        idx = read_cdx(spark, str(tmp_path / "i.cdx"))
+        return read_cdx(spark, str(tmp_path / "i.cdx"))
+
+    def test_targeted_range_fetch(self, spark, tmp_path):
+        """Fetch a subset of an archive through its index, compare
+        bodies."""
+        from fever_spark.sources.warc import fetch_cdx_records
+
+        idx = self._indexed_archive(spark, tmp_path)
         got = {r["url"]: bytes(r["html"]) for r in
                fetch_cdx_records(spark, idx, str(tmp_path)).collect()}
         assert set(got) == {"http://t.example/p1", "http://t.example/p4"}
         assert got["http://t.example/p1"] == b"<html>body 1</html>"
         assert got["http://t.example/p4"] == b"<html>body 4</html>"
+
+    def test_uri_warc_dir_matches_plain_path(self, spark, tmp_path,
+                                             monkeypatch):
+        """``warc_dir`` resolves like every other reader's path: a file://
+        URI, and a path relative to the driver's working directory, fetch
+        the same rows as the absolute path."""
+        from fever_spark.sources.warc import fetch_cdx_records
+
+        idx = self._indexed_archive(spark, tmp_path)
+
+        def rows(warc_dir):
+            return sorted((r["url"], r["warc_ts"], bytes(r["html"])) for r in
+                          fetch_cdx_records(spark, idx, warc_dir).collect())
+
+        plain = rows(str(tmp_path))
+        assert len(plain) == 2
+        assert rows("file://" + str(tmp_path)) == plain
+        monkeypatch.chdir(tmp_path.parent)
+        assert rows(tmp_path.name) == plain
 
     def test_missing_archive_skipped(self, spark, tmp_path):
         import json as _json
