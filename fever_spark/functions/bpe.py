@@ -120,9 +120,10 @@ def train_bpe(counts: DataFrame, num_merges: int, min_freq: int = 2,
 
 
 def _encode_word(word: str, ranks: dict) -> list[str]:
-    """Scalar reference encoder (and the fallback for pathological word
-    lengths): repeatedly merge the lowest-rank pair present. Retained as
-    the parity oracle for the vectorized batch path below."""
+    """Scalar reference encoder: repeatedly merge the lowest-rank pair
+    present. The path for words over _VEC_MAX_WORD_LEN chars and for
+    merge lists that are not training-consistent, and the parity oracle
+    for the vectorized batch path below."""
     syms = _symbols(word)
     while len(syms) > 1:
         best = None
@@ -149,16 +150,17 @@ _VEC_MAX_WORD_LEN = 256
 
 def _build_pair_table(merges: list) -> tuple:
     """Driver-side precompute: (sorted packed pair keys, rank per key,
-    merged-symbol id per key, merged-string list, per-rank (a, b, new)
-    id arrays, consistency flag). Later duplicates of a pair overwrite
-    earlier ones, matching ``{pair: i for i, p in enumerate(merges)}``
-    dict semantics in the scalar encoder.
+    merged-string list, per-rank (a, b, new) id arrays, consistency
+    flag). Later duplicates of a pair overwrite earlier ones, matching
+    ``{pair: i for i, p in enumerate(merges)}`` dict semantics in the
+    scalar encoder.
 
     ``consistent`` is True when every multi-char merge component was
     created by an EARLIER merge — always the case for train_bpe output.
     It licenses the rank-order sweep in _encode_distinct (a merge can
     then only ever create higher-rank pairs, so one ascending pass over
-    ranks equals lowest-rank-first)."""
+    ranks equals lowest-rank-first); _encode_words sends every word of
+    an inconsistent list to the scalar _encode_word."""
     tok_id: dict[str, int] = {}
     merged_strs: list[str] = []
     for a, b in merges:
@@ -180,7 +182,7 @@ def _build_pair_table(merges: list) -> tuple:
     rank_new = np.full(n_r, -1, dtype=np.int64)
     consistent = True
     created_at: dict[str, int] = {}
-    entries: dict[int, tuple[int, int]] = {}
+    entries: dict[int, int] = {}
     for rank, (a, b) in enumerate(merges):
         for comp in (a, b):
             if len(comp) > 1 and comp != END_OF_WORD:
@@ -191,24 +193,36 @@ def _build_pair_table(merges: list) -> tuple:
         ia, ib = sid(a), sid(b)
         if ia is None or ib is None:
             continue
-        entries[(ia << 32) | ib] = (rank, tok_id[a + b])
+        entries[(ia << 32) | ib] = rank
         rank_a[rank], rank_b[rank] = ia, ib
         rank_new[rank] = tok_id[a + b]
     keys = np.array(sorted(entries), dtype=np.uint64)
-    ranks = np.array([entries[int(k)][0] for k in keys], dtype=np.int64)
-    newids = np.array([entries[int(k)][1] for k in keys], dtype=np.int64)
-    return keys, ranks, newids, merged_strs, rank_a, rank_b, rank_new, consistent
+    ranks = np.array([entries[int(k)] for k in keys], dtype=np.int64)
+    return keys, ranks, merged_strs, rank_a, rank_b, rank_new, consistent
 
 
-def _encode_distinct(words, keys, ranks, newids, merged_strs,
-                     rank_a, rank_b, rank_new, consistent) -> list:
-    """Vectorized BPE segmentation of a batch of DISTINCT words: all words
-    live in one flat symbol-id array. With a training-consistent merge
-    list (the normal case) the rank-order sweep runs — one linked-list
-    pass over ranks ascending, total work O(symbols log symbols + merges
-    applied), independent of how many rounds any word needs. Arbitrary
-    merge lists fall back to the per-word lowest-rank-first loop. Zero
-    per-word Python either way; parity-tested against _encode_word."""
+def _encode_words(words: list, table: tuple, ranks: dict) -> list:
+    """The encoder dispatch of bpe_encode: the vectorized sweep
+    (_encode_distinct) for words up to _VEC_MAX_WORD_LEN chars under a
+    training-consistent merge list, the scalar _encode_word for longer
+    words and for every word of an inconsistent list."""
+    *tbl, consistent = table
+    if not consistent:
+        return [_encode_word(w, ranks) for w in words]
+    vec = [w for w in words if len(w) <= _VEC_MAX_WORD_LEN]
+    done = dict(zip(vec, _encode_distinct(vec, *tbl)))
+    return [done[w] if w in done else _encode_word(w, ranks)
+            for w in words]
+
+
+def _encode_distinct(words, keys, ranks, merged_strs,
+                     rank_a, rank_b, rank_new) -> list:
+    """Vectorized BPE segmentation of a batch of DISTINCT words under a
+    training-consistent merge list: all words live in one flat symbol-id
+    array, and the rank-order sweep makes one linked-list pass over ranks
+    ascending — total work O(symbols log symbols + merges applied),
+    independent of how many rounds any word needs. Zero per-word Python;
+    parity-tested against _encode_word."""
     n = len(words)
     if n == 0:
         return []
@@ -227,11 +241,8 @@ def _encode_distinct(words, keys, ranks, newids, merged_strs,
     wid = np.repeat(np.arange(n, dtype=np.int64), out_len)
 
     if len(keys) and len(sym) > 1:
-        if consistent:
-            sym, wid = _merge_sweep(sym, wid, offs, keys, ranks,
-                                    rank_a, rank_b, rank_new)
-        else:
-            sym, wid = _merge_minrank(sym, wid, keys, ranks, newids)
+        sym, wid = _merge_sweep(sym, wid, offs, keys, ranks,
+                                rank_a, rank_b, rank_new)
 
     uq, inv = np.unique(sym, return_inverse=True)
     uq_strs = np.array(
@@ -335,84 +346,6 @@ def _merge_sweep(sym, wid, offs, keys, ranks, rank_a, rank_b, rank_new):
     return sym[alive], wid[alive]
 
 
-def _merge_minrank(sym, wid, keys, ranks, newids):
-    """Fallback for merge lists that are NOT training-consistent (a
-    component created by a later merge): per-round, every word merges its
-    lowest-rank present pair. Two cost controls: finished words leave the
-    working arrays each round, and the pair-rank array is maintained
-    incrementally (only pairs touching a merge site are recomputed)."""
-    newids_u = newids.astype(np.uint64)
-    done_sym: list = [sym[:0]]
-    done_wid: list = [wid[:0]]
-    big = np.iinfo(np.int64).max
-    u32 = np.uint64(32)
-    key = (sym[:-1] << u32) | sym[1:]
-    pos_c = np.minimum(np.searchsorted(keys, key), len(keys) - 1)
-    found = (wid[:-1] == wid[1:]) & (keys[pos_c] == key)
-    rank_arr = np.where(found, ranks[pos_c], big)
-    newid_arr = np.where(found, newids_u[pos_c], np.uint64(0))
-    while len(sym) > 1:  # caller guarantees keys is non-empty
-        # per-word min rank: positions are word-sorted, so one reduceat
-        # over the big-padded rank array (pad makes every segment
-        # non-empty, incl. a single-symbol last word)
-        starts = np.concatenate([[0], np.flatnonzero(np.diff(wid)) + 1])
-        counts = np.diff(np.append(starts, len(sym)))
-        wmin = np.minimum.reduceat(np.append(rank_arr, big), starts)
-        word_min = np.repeat(wmin, counts)
-        chosen = (rank_arr != big) & (rank_arr == word_min[:-1])
-        cidx = np.flatnonzero(chosen)
-        if not len(cidx):
-            break
-        # left-to-right non-overlap: in a run of consecutive chosen
-        # positions (same pair, e.g. (x,x) over "xxxx"), greedy keeps the
-        # 0th, 2nd, ... of the run — exactly _merge_symbols' scan.
-        # Resolved over the (small) chosen index list, not the corpus.
-        m = len(cidx)
-        newrun = np.concatenate([[True], np.diff(cidx) > 1])
-        rstart = np.maximum.accumulate(np.where(newrun, np.arange(m), -1))
-        kpos = cidx[((np.arange(m) - rstart) & 1) == 0]
-        sym[kpos] = newid_arr[kpos]
-        delete = np.zeros(len(sym), dtype=bool)
-        delete[kpos + 1] = True
-        changed = np.zeros(len(sym), dtype=bool)
-        changed[kpos] = True
-        finished = np.repeat(wmin == big, counts)
-        move = finished & ~delete
-        if move.any():
-            done_sym.append(sym[move])
-            done_wid.append(wid[move])
-            keep_mask = ~delete & ~finished
-        else:
-            keep_mask = ~delete
-        kidx = np.flatnonzero(keep_mask)
-        sym = sym[kidx]
-        wid = wid[kidx]
-        if len(sym) < 2:
-            break
-        # incremental pair maintenance: new pair j = old pair
-        # (kidx[j], kidx[j]+1) exactly when the two were old-adjacent and
-        # neither symbol changed; everything else (merge sites, junctions
-        # left by deletions/moved words) is recomputed from the table
-        reuse = ((kidx[1:] == kidx[:-1] + 1)
-                 & ~changed[kidx[:-1]] & ~changed[kidx[1:]])
-        rank_arr = np.where(reuse, rank_arr[kidx[:-1]], big)
-        newid_arr = np.where(reuse, newid_arr[kidx[:-1]], np.uint64(0))
-        rec = np.flatnonzero(~reuse)
-        if len(rec):
-            kk = (sym[rec] << u32) | sym[rec + 1]
-            pc = np.minimum(np.searchsorted(keys, kk), len(keys) - 1)
-            ok = (wid[rec] == wid[rec + 1]) & (keys[pc] == kk)
-            rank_arr[rec] = np.where(ok, ranks[pc], big)
-            newid_arr[rec] = np.where(ok, newids_u[pc], np.uint64(0))
-
-    done_sym.append(sym)
-    done_wid.append(wid)
-    sym = np.concatenate(done_sym)
-    wid = np.concatenate(done_wid)
-    order = np.argsort(wid, kind="stable")  # words whole in each chunk →
-    return sym[order], wid[order]           # stable sort restores order
-
-
 def _cache_touch_and_evict(cache: dict, used, cache_size: int) -> None:
     """Batch-granularity LRU maintenance for the per-worker encode cache.
 
@@ -446,8 +379,9 @@ def bpe_encode(df: DataFrame, merges: list, text_col: str = "text",
     DISTINCT ones in one vectorized numpy scan (_encode_distinct); a
     bounded per-worker dict carries results across batches (Zipfian
     reuse). Per-word Python survives only in the final per-row token
-    concatenation and for words > 256 chars (scalar fallback). Adds
-    ``out_col`` array<string>."""
+    concatenation, for words > 256 chars, and for merge lists that are
+    not training-consistent (_encode_words routes those to the scalar
+    _encode_word). Adds ``out_col`` array<string>."""
     table = _build_pair_table(merges)
     ranks = {tuple(p): i for i, p in enumerate(merges)}
     bc = df.sparkSession.sparkContext.broadcast((table, ranks))
@@ -466,12 +400,7 @@ def bpe_encode(df: DataFrame, merges: list, text_col: str = "text",
             flat = exploded[exploded.notna()].to_numpy(object)
             codes, uniq = pd.factorize(flat)
             todo = [w for w in uniq if w not in cache]
-            vec = [w for w in todo if len(w) <= _VEC_MAX_WORD_LEN]
-            for w, toks in zip(vec, _encode_distinct(vec, *tbl)):
-                cache[w] = toks
-            for w in todo:
-                if len(w) > _VEC_MAX_WORD_LEN:
-                    cache[w] = _encode_word(w, scalar_ranks)
+            cache.update(zip(todo, _encode_words(todo, tbl, scalar_ranks)))
             word_tokens = [cache[w] for w in uniq]
             # ragged gather instead of a per-word extend loop: flatten the
             # DISTINCT words' tokens once, then index every occurrence's

@@ -28,21 +28,22 @@ with no shuffle — the partition-local build's O(partitions × groups)
 serialized partials are collected and merged on the driver over the
 bounded event-type domain (in ``state_dir`` mode they instead take the
 distributed salted merge and spill to parquet); nothing else collects to
-the driver (alert counts come from the written parquet's metadata).
+the driver (alert counts ride the alert write as an observed metric).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import posixpath
 
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fever_spark.ops.bloom_match import build_ioc_filter, make_event_matcher
 from fever_spark.ops.build import SketchSpec
 from fever_spark.sources.eve import eve_projection
-from fever_spark.sources.io import parquet_row_count
 from fever_spark.streaming.sketch_stream import StreamingSketchAccumulator
 
 __all__ = ["run_pipeline"]
@@ -193,11 +194,23 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
     json_line_col = [F.col("json_line")]
 
     alerts_root = os.path.join(output_dir, "alerts")
+    # driver-side view of output_dir (a local path or a file://, s3://
+    # URI) for the sink file counts and the manifest
+    out_fs, out_root = pafs.FileSystem.from_uri(
+        output_dir if ":" in output_dir else os.path.abspath(output_dir))
+
+    def _n_files(rel: str, prefix: str = "", suffix: str = "") -> int:
+        infos = out_fs.get_file_info(pafs.FileSelector(
+            posixpath.join(out_root, rel), allow_not_found=True))
+        return sum(1 for i in infos if i.is_file
+                   and i.base_name.startswith(prefix)
+                   and i.base_name.endswith(suffix))
+
     # per-RUN tallies (not all-time): a second incremental run against the
     # same output_dir must report ITS batches/alerts, so the summary comes
     # from what this run's foreachBatch actually processed, with alert
-    # counts read from the just-written parquet FOOTERS (driver-side
-    # metadata, no Spark job, no all-time re-read of alerts_root)
+    # counts observed on the alert write itself (no Spark job of their
+    # own, no all-time re-read of alerts_root)
     run_batches: list[int] = []
     run_alerts = [0]
     run_events = [0]
@@ -211,7 +224,6 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
               "compact": 0.0}
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        import glob
         import time as _t
 
         from pyspark.sql import Observation
@@ -235,15 +247,17 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
             # trigger, and the observe node sits above the cache scan
             # the match does anyway
             obs = Observation(f"fvs_counts_{batch_id}")
+            alerts_obs = Observation(f"fvs_alerts_{batch_id}")
             t0 = _t.time()
             alerts = _current_matcher()(parsed.observe(obs, *count_exprs))
-            batch_dir = os.path.join(alerts_root, f"batch={batch_id}")
+            batch_rel = f"alerts/batch={batch_id}"
             # repartition, NOT coalesce: coalesce(1) would pull the whole
             # Bloom-match computation into one task (measured 8s/1M); the
             # shuffle here moves only the few alert rows, and the match
             # stays at full parallelism
-            alerts.repartition(sink_files).write.mode("overwrite") \
-                .parquet(batch_dir)
+            alerts.observe(alerts_obs, count_exprs[0]) \
+                .repartition(sink_files).write.mode("overwrite") \
+                .parquet(os.path.join(output_dir, batch_rel))
             counts = obs.get
             t2 = _t.time()
             if spool:
@@ -262,19 +276,17 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
                 # repartition) is right HERE: the upstream is a cheap
                 # cached-column filter, and coalescing avoids shuffling
                 # the raw lines
-                fdir = os.path.join(output_dir, "forward", name,
-                                    f"batch={batch_id}")
+                fwd_rel = f"forward/{name}/batch={batch_id}"
                 part.select(*json_line_col).coalesce(sink_files) \
-                    .write.mode("overwrite").text(fdir)
-                run_files["forwards"] += len(
-                    glob.glob(os.path.join(fdir, "part-*")))
+                    .write.mode("overwrite") \
+                    .text(os.path.join(output_dir, fwd_rel))
+                run_files["forwards"] += _n_files(fwd_rel, prefix="part-")
             t4 = _t.time()
             acc.process_batch(parsed, batch_id)
             t5 = _t.time()
             run_batches.append(batch_id)
-            run_alerts[0] += parquet_row_count(batch_dir) or 0
-            run_files["alerts"] += len(
-                glob.glob(os.path.join(batch_dir, "*.parquet")))
+            run_alerts[0] += int(alerts_obs.get["_total"])
+            run_files["alerts"] += _n_files(batch_rel, suffix=".parquet")
             run_events[0] += int(counts["_total"])
             if compact_every and batch_id > 0 \
                     and batch_id % compact_every == 0:
@@ -317,10 +329,10 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
     q = writer.trigger(availableNow=True).start()
     q.awaitTermination()
     # summary of THIS run: batch ids this foreachBatch saw, alert counts
-    # from the batch dirs' parquet footers at write time. A run with ZERO
-    # batches (empty drop dir, or everything already checkpointed) never
-    # had a sink write create output_dir — make it for the manifest
-    os.makedirs(output_dir, exist_ok=True)
+    # observed at write time. A run with ZERO batches (empty drop dir, or
+    # everything already checkpointed) never had a sink write create
+    # output_dir — make it for the manifest
+    out_fs.create_dir(out_root)
     summary = {"input": input_dir, "output": output_dir,
                "batches": len(run_batches), "batch_ids": run_batches,
                "events": run_events[0], "alerts": run_alerts[0],
@@ -331,8 +343,9 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
                "bloom_reloads": (None if bloom_file is None
                                  else bloom_state["reloads"]),
                "spool": spool}
-    with open(os.path.join(output_dir, "_run_manifest.json"), "w") as f:
-        json.dump(summary, f, indent=1)
+    with out_fs.open_output_stream(
+            posixpath.join(out_root, "_run_manifest.json")) as f:
+        f.write(json.dumps(summary, indent=1).encode())
     return summary
 
 

@@ -163,20 +163,12 @@ def bloom_contains_multi(bloom_bytes_bc, *cols: Column) -> Column:
 
 
 def bloom_contains_col(bloom_bytes_bc, col: Column) -> Column:
-    """Membership test against a BROADCAST Bloom filter (fever's
-    broadcast-side membership semantics, processing/bloom_handler.go:165+).
+    """Membership test of one column against a BROADCAST Bloom filter
+    (fever's broadcast-side membership semantics,
+    processing/bloom_handler.go:165+): bit 0 of ``bloom_contains_multi``,
+    so NULL and ``""`` probes never match.
 
     ``bloom_bytes_bc`` is a ``sc.broadcast(filter.to_bytes())`` handle so the
     state ships once per executor, not once per task closure.
     """
-
-    @F.pandas_udf(T.BooleanType())
-    def _contains(vals: pd.Series) -> pd.Series:
-        bf = _sketch_of(bytes(bloom_bytes_bc.value))
-        mask = vals.notna().to_numpy()
-        out = np.zeros(len(vals), dtype=bool)
-        if mask.any():
-            out[mask] = bf.contains(vals[mask].to_numpy())
-        return pd.Series(out)
-
-    return _contains(col)
+    return bloom_contains_multi(bloom_bytes_bc, col) != 0

@@ -9,11 +9,15 @@ CRLF).
 
 Every reader shares one decode path: ``_input_file`` (pyarrow.fs, so
 local paths and file://, s3://, hdfs:// URIs alike), one gzip-member
-walker, ``_records`` (members joined, parsed once, one WARC type),
-``_body`` (HTTP response decoding) and ``_map_rows`` (the task loop and
-the warc_date → warc_ts step). Readers differ only in how they plan byte
-ranges — whole files shuffled by path (_read_records), CDX captures, byte
-ranges of one archive, a file stream — and how they build rows.
+walk from offset 0 (``_gunzip_members``), ``_records`` (members joined,
+parsed once, one WARC type — a record may span members), ``_body`` (HTTP
+response decoding) and ``_map_rows`` (the task loop and the warc_date →
+warc_ts step). Readers differ only in how they plan their input — whole
+files shuffled by path (_read_records), CDX captures, a file stream —
+and how they build rows. One archive is one task: Common Crawl ships a
+crawl as tens of thousands of ~1 GB per-record-gzipped archives, so
+per-file fan-out already fills a cluster, and the CDX fetch covers
+targeted reads inside one archive.
 Malformed records are skipped, never fatal — the fever input discipline
 (input/input_socket.go:94-101 logs-and-skips) applied to archives: bad
 Content-Length values (including negative — which would otherwise
@@ -34,8 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["read_warc", "read_wet", "read_cdx", "fetch_cdx_records",
-           "warc_to_pages", "html_to_text", "stream_warc_to_pages",
-           "read_warc_ranges"]
+           "warc_to_pages", "html_to_text", "stream_warc_to_pages"]
 
 _CRLF2 = b"\r\n\r\n"
 _GZ_MAGIC = b"\x1f\x8b\x08"
@@ -52,62 +55,37 @@ def _input_file(path: str):
     return fs.open_input_file(fpath)
 
 
-def _iter_gzip_members_from(buf: bytes, limit: int | None = None,
-                            resync: bool = False) -> Iterator[bytes]:
-    """The one loop over gzip members (how Common Crawl concatenates
-    per-record compression): yield the decompressed bytes of every member
-    STARTING before ``limit`` (default: anywhere in ``buf``); stop at
-    trailing garbage or a bad member. With ``resync`` (a mid-file range),
-    scan forward to the first offset that both looks like a gzip header
-    AND decompresses to bytes starting with ``WARC/`` — the double check
-    rejects the \\x1f\\x8b byte pairs that occur by chance inside
-    compressed payloads."""
+def _gunzip_members(data: bytes) -> bytes:
+    """Decompress (possibly multi-member) gzip; pass through plain bytes.
+    The one loop over gzip members (how Common Crawl concatenates
+    per-record compression): members are joined from offset 0 until
+    trailing garbage or a bad member, whose bytes are dropped."""
+    if data[:2] != b"\x1f\x8b":
+        return data
     pos = 0
-    n = len(buf)
-    limit = n if limit is None else limit
-    mv = memoryview(buf)
-    while pos < limit and pos < n:
-        if not buf.startswith(_GZ_MAGIC, pos):
-            if not resync:
-                return  # trailing garbage in a trusted stream: stop
-            nxt = buf.find(_GZ_MAGIC, pos + 1)
-            if nxt < 0 or nxt >= limit:
-                return
-            pos = nxt
-            continue
+    n = len(data)
+    mv = memoryview(data)
+    out = []
+    while pos < n and data.startswith(_GZ_MAGIC, pos):
         # feed zlib in bounded chunks: handing it the whole remaining
         # buffer makes every member COPY the tail into ``unused_data``, an
         # O(members × buffer) memcpy measured 10× slower than the parse
         # itself on many-member archives
         d = zlib.decompressobj(47)  # gzip wrapper
-        out, end = [], pos
+        member, end = [], pos
         try:
             while end < n and not d.eof:
-                out.append(d.decompress(mv[end:end + _GZ_CHUNK]))
+                member.append(d.decompress(mv[end:end + _GZ_CHUNK]))
                 end = min(end + _GZ_CHUNK, n)
-            out.append(d.flush())
+            member.append(d.flush())
         except zlib.error:
-            if not resync:
-                return
-            pos += 1
-            continue
-        data = b"".join(out)
+            break
+        out += member
         end -= len(d.unused_data)
-        if resync and not data.startswith(b"WARC/"):
-            pos += 1  # false magic inside compressed bytes — keep scanning
-            continue
-        yield data
         if end <= pos:
-            return
+            break
         pos = end
-        resync = False  # once locked onto the member chain, stay exact
-
-
-def _gunzip_members(data: bytes) -> bytes:
-    """Decompress (possibly multi-member) gzip; pass through plain bytes."""
-    if data[:2] != b"\x1f\x8b":
-        return data
-    return b"".join(_iter_gzip_members_from(data))
+    return b"".join(out)
 
 
 def parse_warc_records(data: bytes) -> list[dict]:
@@ -126,7 +104,7 @@ def parse_warc_records(data: bytes) -> list[dict]:
             break
         head = data[pos:head_end]
         if not head.startswith(b"WARC/"):
-            # resync: find the next record marker, strictly forward
+            # not a record start: skip to the next marker, strictly forward
             nxt = data.find(b"WARC/", pos + 1)
             if nxt < 0:
                 break
@@ -298,10 +276,10 @@ def _read_records(spark: SparkSession, path: str, warc_type: str,
     real WET/CDX segment layouts — would collapse onto ONE task if the
     content rode the scan. Instead only the (tiny) path strings shuffle,
     into min(n_files, 4×parallelism) partitions, and each task reads its
-    files through ``_input_file``. One archive is still the indivisible
-    unit (WARC records are sequential within a member); fan-out WITHIN
-    one big archive is what fetch_cdx_records' offset-range split and
-    read_warc_ranges are for."""
+    files through ``_input_file``. One archive is the indivisible unit
+    (a record may span gzip members, so only a parse of the joined
+    stream keeps every record); fan-out WITHIN one archive is
+    fetch_cdx_records' offset-range split over the captures it names."""
     files = spark.read.format("binaryFile").load(path).select("path")
     n_files = files.count()  # metadata-only: content column never read
     n_parts = max(1, min(n_files,
@@ -527,68 +505,3 @@ def stream_warc_to_pages(spark: SparkSession, watch_dir: str,
                 yield r["url"], r["date"], fn(_body(r))
 
     return _map_rows(files, rows, "url string, warc_date string, text string")
-
-
-# ------------------------------------------------- intra-archive splitting
-
-def read_warc_ranges(spark: SparkSession, path: str,
-                     range_bytes: int = 64 << 20,
-                     tail_bytes: int = 16 << 20) -> DataFrame:
-    """``read_warc`` for archives BIGGER than one task should own: each
-    file is split into ``range_bytes`` byte ranges and every range is an
-    independent task — the missing fan-out axis when archive count <
-    cluster cores (one 500 GB crawl dump on a 1000-core cluster).
-
-    Works on the per-record-gzipped layout (the Common Crawl standard):
-    a range task reads ``[start, end + tail_bytes)``, locks onto the
-    member chain (at offset 0 it is trusted; mid-file it resyncs on gzip
-    magic + a decompressed ``WARC/`` prefix, which unambiguously rejects
-    chance magic bytes), and parses every member STARTING inside its
-    range, member by member — a member straddling the range end is
-    completed from the tail read, so each record is owned by exactly one
-    range. Members larger than ``tail_bytes`` are skipped with the
-    module's never-fatal discipline (bound the tail like a
-    max-record-size guard). A plain (non-gzipped) or single-member-gzip
-    archive is handled entirely by its offset-0 range, which reads a
-    plain archive to its end in the same open — correct, just not
-    intra-file parallel; use the CDX targeted fetch or re-pack for
-    those."""
-    files = (spark.read.format("binaryFile").load(path)
-             .select("path", "length"))
-    ranges = files.select(
-        "path",
-        F.explode(F.sequence(
-            F.lit(0),
-            F.greatest((F.ceil(F.col("length") / F.lit(int(range_bytes)))
-                        - 1).cast("long"), F.lit(0)))).alias("range_id"),
-        "length")
-    ranges = ranges.select(
-        "path",
-        (F.col("range_id") * F.lit(int(range_bytes))).alias("start"),
-        F.least((F.col("range_id") + 1) * F.lit(int(range_bytes)),
-                F.col("length")).alias("end")) \
-        .repartition(F.col("path"), F.col("start"))
-
-    def rows(pdf: pd.DataFrame):
-        for path_, start, end in zip(pdf["path"], pdf["start"], pdf["end"]):
-            start, end = int(start), int(end)
-            try:
-                with _input_file(path_) as fh:
-                    fh.seek(start)
-                    buf = fh.read((end - start) + int(tail_bytes))
-                    plain = start == 0 and not buf.startswith(_GZ_MAGIC)
-                    if plain:  # the offset-0 range owns the whole file
-                        buf += fh.read()
-            except OSError:
-                continue  # vanished/unreadable file: skip its ranges
-            members = [buf] if plain else _iter_gzip_members_from(
-                buf, end - start, resync=start > 0)
-            for data in members:
-                for r in parse_warc_records(data):
-                    if r["type"] == "response":
-                        yield (r["url"], r["date"], r["content_type"],
-                               _body(r), path_)
-
-    return _map_rows(ranges, rows,
-                     "url string, warc_date string, content_type string, "
-                     "html binary, warc_file string")

@@ -172,9 +172,10 @@ class TestEncode:
 
 
 class TestVectorizedKernel:
-    """The numpy batch encoder (_encode_distinct: rank-order sweep +
-    min-rank fallback) against the scalar oracle _encode_word, over
-    adversarial word shapes the corpus tests don't reach."""
+    """The numpy batch encoder (_encode_distinct: the rank-order sweep)
+    against the scalar oracle _encode_word, over adversarial word shapes
+    the corpus tests don't reach, and the dispatch (_encode_words) that
+    keeps merge lists the sweep cannot serve away from it."""
 
     def _table_and_ranks(self, word_freqs, num_merges):
         from fever_spark.functions.bpe import _build_pair_table
@@ -203,47 +204,42 @@ class TestVectorizedKernel:
                  + ["".join(random.choices(string.printable.strip(), k=k))
                     for k in range(1, 40)])
         words = [w for w in words if w]
-        got = _encode_distinct(words, *table)
+        got = _encode_distinct(words, *table[:-1])
         assert got == [_encode_word(w, ranks) for w in words]
 
-    def test_minrank_fallback_parity(self):
-        from fever_spark.functions.bpe import (_encode_distinct,
-                                               _encode_word)
-
-        freqs = Counter({"banana": 10, "bandana": 8, "anna": 6})
-        merges, table, ranks = self._table_and_ranks(freqs, 30)
-        forced = table[:-1] + (False,)  # force the fallback path
-        words = ["banana", "bandana", "anna", "ban", "nab", "aa", "b"]
-        assert _encode_distinct(words, *forced) == \
-            [_encode_word(w, ranks) for w in words]
-
-    def test_inconsistent_merge_list_detected_and_correct(self):
+    def test_inconsistent_merge_list_detected_and_correct(self,
+                                                          monkeypatch):
+        from fever_spark.functions import bpe
         from fever_spark.functions.bpe import (_build_pair_table,
-                                               _encode_distinct,
-                                               _encode_word)
+                                               _encode_word, _encode_words)
 
         bad = [("ab", "c"), ("a", "b")]  # component created LATER
         table = _build_pair_table(bad)
         assert table[-1] is False
+
+        def no_sweep(*_a):
+            raise AssertionError("inconsistent list reached the sweep")
+
+        monkeypatch.setattr(bpe, "_encode_distinct", no_sweep)
         ranks = {tuple(p): i for i, p in enumerate(bad)}
         words = ["abc", "ab", "cab", "abcabc", "aabbc"]
-        assert _encode_distinct(words, *table) == \
+        assert _encode_words(words, table, ranks) == \
             [_encode_word(w, ranks) for w in words]
 
 
 class TestKernelHypothesis:
-    """Fuzz the vectorized encoder against the scalar oracle with ARBITRARY
-    merge lists — duplicates, unreachable components, inconsistent order
-    (component created later), unicode — exercising table build, the
-    rank-order sweep, the min-rank fallback, and the dispatch between
-    them."""
+    """Fuzz the batch encoder dispatch (_encode_words, what bpe_encode
+    runs) against the scalar oracle with ARBITRARY merge lists —
+    duplicates, unreachable components, inconsistent order (component
+    created later), unicode — exercising table build, the consistency
+    check, the rank-order sweep, and the routing of inconsistent lists
+    to the scalar encoder."""
 
     def test_arbitrary_merges_and_words_match_scalar(self):
         from hypothesis import given, settings, strategies as st
 
         from fever_spark.functions.bpe import (_build_pair_table,
-                                               _encode_distinct,
-                                               _encode_word)
+                                               _encode_word, _encode_words)
 
         sym = st.one_of(
             st.sampled_from(["a", "b", "c", "ab", "bc", "abc", "ü", "</w>",
@@ -262,7 +258,7 @@ class TestKernelHypothesis:
                 return
             table = _build_pair_table(merges)
             ranks = {tuple(p): i for i, p in enumerate(merges)}
-            got = _encode_distinct(words, *table)
+            got = _encode_words(words, table, ranks)
             want = [_encode_word(w, ranks) for w in words]
             assert got == want, (merges, words)
 

@@ -204,6 +204,30 @@ class TestRunPipeline:
         fw = spark.read.json(froot + "/*")
         assert fw.count() == 24
 
+    def test_uri_output_dir_reports_like_plain_path(self, spark, tmp_path,
+                                                    monkeypatch):
+        # a file:// output_dir counts the same alerts and sink files as
+        # the plain path, and the manifest lands inside the output dir
+        # (not in a stray ``file:`` dir under the working directory)
+        monkeypatch.chdir(tmp_path)
+        lines = [L_HTTP_EVIL, L_HTTP_OK, L_DNS_BAD, L_FLOW] * 3
+        summaries = {}
+        for kind in ("plain", "uri"):
+            base = tmp_path / kind
+            _drop(str(base / "in"), "a.jsonl", lines)
+            out = str(base / "out")
+            summaries[kind] = run_pipeline(
+                spark, str(base / "in"),
+                out if kind == "plain" else "file://" + out, IOCS,
+                checkpoint=str(base / "ckpt"), forwards={"all": []})
+            man = json.load(open(os.path.join(out, "_run_manifest.json")))
+            assert man["alerts"] == summaries[kind]["alerts"]
+        plain, uri = summaries["plain"], summaries["uri"]
+        assert uri["alerts"] == plain["alerts"] == 6
+        assert uri["sink_files"] == plain["sink_files"] == \
+            {"alerts": 1, "forwards": 1}
+        assert not (tmp_path / "file:").exists()
+
     def test_empty_drop_dir_yields_empty_summary(self, spark, dirs):
         os.makedirs(dirs["in"], exist_ok=True)
         s = run_pipeline(spark, dirs["in"], dirs["out"], IOCS,

@@ -108,6 +108,19 @@ def test_bloom_broadcast_filter_semi_join_parity(spark, docs):
     assert fps <= max(3, 3 * 1e-6 * n_non)
 
 
+def test_bloom_contains_col_never_matches_null_or_empty(spark):
+    # fever's skip-on-empty rule: a filter that holds "" still never
+    # matches an empty or NULL string probe
+    bf = BloomFilter(capacity=100, fpp=1e-6)
+    bf.update(np.array(["evil.example", ""], dtype=object))
+    bc = spark.sparkContext.broadcast(bf.to_bytes())
+    probes = spark.createDataFrame(
+        [("evil.example",), ("",), (None,), ("clean.example",)], "v string")
+    got = [r["v"] for r in
+           probes.filter(bloom_contains_col(bc, F.col("v"))).collect()]
+    assert got == ["evil.example"]
+
+
 def test_global_sketch_no_keys(spark, events):
     specs = [SketchSpec("all_users", "hll", "user_id", {"p": 12})]
     merged = two_level_merge(build_sketches(events, [], specs), [])

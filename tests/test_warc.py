@@ -449,77 +449,6 @@ class TestStreamingWarc:
         assert b == s
 
 
-class TestWarcRanges:
-    """Intra-archive splitting: one big per-record-gzipped archive fans
-    out over byte-range tasks with results identical to the whole-file
-    reader."""
-
-    def _big_archive(self, tmp_path, n=60):
-        import gzip
-        members = []
-        for i in range(n):
-            members.append(gzip.compress(_record(
-                b"response", f"http://r.example/p{i}".encode(),
-                b"2026-02-01T00:00:00Z",
-                _http(f"<html>range body {i} {'y' * 300}</html>".encode()))))
-        (tmp_path / "big.warc.gz").write_bytes(b"".join(members))
-        return n
-
-    def test_ranges_match_whole_file(self, spark, tmp_path):
-        from fever_spark.sources.warc import read_warc, read_warc_ranges
-
-        n = self._big_archive(tmp_path)
-        whole = {r["url"]: bytes(r["html"])
-                 for r in read_warc(spark, str(tmp_path)).collect()}
-        # ranges much smaller than the archive: members straddle ends
-        ranged = read_warc_ranges(spark, str(tmp_path), range_bytes=1500,
-                                  tail_bytes=4096)
-        got = {r["url"]: bytes(r["html"]) for r in ranged.collect()}
-        assert got == whole and len(got) == n
-
-    def test_single_archive_fans_out(self, spark, tmp_path):
-        from fever_spark.sources.warc import read_warc_ranges
-
-        self._big_archive(tmp_path)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            pids = (read_warc_ranges(spark, str(tmp_path), range_bytes=1500,
-                                     tail_bytes=4096)
-                    .select(F.spark_partition_id().alias("p"))
-                    .distinct().count())
-            assert pids > 1
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-    def test_false_magic_bytes_rejected(self, spark, tmp_path):
-        """Payload bytes containing \\x1f\\x8b\\x08 must not derail a
-        resyncing mid-file range."""
-        import gzip
-        from fever_spark.sources.warc import read_warc_ranges
-
-        members = []
-        for i in range(20):
-            # bodies salted with gzip magic sequences
-            body = (b"<html>trap \x1f\x8b\x08 inside " + str(i).encode()
-                    + b" " + b"z" * 200 + b"</html>")
-            members.append(gzip.compress(_record(
-                b"response", f"http://f.example/p{i}".encode(),
-                b"2026-02-01T00:00:00Z", _http(body))))
-        (tmp_path / "trap.warc.gz").write_bytes(b"".join(members))
-        got = read_warc_ranges(spark, str(tmp_path), range_bytes=900,
-                               tail_bytes=4096)
-        urls = sorted(r["url"] for r in got.collect())
-        assert urls == sorted(f"http://f.example/p{i}" for i in range(20))
-
-    def test_plain_archive_handled_by_first_range(self, spark, tmp_path):
-        from fever_spark.sources.warc import read_warc_ranges
-
-        (tmp_path / "plain.warc").write_bytes(_archive())
-        got = read_warc_ranges(spark, str(tmp_path), range_bytes=64,
-                               tail_bytes=64)
-        assert got.count() == 2   # both responses, no duplicates
-
-
 class TestWarcDigests:
     def _digested_record(self, url, body, corrupt=False):
         import base64
