@@ -968,8 +968,7 @@ def q_embedding_neardup(spark, sf_dir):
     # (test_dedup_ann_text.TestEmbeddingDedup).
     emb = _read(spark, sf_dir, "embeddings") \
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
-    return dedup.embedding_near_duplicates(emb, threshold=0.35,
-                                           brute_force=True) \
+    return dedup.embedding_near_duplicates(emb, threshold=0.35) \
         .select("id_a", "id_b")
 
 
@@ -1011,7 +1010,7 @@ def q_ann_ivf(spark, sf_dir):
 
 
 def brute_topk_ids(emb, qvec):
-    return ann.brute_force_topk(emb, qvec, k=10).select("vec_id")
+    return ann.exact_topk(emb, qvec, k=10).select("vec_id")
 
 
 def q_lang_id(spark, sf_dir):

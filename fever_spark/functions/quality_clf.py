@@ -62,11 +62,15 @@ def quality_features(text: Column) -> list[Column]:
     ]
 
 
+# labeled-sample size at or under which train_quality_classifier runs its
+# IRLS on the driver (see there)
+DRIVER_ROWS_THRESHOLD = 200_000
+
+
 def train_quality_classifier(trusted: DataFrame, crawl: DataFrame,
                              text_col: str = "text",
                              max_iter: int = 25,
-                             reg_param: float = 0.01,
-                             driver_rows_threshold: int = 200_000) -> dict:
+                             reg_param: float = 0.01) -> dict:
     """Fit LR to separate ``trusted`` (label 1) from ``crawl`` (label 0).
 
     Distributed Newton–Raphson (IRLS) as plain DataFrame aggregations:
@@ -81,12 +85,12 @@ def train_quality_classifier(trusted: DataFrame, crawl: DataFrame,
     sketch jobs do) — and our loop's shuffle volume is O(n_features) per
     iteration regardless of sample size, which IS the scalable shape.
 
-    Samples at or under ``driver_rows_threshold`` rows skip the
+    Samples at or under ``DRIVER_ROWS_THRESHOLD`` rows skip the
     distributed loop: the standardized design matrix is collected once
     (bounded at threshold × (d+1) float64) and the SAME IRLS runs in
     numpy — a few thousand labeled rows don't justify ~17 sequential
     Spark jobs of fixed scheduler overhead. Identical updates, identical
-    stop rule; set the threshold to 0 to force the distributed path.
+    stop rule.
 
     Returns a plain-dict model {"coefficients": {name: w}, "intercept":
     b, "auc": train AUC} — JSON-serializable, scored by quality_proba
@@ -128,7 +132,7 @@ def train_quality_classifier(trusted: DataFrame, crawl: DataFrame,
             hess[:d, :d] += n * reg_param * np.eye(d)
             return np.linalg.solve(hess + 1e-9 * np.eye(d + 1), grad)
 
-        if n <= driver_rows_threshold:
+        if n <= DRIVER_ROWS_THRESHOLD:
             # the sequential-iteration tax dominates small samples: ~17
             # Spark jobs of fixed ~0.5s overhead to reduce a few thousand
             # cached rows. Collect the standardized design matrix ONCE

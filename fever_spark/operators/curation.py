@@ -561,8 +561,9 @@ def pack_documents(df: DataFrame, budget: int, id_col: str = "doc_id",
     naive ``Window.orderBy(id)`` with no partition key collapses the whole
     corpus into ONE task. Instead:
 
-    1. bucket boundaries = APPROXIMATE id percentiles (one small
-       sketch-aggregate, collected — n_buckets values, not rows);
+    1. bucket boundaries = an even split of a bottom-k xxhash64 sample
+       of the ids (partition-layout-independent, like the IVF trainer's
+       sample; at most max(64·n_buckets, 4096) ids are collected);
     2. per-bucket token totals → exclusive bucket offsets (n_buckets rows
        on the driver, broadcast back as a literal map);
     3. cumulative sum WITHIN each bucket (Window.partitionBy(bucket) —
@@ -574,13 +575,11 @@ def pack_documents(df: DataFrame, budget: int, id_col: str = "doc_id",
     Boundary placement does NOT affect the result — for any boundary set,
     a row's cumulative sum = (exact total of every bucket before it) +
     (exact within-bucket prefix sum) = the exact global prefix sum in id
-    order, so bin_id is invariant. That is why approx_percentile is safe
-    here where it wouldn't be in a quantile QUERY: boundaries only
-    balance work across tasks, and an exact distributed percentile is a
-    sort-heavy global aggregate at 10^12 ids. (Non-numeric id columns —
-    which approx_percentile does not support — get boundaries from an
-    evenly-split deterministic hash-sample of the id domain, correct by
-    the same invariance.)
+    order, so bin_id is invariant. That is why a sample is safe here
+    where it wouldn't be in a quantile QUERY: boundaries only balance
+    work across tasks, and exact boundaries would need a sort-heavy
+    global aggregate at 10^12 ids. The sample works for any orderable id
+    type.
     """
     spark = df.sparkSession
     from pyspark.sql import Window
@@ -589,25 +588,15 @@ def pack_documents(df: DataFrame, budget: int, id_col: str = "doc_id",
              else F.size(F.split(F.trim(F.col(text_col)), r"\s+")))
     base = df.select(F.col(id_col), n_tok.cast("long").alias("n_tokens"))
 
-    # 1. approximate percentile boundaries of the id domain (tiny result)
-    fracs = [i / n_buckets for i in range(1, n_buckets)]
-    frac_list = ",".join(map(str, fracs))
-    id_is_numeric = isinstance(df.schema[id_col].dataType, T.NumericType)
-    if id_is_numeric:
-        row = base.agg(F.expr(
-            f"approx_percentile({id_col}, array({frac_list}), 10000)")
-            .alias("b")).first()
-        bounds = sorted(set(row["b"] or []))
-    else:
-        # bottom-k by xxhash64(id): a partition-layout-independent uniform
-        # sample of the id domain (same discipline as the IVF trainer);
-        # splitting it evenly gives ~equal-population buckets
-        cap = max(64 * n_buckets, 4096)
-        ids = sorted(r[0] for r in base
-                     .select(id_col, F.xxhash64(F.col(id_col)).alias("_h"))
-                     .orderBy("_h").limit(cap).select(id_col).collect())
-        step = max(1, len(ids) // n_buckets)
-        bounds = sorted(set(ids[step::step][: n_buckets - 1]))
+    # 1. bottom-k by xxhash64(id): a uniform sample of the id domain;
+    # splitting it evenly gives ~equal-population buckets (a null id
+    # orders first, in bucket 0, so it never needs a boundary)
+    cap = max(64 * n_buckets, 4096)
+    ids = sorted(r[0] for r in base.where(F.col(id_col).isNotNull())
+                 .select(id_col, F.xxhash64(F.col(id_col)).alias("_h"))
+                 .orderBy("_h").limit(cap).select(id_col).collect())
+    step = max(1, len(ids) // n_buckets)
+    bounds = sorted(set(ids[step::step][: n_buckets - 1]))
 
     bucket = F.lit(0)
     for i, b in enumerate(bounds):
@@ -730,12 +719,15 @@ def semantic_dedup_pairs(df: DataFrame, vec_col: str = "embedding",
     - Each vector is assigned to its n_probe nearest cells, so a pair
       sitting on a cell boundary still co-occurs somewhere (the recall gate
       q_semantic_dedup measures exactly this against the brute-force oracle).
-    - Per-cell pairwise cosine is one numpy matmul inside applyInPandas;
-      cell size — corpus/n_cells — is the memory knob.
+    - Per-cell pairwise cosine is dedup._cosine_pairs inside
+      applyInPandas, the kernel the exact reference
+      (dedup.embedding_near_duplicates) runs over the whole frame; cell
+      size — corpus/n_cells — is the memory knob.
     - Pair dedup across the n_probe assignments is a distinct() on
       (id_a, id_b), map-side combinable.
     """
-    from fever_spark.operators.ann import train_ivf_centroids
+    from fever_spark.operators.ann import _nearest_cells, train_ivf_centroids
+    from fever_spark.operators.dedup import _PAIRS_SCHEMA, _cosine_pairs
 
     centroids = train_ivf_centroids(df, n_cells=n_cells, vec_col=vec_col,
                                     seed=seed)
@@ -745,56 +737,11 @@ def semantic_dedup_pairs(df: DataFrame, vec_col: str = "embedding",
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def cells(vecs: pd.Series) -> pd.Series:
-        M = np.stack(vecs.to_numpy()).astype(np.float64)
-        M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        C = cbc.value
-        C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-        sims = M @ C.T
-        top = np.argsort(-sims, axis=1)[:, :k_probe].astype(np.int32)
-        return pd.Series(list(top))
+        return pd.Series(list(_nearest_cells(vecs, cbc.value, k_probe)))
 
     assigned = (df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
                 .withColumn("cell", F.explode(cells(F.col("v")))))
-
-    out_schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    def pairs_in_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                                 "id_b": pd.Series(dtype="int64"),
-                                 "cosine": pd.Series(dtype="float64")})
-        ids = pdf["id"].to_numpy()
-        M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        S = M @ M.T
-        ia, ib = np.triu_indices(m, k=1)
-        keep = S[ia, ib] >= threshold
-        a, b = ids[ia[keep]], ids[ib[keep]]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"id_a": lo, "id_b": hi,
-                             "cosine": np.round(S[ia, ib][keep], 6)})
-
-    pairs = assigned.groupBy("cell").applyInPandas(pairs_in_cell, out_schema)
+    pairs = assigned.groupBy("cell").applyInPandas(
+        lambda pdf: _cosine_pairs(pdf, threshold), _PAIRS_SCHEMA)
     # a boundary pair can surface from both probed cells — keep one copy
     return pairs.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
-
-
-def semantic_dedup_keep(df: DataFrame, vec_col: str = "embedding",
-                        id_col: str = "vec_id", threshold: float = 0.92,
-                        n_cells: int = 8, n_probe: int = 2,
-                        seed: int = 11) -> DataFrame:
-    """Drop all but the lowest-id member of each semantic near-dup cluster
-    (connected components over the pair graph, dedup.near_dup_clusters)."""
-    from fever_spark.operators.dedup import near_dup_clusters
-
-    pairs = semantic_dedup_pairs(df, vec_col, id_col, threshold,
-                                 n_cells, n_probe, seed)
-    clusters = near_dup_clusters(pairs)  # (id, cluster_id=min id reachable)
-    losers = clusters.filter(F.col("id") != F.col("cluster_id")) \
-        .select(F.col("id").alias(id_col))
-    return df.join(losers, id_col, "left_anti")

@@ -6,16 +6,18 @@ Five families, from exact to approximate:
 - MinHash + LSH:    shingle → minhash signature → banded bucket join
 - SimHash:          token-hash bit votes → Hamming-banded candidate join
 - n-gram Jaccard:   exact set overlap via an inverted shingle index
-- embedding cosine: near-dup pairs above a cosine threshold
+- embedding cosine: the exact all-pairs reference and the one numpy
+                    cosine kernel; the scale path is the IVF-cell search
+                    curation.semantic_dedup_pairs, which runs that kernel
+                    per cell
 
 Scale notes (the part that matters at 10^12 docs):
 - Signatures are computed in ONE vectorized pandas UDF pass (Arrow batches,
   flat numpy shingle arrays — no per-row Python beyond tokenization).
-- Candidate generation is always an equi-join on a band/bucket key — a
-  shuffle on a key whose fan-out we control (band count), never an O(n²)
-  cross join. Buckets with a single member never produce candidates.
-- Verification (exact Jaccard / Hamming / cosine) touches only candidate
-  pairs.
+- Text candidate generation is always an equi-join on a band/bucket key —
+  a shuffle on a key whose fan-out we control (band count), never an
+  O(n²) cross join. Buckets with a single member never produce candidates.
+- Verification (exact Jaccard / Hamming) touches only candidate pairs.
 
 The reference's only dedup is the collect-set maps of its DNS aggregator
 (/root/reference/processing/dns_aggregator.go:148-167); these operators are
@@ -24,8 +26,6 @@ pipeline").
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -74,16 +74,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
             .groupBy("_fp").agg(F.min(id_col).alias(id_col))
             .select(id_col))
     return df.join(keep, id_col, "left_semi")
-
-
-def exact_dup_groups(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """(fingerprint, n_dups, keep_id) for every duplicated content hash."""
-    return (df.withColumn("fp", fingerprint(F.col(text_col)))
-            .groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("n_dups"),
-                 F.min(id_col).alias("keep_id"))
-            .filter(F.col("n_dups") > 1))
 
 
 # ---------------------------------------------------------------- shingles
@@ -252,8 +242,7 @@ def minhash_jaccard(sig_a, sig_b) -> F.Column:
 
 
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
-                        bands: int = 32,
-                        num_hashes: int | None = None) -> DataFrame:
+                        bands: int = 32, *, num_hashes: int) -> DataFrame:
     """Banded LSH: split each signature into `bands` row-chunks; docs sharing
     any band hash become a candidate pair. Returns (id_a, id_b, est_jaccard).
 
@@ -261,18 +250,8 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     (band, band_hash). AQE's skew-join split handles degenerate buckets
     (e.g. all-empty docs sharing the sentinel signature).
 
-    ``num_hashes`` is the signature length; callers that built the
-    signatures know it (minhash_near_duplicates threads its own parameter
-    through). When omitted — externally-supplied signature frames — it is
-    probed with a ``first()``, which costs a Spark job evaluating the
-    signature UDF on one partition BEFORE the banding stage; at corpus
-    scale that is a wasted pass, so pass it when you have it."""
-    if num_hashes is None:
-        sig_len_row = signatures.select(F.size("minhash").alias("n")).first()
-        if sig_len_row is None:
-            return signatures.sparkSession.createDataFrame(
-                [], "id_a long, id_b long, est_jaccard double")
-        num_hashes = sig_len_row["n"]
+    ``num_hashes`` is the signature length the signatures were built
+    with (minhash_near_duplicates threads its own parameter through)."""
     # never more bands than signature rows: bands beyond the signature
     # would slice empty arrays → one constant hash shared by EVERY doc →
     # the equi-join degenerates into an all-pairs cross join
@@ -450,96 +429,46 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------- embeddings
 
 
+_PAIRS_SCHEMA = "id_a long, id_b long, cosine double"
+
+
+def _cosine_pairs(pdf: pd.DataFrame, threshold: float) -> pd.DataFrame:
+    """Exact all-pairs cosine over one group of (id, v) rows — the one
+    numpy kernel behind both embedding near-dup paths (the all-pairs
+    reference below and curation.semantic_dedup_pairs' IVF cells).
+
+    One matmul over unit vectors (norms floored at 1e-12, so a zero
+    vector has cosine 0 with everything); the UNROUNDED cosine is
+    compared to ``threshold`` (DuckDB's ``list_cosine_similarity >= t``
+    rule), and each kept pair is emitted once as (lo id, hi id, cosine
+    rounded to 6 places). Memory is O(group²): the group size is the
+    caller's knob."""
+    ids = pdf["id"].to_numpy()
+    M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+    M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+    ia, ib = np.triu_indices(len(M), k=1)
+    cos = (M @ M.T)[ia, ib]
+    keep = cos >= threshold
+    a, b = ids[ia[keep]], ids[ib[keep]]
+    return pd.DataFrame({"id_a": np.minimum(a, b), "id_b": np.maximum(a, b),
+                         "cosine": np.round(cos[keep], 6)})
+
+
 def embedding_near_duplicates(df: DataFrame, vec_col: str = "embedding",
-                              id_col: str = "vec_id", threshold: float = 0.95,
-                              n_planes: int = 16, seed: int = 7,
-                              brute_force: bool = False) -> DataFrame:
-    """Near-dup pairs with cosine similarity >= threshold.
+                              id_col: str = "vec_id",
+                              threshold: float = 0.95) -> DataFrame:
+    """EXACT near-dup pairs (id_a, id_b, cosine) with cosine >= threshold,
+    id_a < id_b: the whole frame is ONE group through ``_cosine_pairs``.
 
-    Scale path: random-hyperplane LSH — sign-pattern bucket key, candidates
-    only within a bucket (plus one extra rotated-plane bucket set to catch
-    boundary pairs), exact cosine verify. brute_force=True switches to the
-    O(n²) self-join for small-scale ground truth."""
-    norm = F.sqrt(F.aggregate(F.transform(F.col(vec_col), lambda x: x * x),
-                              F.lit(0.0), lambda a, x: a + x))
-    unit = df.select(F.col(id_col).alias("id"),
-                     F.transform(F.col(vec_col),
-                                 lambda x: x / norm).alias("v"))
-
-    def cosine(u, w):
-        return F.aggregate(F.zip_with(u, w, lambda x, y: x * y),
-                           F.lit(0.0), lambda a, x: a + x)
-
-    if brute_force:
-        # ground-truth path (small-scale only, by contract): ONE numpy
-        # matmul over the whole corpus in a single applyInPandas group —
-        # exact, and ~100x faster than the previous expression-level
-        # cosine over the O(n²) self-join (12.5M pairs × 64-element
-        # zip_with lambdas took minutes at 5k vectors; M @ M.T is instant)
-        out_schema = T.StructType([
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ])
-
-        def all_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            m = len(pdf)
-            if m < 2:
-                return pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                                     "id_b": pd.Series(dtype="int64"),
-                                     "cosine": pd.Series(dtype="float64")})
-            ids = pdf["id"].to_numpy()
-            M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            S = M @ M.T
-            ia, ib = np.triu_indices(m, k=1)
-            keep = np.round(S[ia, ib], 6) >= threshold
-            a, b = ids[ia[keep]], ids[ib[keep]]
-            lo, hi = np.minimum(a, b), np.maximum(a, b)
-            return pd.DataFrame({"id_a": lo, "id_b": hi,
-                                 "cosine": np.round(S[ia, ib][keep], 6)})
-
-        return (unit.withColumn("_g", F.lit(0)).groupBy("_g")
-                .applyInPandas(all_pairs, out_schema)
-                .select("id_a", "id_b", "cosine"))
-    else:
-        dim_row = df.select(F.size(vec_col).alias("d")).first()
-        if dim_row is None:
-            return df.sparkSession.createDataFrame(
-                [], "id_a long, id_b long, cosine double")
-        rng = np.random.default_rng(seed)
-        # two independent plane sets: a boundary pair unlucky in one set
-        # gets a second chance in the other
-        planes = rng.normal(size=(2, n_planes, dim_row["d"]))
-
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def bucket(vecs: pd.Series) -> pd.Series:
-            M = np.stack(vecs.to_numpy())
-            keys = []
-            for ps in planes:
-                signs = (M @ ps.T) > 0
-                keys.append(signs.dot(1 << np.arange(n_planes)).astype(np.int64))
-            return pd.Series(list(np.stack(keys, axis=1)))
-
-        # same ids-only discipline as lsh_candidate_pairs: the bucket
-        # explode and candidate equi-join never carry the (~KBs/row)
-        # vectors — unit vectors re-attach once per SURVIVING pair
-        bucketed = unit.withColumn("bkt", bucket(F.col("v"))) \
-            .select("id", F.posexplode("bkt").alias("pset", "bucket"))
-        a = bucketed.select(F.col("id").alias("id_a"), "pset", "bucket")
-        b = bucketed.select(F.col("id").alias("id_b"), "pset", "bucket")
-        cand = (a.join(b, ["pset", "bucket"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
-                .dropDuplicates(["id_a", "id_b"]))
-        pairs = (cand
-                 .join(unit.select(F.col("id").alias("id_a"),
-                                   F.col("v").alias("va")), "id_a")
-                 .join(unit.select(F.col("id").alias("id_b"),
-                                   F.col("v").alias("vb")), "id_b"))
-
-    return (pairs.withColumn("cosine", F.round(cosine(F.col("va"), F.col("vb")), 6))
-            .filter(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", "cosine"))
+    O(n²) time and memory on a single task — the reference for small
+    inputs and oracles, not a scale path. At corpus scale use
+    curation.semantic_dedup_pairs, which runs the same kernel per k-means
+    cell."""
+    return (df.select(F.lit(0).alias("_g"), F.col(id_col).alias("id"),
+                      F.col(vec_col).alias("v"))
+            .groupBy("_g")
+            .applyInPandas(lambda pdf: _cosine_pairs(pdf, threshold),
+                           _PAIRS_SCHEMA))
 
 
 # ---------------------------------------------------------------- clusters
@@ -579,8 +508,13 @@ def _components_arrays(a: np.ndarray, b: np.ndarray) -> list[tuple]:
     return list(zip(ids.tolist(), roots.tolist()))
 
 
-def near_dup_clusters(pairs: DataFrame, max_iterations: int = 20,
-                      driver_pairs_threshold: int = 1_000_000) -> DataFrame:
+# pair count at or under which near_dup_clusters labels components on the
+# driver (see there)
+DRIVER_PAIRS_THRESHOLD = 1_000_000
+
+
+def near_dup_clusters(pairs: DataFrame,
+                      max_iterations: int = 20) -> DataFrame:
     """Candidate pairs → connected components: (id, cluster_id) for every id
     in `pairs`, cluster_id = the MINIMUM id reachable through any chain of
     pairs (transitive closure — a-b plus b-c places a, b, c together even
@@ -590,9 +524,9 @@ def near_dup_clusters(pairs: DataFrame, max_iterations: int = 20,
     path: verified near-dup pairs are tiny relative to the corpus (the
     expensive part was finding them), and each distributed propagation
     round costs ~3 Spark jobs of fixed overhead — so when the pair count
-    is at or under ``driver_pairs_threshold`` the components are computed
+    is at or under ``DRIVER_PAIRS_THRESHOLD`` the components are computed
     on the DRIVER with vectorized numpy pointer-jumping (O(E · log D)
-    array ops, <1s at the default 1M bound, ~16 MB of longs) and returned
+    array ops, <1s at the 1M bound, ~16 MB of longs) and returned
     as a small createDataFrame. The threshold check costs one count over
     the already-materialized pair checkpoint that both paths need.
 
@@ -614,7 +548,7 @@ def near_dup_clusters(pairs: DataFrame, max_iterations: int = 20,
     # pipeline upstream must not run twice), then route by size
     pairs_ck = (pairs.select("id_a", "id_b")
                 .localCheckpoint(eager=True))
-    if pairs_ck.count() <= driver_pairs_threshold:
+    if pairs_ck.count() <= DRIVER_PAIRS_THRESHOLD:
         near_dup_clusters.last_rounds = 0  # driver path: no Spark rounds
         id_type = pairs_ck.schema["id_a"].dataType
         schema = T.StructType([T.StructField("id", id_type),

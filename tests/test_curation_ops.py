@@ -352,8 +352,12 @@ class TestSemanticDedup:
             assert r["cosine"] >= 0.99
 
     def test_keep_drops_exactly_the_copies(self, spark, sf_med):
+        from fever_spark.operators.dedup import dedup_keep_canonical
+
         corpus, n_planted = self._with_planted(spark, sf_med)
-        kept = CUR.semantic_dedup_keep(corpus, threshold=0.99)
+        kept = dedup_keep_canonical(
+            corpus, CUR.semantic_dedup_pairs(corpus, threshold=0.99),
+            "vec_id")
         # canonical = lowest id → the planted high-id copies are the losers
         assert kept.count() == corpus.count() - n_planted
         assert kept.filter(F.col("vec_id") >= 10_000).count() == 0
@@ -494,9 +498,10 @@ class TestParagraphDedupBlankExemption:
 
 
 class TestPackDocumentsBoundaries:
-    """Round-3: boundaries come from approx_percentile — bin assignment is
-    invariant to boundary placement (exact per-bucket offsets + exact
-    in-bucket prefix sums reproduce the exact global prefix sum)."""
+    """Round-3: boundaries come from a bottom-k xxhash64 sample of the
+    ids — bin assignment is invariant to boundary placement (exact
+    per-bucket offsets + exact in-bucket prefix sums reproduce the exact
+    global prefix sum)."""
 
     def test_invariant_across_n_buckets(self, spark, sf_small):
         from fever_spark.operators.curation import pack_documents
@@ -524,6 +529,22 @@ class TestPackDocumentsBoundaries:
             n = i + 1
             ref[f"id{i:03d}"] = acc // 30
             acc += n
+        assert out == ref
+
+    def test_null_id_packs_first(self, spark):
+        # the id sample skips nulls; a null id orders first (bucket 0),
+        # as in a single ascending window
+        from fever_spark.operators.curation import pack_documents
+
+        df = spark.createDataFrame(
+            [(None, "a b c")] + [(i, "w " * (i % 5 + 1)) for i in range(30)],
+            "doc_id long, text string")
+        out = {r["doc_id"]: r["bin_id"]
+               for r in pack_documents(df, budget=10, n_buckets=4).collect()}
+        acc, ref = 3, {None: 0}
+        for i in range(30):
+            ref[i] = acc // 10
+            acc += i % 5 + 1
         assert out == ref
 
 

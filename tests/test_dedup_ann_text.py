@@ -40,10 +40,6 @@ class TestExactDedup:
         assert 1 in set(kept) and 2 not in set(kept) and 3 not in set(kept)
         assert {4, 5, 6, 7, 8} <= set(kept)
 
-    def test_groups(self, planted):
-        g = dedup.exact_dup_groups(planted).toPandas()
-        assert len(g) == 1 and g.iloc[0]["n_dups"] == 3 and g.iloc[0]["keep_id"] == 1
-
     def test_idempotent(self, docs):
         once = dedup.exact_dedup(docs)
         assert dedup.exact_dedup(once).count() == once.count()
@@ -131,17 +127,30 @@ class TestNgramJaccard:
 
 
 class TestEmbeddingDedup:
-    def test_no_false_positives_on_driver_table(self, spark, sf_med):
-        emb = spark.read.parquet(f"{sf_med}/embeddings.parquet")
-        bf = dedup.embedding_near_duplicates(emb, threshold=0.92,
-                                             brute_force=True).toPandas()
-        lsh = dedup.embedding_near_duplicates(emb, threshold=0.92,
-                                              n_planes=10).toPandas()
-        truth = {tuple(p) for p in zip(bf.id_a, bf.id_b)}
-        got = {tuple(p) for p in zip(lsh.id_a, lsh.id_b)}
-        assert got <= truth  # verification is exact → no false positives
+    """The IVF-cell search (curation.semantic_dedup_pairs) against the
+    exact all-pairs reference (dedup.embedding_near_duplicates); both run
+    dedup._cosine_pairs."""
 
-    def test_lsh_recall_on_planted_neardups(self, spark):
+    @staticmethod
+    def _triples(df):
+        return {(r["id_a"], r["id_b"], r["cosine"]) for r in df.collect()}
+
+    def test_no_false_positives_on_driver_table(self, spark, sf_med):
+        from fever_spark.operators.curation import semantic_dedup_pairs
+
+        emb = spark.read.parquet(f"{sf_med}/embeddings.parquet")
+        # 0.92 is the near-dup regime (no pair on this table reaches it);
+        # 0.35 yields a few hundred pairs, so the subset check has teeth
+        for t in (0.92, 0.35):
+            ref = self._triples(dedup.embedding_near_duplicates(
+                emb, threshold=t))
+            ivf = self._triples(semantic_dedup_pairs(emb, threshold=t))
+            assert ivf <= ref, t  # same exact kernel → no false positives
+        assert ivf
+
+    def test_ivf_recall_on_planted_neardups(self, spark):
+        from fever_spark.operators.curation import semantic_dedup_pairs
+
         # the driver embeddings table has NO true near-dup pairs (random
         # 64-dim vectors), so recall there is vacuous — plant 30 pairs at
         # cosine ~0.999 (a near-identical re-embedding) plus 200 decoys
@@ -157,16 +166,44 @@ class TestEmbeddingDedup:
                          [float(x) for x in rng.normal(size=64)]))
         emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         truth_pairs = {(i, 1000 + i) for i in range(30)}
-        bf = dedup.embedding_near_duplicates(emb, threshold=0.99,
-                                             brute_force=True).toPandas()
-        assert {tuple(p) for p in zip(bf.id_a, bf.id_b)} == truth_pairs
-        lsh = dedup.embedding_near_duplicates(emb, threshold=0.99).toPandas()
-        got = {tuple(p) for p in zip(lsh.id_a, lsh.id_b)}
+        ref = dedup.embedding_near_duplicates(emb, threshold=0.99).collect()
+        assert {(r["id_a"], r["id_b"]) for r in ref} == truth_pairs
+        got = {(r["id_a"], r["id_b"]) for r in
+               semantic_dedup_pairs(emb, threshold=0.99).collect()}
         assert got <= truth_pairs  # exact verify → no FPs
         recall = len(got & truth_pairs) / len(truth_pairs)
-        # dual-plane-set hyperplane LSH: P(candidate) ~ 1-(1-(1-θ/π)^16)^2
-        # ≈ 0.96 at cos 0.999; deterministic with the fixed seeds
+        # a planted pair is missed only if its two members share none of
+        # their n_probe=2 nearest cells; deterministic with the fixed seeds
         assert recall >= 0.8, recall
+
+
+class TestCosinePairsKernel:
+    """dedup._cosine_pairs, the one all-pairs cosine kernel, on its edges."""
+
+    def test_edges_and_values(self):
+        rng = np.random.default_rng(3)
+        V = rng.normal(size=(12, 8))
+        V[3] = 0.0           # zero vector
+        V[7] = 3.0 * V[2]    # same direction → cosine 1
+        ids = np.arange(111, 99, -1)  # descending: output still lo < hi
+        pdf = pd.DataFrame({"id": ids, "v": list(V)})
+        t = 0.1
+        out = dedup._cosine_pairs(pdf, t)
+        assert list(out.columns) == ["id_a", "id_b", "cosine"]
+        assert (out["id_a"] < out["id_b"]).all()
+        assert not out[["id_a", "id_b"]].isin([ids[3]]).any(axis=None)
+        ref = {}
+        for i in range(12):
+            for j in range(i + 1, 12):
+                n = np.linalg.norm(V[i]) * np.linalg.norm(V[j])
+                c = V[i] @ V[j] / n if n else 0.0
+                if c >= t:
+                    lo, hi = sorted((ids[i], ids[j]))
+                    ref[(lo, hi)] = round(c, 6)
+        got = {(a, b): c for a, b, c in out.itertuples(index=False)}
+        assert got == ref and got[(ids[7], ids[2])] == 1.0
+        one = dedup._cosine_pairs(pdf.iloc[:1], t)  # a one-member cell
+        assert len(one) == 0 and list(one.columns) == list(out.columns)
 
 
 class TestANN:
@@ -175,7 +212,7 @@ class TestANN:
         pdf = emb.toPandas()
         M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         q = M[0]
-        got = ann.brute_force_topk(emb, q, k=5).toPandas()
+        got = ann.exact_topk(emb, q, k=5).toPandas()
         Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
         sims = Mn @ (q / np.linalg.norm(q))
         expect_top = pdf["vec_id"].to_numpy()[np.argsort(-sims)][:5]
@@ -191,7 +228,7 @@ class TestANN:
         hits = 0
         for qi in range(5):
             q = M[qi]
-            exact = set(ann.brute_force_topk(emb, q, k=10).toPandas()["vec_id"])
+            exact = set(ann.exact_topk(emb, q, k=10).toPandas()["vec_id"])
             approx = set(ann.ivf_topk(assigned, C, q, k=10, n_probe=4)
                          .toPandas()["vec_id"])
             hits += len(exact & approx) / 10
@@ -271,7 +308,7 @@ class TestIVFPartitionedCells:
         q = np.asarray(emb.filter(F.col("vec_id") == 1).first()["embedding"])
         C = ann.train_ivf_centroids(emb, n_cells=16)
         assigned = ann.ivf_assign(emb, C)
-        exact = [r["vec_id"] for r in ann.brute_force_topk(emb, q, k=10).collect()]
+        exact = [r["vec_id"] for r in ann.exact_topk(emb, q, k=10).collect()]
         full = [r["vec_id"] for r in
                 ann.ivf_topk(assigned, C, q, k=10, n_probe=16).collect()]
         assert full == exact
@@ -439,23 +476,13 @@ class TestShingleSizeValidation:
                                  shingle_size=64).limit(1).collect()
 
 
-class TestLSHNumHashesParam:
-    def test_explicit_matches_probed(self, spark, planted):
-        sigs = dedup.minhash_signatures(planted, num_hashes=64).cache()
-        probed = {(r["id_a"], r["id_b"]) for r in
-                  dedup.lsh_candidate_pairs(sigs, bands=16).collect()}
-        explicit = {(r["id_a"], r["id_b"]) for r in
-                    dedup.lsh_candidate_pairs(sigs, bands=16,
-                                              num_hashes=64).collect()}
-        assert probed == explicit and len(explicit) > 0
-
-
 class TestClusterConvergenceTelemetry:
-    def test_round_count_recorded_and_small(self, spark):
+    def test_round_count_recorded_and_small(self, spark, monkeypatch):
         pairs = spark.createDataFrame(
             [(2, 1), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long")
         # force the DISTRIBUTED path (tiny inputs route to the driver one)
-        dedup.near_dup_clusters(pairs, driver_pairs_threshold=0)
+        monkeypatch.setattr(dedup, "DRIVER_PAIRS_THRESHOLD", 0)
+        dedup.near_dup_clusters(pairs)
         # chain diameter 3 → converges by round 3; cadence-2 checking may
         # run one extra no-op round, never more
         assert 1 <= dedup.near_dup_clusters.last_rounds <= 6
@@ -465,30 +492,31 @@ class TestDriverComponentsParity:
     """The size-gated driver union-find must be byte-identical to the
     distributed min-label propagation — same (id, cluster_id) rows."""
 
-    def _both(self, spark, rows, schema):
+    def _both(self, spark, monkeypatch, rows, schema):
         pairs = spark.createDataFrame(rows, schema)
         drv = {(r["id"], r["cluster_id"]) for r in
                dedup.near_dup_clusters(pairs).collect()}
         assert dedup.near_dup_clusters.last_rounds == 0  # driver path ran
-        dist = {(r["id"], r["cluster_id"]) for r in
-                dedup.near_dup_clusters(
-                    pairs, driver_pairs_threshold=0).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "DRIVER_PAIRS_THRESHOLD", 0)
+            dist = {(r["id"], r["cluster_id"]) for r in
+                    dedup.near_dup_clusters(pairs).collect()}
         assert dedup.near_dup_clusters.last_rounds >= 1  # distributed ran
         assert drv == dist and len(drv) > 0
 
-    def test_random_graphs_match_distributed(self, spark):
+    def test_random_graphs_match_distributed(self, spark, monkeypatch):
         import random
 
         rng = random.Random(7)
         # 3 shapes: sparse random, long chain + islands, star with spokes
         rows = [(rng.randrange(40), rng.randrange(40)) for _ in range(60)]
         rows = [(a, b) for a, b in rows if a != b]
-        self._both(spark, rows, "id_a long, id_b long")
+        self._both(spark, monkeypatch, rows, "id_a long, id_b long")
         # diameter 15 fits the distributed path's max_iterations; the
         # DRIVER path's pointer jumping is O(log D) and also handles
         # chains past that bound (checked separately below)
         chain = [(i, i + 1) for i in range(15)] + [(100, 101), (200, 201)]
-        self._both(spark, chain, "id_a long, id_b long")
+        self._both(spark, monkeypatch, chain, "id_a long, id_b long")
         long_chain = spark.createDataFrame(
             [(i, i + 1) for i in range(60)], "id_a long, id_b long")
         cl = {r["cluster_id"] for r in
@@ -496,12 +524,12 @@ class TestDriverComponentsParity:
         assert cl == {0}  # one component, min id 0 — beyond the
         # distributed path's 20-round diameter budget
         star = [(0, i) for i in range(1, 30)]
-        self._both(spark, star, "id_a long, id_b long")
+        self._both(spark, monkeypatch, star, "id_a long, id_b long")
 
-    def test_string_ids_lexicographic_min(self, spark):
+    def test_string_ids_lexicographic_min(self, spark, monkeypatch):
         # min = lexicographic for strings on BOTH paths
         rows = [("b", "c"), ("c", "aa"), ("zz", "z")]
-        self._both(spark, rows, "id_a string, id_b string")
+        self._both(spark, monkeypatch, rows, "id_a string, id_b string")
         pairs = spark.createDataFrame(rows, "id_a string, id_b string")
         cl = {r["id"]: r["cluster_id"] for r in
               dedup.near_dup_clusters(pairs).collect()}

@@ -48,15 +48,18 @@ class TestTraining:
         again = json.loads(json.dumps(model))
         assert again["coefficients"] == model["coefficients"]
 
-    def test_driver_path_matches_distributed_path(self, spark, model):
-        # `model` trained via the small-sample driver IRLS; threshold=0
+    def test_driver_path_matches_distributed_path(self, spark, model,
+                                                  monkeypatch):
+        # `model` trained via the small-sample driver IRLS; threshold 0
         # forces the distributed per-iteration aggregation loop. Same
         # updates, same stop rule — coefficients must agree to float
         # accumulation order (ridge keeps the optimum well-conditioned)
+        from fever_spark.functions import quality_clf
+
         trusted = spark.createDataFrame([(t,) for t in PROSE], "text string")
         crawl = spark.createDataFrame([(t,) for t in JUNK], "text string")
-        dist = train_quality_classifier(trusted, crawl,
-                                        driver_rows_threshold=0)
+        monkeypatch.setattr(quality_clf, "DRIVER_ROWS_THRESHOLD", 0)
+        dist = train_quality_classifier(trusted, crawl)
         for f in FEATURE_NAMES:
             assert model["coefficients"][f] == pytest.approx(
                 dist["coefficients"][f], rel=1e-5, abs=1e-7)

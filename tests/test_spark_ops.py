@@ -228,7 +228,7 @@ class TestReviewRegressions2:
         docs = spark.read.parquet(f"{sf_small}/documents.parquet").limit(60)
         sigs = dedup.minhash_signatures(docs, num_hashes=16)
         # bands=64 > 16 hashes: must NOT degenerate into all-pairs
-        cand = dedup.lsh_candidate_pairs(sigs, bands=64)
+        cand = dedup.lsh_candidate_pairs(sigs, bands=64, num_hashes=16)
         n_docs = 60
         assert cand.count() < n_docs * (n_docs - 1) / 2
 
