@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fever_spark.hashing import _splitmix64_vec
+
 __all__ = ["train_ngram_lm", "perplexity", "NgramLM"]
 
 # ------------------------------------------------------ vectorized scoring
@@ -44,14 +46,6 @@ __all__ = ["train_ngram_lm", "perplexity", "NgramLM"]
 # float64 rounding (tested at rel=1e-9).
 
 _MIX = np.uint64(0x9E3779B97F4A7C15)
-
-
-def _splitmix64(x: "np.ndarray") -> "np.ndarray":
-    """Vectorized splitmix64 finalizer over uint64 — the per-token hash."""
-    x = (x + np.uint64(0x9E3779B97F4A7C15))
-    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return x ^ (x >> np.uint64(31))
 
 
 def _poly_hash(id_mat: "np.ndarray", tok_hash: "np.ndarray") -> "np.ndarray":
@@ -127,8 +121,8 @@ class _VectorLM:
         self.index = pd.Index(np.asarray(vocab_tokens, dtype=object))
         ids = {t: i for i, t in enumerate(tokens)}
         self.bos, self.eos, self.unk = ids[BOS], ids[EOS], ids[UNK]
-        self.tok_hash = _splitmix64(
-            np.arange(len(tokens), dtype=np.uint64))
+        self.tok_hash = _splitmix64_vec(
+            np.arange(len(tokens), dtype=np.uint64), 0)
         self.tot1 = float(lm.context_totals[0].get((), 0))
         self.tables = [self._build(lm.counts[n - 1], ids)
                        for n in range(1, self.order + 1)]

@@ -9,7 +9,8 @@ crawl batches arrive, without ever rescanning the history:
       (Bloom FPs never drop new docs)
     → near-dup screen (optional): collapse near-dup clusters WITHIN the
       batch (canonical doc kept), then LSH-band the survivors against the
-      corpus's persisted MinHash signature index
+      corpus's persisted MinHash signature index; the batch is signed
+      once, and the same signatures feed the index write
     → append survivors to the corpus + update the three indexes
       (fingerprints, signatures, Bloom).
 
@@ -49,7 +50,7 @@ from fever_spark.operators.dedup import (SIGNATURE_HASH_FAMILY,
                                          dedup_keep_canonical,
                                          incremental_exact_dedup,
                                          incremental_near_duplicates,
-                                         minhash_near_duplicates,
+                                         lsh_candidate_pairs,
                                          minhash_signatures)
 from fever_spark.sketch.bloom import BloomFilter
 
@@ -179,41 +180,46 @@ def ingest(spark: SparkSession, batch_path: str, corpus_dir: str,
     counts["after_exact_screen"] = kept.count()
     _mark("exact_screen")
 
+    # ONE signing pass over the survivors: the within-batch pairs, the
+    # corpus screen and the signature-index write all read these rows,
+    # each semi-joined to the survivors of the steps before it
+    sigs = minhash_signatures(kept, text_col, id_col, num_hashes,
+                              shingle_size)
     if near_dup_threshold is not None:
+        sigs = sigs.localCheckpoint(eager=False)
         # WITHIN-batch near-dups first (re-crawls of one page under two
         # URLs arrive together): keep the canonical doc per cluster, or
         # both copies would enter the corpus permanently — later batches
         # are screened, the founding batch never was
-        batch_pairs = minhash_near_duplicates(
-            kept, text_col, id_col, threshold=near_dup_threshold,
-            num_hashes=num_hashes, shingle_size=shingle_size) \
-            .select("id_a", "id_b")
+        batch_pairs = (lsh_candidate_pairs(sigs, id_col,
+                                           num_hashes=num_hashes)
+                       .filter(F.col("est_jaccard") >= near_dup_threshold)
+                       .select("id_a", "id_b"))
         kept = dedup_keep_canonical(kept, batch_pairs, id_col) \
             .localCheckpoint(eager=False)
         counts["after_batch_near_dup"] = kept.count()
         _mark("batch_near_dup")
-    if near_dup_threshold is not None and corpus_exists \
-            and os.path.isdir(sig_dir):
-        old_sigs = (spark.read.parquet(sig_dir)
-                    .filter(F.col("ingest") != batch_id)
-                    .select(id_col, "minhash"))
-        hits = incremental_near_duplicates(
-            kept, old_sigs, text_col, id_col,
-            threshold=near_dup_threshold, num_hashes=num_hashes,
-            shingle_size=shingle_size).select("new_id").distinct() \
-            .withColumnRenamed("new_id", id_col)
-        kept = kept.join(hits, id_col, "left_anti") \
-            .localCheckpoint(eager=False)
-        counts["after_near_dup_screen"] = kept.count()
-        _mark("near_dup_screen")
+        if corpus_exists and os.path.isdir(sig_dir):
+            old_sigs = (spark.read.parquet(sig_dir)
+                        .filter(F.col("ingest") != batch_id)
+                        .select(id_col, "minhash"))
+            hits = incremental_near_duplicates(
+                sigs.join(kept.select(id_col), id_col, "left_semi"),
+                old_sigs, id_col, threshold=near_dup_threshold,
+                num_hashes=num_hashes) \
+                .select(F.col("new_id").alias(id_col)).distinct()
+            kept = kept.join(hits, id_col, "left_anti") \
+                .localCheckpoint(eager=False)
+            counts["after_near_dup_screen"] = kept.count()
+            _mark("near_dup_screen")
+        sigs = sigs.join(kept.select(id_col), id_col, "left_semi")
 
     # idempotent batch partitions: a re-run overwrites its own slice
     kept.write.mode("overwrite").parquet(_part(corpus_dir, batch_id))
     _mark("corpus_append")
     kept.select(fingerprint(F.col(text_col)).alias("_fp")) \
         .write.mode("overwrite").parquet(_part(fp_dir, batch_id))
-    minhash_signatures(kept, text_col, id_col, num_hashes, shingle_size) \
-        .write.mode("overwrite").parquet(_part(sig_dir, batch_id))
+    sigs.write.mode("overwrite").parquet(_part(sig_dir, batch_id))
 
     # Bloom state: a distributed-built filter over ONLY this batch's
     # survivors becomes the batch's delta file; the merged fast-path

@@ -174,7 +174,8 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = 128,
                        shingle_size: int = 3, seed: int = 0) -> DataFrame:
     """→ (id_col, minhash: array<bigint>). K-M double hashing gives the
-    num_hashes permutations from two SipHash passes over each shingle."""
+    num_hashes permutations as h1 + k*h2 from two seeded splitmix64
+    hashes of each uint64 shingle hash (``double_hash64``)."""
     if not 1 <= int(shingle_size) <= len(_SHINGLE_MULT):
         # the vectorized shingle kernel combines a window of token hashes
         # with one fixed multiplier per position — fail loudly here rather
@@ -214,12 +215,8 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                         acc.view(np.int64), starts)
         return pd.Series(list(out))
 
-    target = df.select(id_col, F.col(text_col))
-    if _few_input_partitions(df):
-        # small parquet inputs arrive as 1 partition — spread signature work
-        target = target.repartition(
-            df.sparkSession.sparkContext.defaultParallelism)
-    return target.select(id_col, sig(F.col(text_col)).alias("minhash"))
+    return _text_input(df, text_col, id_col).select(
+        id_col, sig(F.col(text_col)).alias("minhash"))
 
 
 def _few_input_partitions(df: DataFrame, threshold: int = 4) -> bool:
@@ -230,6 +227,16 @@ def _few_input_partitions(df: DataFrame, threshold: int = 4) -> bool:
     except Exception:
         return False
     return 0 < len(files) < threshold
+
+
+def _text_input(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id_col, text_col) for a signing UDF (MinHash, SimHash); small
+    parquet inputs arrive as 1 partition, so spread them over the cores."""
+    target = df.select(id_col, F.col(text_col))
+    if _few_input_partitions(df):
+        target = target.repartition(
+            df.sparkSession.sparkContext.defaultParallelism)
+    return target
 
 
 def minhash_jaccard(sig_a, sig_b) -> F.Column:
@@ -252,60 +259,75 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
 
     ``num_hashes`` is the signature length the signatures were built
     with (minhash_near_duplicates threads its own parameter through)."""
+    return _lsh_pairs(signatures, None, id_col, bands, num_hashes)
+
+
+def _bucket_pairs(a: DataFrame, b: DataFrame | None,
+                  keys: list[str]) -> DataFrame:
+    """The one distinct-pairs bucket join behind MinHash-LSH (within and
+    across corpora) and SimHash. ``a`` and ``b`` carry ``id``, the bucket
+    ``keys`` and any payload columns; every non-key column ``c`` comes out
+    as ``c_a`` / ``c_b``. ``b=None`` joins ``a`` with itself and keeps
+    ``id_a < id_b``. Returns one row per distinct (id_a, id_b), keys
+    dropped: pairs sharing several buckets collapse to one."""
+    def side(df: DataFrame, tag: str) -> DataFrame:
+        return df.select(*keys, *[F.col(c).alias(f"{c}_{tag}")
+                                  for c in df.columns if c not in keys])
+
+    self_join = b is None
+    pairs = side(a, "a").join(side(a if self_join else b, "b"), keys)
+    if self_join:
+        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
+    return (pairs.select(*[c for c in pairs.columns if c not in keys])
+            .dropDuplicates(["id_a", "id_b"]))
+
+
+def _lsh_pairs(sigs_a: DataFrame, sigs_b: DataFrame | None, id_col: str,
+               bands: int, num_hashes: int) -> DataFrame:
+    """(id_a, id_b, est_jaccard) for every pair sharing a band hash:
+    within ``sigs_a`` (``sigs_b=None``, id_a < id_b) or from ``sigs_a``
+    to ``sigs_b``. Both are (id_col, minhash) signature frames."""
     # never more bands than signature rows: bands beyond the signature
     # would slice empty arrays → one constant hash shared by EVERY doc →
     # the equi-join degenerates into an all-pairs cross join
     bands = min(bands, num_hashes)
-    rows_per_band = max(1, num_hashes // bands)
+    rows = max(1, num_hashes // bands)
 
-    # the exploded band rows and the candidate join carry IDS ONLY — the
-    # 128-long signature arrays (~1 KB/doc) stay out of the bands×docs
-    # explode and the equi-join shuffle (~50x fewer candidate-shuffle bytes);
-    # signatures are re-attached once per SURVIVING pair below
-    banded = _band_hashes(signatures, id_col, bands, rows_per_band)
+    def banded(sigs: DataFrame) -> DataFrame:
+        # (id, band, band_hash), IDS ONLY: the 128-long signature arrays
+        # (~1 KB/doc) stay out of the bands×docs explode and the join
+        # shuffle (~50x fewer candidate-shuffle bytes). The persisted
+        # index stores SIGNATURES, so both sides recompute band hashes
+        # here and the formula can evolve without versioning state. The
+        # band hash chains xxhash64(acc, element) over the slice; every
+        # other formula, a groupBy+collect_list rewrite and a bucket-count
+        # prefilter measured slower (see BENCH/MEASUREMENTS.md)
+        return sigs.select(
+            F.col(id_col).alias("id"),
+            F.posexplode(F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.aggregate(
+                    F.slice("minhash", b * rows + 1, rows),
+                    F.lit(-1205034819632174695),  # xxhash64 chain seed
+                    lambda acc, x: F.xxhash64(acc, x)))).alias(
+                        "band", "band_hash"))
 
-    # no bucket-count prefilter: AQE already reuses the banded explode for
-    # both sides, so it measured slower; see BENCH/MEASUREMENTS.md
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "band_hash")
-    cand = (a.join(b, ["band", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"]))
-    # no signature semi-filter: AQE broadcasts the pair side, so it
-    # measured net slower; bring it back only gated on a pair frame too
-    # big to broadcast; see BENCH/MEASUREMENTS.md
-    sig_a = signatures.select(F.col(id_col).alias("id_a"),
-                              F.col("minhash").alias("sig_a"))
-    sig_b = signatures.select(F.col(id_col).alias("id_b"),
-                              F.col("minhash").alias("sig_b"))
+    cand = _bucket_pairs(banded(sigs_a),
+                         None if sigs_b is None else banded(sigs_b),
+                         ["band", "band_hash"])
+    # signatures re-attach once per SURVIVING pair. No signature
+    # semi-filter: AQE broadcasts the pair side, so it measured net
+    # slower; bring it back only gated on a pair frame too big to
+    # broadcast; see BENCH/MEASUREMENTS.md
+    sigs_b = sigs_a if sigs_b is None else sigs_b
+    sig_a = sigs_a.select(F.col(id_col).alias("id_a"),
+                          F.col("minhash").alias("sig_a"))
+    sig_b = sigs_b.select(F.col(id_col).alias("id_b"),
+                          F.col("minhash").alias("sig_b"))
     return (cand.join(sig_a, "id_a").join(sig_b, "id_b")
             .select("id_a", "id_b",
                     minhash_jaccard(F.col("sig_a"), F.col("sig_b"))
                     .alias("est_jaccard")))
-
-
-def _band_hashes(signatures: DataFrame, id_col: str, bands: int,
-                 rows_per_band: int) -> DataFrame:
-    """(id, band, band_hash) — the ids-only LSH band explode, shared by the
-    within-corpus and cross-corpus candidate joins (band hashes must be
-    bit-identical between them for incremental LSH to work; the persisted
-    index stores SIGNATURES, so both sides always recompute band hashes
-    with this code and the formula can evolve without versioning state).
-
-    The band hash chains ``xxhash64(acc, element)`` over the slice —
-    long-only arithmetic the whole way; every other formula tried, and a
-    groupBy+collect_list rewrite of the candidate join, measured slower
-    (see BENCH/MEASUREMENTS.md)."""
-    return signatures.select(
-        id_col,
-        F.posexplode(F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.aggregate(
-                F.slice("minhash", b * rows_per_band + 1, rows_per_band),
-                F.lit(-1205034819632174695),  # xxhash64 chain seed
-                lambda acc, x: F.xxhash64(acc, x)))).alias(
-                    "band", "band_hash"))
 
 
 def minhash_near_duplicates(df: DataFrame, text_col: str = "text",
@@ -357,11 +379,8 @@ def simhash_column(df: DataFrame, text_col: str = "text",
             packed |= out[:, b] << np.uint64(b)
         return pd.Series(packed.astype(np.int64))
 
-    target = df.select(id_col, F.col(text_col))
-    if _few_input_partitions(df):
-        target = target.repartition(
-            df.sparkSession.sparkContext.defaultParallelism)
-    return target.select(id_col, sim(F.col(text_col)).alias("simhash"))
+    return _text_input(df, text_col, id_col).select(
+        id_col, sim(F.col(text_col)).alias("simhash"))
 
 
 def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
@@ -380,17 +399,12 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
     band_exprs = [F.shiftrightunsigned(F.col("simhash"), b * width)
                   .bitwiseAND(F.lit(mask)) for b in range(n_bands)]
     banded = sh.select(
-        id_col, "simhash",
+        F.col(id_col).alias("id"), "simhash",
         F.posexplode(F.array(*band_exprs)).alias("band", "band_key"))
-    a = banded.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"),
-                      "band", "band_key")
-    b = banded.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"),
-                      "band", "band_key")
-    pairs = (a.join(b, ["band", "band_key"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .dropDuplicates(["id_a", "id_b"]))
+    # the 8-byte simhash rides inside the join: no re-attach join
+    pairs = _bucket_pairs(banded, None, ["band", "band_key"])
     return (pairs.withColumn("hamming", F.bit_count(
-        F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming"))
 
@@ -437,17 +451,20 @@ def _cosine_pairs(pdf: pd.DataFrame, threshold: float) -> pd.DataFrame:
     numpy kernel behind both embedding near-dup paths (the all-pairs
     reference below and curation.semantic_dedup_pairs' IVF cells).
 
-    One matmul over unit vectors (norms floored at 1e-12, so a zero
-    vector has cosine 0 with everything); the UNROUNDED cosine is
-    compared to ``threshold`` (DuckDB's ``list_cosine_similarity >= t``
-    rule), and each kept pair is emitted once as (lo id, hi id, cosine
-    rounded to 6 places). Memory is O(group²): the group size is the
-    caller's knob."""
+    One matmul over unit vectors; a pair that involves a zero vector
+    has cosine -1.0, as DuckDB's ``list_cosine_similarity`` gives it. The
+    UNROUNDED cosine is compared to ``threshold`` (DuckDB's
+    ``list_cosine_similarity >= t`` rule), and each kept pair is emitted
+    once as (lo id, hi id, cosine rounded to 6 places). Memory is
+    O(group²): the group size is the caller's knob."""
     ids = pdf["id"].to_numpy()
     M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-    M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+    norms = np.linalg.norm(M, axis=1)
+    zero = norms == 0
+    M /= np.where(zero, 1.0, norms)[:, None]
     ia, ib = np.triu_indices(len(M), k=1)
     cos = (M @ M.T)[ia, ib]
+    cos[zero[ia] | zero[ib]] = -1.0
     keep = cos >= threshold
     a, b = ids[ia[keep]], ids[ib[keep]]
     return pd.DataFrame({"id_a": np.minimum(a, b), "id_b": np.maximum(a, b),
@@ -500,12 +517,6 @@ def _components_roots(a: np.ndarray,
         if not moved.any() and not jumped:
             break
     return ids, ids[parent]
-
-
-def _components_arrays(a: np.ndarray, b: np.ndarray) -> list[tuple]:
-    """(id, min_reachable_id) tuples — see _components_roots."""
-    ids, roots = _components_roots(a, b)
-    return list(zip(ids.tolist(), roots.tolist()))
 
 
 # pair count at or under which near_dup_clusters labels components on the
@@ -729,48 +740,27 @@ def incremental_exact_dedup(new_df: DataFrame, seen_bloom_bc,
     return clean.unionByName(suspect).drop("_fp")
 
 
-def incremental_near_duplicates(new_df: DataFrame,
+def incremental_near_duplicates(new_signatures: DataFrame,
                                 old_signatures: DataFrame,
-                                text_col: str = "text",
                                 id_col: str = "doc_id",
                                 threshold: float = 0.7,
-                                num_hashes: int = 128, bands: int = 32,
-                                shingle_size: int = 3,
-                                seed: int = 0) -> DataFrame:
+                                num_hashes: int = 128,
+                                bands: int = 32) -> DataFrame:
     """Near-dup pairs BETWEEN a new batch and the already-ingested corpus:
-    (new_id, old_id, est_jaccard >= threshold). The corpus side is its
-    persisted signature table (``minhash_signatures(old)`` written to
-    parquet at ingestion time — the reusable index), so incremental
-    near-dup never re-reads or re-signs the history; it bands the new
-    batch and equi-joins band hashes against the corpus's banded
-    signatures. Signature params (num_hashes, shingle_size, seed) MUST
-    match the ones the corpus index was built with — band hashes are only
-    comparable when the underlying permutations are.
+    (new_id, old_id, est_jaccard >= threshold). Both sides are
+    (id_col, minhash) signature frames; the corpus side is its persisted
+    signature table (``minhash_signatures(old)`` written to parquet at
+    ingestion time — the reusable index), so incremental near-dup never
+    re-reads or re-signs the history. The new side's signatures MUST come
+    from the same (num_hashes, shingle_size, seed) as the index — band
+    hashes are only comparable when the underlying permutations are.
 
-    Scale shape: same ids-only discipline as lsh_candidate_pairs — the
-    band join ships (id, band, hash8) rows; full signatures re-attach
-    only to surviving candidates. The corpus banding is recomputed from
-    the signature table (cheap codegen over arrays), never from text.
-    """
-    bands = min(bands, num_hashes)
-    rows_per_band = max(1, num_hashes // bands)
-    new_sigs = minhash_signatures(new_df, text_col, id_col, num_hashes,
-                                  shingle_size, seed) \
-        .localCheckpoint(eager=False)
-
-    a = _band_hashes(new_sigs, id_col, bands, rows_per_band) \
-        .withColumnRenamed(id_col, "new_id")
-    b = _band_hashes(old_signatures, id_col, bands, rows_per_band) \
-        .withColumnRenamed(id_col, "old_id")
-    cand = (a.join(b, ["band", "band_hash"])
-            .select("new_id", "old_id")
-            .dropDuplicates(["new_id", "old_id"]))
-    sig_new = new_sigs.select(F.col(id_col).alias("new_id"),
-                              F.col("minhash").alias("sig_new"))
-    sig_old = old_signatures.select(F.col(id_col).alias("old_id"),
-                                    F.col("minhash").alias("sig_old"))
-    return (cand.join(sig_new, "new_id").join(sig_old, "old_id")
-            .select("new_id", "old_id",
-                    minhash_jaccard(F.col("sig_new"), F.col("sig_old"))
-                    .alias("est_jaccard"))
-            .filter(F.col("est_jaccard") >= threshold))
+    Same join as lsh_candidate_pairs (``_lsh_pairs``): the band join
+    ships (id, band, hash8) rows; full signatures re-attach only to
+    surviving candidates. The corpus banding is recomputed from the
+    signature table (cheap codegen over arrays), never from text."""
+    return (_lsh_pairs(new_signatures, old_signatures, id_col, bands,
+                       num_hashes)
+            .filter(F.col("est_jaccard") >= threshold)
+            .select(F.col("id_a").alias("new_id"),
+                    F.col("id_b").alias("old_id"), "est_jaccard"))

@@ -137,9 +137,7 @@ def build_sketches(df: DataFrame, keys: list[str],
                 # stays int64; a nullable int64 would decay to float64 and
                 # corrupt 64-bit hash values beyond 2^53). The worker skips
                 # the sentinel, preserving null-skip semantics.
-                extra_exprs.append(
-                    F.when(F.col(s.column).isNotNull(), F.xxhash64(s.column))
-                    .otherwise(F.lit(_PREHASH_NULL)).alias(ph))
+                extra_exprs.append(prehash_col(s.column).alias(ph))
             s = replace(s, column=ph)
         spec_list.append(s)
 

@@ -196,7 +196,7 @@ class TestCosinePairsKernel:
         for i in range(12):
             for j in range(i + 1, 12):
                 n = np.linalg.norm(V[i]) * np.linalg.norm(V[j])
-                c = V[i] @ V[j] / n if n else 0.0
+                c = V[i] @ V[j] / n if n else -1.0
                 if c >= t:
                     lo, hi = sorted((ids[i], ids[j]))
                     ref[(lo, hi)] = round(c, 6)
@@ -204,6 +204,35 @@ class TestCosinePairsKernel:
         assert got == ref and got[(ids[7], ids[2])] == 1.0
         one = dedup._cosine_pairs(pdf.iloc[:1], t)  # a one-member cell
         assert len(one) == 0 and list(one.columns) == list(out.columns)
+
+    def test_zero_vector_matches_duckdb_at_threshold_zero(self, spark):
+        """DuckDB's list_cosine_similarity gives -1.0 to any pair with a
+        zero vector in it (zero-zero too), so at a threshold in (-1, 0]
+        neither embedding path may pair a zero vector."""
+        import duckdb
+
+        from fever_spark.operators.curation import semantic_dedup_pairs
+
+        rng = np.random.default_rng(5)
+        rows = [(int(i), [float(x) for x in rng.normal(size=8)])
+                for i in range(24)]
+        rows += [(100, [0.0] * 8), (101, [0.0] * 8)]
+        emb = spark.createDataFrame(rows,
+                                    "vec_id long, embedding array<double>")
+        con = duckdb.connect()
+        con.register("e", pd.DataFrame(rows, columns=["vec_id", "v"]))
+        expect = {(a, b): c for a, b, c in con.execute("""
+            SELECT a.vec_id, b.vec_id, list_cosine_similarity(a.v, b.v)
+            FROM e a JOIN e b ON a.vec_id < b.vec_id
+            WHERE list_cosine_similarity(a.v, b.v) >= 0.0""").fetchall()}
+        ref = {(r["id_a"], r["id_b"]): r["cosine"] for r in
+               dedup.embedding_near_duplicates(emb, threshold=0.0)
+               .collect()}
+        assert ref.keys() == expect.keys() and expect
+        assert all(abs(ref[k] - expect[k]) < 1e-6 for k in ref)
+        ivf = {(r["id_a"], r["id_b"]) for r in
+               semantic_dedup_pairs(emb, threshold=0.0).collect()}
+        assert ivf <= expect.keys()
 
 
 class TestANN:
@@ -776,7 +805,8 @@ class TestIncrementalDedup:
             for i in range(10)]
         new = spark.createDataFrame(near + fresh, "doc_id long, text string")
 
-        pairs = incremental_near_duplicates(new, old_index, threshold=0.5)
+        pairs = incremental_near_duplicates(minhash_signatures(new),
+                                            old_index, threshold=0.5)
         got = {(r["new_id"], r["old_id"]) for r in pairs.collect()}
         for i in range(5):
             assert (900 + i, i) in got, f"missed near-dup pair {i}"
@@ -800,7 +830,8 @@ class TestIncrementalDedup:
             [(100, base + " lambda")], "doc_id long, text string")
         inc = {(r["new_id"], r["old_id"]) for r in
                incremental_near_duplicates(
-                   new, minhash_signatures(old), threshold=0.5).collect()}
+                   minhash_signatures(new), minhash_signatures(old),
+                   threshold=0.5).collect()}
         full = minhash_near_duplicates(old.unionByName(new), threshold=0.5)
         cross = {(max(r["id_a"], r["id_b"]), min(r["id_a"], r["id_b"]))
                  for r in full.collect()

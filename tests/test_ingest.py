@@ -121,6 +121,43 @@ class TestIngest:
         kept = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
         assert kept == {7, 9}                             # canonical kept
 
+    def test_each_batch_signed_once(self, spark, tmp_path, monkeypatch):
+        """With the near-dup screen on, the within-batch pairs, the corpus
+        screen and the signature-index write share ONE signing pass."""
+        import importlib
+
+        from fever_spark.operators import dedup
+
+        # the package re-exports the function under the module's name
+        ingest_mod = importlib.import_module("fever_spark.jobs.ingest")
+
+        real = dedup.minhash_signatures
+        calls = []
+
+        def spy(*args, **kwargs):
+            calls.append(1)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(dedup, "minhash_signatures", spy)
+        monkeypatch.setattr(ingest_mod, "minhash_signatures", spy)
+        corpus = str(tmp_path / "corpus")
+        state = str(tmp_path / "state")
+        toks = _doc(3)[1].split()
+        toks[5] = "mutated"
+        batches = [[_doc(i) for i in range(6)],
+                   [(500, " ".join(toks)), _doc(600), _doc(601)]]
+        for k, rows in enumerate(batches):
+            path = str(tmp_path / f"b{k}")
+            _write_batch(spark, path, rows)
+            calls.clear()
+            m = ingest(spark, path, corpus, state, batch_id=f"b{k}",
+                       bloom_capacity=10_000, near_dup_threshold=0.6)
+            assert len(calls) == 1, (k, len(calls))
+        assert m["counts"]["after_near_dup_screen"] == 2
+        sigs = spark.read.parquet(os.path.join(state, "signatures"))
+        assert {r["doc_id"] for r in sigs.collect()} == \
+            {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
+
     def test_param_change_rejected_before_writes(self, spark, tmp_path):
         import pytest
         corpus = str(tmp_path / "corpus")

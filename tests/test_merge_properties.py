@@ -255,11 +255,11 @@ def test_driver_components_match_scalar_union_find(edges):
     """The numpy hook-and-jump kernel behind near_dup_clusters' driver
     path must equal a scalar path-compressed union-find with min-root
     relabeling on EVERY random graph (self-loops and duplicates included)."""
-    from fever_spark.operators.dedup import _components_arrays
+    from fever_spark.operators.dedup import _components_roots
 
     a = np.array([e[0] for e in edges], dtype=np.int64)
     b = np.array([e[1] for e in edges], dtype=np.int64)
-    got = dict(_components_arrays(a, b))
+    got = dict(zip(*(x.tolist() for x in _components_roots(a, b))))
 
     parent = {}
 

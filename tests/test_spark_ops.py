@@ -72,6 +72,27 @@ def test_cms_estimates_vs_exact(spark, events):
         assert r["est"] - r["count"] <= 1e-4 * n_total * 3
 
 
+def test_prehashed_cms_probed_with_prehash_col_never_undercounts(spark,
+                                                                 events):
+    """A prehash=True CMS holds xxhash64 keys, so its probes go through
+    prehash_col(item) — the probe sketchctl points users at."""
+    from fever_spark.ops import prehash_col
+
+    specs = [SketchSpec("type_counts", "cms", "event_type",
+                        {"epsilon": 1e-3, "delta": 1e-3}, prehash=True)]
+    merged = two_level_merge(build_sketches(events, [], specs), [])
+    exact = events.filter(F.col("event_type").isNotNull()) \
+        .groupBy("event_type").count()
+    probed = exact.crossJoin(merged.select("state")).select(
+        "count", cms_estimate_col(F.col("state"),
+                                  prehash_col("event_type")).alias("est")) \
+        .collect()
+    assert probed
+    assert all(r["est"] >= r["count"] for r in probed)
+    n_total = events.count()
+    assert all(r["est"] - r["count"] <= 1e-3 * n_total * 3 for r in probed)
+
+
 def test_kll_and_tdigest_quantiles_vs_exact(spark, events):
     specs = [SketchSpec("kll_value", "kll", "value", {"k": 200}),
              SketchSpec("td_value", "tdigest", "value", {"delta": 200.0})]
