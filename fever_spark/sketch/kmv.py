@@ -161,7 +161,9 @@ def kmv_intersection_estimate(a: KMVSketch, b: KMVSketch) -> float:
         return 0.0
     in_both = (np.isin(union.hashes, a.hashes)
                & np.isin(union.hashes, b.hashes))
-    return float(in_both.sum() / len(union.hashes)) * union.estimate()
+    # multiply before dividing: below k the union estimate is len(hashes),
+    # so the count comes back exact instead of off by one rounding step
+    return float(in_both.sum()) * union.estimate() / len(union.hashes)
 
 
 def kmv_jaccard(a: KMVSketch, b: KMVSketch) -> float:

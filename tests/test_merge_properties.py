@@ -11,7 +11,7 @@ permutation and association.
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from fever_spark.sketch import (
     BloomFilter, CountMinSketch, HyperLogLog, KLLSketch, TDigest,
@@ -201,6 +201,9 @@ kmv_sets = st.tuples(
 
 @settings(max_examples=30, deadline=None)
 @given(kmv_sets)
+# exact regime where J * |A u B| = 7/25 * 25 rounds to 7.000000000000001
+@example(ab=([0, 1, 2, 3, 4, 5, 6, 7, 8, 1500, 1501, 1502, 1503, 1504, 1505,
+              1506], list(range(1500, 1516))))
 def test_kmv_setop_identities(ab):
     from fever_spark.sketch import (KMVSketch, kmv_intersection_estimate,
                                     kmv_jaccard, kmv_union_estimate)
