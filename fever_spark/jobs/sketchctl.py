@@ -17,8 +17,10 @@ job leaves behind (``checkpoint_dir/chunk=N`` partials, ``final``,
         cross-job merge of final states (same specs+keys required —
         mismatched manifests fail loud BEFORE any state is touched).
 
-Everything runs DRIVER-SIDE with pyarrow + the sketch kernels' own
-``merge``: state tables are O(groups), not O(rows), so no Spark session
+Everything runs DRIVER-SIDE with pyarrow + the engine's driver merge,
+``sketch.base.merge_rows`` (each (keys, sketch) group's states through
+``merge_many`` once, every envelope and CRC32 checked): state tables are
+O(groups), not O(rows), so no Spark session
 (or JVM startup) is needed — and the CLI doubles as an independent
 exercise of the byte-format + merge-algebra contract: what a fresh
 process reads back from disk and merges must estimate identically to
@@ -52,25 +54,6 @@ def _state_rows(path_glob: str) -> list[dict]:
     return rows
 
 
-def _merge_rows(rows: list[dict]) -> list[dict]:
-    """Group rows by (keys..., sketch) and merge each group's states with
-    the kernels' ``merge_many``, which checks every state's envelope and
-    CRC32 before it merges."""
-    from fever_spark.sketch.base import merge_many
-
-    groups: dict[tuple, dict] = {}
-    states: dict[tuple, list[bytes]] = {}
-    for r in rows:
-        key = tuple((k, v) for k, v in sorted(r.items()) if k != "state")
-        groups.setdefault(key, dict(r))
-        states.setdefault(key, []).append(bytes(r["state"]))
-    out = []
-    for key, row in groups.items():
-        row["state"] = merge_many(states[key]).to_bytes()
-        out.append(row)
-    return out
-
-
 def _states(ckpt: str) -> list[dict]:
     """The current merged state rows of a checkpoint dir: ``final`` when
     it exists, else a driver-side merge of every chunk partial (resume-
@@ -82,10 +65,19 @@ def _states(ckpt: str) -> list[dict]:
     final = glob.glob(os.path.join(ckpt, "final", "*.parquet"))
     if final:
         return _state_rows(os.path.join(ckpt, "final", "*.parquet"))
-    chunks = _state_rows(os.path.join(ckpt, "chunk=*", "*.parquet"))
-    if chunks:
-        return _merge_rows(chunks)
-    return _merge_rows(_state_rows(os.path.join(ckpt, "**", "*.parquet")))
+    rows = (_state_rows(os.path.join(ckpt, "chunk=*", "*.parquet"))
+            or _state_rows(os.path.join(ckpt, "**", "*.parquet")))
+    return _merged(rows)
+
+
+def _merged(rows: list[dict]) -> list[dict]:
+    """``rows`` merged per (keys..., sketch) by the engine's ``merge_rows``,
+    back as state rows; the keys are every column but sketch and state."""
+    from fever_spark.sketch.base import merge_rows
+
+    keys = list(_group_key(rows[0])) if rows else []
+    return [{**dict(zip(keys, key)), "sketch": key[-1], "state": sk.to_bytes()}
+            for key, sk in merge_rows(rows, keys).items()]
 
 
 def _group_key(row: dict) -> dict:
@@ -208,7 +200,7 @@ def main(argv: list[str] | None = None) -> int:
                 f"sketchctl: spec/key signature of {c} does not match "
                 f"{args.ckpts[0]} — states from different job definitions "
                 "must not be merged")
-    rows = _merge_rows([r for c in args.ckpts for r in _states(c)])
+    rows = _merged([r for c in args.ckpts for r in _states(c)])
     # atomic replace of final/: write the merged table into a temp dir
     # and os.replace it over final/, like the manifest swap below — a
     # crash mid-merge must never leave an empty/partial final/ under a

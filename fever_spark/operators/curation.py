@@ -40,6 +40,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fever_spark.ops.build import SketchSpec
+from fever_spark.ops.merge import global_state
+from fever_spark.sketch.bloom import BloomFilter
+
 # ------------------------------------------------------------- repetition
 
 
@@ -241,25 +245,34 @@ def build_benchmark_bloom(benchmark: DataFrame, text_col: str = "text",
     processing/bloom_handler.go:97-129).
 
     capacity=None counts distinct n-grams first (one extra cheap pass over
-    the — small — benchmark side); pass an estimate to skip it.
+    the — small — benchmark side); pass an estimate to skip it. An empty
+    benchmark gives an empty filter, which matches nothing.
     """
-    from fever_spark.ops.build import SketchSpec, build_sketches
-    from fever_spark.ops.merge import two_level_merge
-    from fever_spark.sketch.bloom import BloomFilter
-
     hashes = (benchmark
               .select(F.explode(ngram_hashes(F.col(text_col), n)).alias("h"))
               .distinct())
     if capacity is None:
         capacity = max(hashes.count(), 1)
-    merged = two_level_merge(
-        build_sketches(hashes, [],
-                       [SketchSpec("bench", "bloom", "h",
-                                   {"capacity": capacity, "fpp": fpp})]), [])
-    row = merged.select("state").first()
-    if row is None:  # empty benchmark → empty filter, matches nothing
-        return BloomFilter(capacity=1, fpp=fpp)
-    return BloomFilter.from_bytes(bytes(row["state"]))
+    return BloomFilter.from_bytes(global_state(
+        hashes, SketchSpec("bench", "bloom", "h",
+                           {"capacity": capacity, "fpp": fpp})))
+
+
+def _row_hits(hs: pd.Series, hit) -> tuple[np.ndarray, np.ndarray]:
+    """Per-row ``(hits, lengths)`` over an ``array<bigint>`` column: every
+    row's hashes are flattened into ONE ``hit`` kernel call (int64 array →
+    boolean mask), and the mask is summed back per row. A NULL array is
+    empty."""
+    lens = np.fromiter((0 if a is None else len(a) for a in hs),
+                       dtype=np.int64, count=len(hs))
+    hits = np.zeros(len(hs), dtype=np.int64)
+    full = lens > 0
+    if full.any():
+        flat = np.concatenate([np.asarray(a, dtype=np.int64)
+                               for a, n in zip(hs, lens) if n])
+        hits[full] = np.add.reduceat(hit(flat).astype(np.int64),
+                                     (np.cumsum(lens) - lens)[full])
+    return hits, lens
 
 
 def contamination_screen(df: DataFrame, bloom_bc, n: int = 8,
@@ -277,19 +290,7 @@ def contamination_screen(df: DataFrame, bloom_bc, n: int = 8,
     @F.pandas_udf(T.LongType())
     def hit_count(hs: pd.Series) -> pd.Series:
         bf = _sketch_of(bytes(bloom_bc.value))  # decoded once per worker
-        lens = np.fromiter((len(a) for a in hs), dtype=np.int64,
-                           count=len(hs))
-        if lens.sum() == 0:
-            return pd.Series(np.zeros(len(hs), dtype=np.int64))
-        flat = np.concatenate([np.asarray(a, dtype=np.int64) for a in hs
-                               if len(a)])
-        mask = bf.contains(flat).astype(np.int64)
-        ends = np.cumsum(lens)
-        sums = np.add.reduceat(mask, np.concatenate(([0], ends[:-1]))[lens > 0]
-                               ) if (lens > 0).any() else np.array([], dtype=np.int64)
-        out = np.zeros(len(hs), dtype=np.int64)
-        out[lens > 0] = sums
-        return pd.Series(out)
+        return pd.Series(_row_hits(hs, bf.contains)[0])
 
     # asNondeterministic: keep Catalyst from double-running the probe on
     # both sides of a pushed-down filter (same guard as bloom_match_pages)
@@ -639,22 +640,11 @@ def build_token_cms(df: DataFrame, text_col: str = "text",
     This is the "sketch as broadcast dimension" pattern at corpus scale:
     one build pass over 10^12 docs, O(CMS) driver state, then any number
     of zero-shuffle probe passes."""
-    from fever_spark.ops.build import SketchSpec, build_sketches
-    from fever_spark.ops.merge import two_level_merge
-
     toks = (df.select(F.explode(_words(F.col(text_col))).alias("tok"))
             .filter(F.col("tok") != ""))
-    merged = two_level_merge(
-        build_sketches(toks, [],
-                       [SketchSpec("tokfreq", "cms", "tok",
-                                   {"epsilon": epsilon, "delta": delta},
-                                   prehash=True)]), [])
-    row = merged.select("state").first()
-    if row is None:
-        from fever_spark.sketch.cms import CountMinSketch
-
-        return CountMinSketch(epsilon=epsilon, delta=delta).to_bytes()
-    return bytes(row["state"])
+    return global_state(toks, SketchSpec(
+        "tokfreq", "cms", "tok", {"epsilon": epsilon, "delta": delta},
+        prehash=True))
 
 
 def rare_token_stats(df: DataFrame, cms_bc, min_count: int = 5,
@@ -679,22 +669,12 @@ def rare_token_stats(df: DataFrame, cms_bc, min_count: int = 5,
     @F.pandas_udf(T.DoubleType())
     def rare_frac(hs: pd.Series) -> pd.Series:
         sk = _sketch_of(bytes(cms_bc.value))  # decoded once per worker
-        lens = np.fromiter((len(a) for a in hs), dtype=np.int64,
-                           count=len(hs))
-        out = np.zeros(len(hs), dtype=np.float64)
-        if lens.sum() == 0:
-            return pd.Series(out)
-        flat = np.concatenate([np.asarray(a, dtype=np.int64)
-                               for a in hs if len(a)])
-        rare = (sk.estimate(flat) < min_count).astype(np.float64)
-        ends = np.cumsum(lens)
-        starts = np.concatenate(([0], ends[:-1]))[lens > 0]
-        sums = np.add.reduceat(rare, starts)
-        out[lens > 0] = sums / lens[lens > 0]
-        return pd.Series(np.round(out, 6))
+        rare, lens = _row_hits(hs, lambda flat: sk.estimate(flat) < min_count)
+        frac = np.divide(rare, lens, out=np.zeros(len(hs)), where=lens > 0)
+        return pd.Series(np.round(frac, 6))
 
     rare_frac = rare_frac.asNondeterministic()  # guard pushdown double-eval
-    w = _words(F.col(text_col))
+    w = _words(F.coalesce(F.col(text_col), F.lit("")))  # NULL text: no tokens
     h = F.transform(F.filter(w, lambda t: t != ""),
                     lambda t: F.xxhash64(t))
     return df.select(

@@ -35,6 +35,8 @@ from pyspark.sql import types as T
 
 from fever_spark.functions.text import fingerprint
 from fever_spark.hashing import _splitmix64_vec, hash64
+from fever_spark.ops.build import SketchSpec
+from fever_spark.ops.merge import global_state
 
 # ---------------------------------------------------------------- exact
 
@@ -679,21 +681,12 @@ def corpus_fingerprint_bloom(df: DataFrame, text_col: str = "text",
     PASS ``capacity`` at scale: omitting it sizes the filter with a
     ``count()`` — a second full scan of the corpus before the build. At
     ingestion time the row count is already in the pipeline manifest."""
-    from fever_spark.ops.build import SketchSpec, build_sketches
-    from fever_spark.ops.merge import two_level_merge
-    from fever_spark.sketch.bloom import BloomFilter
-
     if capacity is None:
         capacity = max(df.count(), 100)
-    fps = df.select(fingerprint(F.col(text_col)).alias("_fp"))
-    merged = two_level_merge(
-        build_sketches(fps, [], [SketchSpec("seen", "bloom", "_fp",
-                                            {"capacity": int(capacity),
-                                             "fpp": fpp})]), [])
-    row = merged.select("state").first()
-    if row is None:
-        return BloomFilter(capacity=int(capacity), fpp=fpp).to_bytes()
-    return bytes(row["state"])
+    return global_state(
+        df.select(fingerprint(F.col(text_col)).alias("_fp")),
+        SketchSpec("seen", "bloom", "_fp",
+                   {"capacity": int(capacity), "fpp": fpp}))
 
 
 def incremental_exact_dedup(new_df: DataFrame, seen_bloom_bc,

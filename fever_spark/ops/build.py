@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from fever_spark.sketch.base import NAME_REGISTRY
+from fever_spark.sketch.base import NAME_REGISTRY, merge_rows
 
 SKETCH_SCHEMA_SUFFIX = [
     T.StructField("sketch", T.StringType(), False),
@@ -245,12 +245,8 @@ def build_sketches(df: DataFrame, keys: list[str],
 
 
 def sketches_to_dict(merged: DataFrame, keys: list[str]) -> dict:
-    """Collect a (small, post-merge) sketch DataFrame into
-    {(key..., sketch_name): Sketch}. Driver-side convenience for probing."""
-    from fever_spark.sketch.base import sketch_from_bytes
-
-    out = {}
-    for row in merged.collect():
-        key = tuple(row[k] for k in keys)
-        out[key + (row["sketch"],)] = sketch_from_bytes(bytes(row["state"]))
-    return out
+    """Collect a (small) sketch DataFrame into {(key..., sketch_name):
+    Sketch}. Driver-side convenience for probing; rows that share a key
+    (``build_sketches`` partials not yet through ``two_level_merge``) are
+    merged, not overwritten."""
+    return merge_rows(merged.collect(), keys)

@@ -20,7 +20,8 @@ must be passed as a key.
 
 Shuffle volume at both levels is O(groups × S × state_size) — independent of
 input row count. For the final single-sketch-per-spec case (keys == []), the
-same tree applies with salt as the only level-1 key.
+same tree applies with salt as the only level-1 key; ``global_state`` is
+that case end to end (build, merge, collect the one state).
 
 Because every sketch merge is associative (+ commutative for the lattice
 sketches), the result is invariant to S and to input partitioning — tested
@@ -34,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fever_spark.ops.build import SketchSpec, build_sketches
 from fever_spark.sketch.base import merge_many
 
 _SALT = "__fvs_salt"
@@ -83,3 +85,12 @@ def two_level_merge(sketch_df: DataFrame, keys: list[str],
     salted = sketch_df.withColumn(_SALT, F.pmod(F.spark_partition_id(), F.lit(salt)))
     level1 = _merge_level(salted, keys + ["sketch", _SALT], keys)
     return _merge_level(level1, keys + ["sketch"], keys)
+
+
+def global_state(df: DataFrame, spec: SketchSpec) -> bytes:
+    """The one keyless state of ``spec`` over all of ``df``: built and merged
+    distributed, and only the merged state reaches the driver. An empty
+    input gives the empty state of ``spec.make()``."""
+    row = two_level_merge(build_sketches(df, [], [spec]), []) \
+        .select("state").first()
+    return spec.make().to_bytes() if row is None else bytes(row["state"])

@@ -239,3 +239,16 @@ def merge_many(states: list[bytes]) -> Sketch:
     for sk in sketches:
         first.merge(sk)
     return first
+
+
+def merge_rows(rows, keys: list[str]) -> dict[tuple, Sketch]:
+    """State rows ``(keys..., sketch, state)`` → {(key..., sketch): Sketch}.
+    Rows are any mappings (Spark ``Row``s, pyarrow ``to_pylist()`` dicts);
+    they are grouped by keys plus sketch name in first-seen order, and each
+    group's states go through ``merge_many`` once: a frame of partition
+    partials gives each key's merged sketch, never just its last partial."""
+    groups: dict[tuple, list[bytes]] = {}
+    for row in rows:
+        key = tuple(row[k] for k in keys) + (row["sketch"],)
+        groups.setdefault(key, []).append(bytes(row["state"]))
+    return {key: merge_many(states) for key, states in groups.items()}

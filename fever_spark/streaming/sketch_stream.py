@@ -33,7 +33,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from fever_spark.ops.build import SketchSpec, build_sketches
 from fever_spark.ops.merge import two_level_merge
-from fever_spark.sketch.base import merge_many
+from fever_spark.sketch.base import merge_rows
 
 
 class StreamingSketchAccumulator:
@@ -49,15 +49,15 @@ class StreamingSketchAccumulator:
     KEY, which is only safe for bounded key domains (lang × window, event
     types, ...). In this mode each batch's ``build_sketches`` partials are
     collected as they are (one Spark job per batch, no merge shuffle) and
-    each (keys, sketch) group is merged once on the driver with
-    ``merge_many``, so a batch briefly holds at most partitions × keys ×
-    specs SERIALIZED partials. ``max_keys`` (default 100k) enforces the
-    contract loudly: the distinct group count among the collected partials
-    is checked before any of them is turned into a dense sketch, so a
-    million-key groupBy fails with guidance instead of silently OOMing the
-    driver. For unbounded key domains pass ``state_dir``: each batch's
-    partials are then merged distributed (``two_level_merge`` with its
-    parallelism-derived salt) and written to
+    turned into sketches by ``merge_rows``, the engine's one driver-side
+    merge (each (keys, sketch) group merged once), so a batch briefly holds
+    at most partitions × keys × specs SERIALIZED partials. ``max_keys``
+    (default 100k) enforces the contract loudly: the distinct group count
+    among the collected partials is checked before any of them is turned
+    into a dense sketch, so a million-key groupBy fails with guidance
+    instead of silently OOMing the driver. For unbounded key domains pass
+    ``state_dir``: each batch's partials are then merged distributed
+    (``two_level_merge`` with its parallelism-derived salt) and written to
     ``state_dir/batch=<id>`` parquet (idempotent overwrite per batch id —
     the same replay safety as the dict path), and NOTHING is collected to
     the driver; read the totals back with ``merged_states(spark)``, a
@@ -85,8 +85,9 @@ class StreamingSketchAccumulator:
     def _record(self, partials: DataFrame, state_id: int) -> None:
         """Land one ``build_sketches`` partials frame. Spill mode: merge
         distributed and write parquet keyed by ``state_id`` (idempotent
-        overwrite). In-memory mode: collect the partials, merge each
-        (keys, sketch) group once on the driver, fold into the dict."""
+        overwrite). In-memory mode: collect the partials once, check
+        ``max_keys`` on their distinct group keys, then fold
+        ``merge_rows`` (one merge per (keys, sketch) group) into the dict."""
         if self.state_dir is not None:
             import os
 
@@ -94,11 +95,9 @@ class StreamingSketchAccumulator:
                 .write.mode("overwrite").parquet(
                     os.path.join(self.state_dir, f"batch={state_id}"))
             return
-        groups: dict[tuple, list[bytes]] = {}
-        for row in partials.collect():
-            key = tuple(row[k] for k in self.keys) + (row["sketch"],)
-            groups.setdefault(key, []).append(bytes(row["state"]))
-        n_keys = len(self.sketches.keys() | groups.keys())
+        rows = partials.collect()
+        n_keys = len(self.sketches.keys() | {
+            tuple(r[k] for k in self.keys) + (r["sketch"],) for r in rows})
         if n_keys > self.max_keys:
             raise ValueError(
                 f"StreamingSketchAccumulator would hold {n_keys} "
@@ -107,8 +106,7 @@ class StreamingSketchAccumulator:
                 "to spill per-batch states to a keyed parquet state "
                 "table, or raise max_keys if the domain really is "
                 "bounded.")
-        for key, states in groups.items():
-            sk = merge_many(states)
+        for key, sk in merge_rows(rows, self.keys).items():
             if key in self.sketches:
                 self.sketches[key].merge(sk)
             else:

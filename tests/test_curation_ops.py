@@ -606,6 +606,25 @@ class TestRareTokenStats:
                rare_token_stats(df, bc).collect()}
         assert got[2]["n_tokens"] == 0 and got[2]["rare_frac"] == 0.0
 
+    def test_null_text_reads_as_empty(self, spark, corpus):
+        """A NULL text row scores like "" (no tokens, rare_frac 0.0)
+        instead of failing the job, and the other rows are unchanged."""
+        from fever_spark.operators.curation import (build_token_cms,
+                                                    rare_token_stats)
+
+        bc = spark.sparkContext.broadcast(build_token_cms(corpus))
+        extra = spark.createDataFrame([(100, None), (101, "")],
+                                      "doc_id long, text string")
+
+        def stats(df):
+            return {r["doc_id"]: (r["n_tokens"], r["rare_frac"]) for r in
+                    rare_token_stats(df, bc, min_count=5).collect()}
+
+        got = stats(corpus.unionByName(extra))
+        assert got.pop(100) == (0, 0.0)
+        assert got.pop(101) == (0, 0.0)
+        assert got == stats(corpus)
+
 class TestSubstringDedup:
     """ExactSubstr span removal (Lee et al. 2022 shape): duplicated runs of
     >= k tokens survive only at their first (doc_id, pos) occurrence."""

@@ -124,12 +124,7 @@ class TestIngest:
     def test_each_batch_signed_once(self, spark, tmp_path, monkeypatch):
         """With the near-dup screen on, the within-batch pairs, the corpus
         screen and the signature-index write share ONE signing pass."""
-        import importlib
-
         from fever_spark.operators import dedup
-
-        # the package re-exports the function under the module's name
-        ingest_mod = importlib.import_module("fever_spark.jobs.ingest")
 
         real = dedup.minhash_signatures
         calls = []
@@ -139,7 +134,8 @@ class TestIngest:
             return real(*args, **kwargs)
 
         monkeypatch.setattr(dedup, "minhash_signatures", spy)
-        monkeypatch.setattr(ingest_mod, "minhash_signatures", spy)
+        monkeypatch.setattr("fever_spark.jobs.ingest.minhash_signatures",
+                            spy)
         corpus = str(tmp_path / "corpus")
         state = str(tmp_path / "state")
         toks = _doc(3)[1].split()

@@ -23,3 +23,15 @@ def test_star_import_resolves(name):
     exported = getattr(pkg, "__all__", [])
     missing = [n for n in exported if not hasattr(pkg, n)]
     assert not missing, f"fever_spark.{name}.__all__ names missing: {missing}"
+
+
+def test_job_module_names_bind_modules():
+    """``import fever_spark.jobs.<job> as m`` binds the job's module: the
+    package exports no function under the name of its own module."""
+    import types
+
+    import fever_spark.jobs.curate as curate_mod
+    import fever_spark.jobs.ingest as ingest_mod
+
+    assert isinstance(curate_mod, types.ModuleType)
+    assert isinstance(ingest_mod, types.ModuleType)

@@ -160,6 +160,25 @@ def test_sketches_to_dict(spark, events):
     assert len(d) == events.select("event_type").distinct().count()
 
 
+def test_sketches_to_dict_merges_partials(spark):
+    """Unmerged build_sketches partials (8 input partitions, 2 keys) give
+    the sketches of the merged frame, byte for byte, not the last partial
+    per key."""
+    df = spark.range(40_000).select((F.col("id") % 2).alias("k"),
+                                    F.col("id").alias("v")).repartition(8)
+    specs = [SketchSpec("u", "hll", "v", {"p": 12}),
+             SketchSpec("c", "cms", "v", {"epsilon": 1e-3, "delta": 1e-2})]
+    partials = build_sketches(df, ["k"], specs)
+    assert partials.count() == 8 * 2 * len(specs)
+    got = sketches_to_dict(partials, ["k"])
+    want = sketches_to_dict(two_level_merge(partials, ["k"]), ["k"])
+    assert {k: sk.to_bytes() for k, sk in got.items()} == \
+        {k: sk.to_bytes() for k, sk in want.items()}
+    for k in (0, 1):
+        hll = got[(k, "u")]
+        assert abs(hll.estimate() - 20_000) / 20_000 <= 4 * hll.relative_error
+
+
 def test_build_prunes_columns(spark, sf_med):
     # The stage-1 plan must read only key+value columns (SURVEY.md §4
     # projection-pushdown row). Clear the cache first: a cached full-table
