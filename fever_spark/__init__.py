@@ -9,6 +9,8 @@ Muthukrishnan count-min, Karnin-Lang-Liberty KLL, Dunning t-digest, Bloom
 Layout
 ------
 - ``fever_spark.sketch``     pure numpy sketch kernels (no Spark deps)
+- ``fever_spark.files``      atomic file replace for job records and state
+                             files, local paths or URIs (no Spark deps)
 - ``fever_spark.ops``        Spark build / two-level merge / estimate / bloom match
 - ``fever_spark.operators``  fever aggregator & filter parity, dedup, ANN
 - ``fever_spark.functions``  text analysis, URL canonicalization

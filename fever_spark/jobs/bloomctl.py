@@ -15,8 +15,9 @@ plane reduces to safe file mutation plus a validation verb:
     python -m fever_spark.jobs.bloomctl reload --file iocs.bloom.gz
 
 ``add`` mirrors mgmtserver.go:120-139 (extend the live filter — here:
-load → update → ATOMIC replace, so a daemon mid-reload never sees a torn
-file); ``show`` mirrors the show RPC (filter params + membership probes);
+load → update → ATOMIC replace through ``BloomFilter.save``, so a daemon
+mid-reload never sees a torn file); ``show`` mirrors the show RPC (filter
+params + membership probes);
 ``reload`` validates that the file parses and prints what a daemon's
 re-broadcast would pick up — the actual swap semantics are exercised
 Spark-side in TestBloomReloadLifecycle (old IOCs stop matching, new ones
@@ -27,9 +28,7 @@ start, blacklist veto survives). Values may come from argv, ``--from-file``
 from __future__ import annotations
 
 import json
-import os
 import sys
-import tempfile
 
 import numpy as np
 
@@ -52,24 +51,6 @@ def _read_values(args) -> np.ndarray:
         with open(args.from_file) as f:
             vals.extend(ln.rstrip("\n") for ln in f if ln.strip())
     return np.array(vals, dtype=object)
-
-
-def _atomic_save(bf: BloomFilter, path: str) -> None:
-    """Write-then-rename in the target directory: a concurrent reader
-    (daemon reload, another bloomctl) sees the old or the new filter,
-    never a torn one — same discipline as the submitter spool."""
-    d = os.path.dirname(os.path.abspath(path)) or "."
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".bloomctl_")
-    os.close(fd)
-    try:
-        bf.save(tmp, compressed=path.endswith(".gz"))
-        os.replace(tmp, path)
-    finally:
-        try:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-        except OSError:
-            pass
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -111,7 +92,7 @@ def main(argv: list[str] | None = None) -> int:
         vals = _read_values(args)
         if len(vals):
             bf.update(vals)
-        _atomic_save(bf, args.out)
+        bf.save(args.out)
         print(json.dumps({"created": args.out, **bf.info()}))
         return 0
 
@@ -158,7 +139,7 @@ def main(argv: list[str] | None = None) -> int:
             print("bloomctl add: no values given", file=sys.stderr)
             return 2
         bf.update(vals)
-        _atomic_save(bf, args.file)
+        bf.save(args.file)
         out = {"added": int(len(vals)), "file": args.file, **bf.info()}
         if recovered:
             out["recovered"] = True

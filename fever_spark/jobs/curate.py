@@ -45,6 +45,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fever_spark.files import write_atomic
 from fever_spark.functions import text as TXT
 from fever_spark.operators import curation, dedup, sampling
 
@@ -156,9 +157,8 @@ def curate(spark: SparkSession, input_path: str, output_path: str,
         stage_counts = {**extra, count_key: df.count()}
         counts.update(stage_counts)
         if workdir:
-            with open(marker + ".tmp", "w") as f:
-                json.dump({"key": resume_key, "counts": stage_counts}, f)
-            os.replace(marker + ".tmp", marker)
+            write_atomic(marker, json.dumps(
+                {"key": resume_key, "counts": stage_counts}).encode())
         _mark(name)
         return df
 
@@ -358,11 +358,8 @@ def curate(spark: SparkSession, input_path: str, output_path: str,
         "workdir": workdir,
         "resumed_stages": resumed,
     }
-    tmp = os.path.join(output_path, "_curation_manifest.json.tmp")
-    final = os.path.join(output_path, "_curation_manifest.json")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, final)
+    write_atomic(os.path.join(output_path, "_curation_manifest.json"),
+                 json.dumps(manifest, indent=1).encode())
     for df in persisted:
         df.unpersist()
     return manifest

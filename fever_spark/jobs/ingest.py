@@ -44,6 +44,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fever_spark.files import write_atomic
 from fever_spark.functions.text import fingerprint, normalize_text
 from fever_spark.operators.dedup import (SIGNATURE_HASH_FAMILY,
                                          corpus_fingerprint_bloom,
@@ -105,9 +106,7 @@ def ingest(spark: SparkSession, batch_path: str, corpus_dir: str,
                 f"was created with: stored={stored} given={params}; "
                 "re-index the corpus (new state dir) to change them")
     else:
-        with open(params_path + ".tmp", "w") as f:
-            json.dump(params, f)
-        os.replace(params_path + ".tmp", params_path)
+        write_atomic(params_path, json.dumps(params).encode())
 
     # the manifest line is the batch commit point: a batch with on-disk
     # partitions or a Bloom delta but NO manifest line crashed mid-write,
@@ -233,13 +232,9 @@ def ingest(spark: SparkSession, batch_path: str, corpus_dir: str,
     # way; see BENCH/MEASUREMENTS.md)
     delta = BloomFilter.from_bytes(corpus_fingerprint_bloom(
         kept, text_col, capacity=bloom_capacity, fpp=bloom_fpp))
-    tmp = own_delta + ".tmp"
-    delta.save(tmp)
-    os.replace(tmp, own_delta)
+    delta.save(own_delta)
     merged = delta.merge(BloomFilter.from_bytes(bytes(bc.value)))
-    tmp = bloom_path + ".tmp"
-    merged.save(tmp)
-    os.replace(tmp, bloom_path)
+    merged.save(bloom_path)
     _mark("index_update")
 
     manifest = {"batch_id": batch_id, "batch_path": batch_path,

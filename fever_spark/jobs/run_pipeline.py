@@ -41,6 +41,7 @@ import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fever_spark.files import resolve, write_atomic
 from fever_spark.ops.bloom_match import build_ioc_filter, make_event_matcher
 from fever_spark.ops.build import SketchSpec
 from fever_spark.sources.eve import eve_projection
@@ -195,9 +196,8 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
 
     alerts_root = os.path.join(output_dir, "alerts")
     # driver-side view of output_dir (a local path or a file://, s3://
-    # URI) for the sink file counts and the manifest
-    out_fs, out_root = pafs.FileSystem.from_uri(
-        output_dir if ":" in output_dir else os.path.abspath(output_dir))
+    # URI) for the sink file counts
+    out_fs, out_root = resolve(output_dir)
 
     def _n_files(rel: str, prefix: str = "", suffix: str = "") -> int:
         infos = out_fs.get_file_info(pafs.FileSelector(
@@ -343,9 +343,8 @@ def run_pipeline(spark: SparkSession, input_dir: str, output_dir: str,
                "bloom_reloads": (None if bloom_file is None
                                  else bloom_state["reloads"]),
                "spool": spool}
-    with out_fs.open_output_stream(
-            posixpath.join(out_root, "_run_manifest.json")) as f:
-        f.write(json.dumps(summary, indent=1).encode())
+    write_atomic(os.path.join(output_dir, "_run_manifest.json"),
+                 json.dumps(summary, indent=1).encode())
     return summary
 
 

@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from fever_spark.files import write_atomic
 from fever_spark.operators.curation import pack_documents
 
 __all__ = ["write_training_shards"]
@@ -138,11 +139,8 @@ def write_training_shards(spark: SparkSession, input_path: str,
         "order": (f"shuffled:{int(shuffle_seed)}"
                   if shuffle_seed is not None else "id"),
     }
-    tmp = os.path.join(output_path, "_shards_manifest.json.tmp")
-    final = os.path.join(output_path, "_shards_manifest.json")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, final)
+    write_atomic(os.path.join(output_path, "_shards_manifest.json"),
+                 json.dumps(manifest, indent=1).encode())
     return manifest
 
 

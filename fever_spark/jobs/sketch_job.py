@@ -29,6 +29,7 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from fever_spark.files import write_atomic
 from fever_spark.ops.build import SketchSpec, build_sketches
 from fever_spark.ops.merge import two_level_merge
 
@@ -79,10 +80,8 @@ class SketchJob:
         return manifest
 
     def _save_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, default=str)
-        os.replace(tmp, self._manifest_path())  # atomic on POSIX
+        write_atomic(self._manifest_path(),
+                     json.dumps(manifest, indent=1, default=str).encode())
 
     # -- chunking ------------------------------------------------------------
 

@@ -36,6 +36,8 @@ import json
 import os
 import sys
 
+from fever_spark.files import write_atomic
+
 __all__ = ["main"]
 
 
@@ -202,8 +204,8 @@ def main(argv: list[str] | None = None) -> int:
                 "must not be merged")
     rows = _merged([r for c in args.ckpts for r in _states(c)])
     # atomic replace of final/: write the merged table into a temp dir
-    # and os.replace it over final/, like the manifest swap below — a
-    # crash mid-merge must never leave an empty/partial final/ under a
+    # and os.replace it over final/, then write the manifest atomically —
+    # a crash mid-merge must never leave an empty/partial final/ under a
     # manifest still claiming completed=True (later show/estimate would
     # silently read nothing)
     import shutil
@@ -238,10 +240,8 @@ def main(argv: list[str] | None = None) -> int:
         "chunks": {}, "completed": True,
         "total_rows": sum(m.get("total_rows", 0) for m in manifests),
     }
-    tmp = os.path.join(args.out, "manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(out_manifest, f, indent=1)
-    os.replace(tmp, os.path.join(args.out, "manifest.json"))
+    write_atomic(os.path.join(args.out, "manifest.json"),
+                 json.dumps(out_manifest, indent=1).encode())
     print(json.dumps({"out": args.out, "groups": len(rows),
                       "merged_from": len(args.ckpts)}))
     return 0

@@ -19,6 +19,7 @@ import struct
 
 import numpy as np
 
+from fever_spark.files import write_atomic
 from fever_spark.hashing import double_hash64
 from fever_spark.sketch.base import (
     KIND_BLOOM, Cursor, Sketch, canonical_seed, corrupt, register)
@@ -159,22 +160,19 @@ class BloomFilter(Sketch):
 
     # -- file persistence (bloom_handler.go:97-129 load/save, gzip optional) --
 
-    def save(self, path: str, compressed: bool | None = None) -> None:
+    def save(self, path: str) -> None:
+        """Atomic replace (a reloading reader never sees a torn filter),
+        gzipped when ``path`` ends in ``.gz``."""
         data = self.to_bytes()
-        if compressed is None:
-            compressed = path.endswith(".gz")
-        if compressed:
-            data = gzip.compress(data)
-        with open(path, "wb") as f:
-            f.write(data)
+        write_atomic(path, gzip.compress(data) if path.endswith(".gz")
+                     else data)
 
     @classmethod
-    def load(cls, path: str, compressed: bool | None = None) -> "BloomFilter":
+    def load(cls, path: str) -> "BloomFilter":
+        """Gzip is read from the content, not the file name."""
         with open(path, "rb") as f:
             data = f.read()
-        if compressed is None:
-            compressed = data[:2] == b"\x1f\x8b"
-        if compressed:
+        if data[:2] == b"\x1f\x8b":
             data = gzip.decompress(data)
         return cls.from_bytes(data)
 

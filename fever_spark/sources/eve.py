@@ -284,19 +284,6 @@ def heartbeat_events(spark, event_types: list[str] = ("http",)) -> DataFrame:
     )
 
 
-def multi_forward(df: DataFrame, outputs: dict[str, tuple[list[str], str]]) -> dict[str, int]:
-    """S11 multi-socket forward as batch writes: for each named output,
-    filter to its event types and write to its path (multi_forward.go:
-    201-257 — per-output type filter + independent sink). Returns rows
-    written per output."""
-    written = {}
-    for name, (types_, path) in outputs.items():
-        part = df.filter(F.col("event_type").isin(types_)) if types_ else df
-        part.write.mode("overwrite").json(path)
-        written[name] = part.count()
-    return written
-
-
 # S9: per-event-type collections (the Mongo slurper analog)
 
 MONGO_TYPES = ["alert", "dns", "fileinfo", "flow", "http", "smtp", "ssh",
@@ -322,12 +309,11 @@ def per_type_collections(df: DataFrame, base_path: str,
     of the total space budget (slurper_mongodb.go:22-35, capped mongo
     collections drop oldest documents). Spark-first shape: a single
     ``partitionBy(type)`` pass — the writer splits rows by type inside
-    every task, so N collections cost one scan, not N filtered scans
-    (contrast multi_forward, whose outputs may OVERLAP and therefore need
-    per-output filters). The capped-collection analog enforces each
-    type's size fraction AFTER the write by deleting that collection's
-    oldest files first — same drop-oldest semantics, expressed as
-    retention over immutable parquet parts instead of an in-place ring.
+    every task, so N collections cost one scan, not N filtered scans.
+    The capped-collection analog enforces each type's size fraction AFTER
+    the write by deleting that collection's oldest files first — same
+    drop-oldest semantics, expressed as retention over immutable parquet
+    parts instead of an in-place ring.
 
     "Oldest" is file mtime, i.e. WRITE order: genuine age ordering under
     ``mode="append"`` (the capped-collection usage — each micro-batch or

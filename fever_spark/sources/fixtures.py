@@ -16,6 +16,7 @@ import os
 
 import numpy as np
 
+from fever_spark.files import write_atomic
 from fever_spark.sources.synth import synth_events
 
 ORACLE_DATA = os.path.join(
@@ -30,9 +31,7 @@ def fever_events_parquet(n: int = 5000, seed: int = 44) -> str:
         os.makedirs(ORACLE_DATA, exist_ok=True)
         pdf = synth_events(n, seed=seed)
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        tmp = path + ".tmp"
-        pdf.to_parquet(tmp, index=False)
-        os.replace(tmp, path)
+        write_atomic(path, pdf.to_parquet(index=False))
     return path
 
 
@@ -47,9 +46,7 @@ def pages_parquet(n: int = 3000, seed: int = 42) -> str:
         os.makedirs(ORACLE_DATA, exist_ok=True)
         pdf = synth_pages(n, seed=seed)
         pdf["warc_ts"] = pdf["warc_ts"].astype("datetime64[us]")
-        tmp = path + ".tmp"
-        pdf.to_parquet(tmp, index=False)
-        os.replace(tmp, path)
+        write_atomic(path, pdf.to_parquet(index=False))
     return path
 
 
@@ -104,8 +101,5 @@ def eve_jsonl(n: int = 2000, seed: int = 44) -> str:
                 d["alert"] = {"action": "allowed", "category": "Misc activity",
                               "signature": "FEVER test alert"}
             lines.append(json.dumps(d, separators=(",", ":")))
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("\n".join(lines) + "\n")
-        os.replace(tmp, path)
+        write_atomic(path, ("\n".join(lines) + "\n").encode())
     return path

@@ -153,6 +153,4 @@ class TestBloomctl:
         f = str(tmp_path / "x.bloom")
         run(capsys, "create", "--out", f, "v1")
         run(capsys, "add", "--file", f, "v2")
-        leftovers = [p for p in tmp_path.iterdir()
-                     if p.name.startswith(".bloomctl_")]
-        assert leftovers == []
+        assert [p.name for p in tmp_path.iterdir()] == ["x.bloom"]

@@ -58,6 +58,17 @@ def test_curate_end_to_end(spark, corpus_dir, tmp_path):
     assert {"quality", "n_tokens"} <= cols
 
 
+def test_curate_uri_output(spark, corpus_dir, tmp_path):
+    """A file:// output (Spark takes URIs) gets its manifest next to the
+    data, like a bare path."""
+    out = tmp_path / "curated_uri"
+    man = curate(spark, corpus_dir, "file://" + str(out), min_quality=0.5,
+                 min_tokens=5, near_dup_threshold=0.6)
+    assert man["counts"]["written"] == 40
+    assert ((out / "_curation_manifest.json").read_text()
+            == json.dumps(man, indent=1))
+
+
 def test_curate_lang_filter_and_sample(spark, corpus_dir, tmp_path):
     out = str(tmp_path / "curated2")
     man = curate(spark, corpus_dir, out, min_quality=0.0, min_tokens=1,

@@ -133,16 +133,6 @@ class TestTrigramAndHeartbeat:
         assert row.loc["alert", "http_host"] == "testalert.fever"
 
 
-class TestMultiForward:
-    def test_filtered_outputs(self, spark, lines, tmp_path):
-        parsed = eve.parse_eve(lines).filter(F.col("event_type").isNotNull())
-        written = eve.multi_forward(parsed, {
-            "dns_only": (["dns"], str(tmp_path / "dns")),
-            "everything": ([], str(tmp_path / "all")),
-        })
-        assert written["dns_only"] == 1 and written["everything"] == 4
-
-
 class TestAlertify:
     def test_alert_json_rewrite(self, spark, lines):
         alerts = alertify(lines, ["evil.example.com", "bad.dns.example"])

@@ -35,3 +35,20 @@ def test_job_module_names_bind_modules():
 
     assert isinstance(curate_mod, types.ModuleType)
     assert isinstance(ingest_mod, types.ModuleType)
+
+
+def test_sketch_and_files_import_no_spark():
+    """The sketch kernels and the atomic file writer they save through
+    stay Spark-free: Python workers and the driver-side CLIs (bloomctl,
+    sketchctl) import them without pyspark."""
+    import os
+    import subprocess
+    import sys
+
+    code = ("import sys, fever_spark.sketch, fever_spark.files; "
+            "print('pyspark' in sys.modules)")
+    root = os.path.dirname(os.path.dirname(fever_spark.__file__))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                         capture_output=True, text=True,
+                         check=True).stdout.strip()
+    assert out == "False"

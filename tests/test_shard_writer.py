@@ -1,6 +1,7 @@
 """Training-shard writer: pack_documents assignments become one parquet
 shard per bin with a manifest; totals conserve, oversized docs flagged."""
 
+import json
 import os
 
 import pytest
@@ -40,6 +41,21 @@ def test_shards_written_with_manifest(spark, tmp_path):
     shards = sorted(by_shard)
     for a, b in zip(shards, shards[1:]):
         assert max(by_shard[a]) < min(by_shard[b])
+
+
+def test_uri_output_gets_manifest(spark, tmp_path):
+    """A file:// output (Spark takes URIs) gets its manifest next to the
+    shards, like a bare path."""
+    src = str(tmp_path / "src_uri")
+    spark.createDataFrame(
+        [(i, " ".join(f"w{i}x{j}" for j in range(10))) for i in range(20)],
+        "doc_id long, text string").write.parquet(src)
+    out = tmp_path / "shards_uri"
+    man = write_training_shards(spark, src, "file://" + str(out), budget=50,
+                                n_buckets=4)
+    assert man["total_docs"] == 20
+    assert ((out / "_shards_manifest.json").read_text()
+            == json.dumps(man, indent=1))
 
 
 def test_token_col_passthrough(spark, tmp_path):

@@ -113,11 +113,61 @@ class TestBloom:
         bf.update(np.array(["evil.example.com"], dtype=object))
         plain = tmp_path / "f.bloom"
         gz = tmp_path / "f.bloom.gz"
-        bf.save(str(plain))
-        bf.save(str(gz))
-        for p in (plain, gz):
+        colon = tmp_path / "f:1.bloom"  # a bare path, not a URI
+        for p in (plain, gz, colon):
+            bf.save(str(p))
+        for p in (plain, gz, colon):
             got = BloomFilter.load(str(p))
             assert got.contains(np.array(["evil.example.com"], dtype=object)).all()
+
+    def test_failed_save_keeps_previous_file(self, tmp_path, monkeypatch):
+        # a save that dies partway (disk full) leaves the previous filter
+        # loadable and no temp file behind
+        import fever_spark.files as files
+
+        class TornStream:
+            def __init__(self, stream):
+                self._stream = stream
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                self._stream.close()
+
+            def write(self, data):
+                self._stream.write(data[: len(data) // 2])
+                raise OSError("No space left on device")
+
+        class TornFS:
+            def __init__(self, fs):
+                self._fs = fs
+
+            def __getattr__(self, name):
+                return getattr(self._fs, name)
+
+            def open_output_stream(self, path, **kw):
+                return TornStream(self._fs.open_output_stream(path, **kw))
+
+        real_resolve = files.resolve
+
+        def torn_resolve(path):
+            fs, target = real_resolve(path)
+            return TornFS(fs), target
+
+        p = tmp_path / "f.bloom.gz"
+        old = BloomFilter(capacity=100, fpp=1e-8)
+        old.update(np.array(["old.example"], dtype=object))
+        old.save(str(p))
+        new = BloomFilter(capacity=100, fpp=1e-8)
+        new.update(np.array(["new.example"], dtype=object))
+        monkeypatch.setattr(files, "resolve", torn_resolve)
+        with pytest.raises(OSError, match="No space"):
+            new.save(str(p))
+        assert [q.name for q in tmp_path.iterdir()] == ["f.bloom.gz"]
+        got = BloomFilter.load(str(p))
+        assert got.contains(np.array(["old.example"], dtype=object)).all()
+        assert not got.contains(np.array(["new.example"], dtype=object)).any()
 
     def test_load_or_empty_on_corrupt(self, tmp_path):
         # corrupt file → default empty filter (bloom_handler.go:105-129)
